@@ -1,6 +1,8 @@
 package graft.dedup
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over an undirected pair graph — the
@@ -11,22 +13,26 @@ import org.apache.spark.sql.functions._
   *
   * Algorithm: alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC 2014) — converges in
-  * O(log² n) rounds on any graph (O(log n) in practice), each round two
-  * node-id-keyed shuffles of (long, long) edges only. No adjacency list is
-  * ever materialized per node beyond the groupBy, so hub nodes (a viral
-  * boilerplate file shared by millions of repos) are handled by the same
-  * map-side-combined min aggregate as everything else.
+  * O(log² n) rounds on any graph (O(log n) in practice). Each star is ONE
+  * node-id-keyed exchange of (long, long) edges feeding a min WINDOW over
+  * the node's neighborhood: no aggregate-then-join, so no second exchange
+  * and no broadcast of the per-node minima. A round is three exchanges
+  * (large star, small star, the round's distinct) plus one result job.
+  * The window buffers one node's neighbors in Spark's spillable row array,
+  * so a hub node (a viral boilerplate file shared by millions of repos) is
+  * sorted and spilled, never held in a hash map.
   *
   * Scale notes (the 100 TB story):
   *   - Payload never enters the graph: callers pass (id1, id2) pairs from
-  *     the LSH pipelines; each round shuffles two longs per edge.
+  *     the LSH pipelines; each exchange moves two longs per edge.
   *   - Every round's result is checkpointed (reliable checkpoint dir when
   *     `spark.sparkContext.setCheckpointDir` was called, local checkpoint
   *     otherwise) — lineage stays O(1) across iterations instead of
   *     growing a plan Catalyst must re-analyze each round.
-  *   - Convergence is detected from a (count, xxhash64-sum) signature of
-  *     the canonical edge set — two scalar aggregates per round, no
-  *     edge-set `except` join.
+  *   - Convergence is detected from a (count, xor of xxhash64) signature of
+  *     the canonical edge set, folded per partition in the same job that
+  *     materializes the round's checkpoint — no aggregate exchange, no
+  *     edge-set `except` join, no job of its own.
   *
   * Reference semantics preserved: the survivor of each cluster is the
   * MINIMUM id — the distributed analog of the reference's first-wins
@@ -45,22 +51,8 @@ object Components {
     * bound, so 50 covers any graph that fits on a cluster.
     */
   def connectedComponents(pairs: DataFrame, idCol1: String = "id1",
-                          idCol2: String = "id2", maxIter: Int = 50): DataFrame = {
-    // Constraint propagation is disabled for the solve (and restored after):
-    // Spark's own tuning guidance for iterative algorithms, and a
-    // correctness requirement here — a localCheckpoint over NULLABLE input
-    // (any parquet-derived pair set) captures isnotnull constraints on the
-    // LogicalRDD, and Spark 4.1's UnionBase.rewriteConstraints throws
-    // "key not found" optimizing the self-union inside largeStar when a
-    // deduplicated child still carries them. All solver filters are
-    // explicit, so no plan quality is lost.
-    val sess = pairs.sparkSession
-    val cpKey = "spark.sql.constraintPropagation.enabled"
-    val cpPrev = sess.conf.get(cpKey, "true")
-    sess.conf.set(cpKey, "false")
-    try connectedComponentsImpl(pairs, idCol1, idCol2, maxIter)._1
-    finally sess.conf.set(cpKey, cpPrev)
-  }
+                          idCol2: String = "id2", maxIter: Int = 50): DataFrame =
+    connectedComponentsWithRounds(pairs, idCol1, idCol2, maxIter)._1
 
   /** [[connectedComponents]] plus the number of alternating rounds the
     * solve took — for the ComponentsSpec convergence-bound law
@@ -69,6 +61,14 @@ object Components {
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, idCol1: String = "id1", idCol2: String = "id2",
       maxIter: Int = 50): (DataFrame, Int) = {
+    // Constraint propagation is disabled for the solve (and restored after):
+    // Spark's own tuning guidance for iterative algorithms, and a
+    // correctness requirement here — a localCheckpoint over NULLABLE input
+    // (any parquet-derived pair set) captures isnotnull constraints on the
+    // LogicalRDD, and Spark 4.1's UnionBase.rewriteConstraints throws
+    // "key not found" optimizing the self-union inside largeStar when a
+    // deduplicated child still carries them. All solver filters are
+    // explicit, so no plan quality is lost.
     val sess = pairs.sparkSession
     val cpKey = "spark.sql.constraintPropagation.enabled"
     val cpPrev = sess.conf.get(cpKey, "true")
@@ -88,20 +88,16 @@ object Components {
     // The first checkpoint reads the input exactly once; everything the
     // returned DataFrame references (node set included) is checkpointed, so
     // callers may unpersist/discard `pairs` immediately. Checkpoints inside
-    // the loop are LAZY: the signature collect right after each one is the
-    // materializing action, so every round runs ONE job (plan + cache +
-    // signature aggregates) instead of a checkpoint job followed by a
-    // signature job — at small edge sets the solve is round-latency-bound
-    // and the second action per round was pure fixed cost. The signature's
-    // full-table aggregate consumes every partition, so the cache it leaves
-    // behind is complete.
+    // the loop are LAZY: building one runs the round's exchanges, and the
+    // signature right after it is the job that computes (and so caches)
+    // every partition of the round's result: one result job per round.
     val base = materializeLazy(canonical)
     var cur = base
     var sig = signature(cur)
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
-      val next = materializeLazy(smallStar(largeStar(cur)))
+      val next = materializeLazy(round(cur))
       val nextSig = signature(next)
       converged = nextSig == sig
       cur = next
@@ -118,11 +114,11 @@ object Components {
       .unionAll(base.select(col("v").as("id"))).distinct()
     // materialized HERE so the whole solve — self-union included —
     // executes while the constraint-propagation guard in
-    // [[connectedComponents]] is still in force; a lazily returned plan
-    // would optimize (and could hit the Spark 4.1 rewriteConstraints
-    // crash the guard exists for) only at the caller's action, after the
-    // conf was restored. One row per paired doc, so the extra checkpoint
-    // is pair-set-scale, not corpus-scale.
+    // [[connectedComponentsWithRounds]] is still in force; a lazily
+    // returned plan would optimize (and could hit the Spark 4.1
+    // rewriteConstraints crash the guard exists for) only at the caller's
+    // action, after the conf was restored. One row per paired doc, so the
+    // extra checkpoint is pair-set-scale, not corpus-scale.
     (materialize(nodes.join(cur.withColumnRenamed("u", "id"), Seq("id"), "left")
       .select(col("id"), coalesce(col("v"), col("id")).as("rep"))), it)
   }
@@ -200,56 +196,47 @@ object Components {
       .unionByName(resolved)
   }
 
+  /** One alternating round: large-star then small-star. Input and output
+    * are canonical (u > v) edge sets; the output is distinct.
+    */
+  private[graft] def round(e: DataFrame): DataFrame = smallStar(largeStar(e))
+
   /** One round of large-star: every node u connects its LARGER neighbors to
     * the minimum of its neighborhood (including itself). High-degree hubs
     * shrink here — that is the point of the algorithm.
     */
-  private[dedup] def largeStar(e: DataFrame): DataFrame = {
-    // ONE explicit raw shuffle of the symmetrized edges by u: the min
-    // aggregate AND the neighbor join below both need u-clustering, but
-    // written naively the groupBy's map-side partial aggregate makes its
-    // exchange subtree differ from the join side's, so Spark shuffles (and
-    // computes) sym twice per round (measured: the two largest exchanges of
-    // the round). Repartitioned first, the aggregate and the join reuse the
-    // same materialized exchange with no further shuffle, and the min's
-    // hash-agg state stays O(distinct u per partition) — hub safety
-    // unchanged. No explicit partition count: AQE sizes/coalesces it, so
-    // the shape stays scale-adaptive.
+  private def largeStar(e: DataFrame): DataFrame = {
+    // The neighborhood min is a window over the symmetrized edges, not an
+    // aggregate joined back: ONE exchange by u plus a local sort, no join,
+    // no broadcast. The v > u filter reads a non-partition column, so
+    // Catalyst cannot push it below the window; pushed below a join or a
+    // repartition, it would give the filtered side an exchange of its own.
+    // No trailing distinct: each canonical edge passes the filter once, so
+    // the output is bounded at |e| rows, and smallStar is duplicate-
+    // insensitive (its own distinct canonicalizes the round's output).
     val sym = e.select(col("u"), col("v"))
       .unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .repartition(col("u"))
-    val mins = sym.groupBy("u")
-      .agg(min("v").as("mn"))
-      .select(col("u"), least(col("u"), col("mn")).as("m"))
-    sym.join(mins, "u")
+    sym.select(col("u"), col("v"),
+               least(col("u"), min("v").over(Window.partitionBy("u"))).as("m"))
       .where(col("v") > col("u"))
-      // v > u >= m, so (v, m) is already canonical big-to-small.
-      // No trailing distinct: the output is exactly one row per input edge
-      // (each canonical edge (u,v) appears in sym once with v on the small
-      // side), so its size is hard-bounded at |e| with or without one, and
-      // smallStar is duplicate-insensitive (min ignores repeats; its own
-      // trailing distinct canonicalizes the round's output set). Dropping
-      // it removes a full |e|-row exchange + hash-aggregate per round.
+      // v > u >= m, so (v, m) is already canonical big-to-small
       .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
   }
 
   /** One round of small-star: every node u connects its SMALLER-or-equal
     * neighbors (and itself) to the minimum of that set. Input and output
     * are canonical (u > v) edge sets.
     */
-  private[dedup] def smallStar(e: DataFrame): DataFrame = {
-    // same one-exchange shape as [[largeStar]]: cluster by u once, then the
-    // min aggregate and the join are both exchange-free over it
-    val eP = e.repartition(col("u"))
-    val mins = eP.groupBy("u").agg(min("v").as("m"))
-    eP.join(mins, "u")
-      .select(col("v").as("n"), col("m"))
-      .unionAll(mins.select(col("u").as("n"), col("m")))
-      .where(col("n") =!= col("m"))
-      .select(greatest(col("n"), col("m")).as("u"), least(col("n"), col("m")).as("v"))
+  private def smallStar(e: DataFrame): DataFrame =
+    // same one-exchange window shape as [[largeStar]]; each edge emits
+    // (v, m) and (u, m) through one explode. m <= v < u, so both are
+    // canonical once the (m, m) self-edge is dropped; the repeated (u, m)
+    // rows of a node's edges collapse in the distinct's map-side partial
+    // aggregate, since all of them sit in u's partition.
+    e.select(col("u"), col("v"), min("v").over(Window.partitionBy("u")).as("m"))
+      .select(explode(array(col("v"), col("u"))).as("u"), col("m").as("v"))
+      .where(col("u") =!= col("v"))
       .distinct()
-  }
 
   /** Truncate lineage and materialize one round's edge set. */
   private def materialize(df: DataFrame): DataFrame =
@@ -257,7 +244,7 @@ object Components {
     else df.localCheckpoint()
 
   /** Lineage-truncating checkpoint whose materialization rides the CALLER's
-    * next full-table action (the per-round signature) instead of running a
+    * next full-table job (the per-round signature) instead of running a
     * dedicated job here.
     */
   private def materializeLazy(df: DataFrame): DataFrame =
@@ -265,14 +252,21 @@ object Components {
       df.checkpoint(eager = false)
     else df.localCheckpoint(eager = false)
 
-  /** Order-independent convergence signature of a canonical edge set
-    * (bit_xor folds 64-bit edge hashes without ANSI sum overflow; the edge
-    * set is distinct, so xor-cancellation of repeats cannot occur).
+  /** Order-independent convergence signature of a canonical (u, v) edge set:
+    * row count and the xor of each edge's xxhash64(u, v) (Spark's seed 42).
+    * Folded per partition straight over the rows of `e`, so on a lazy
+    * checkpoint this is the one job that also materializes it, with no
+    * aggregate exchange. The edge set is distinct, so xor-cancellation of
+    * repeats cannot occur.
     */
-  private def signature(e: DataFrame): (Long, Long) = {
-    val row = e.select(xxhash64(col("u"), col("v")).as("h"))
-      .agg(count(lit(1)), coalesce(expr("bit_xor(h)"), lit(0L)))
-      .collect()(0)
-    (row.getLong(0), row.getLong(1))
-  }
+  private def signature(e: DataFrame): (Long, Long) =
+    e.queryExecution.toRdd.mapPartitions { rows =>
+      var n = 0L
+      var h = 0L
+      rows.foreach { r =>
+        n += 1
+        h ^= XXH64.hashLong(r.getLong(1), XXH64.hashLong(r.getLong(0), 42L))
+      }
+      Iterator.single((n, h))
+    }.collect().foldLeft((0L, 0L)) { case ((n, h), (pn, ph)) => (n + pn, h ^ ph) }
 }

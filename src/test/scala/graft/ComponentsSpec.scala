@@ -60,6 +60,21 @@ class ComponentsSpec extends GraftSpec {
     assert(!got.contains(3L)) // self-loop only => not part of the pair graph
   }
 
+  test("hub beyond the window's in-memory buffer plus a chain matches union-find") {
+    // Each star's neighborhood min is a window: a node with more neighbors
+    // than the in-memory threshold leaves the row array's in-memory path
+    // for its spillable sorter. The hub's last spoke carries a chain, so
+    // the hub's minimum must travel the whole chain.
+    val threshold = spark.conf.get("spark.sql.windowExec.buffer.in.memory.threshold").toLong
+    val spokes = threshold + 1000L
+    val hub = (1L to spokes).map(i => (7L, 100000L + i))
+    val chain = (0L until 200L).map(i => (100000L + spokes + i, 100000L + spokes + i + 1))
+    val edges = hub ++ chain
+    val got = run(edges)
+    assert(got.size == spokes + 201)
+    assert(got == unionFind(edges))
+  }
+
   test("partitioning-invariant: repartition(13) equals coalesce(1)") {
     val rnd = new scala.util.Random(11)
     val edges = Seq.fill(200)((rnd.nextInt(120).toLong, rnd.nextInt(120).toLong))

@@ -1,9 +1,12 @@
 package graft
 
+import graft.dedup.Components
 import graft.drift.Drift
 import graft.gen.CodeTableGen
 import graft.suite.SuiteRunner
 import graft.tableio.ParquetTableIO
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.functions._
 
 /** Scale evidence as assertions: the job count of the hot paths must be
@@ -107,5 +110,46 @@ class JobCountSpec extends GraftSpec {
     assert(rounds >= 3, s"chain of 64 should need several rounds, took $rounds")
     assert(jobs <= rounds + 2,
       s"components ran $jobs jobs over $rounds rounds — expected one action per round")
+  }
+
+  private def chainAndHub = {
+    import spark.implicits._
+    val chain = (0L until 64L).sliding(2).map(s => (s(0), s(1))).toSeq
+    val hub = (1L to 300L).map(i => (1000L, 1000L + i))
+    (chain ++ hub :+ ((63L, 1300L))).toDF("id1", "id2")
+  }
+
+  test("connected components under default AQE + auto-broadcast: at most 4 jobs per round") {
+    // Left at the session defaults, every shuffle stage and every broadcast
+    // is its own job. A round is three shuffle stages (large star, small
+    // star, the round's distinct) plus the result job that materializes
+    // the lazy checkpoint and folds the convergence signature; the constant
+    // covers the base edge set (its distinct + signature) and the final
+    // star-forest join (node distinct, the join's exchanges or broadcast,
+    // its checkpoint job). A join-back or a separate signature aggregate in
+    // the round would cost jobs per round and break the bound.
+    var rounds = 0
+    val jobs = countJobs("cc-jobs-aqe") {
+      rounds = Components.connectedComponentsWithRounds(chainAndHub)._2
+    }
+    assert(rounds >= 3, s"chain + hub should need several rounds, took $rounds")
+    assert(jobs <= 4 * rounds + 6,
+      s"components ran $jobs jobs over $rounds rounds — expected at most 4 per round + 6")
+  }
+
+  test("connected components: one round's final plan is one shuffle per star plus the distinct") {
+    // the AQE final plan at the session defaults: no second exchange in a
+    // star and nothing broadcast
+    val canonical = chainAndHub
+      .select(greatest(col("id1"), col("id2")).as("u"), least(col("id1"), col("id2")).as("v"))
+      .distinct().localCheckpoint()
+    val round = Components.round(canonical)
+    round.collect() // runs round.queryExecution, so its AQE plan is final
+    object plans extends AdaptiveSparkPlanHelper
+    val plan = round.queryExecution.executedPlan
+    val shuffles = plans.collect(plan) { case e: ShuffleExchangeLike => e }
+    val broadcasts = plans.collect(plan) { case e: BroadcastExchangeLike => e }
+    assert(shuffles.size == 3 && broadcasts.isEmpty,
+      s"one round planned ${shuffles.size} shuffles and ${broadcasts.size} broadcasts:\n$plan")
   }
 }
