@@ -48,9 +48,9 @@ object Bench {
     // ---- suite throughput (the BASELINE metric) ----
     // generate the bench code table ONCE to parquet so the timed run reads
     // from disk like production (generation excluded from the timing);
-    // shared with the scaling profiles (honors SPARK_GRAFT_INPUT, layout
-    // partitioned by the validation unit so resume and per-batch validation
-    // physically prune unread batches, regenerates on row-count mismatch)
+    // honors SPARK_GRAFT_INPUT, layout partitioned by the validation unit so
+    // resume and per-batch validation physically prune unread batches,
+    // regenerates on row-count mismatch
     val benchInput = GenBenchInput.ensure(spark, suiteRows)
     val dim = gen.CodeTableGen.repoLangDim(spark)
     // warm-up at FULL size (JIT compilation of the generated code paths
@@ -151,5 +151,40 @@ object Bench {
     spark.stop()
     // printed LAST, after Spark shutdown, so no executor log line follows it
     println(json)
+  }
+}
+
+/** The bench input table: the deterministic code table written once to
+  * disk, partitioned by batch_id, so runs at several widths share one
+  * on-disk input.
+  */
+object GenBenchInput {
+  /** Ensures the bench code table exists with EXACTLY `rows` rows at the
+    * SPARK_GRAFT_INPUT-pinned (or default per-row-count) path; (re)generates
+    * otherwise. The single source of truth for the bench input layout,
+    * so a pinned path holding a different row count is never silently
+    * measured (parquet count() is footer-stats-only, cheap).
+    */
+  def ensure(spark: SparkSession, rows: Long,
+             pinned: Option[String] = sys.env.get("SPARK_GRAFT_INPUT")): String = {
+    val out = pinned.getOrElse(s"/tmp/graft_bench_input_$rows")
+    // readability probed through Spark's own FS layer (not java.nio, which
+    // is blind to hdfs://-style URIs and to data whose _SUCCESS marker was
+    // cleaned up): any readable parquet at the path yields its footer count
+    val counted = scala.util.Try(spark.read.parquet(out).count()).getOrElse(-1L)
+    if (counted != rows) {
+      // a PINNED path holding ANY readable data of a different size is an
+      // operator mistake (stale env var from a scaling session) —
+      // overwriting would destroy an expensive input (256M rows ≈ 36 GB,
+      // minutes to regenerate), so refuse; only an empty/unreadable pinned
+      // path is generated into (that is GenBenchInput's contract), and the
+      // default per-row-count path is always ours to regenerate
+      if (pinned.isDefined && counted >= 0) throw new IllegalStateException(
+        s"SPARK_GRAFT_INPUT=$out holds $counted rows but $rows were " +
+          s"requested — unset SPARK_GRAFT_INPUT or set SPARK_GRAFT_SUITE_ROWS=$counted")
+      gen.CodeTableGen.generate(spark, rows, batches = 4)
+        .write.partitionBy("batch_id").mode("overwrite").parquet(out)
+    }
+    out
   }
 }

@@ -153,7 +153,8 @@ object Ivf {
     * cost O(1) in `nlist` (the round-4 per-centroid `typedLit` shape cost
     * ~148 s of analysis/codegen wall at nlist=1024 × dim=768; the HOF
     * single-literal shape fixed the plan but evaluated interpreted at
-    * ~100 ms/row — see [[IvfKernel]] and IvfPlanProbe). Output
+    * ~100 ms/row — see [[IvfKernel]] and the plan-cost isolation
+    * paragraph of BENCH/BASELINE.md's round-5 quiet-window section). Output
     * `(id, list_id)`. Degenerate rows — null, empty, or all-zero vectors
     * (every cosine 0, so argmax would alias list 0) — get a null
     * `list_id` and therefore never surface as candidates. Row-wise and

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   * higher-order functions (`transform`/`aggregate`/`zip_with`) are
   * interpreted with per-element boxing — at production IVF sizing
   * (nlist=1024 × dim=768) an HOF-composed scoring pass costs ~100 ms/row
-  * (measured: 20 s for a 200-row corpus, IvfPlanProbe), which at 100 TB is
+  * (measured: 20 s for a 200-row corpus; BENCH/BASELINE.md, round-5
+  * quiet-window section, plan-cost isolation paragraph), which at 100 TB is
   * disqualifying. These kernels run the same arithmetic over primitive
   * arrays (~2 ms/row at that sizing) and are invoked from generated code,
   * so the scoring stays inside the whole-stage-codegen span.

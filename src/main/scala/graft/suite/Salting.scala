@@ -32,18 +32,6 @@ object Salting {
       .agg(sum("_partial").as("count"))
   }
 
-  /** Salted two-level aggregation for arbitrary mergeable aggregates:
-    * `partials` computed per (key, salt), then `merges` combine them per key.
-    * Caller guarantees each (partial, merge) pair is a homomorphism
-    * (sum/sum, count/sum, min/min, max/max, hll/hll_union, tdigest/merge…).
-    */
-  def saltedAgg(df: DataFrame, key: String, saltSource: Seq[String], buckets: Int)(
-      partials: Seq[Column], merges: Seq[Column]): DataFrame =
-    df.groupBy(col(key), saltCol(buckets, saltSource.map(col): _*).as("_salt"))
-      .agg(partials.head, partials.tail: _*)
-      .groupBy(col(key))
-      .agg(merges.head, merges.tail: _*)
-
   /** Salt expression that salts ONLY the named hot keys; every other key
     * keeps salt 0. Static salting pays its cost on the LONG TAIL: the salt
     * splinters each map task's partial-aggregation state into up to

@@ -79,4 +79,19 @@ class GroupDriftSpec extends GraftSpec {
     assert(r.getDouble(1) === 0.0 && r.getDouble(2) === 1.0)
     assert(r.isNullAt(4) && !r.getBoolean(8))  // mean_cur null, not drifted
   }
+
+  test("numeric group column: a count tie at the maxGroups cut breaks by the group's string form") {
+    // group 1 leads outright; groups 9 and 10 tie at 40 rows for the last
+    // slot. The cut orders by (count desc, group cast to string asc), so
+    // "10" < "9" keeps 10 and lumps 9 into __other__ (raw integer order
+    // would keep 9). Pins the ordering that ships: changing it could move
+    // Verify output.
+    val df = (0 until 140).map { i =>
+      val g = if (i < 60) 1 else if (i < 100) 9 else 10
+      (g, i.toDouble, i % 2 == 0)
+    }.toDF("g", "v", "b")
+    val out = GroupDrift.ksMeanByGroup(df, "g", "v", col("b"), maxGroups = 2)
+      .collect().map(r => r.getString(0) -> (r.getLong(6) + r.getLong(7))).toMap
+    assert(out === Map("1" -> 60L, "10" -> 40L, GroupDrift.OtherGroup -> 40L))
+  }
 }

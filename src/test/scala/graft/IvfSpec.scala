@@ -179,7 +179,8 @@ class IvfSpec extends GraftSpec {
 
   test("production nlist: plan builds and executes in bounded time (O(1) plan size)") {
     // round-4 watch item: the per-centroid typedLit shape cost ~148 s of
-    // analysis/codegen wall at nlist=1024×dim=768 (IvfPlanProbe); the
+    // analysis/codegen wall at nlist=1024×dim=768 (BENCH/BASELINE.md,
+    // round-5 quiet-window section, plan-cost isolation paragraph); the
     // single-2-D-literal shape must keep an nlist=256 leg comfortably
     // inside a test budget
     val dim = 96

@@ -15,12 +15,19 @@ class TextSpec extends GraftSpec {
     assert(run1[Int]("", TextAnalysis.tokenCount(col("t"))) == 0)
     assert(run1[Int]("   ", TextAnalysis.tokenCount(col("t"))) == 0)
     assert(run1[Int]("one", TextAnalysis.tokenCount(col("t"))) == 1)
+    // Spark's trim strips only U+0020, so these rows reach regexp_count,
+    // whose \S treats tab, newline and vertical tab as whitespace: the
+    // counts are the non-space runs, and whitespace-only text counts 0
+    assert(run1[Int]("\tfoo bar", TextAnalysis.tokenCount(col("t"))) == 2)
+    assert(run1[Int]("\t\n", TextAnalysis.tokenCount(col("t"))) == 0)
+    assert(run1[Int]("\u000Bx", TextAnalysis.tokenCount(col("t"))) == 1)
   }
 
   test("subword count: ceil(len/4) per word") {
     // "internationalization"(20) → 5, "is"(2) → 1, "fun"(3) → 1
     assert(run1[Long]("internationalization is fun", TextAnalysis.subwordCount(col("t"))) == 7L)
     assert(run1[Long]("", TextAnalysis.subwordCount(col("t"))) == 0L)
+    assert(run1[Long]("\tabcde", TextAnalysis.subwordCount(col("t"))) == 2L)
   }
 
   test("language ID heuristic: marker words and CJK detection") {
