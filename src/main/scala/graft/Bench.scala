@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main. Emits ONE JSON line:
   *   {"metric":"validated files/sec", "value":<throughput>, "unit":"files/sec",
   *    "queries":{<name>:<sec>, <name>_warm:<sec>, ...,
-  *               "suite_sec_min":..., "suite_sec_median":..., "suite_rows":...},
-  *    "sf":<dir>, "cpus":<n>}
+  *               "suite_sec_min":..., "suite_sec_median":...},
+  *    "suite_rows":<rows>, "sf":<dir>, "cpus":<n>}
+  * Every value in "queries" is seconds; the suite's input row count sits
+  * outside it so totals over that map stay timings.
   *
   * The headline metric (BASELINE.json) is suite throughput: rows of the
   * synthetic code table validated per second by the FULL constraint + drift
@@ -56,16 +58,16 @@ object Bench {
     // warm-up at FULL size (JIT compilation of the generated code paths
     // dominates the first run: 58s → 21s steady-state), excluded per
     // BASELINE.md protocol
-    locally {
-      val tmpW = java.nio.file.Files.createTempDirectory("graft_bench_w").toString
+    SparkEntry.withTempRoot("graft_bench_w") { tmpW =>
       suite.SuiteRunner.run(spark, spark.read.parquet(benchInput), dim,
         new tableio.ParquetTableIO(tmpW))
     }
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val runs = (1 to nRuns).map { _ =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_bench").toString
-      val code = spark.read.parquet(benchInput)
-      time(suite.SuiteRunner.run(spark, code, dim, new tableio.ParquetTableIO(tmp)))
+      SparkEntry.withTempRoot("graft_bench") { tmp =>
+        val code = spark.read.parquet(benchInput)
+        time(suite.SuiteRunner.run(spark, code, dim, new tableio.ParquetTableIO(tmp)))
+      }
     }.sorted
     // this sandbox host has noisy neighbors (identical runs observed to
     // swing 20s↔96s); the HEADLINE is the median (typical performance),
@@ -140,9 +142,9 @@ object Bench {
     // (typical); the ambiguous bare "suite_sec" key is gone so cross-round
     // comparisons can't silently mix statistics
     val qs = (qTimes ++ groupDriftTimes ++ Seq("suite_sec_min" -> suiteMin,
-      "suite_sec_median" -> suiteMedian, "suite_rows" -> suiteRows.toDouble))
+      "suite_sec_median" -> suiteMedian))
       .map { case (k, v) => s""""$k":${num(v)}""" }.mkString("{", ",", "}")
-    val json = s"""{"metric":"validated files/sec","value":${num(filesPerSec, 1)},"unit":"files/sec","queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
+    val json = s"""{"metric":"validated files/sec","value":${num(filesPerSec, 1)},"unit":"files/sec","queries":$qs,"suite_rows":$suiteRows,"sf":"$sfDir","cpus":$cpus}"""
     // the JSON must survive the driver: sbt buries stdout in [info]/[error]
     // noise (round-1 BENCH parse failed), so ALSO persist it to a file
     val outDir = java.nio.file.Paths.get(sys.props.getOrElse("user.dir", "."), "BENCH")

@@ -60,9 +60,20 @@ object SparkEntry {
     suiteVerdictsCache.computeIfAbsent(rows, _ => {
       val code = graft.gen.CodeTableGen.generate(s, rows, batches = 4)
       val dim = graft.gen.CodeTableGen.repoLangDim(s)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q_suite").toString
-      graft.suite.SuiteRunner.run(s, code, dim, new graft.tableio.ParquetTableIO(tmp))
+      withTempRoot("graft_q_suite") { tmp =>
+        graft.suite.SuiteRunner.run(s, code, dim, new graft.tableio.ParquetTableIO(tmp))
+      }
     })
+
+  /** Runs `f` on a fresh temp directory and deletes it afterwards. Only for
+    * an `f` whose result is fully materialized: a lazy DataFrame over the
+    * directory would outlive it.
+    */
+  private[graft] def withTempRoot[A](prefix: String)(f: String => A): A = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    try f(root.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
 
   /** The DuckDB recomputation of the suite's integer verdict columns over a
     * written copy of the engine's exact input — ONE definition used by both

@@ -1,29 +1,151 @@
 package graft.stats
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.util.{Comparator, TreeSet}
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Bounded "k best (score, id) pairs" aggregate — the map-side top-k that
-  * ANN candidate cuts ride (ordering: score DESC, id ASC — exactly the
-  * `row_number() OVER (ORDER BY score DESC, id ASC) <= k` cut).
+/** The one policy behind every "keep the k first items of a group, exactly"
+  * aggregate here: a TreeSet capped at k under the item kind's order.
   *
+  * A row is inserted only when it beats the current last, so the ~all rows
+  * that miss the cut cost one compare, and it is copied only when it
+  * enters. Merge re-inserts the other side, keeping the k first of both:
+  * associative and commutative, so map-side partial aggregation is exact
+  * and replaces both a window's full sort and any manual salting phase;
+  * the shuffle carries at most mapTasks × k items per group. Buffers
+  * serialize as length-prefixed item lists; they only cross a shuffle and
+  * are never persisted.
+  */
+object Bounded {
+  /** An item type: its order, its owned copy and its serialized form. */
+  abstract class Kind[T](val order: Comparator[T]) {
+    /** A copy that owns its bytes: a row's value may alias a reused buffer. */
+    def own(x: T): T = x
+    def write(out: DataOutputStream, x: T): Unit
+    def read(in: DataInputStream): T
+  }
+
+  /** Spark's string order: unsigned UTF-8 bytes, where Java's UTF-16
+    * `String.compareTo` disagrees on non-ASCII keys. (`UTF8String.compareTo`
+    * is the same compare but refuses to run under `spark.testing`.)
+    */
+  object Strings extends Kind[UTF8String]((a, b) => a.binaryCompare(b)) {
+    override def own(s: UTF8String): UTF8String = s.clone()
+    def write(out: DataOutputStream, s: UTF8String): Unit = {
+      out.writeInt(s.numBytes)
+      s.writeTo(out)
+    }
+    def read(in: DataInputStream): UTF8String = {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      UTF8String.fromBytes(b)
+    }
+  }
+
+  object Pairs extends Kind[(Double, Long)]((a, b) => {
+    val d = java.lang.Double.compare(b._1, a._1)
+    if (d != 0) d else java.lang.Long.compare(a._2, b._2)
+  }) {
+    def write(out: DataOutputStream, p: (Double, Long)): Unit = {
+      out.writeDouble(p._1)
+      out.writeLong(p._2)
+    }
+    def read(in: DataInputStream): (Double, Long) = (in.readDouble(), in.readLong())
+  }
+
+  object Counts extends Kind[(Long, UTF8String)]((a, b) => {
+    val d = java.lang.Long.compare(b._1, a._1)
+    if (d != 0) d else Strings.order.compare(a._2, b._2)
+  }) {
+    override def own(p: (Long, UTF8String)): (Long, UTF8String) = (p._1, Strings.own(p._2))
+    def write(out: DataOutputStream, p: (Long, UTF8String)): Unit = {
+      out.writeLong(p._1)
+      Strings.write(out, p._2)
+    }
+    def read(in: DataInputStream): (Long, UTF8String) = (in.readLong(), Strings.read(in))
+  }
+
+  def insert[T](kind: Kind[T], set: TreeSet[T], k: Int, x: T, copy: Boolean): Unit =
+    if (set.size < k || kind.order.compare(x, set.last()) < 0) {
+      if (set.add(if (copy) kind.own(x) else x) && set.size > k) set.pollLast()
+    }
+
+  def mergeInto[T](kind: Kind[T], set: TreeSet[T], other: TreeSet[T], k: Int): Unit =
+    other.forEach(insert(kind, set, k, _, copy = false))
+
+  def write[T](kind: Kind[T], sets: Iterable[TreeSet[T]]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    sets.foreach { set => out.writeInt(set.size); set.forEach(kind.write(out, _)) }
+    out.flush()
+    bos.toByteArray
+  }
+
+  def read[T](kind: Kind[T], bytes: Array[Byte], sets: Array[TreeSet[T]]): Array[TreeSet[T]] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    sets.foreach { set => for (_ <- 0 until in.readInt()) set.add(kind.read(in)) }
+    sets
+  }
+}
+
+/** A [[Bounded]] set as a Spark aggregate: the k first items of a group, as
+  * an array in the kind's order. A case class supplies the kind, the row's
+  * item (null skips the row) and the array element.
+  *
+  * `Serializable` so that Java deserialization of a plan never runs this
+  * constructor: it would see `k = 0` and fail the `require` on every task.
+  */
+abstract class BoundedKAgg[T >: Null <: AnyRef]
+  extends TypedImperativeAggregate[TreeSet[T]] with Serializable {
+
+  def k: Int
+  require(k > 0, "k must be positive")
+
+  protected def kind: Bounded.Kind[T]
+  protected def item(input: InternalRow): T
+  protected def element(x: T): Any
+
+  override def createAggregationBuffer(): TreeSet[T] = new TreeSet[T](kind.order)
+
+  override def update(buf: TreeSet[T], input: InternalRow): TreeSet[T] = {
+    val x = item(input)
+    if (x != null) Bounded.insert(kind, buf, k, x, copy = true)
+    buf
+  }
+
+  override def merge(buf: TreeSet[T], other: TreeSet[T]): TreeSet[T] = {
+    Bounded.mergeInto(kind, buf, other, k)
+    buf
+  }
+
+  override def eval(buf: TreeSet[T]): Any = {
+    val out = new Array[Any](buf.size)
+    var i = 0
+    buf.forEach { x => out(i) = element(x); i += 1 }
+    new GenericArrayData(out)
+  }
+
+  override def serialize(buf: TreeSet[T]): Array[Byte] = Bounded.write(kind, Seq(buf))
+  override def deserialize(bytes: Array[Byte]): TreeSet[T] =
+    Bounded.read(kind, bytes, Array(createAggregationBuffer())).head
+  override def nullable: Boolean = false
+}
+
+/** The k best `struct<score, id>` — the map-side top-k that ANN candidate
+  * cuts ride, exactly `row_number() OVER (ORDER BY score DESC, id ASC) <= k`.
   * A window top-k SORTS the full scored set (measured: ~19 s of the ADC
   * scan at 256 queries × 200k codes × 8 threads was the two-phase window
   * sort of 51M exploded rows) and funnels each query's rows through one
-  * reducer. This aggregate keeps a k-bounded TreeSet per (group, map
-  * task): the per-row update is an O(1) compare against the current
-  * worst for the ~all rows that miss the cut, the shuffle carries at most
-  * mapTasks × k entries per query, and merge keeps the k best of both
-  * sides — associative + commutative, so map-side partial aggregation
-  * replaces BOTH the full sort and any manual salting phase, exactly.
+  * reducer.
   */
 case class TopKPairsAgg(
     scoreExpr: Expression,
@@ -31,110 +153,99 @@ case class TopKPairsAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[(Double, Long)]]
-  with BinaryLike[Expression] {
-
-  require(k > 0, "k must be positive")
+  extends BoundedKAgg[(Double, Long)] with BinaryLike[Expression] {
 
   override def left: Expression = scoreExpr
   override def right: Expression = idExpr
 
-  private object Ord extends java.util.Comparator[(Double, Long)] {
-    override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val d = java.lang.Double.compare(b._1, a._1) // score DESC
-      if (d != 0) d else java.lang.Long.compare(a._2, b._2) // id ASC
-    }
-  }
-
-  override def createAggregationBuffer(): java.util.TreeSet[(Double, Long)] =
-    new java.util.TreeSet[(Double, Long)](Ord)
-
-  private def insert(buf: java.util.TreeSet[(Double, Long)],
-                     p: (Double, Long)): Unit = {
-    if (buf.size < k) buf.add(p)
-    else if (Ord.compare(p, buf.last()) < 0) {
-      if (buf.add(p)) buf.pollLast()
-    }
-  }
-
-  override def update(buf: java.util.TreeSet[(Double, Long)],
-                      input: InternalRow): java.util.TreeSet[(Double, Long)] = {
+  override protected def kind: Bounded.Kind[(Double, Long)] = Bounded.Pairs
+  override protected def item(input: InternalRow): (Double, Long) = {
     val s = scoreExpr.eval(input)
     val i = idExpr.eval(input)
-    if (s != null && i != null)
-      insert(buf, (s.asInstanceOf[Double], i.asInstanceOf[Long]))
-    buf
+    if (s == null || i == null) null else (s.asInstanceOf[Double], i.asInstanceOf[Long])
   }
-
-  override def merge(buf: java.util.TreeSet[(Double, Long)],
-                     other: java.util.TreeSet[(Double, Long)]): java.util.TreeSet[(Double, Long)] = {
-    val it = other.iterator()
-    while (it.hasNext) insert(buf, it.next())
-    buf
-  }
-
-  /** Array of `struct<score: double, id: bigint>` in (score desc, id asc)
-    * order — the exact window-cut result.
-    */
-  override def eval(buf: java.util.TreeSet[(Double, Long)]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) {
-      val (s, id) = it.next()
-      out(i) = new GenericInternalRow(Array[Any](s, id))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: java.util.TreeSet[(Double, Long)]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) {
-      val (s, id) = it.next()
-      out.writeDouble(s)
-      out.writeLong(id)
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[(Double, Long)] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) {
-      buf.add((in.readDouble(), in.readLong()))
-      i += 1
-    }
-    buf
-  }
+  override protected def element(p: (Double, Long)): Any = new GenericInternalRow(Array[Any](p._1, p._2))
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("score", DoubleType, nullable = false),
       StructField("id", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def withNewMutableAggBufferOffset(o: Int): TopKPairsAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKPairsAgg =
-    copy(inputAggBufferOffset = o)
+  override def withNewMutableAggBufferOffset(o: Int): TopKPairsAgg = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): TopKPairsAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKPairsAgg =
     copy(scoreExpr = l, idExpr = r)
   override def prettyName: String = "top_k_pairs"
 }
 
+/** The k best `struct<count, item>` for STRING-keyed rankings — the
+  * repo-metrics cut `row_number() OVER (PARTITION BY batch ORDER BY count
+  * DESC, repo ASC) <= k` without the window; array position = rank − 1. A
+  * per-batch window rank funnels every repo of a batch through ONE
+  * reducer's sort (10^9 rows per partition at target scale).
+  */
+case class TopKStringsAgg(
+    countExpr: Expression,
+    itemExpr: Expression,
+    k: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends BoundedKAgg[(Long, UTF8String)] with BinaryLike[Expression] {
+
+  override def left: Expression = countExpr
+  override def right: Expression = itemExpr
+
+  override protected def kind: Bounded.Kind[(Long, UTF8String)] = Bounded.Counts
+  override protected def item(input: InternalRow): (Long, UTF8String) = {
+    val c = countExpr.eval(input)
+    val s = itemExpr.eval(input)
+    if (c == null || s == null) null else (c.asInstanceOf[Long], s.asInstanceOf[UTF8String])
+  }
+  override protected def element(p: (Long, UTF8String)): Any = new GenericInternalRow(Array[Any](p._1, p._2))
+
+  override def dataType: DataType = ArrayType(
+    StructType(Seq(StructField("count", LongType, nullable = false),
+      StructField("item", StringType, nullable = false))), containsNull = false)
+  override def withNewMutableAggBufferOffset(o: Int): TopKStringsAgg = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): TopKStringsAgg = copy(inputAggBufferOffset = o)
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKStringsAgg =
+    copy(countExpr = l, itemExpr = r)
+  override def prettyName: String = "top_k_strings"
+}
+
+/** The k smallest DISTINCT strings, ascending — the one-pass form of capped
+  * deterministic violation sampling (SURVEY O5), exactly the sample
+  * `SELECT DISTINCT key ORDER BY key LIMIT k` gives. The two-phase
+  * alternative (count violations in the stats pass, then a second scan with
+  * `row_number() ≤ cap` to locate samples) re-reads and re-hashes the
+  * content column for every batch that has violations; this aggregate rides
+  * the SAME scan as the counts with ~k × keylen bytes of state.
+  */
+case class MinKStringsAgg(
+    child: Expression,
+    k: Int,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends BoundedKAgg[UTF8String] with UnaryLike[Expression] {
+
+  override protected def kind: Bounded.Kind[UTF8String] = Bounded.Strings
+  override protected def item(input: InternalRow): UTF8String =
+    child.eval(input).asInstanceOf[UTF8String]
+  override protected def element(s: UTF8String): Any = s
+
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def withNewMutableAggBufferOffset(o: Int): MinKStringsAgg = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): MinKStringsAgg = copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(c: Expression): MinKStringsAgg = copy(child = c)
+  override def prettyName: String = "min_k_strings"
+}
+
 /** Batched multi-query top-k — the ADC scan's aggregate: consumes ONE row
   * per corpus code carrying the full per-query score array (from
-  * [[graft.sim.PqAdcScores]]) and maintains `nq` k-bounded heaps in one
+  * [[graft.sim.PqAdcScores]]) and keeps `nq` [[Bounded]] sets in one
   * buffer, so the 51M-row `posexplode` + per-row group hashing the
   * per-pair form needs never materializes (measured 5.8 s → the explode
   * dominated; this form touches each (code, query) pair as one primitive
   * compare). GLOBAL aggregate — no group key: the partial phase builds
-  * all heaps per partition, merge combines per query, and the single
+  * all sets per partition, merge combines per query, and the single
   * output row explodes into `(qidx, id)` pairs. Same (score desc, id asc)
   * cut as a window, exactly.
   */
@@ -145,7 +256,7 @@ case class AdcTopKAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[java.util.TreeSet[(Double, Long)]]]
+  extends TypedImperativeAggregate[Array[TreeSet[(Double, Long)]]]
   with BinaryLike[Expression] {
 
   private def nq: Int = qids.length
@@ -154,38 +265,23 @@ case class AdcTopKAgg(
   override def left: Expression = idExpr
   override def right: Expression = scoresExpr
 
-  private object Ord extends java.util.Comparator[(Double, Long)] {
-    override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val d = java.lang.Double.compare(b._1, a._1)
-      if (d != 0) d else java.lang.Long.compare(a._2, b._2)
-    }
-  }
+  override def createAggregationBuffer(): Array[TreeSet[(Double, Long)]] =
+    Array.fill(nq)(new TreeSet[(Double, Long)](Bounded.Pairs.order))
 
-  override def createAggregationBuffer(): Array[java.util.TreeSet[(Double, Long)]] =
-    Array.fill(nq)(new java.util.TreeSet[(Double, Long)](Ord))
-
-  private def insert(h: java.util.TreeSet[(Double, Long)],
-                     p: (Double, Long)): Unit = {
-    if (h.size < k) h.add(p)
-    else if (Ord.compare(p, h.last()) < 0) {
-      if (h.add(p)) h.pollLast()
-    }
-  }
-
-  override def update(buf: Array[java.util.TreeSet[(Double, Long)]],
-                      input: InternalRow): Array[java.util.TreeSet[(Double, Long)]] = {
+  override def update(buf: Array[TreeSet[(Double, Long)]],
+                      input: InternalRow): Array[TreeSet[(Double, Long)]] = {
     val idv = idExpr.eval(input)
     val sv = scoresExpr.eval(input)
     if (idv != null && sv != null) {
       val id = idv.asInstanceOf[Long]
-      val scores = sv.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      val scores = sv.asInstanceOf[ArrayData]
       if (scores.numElements() == nq) {
         // self-exclusion INSIDE the cut (a query is never its own
         // neighbor), so a self-match can't consume a rerank slot —
         // keeping the cut identical to the pre-filtered window form
         var q = 0
         while (q < nq) {
-          if (id != qids(q)) insert(buf(q), (scores.getDouble(q), id))
+          if (id != qids(q)) Bounded.insert(Bounded.Pairs, buf(q), k, (scores.getDouble(q), id), copy = false)
           q += 1
         }
       }
@@ -193,238 +289,52 @@ case class AdcTopKAgg(
     buf
   }
 
-  override def merge(buf: Array[java.util.TreeSet[(Double, Long)]],
-                     other: Array[java.util.TreeSet[(Double, Long)]]): Array[java.util.TreeSet[(Double, Long)]] = {
-    var q = 0
-    while (q < nq) {
-      val it = other(q).iterator()
-      while (it.hasNext) insert(buf(q), it.next())
-      q += 1
-    }
+  override def merge(buf: Array[TreeSet[(Double, Long)]],
+                     other: Array[TreeSet[(Double, Long)]]): Array[TreeSet[(Double, Long)]] = {
+    for (q <- 0 until nq) Bounded.mergeInto(Bounded.Pairs, buf(q), other(q), k)
     buf
   }
 
-  /** Array of `struct<qidx: int, id: bigint>`, per-query blocks in
-    * (score desc, id asc) order.
-    */
-  override def eval(buf: Array[java.util.TreeSet[(Double, Long)]]): Any = {
+  /** Array of `struct<qidx: int, id: bigint>`, per-query blocks in (score desc, id asc) order. */
+  override def eval(buf: Array[TreeSet[(Double, Long)]]): Any = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    var q = 0
-    while (q < nq) {
-      val it = buf(q).iterator()
-      while (it.hasNext) {
-        val (_, id) = it.next()
-        out += new GenericInternalRow(Array[Any](q, id))
-      }
-      q += 1
-    }
+    for (q <- 0 until nq) buf(q).forEach(p => out += new GenericInternalRow(Array[Any](q, p._2)))
     new GenericArrayData(out.toArray)
   }
 
-  override def serialize(buf: Array[java.util.TreeSet[(Double, Long)]]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    var q = 0
-    while (q < nq) {
-      out.writeInt(buf(q).size)
-      val it = buf(q).iterator()
-      while (it.hasNext) {
-        val (s, id) = it.next()
-        out.writeDouble(s)
-        out.writeLong(id)
-      }
-      q += 1
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[java.util.TreeSet[(Double, Long)]] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val buf = createAggregationBuffer()
-    var q = 0
-    while (q < nq) {
-      val n = in.readInt()
-      var i = 0
-      while (i < n) {
-        buf(q).add((in.readDouble(), in.readLong()))
-        i += 1
-      }
-      q += 1
-    }
-    buf
-  }
+  override def serialize(buf: Array[TreeSet[(Double, Long)]]): Array[Byte] =
+    Bounded.write(Bounded.Pairs, buf)
+  override def deserialize(bytes: Array[Byte]): Array[TreeSet[(Double, Long)]] =
+    Bounded.read(Bounded.Pairs, bytes, createAggregationBuffer())
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("qidx", IntegerType, nullable = false),
       StructField("id", LongType, nullable = false))), containsNull = false)
   override def nullable: Boolean = false
-  override def withNewMutableAggBufferOffset(o: Int): AdcTopKAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): AdcTopKAgg =
-    copy(inputAggBufferOffset = o)
+  override def withNewMutableAggBufferOffset(o: Int): AdcTopKAgg = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): AdcTopKAgg = copy(inputAggBufferOffset = o)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcTopKAgg =
     copy(idExpr = l, scoresExpr = r)
   override def prettyName: String = "adc_top_k"
 }
 
-/** Bounded "k best (count, item) pairs" for STRING-keyed rankings — the
-  * repo-metrics cut (`row_number() OVER (PARTITION BY batch
-  * ORDER BY count DESC, repo ASC) <= k`) without the window: a per-batch
-  * window rank funnels every repo of a batch through ONE reducer's sort
-  * (10^9 rows per partition at target scale); this aggregate keeps a
-  * k-bounded TreeSet per map task and shuffles ≤ mapTasks × k entries.
-  *
-  * Items compare as UTF-8 BYTES (unsigned, lexicographic) — exactly
-  * Spark's `UTF8String` ordering, so the cut is binary-identical to the
-  * window form even for non-ASCII keys where Java's UTF-16
-  * `String.compareTo` would disagree.
-  */
-case class TopKStringsAgg(
-    countExpr: Expression,
-    itemExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[(Long, Array[Byte])]]
-  with BinaryLike[Expression] {
-
-  require(k > 0, "k must be positive")
-
-  override def left: Expression = countExpr
-  override def right: Expression = itemExpr
-
-  private object Ord extends java.util.Comparator[(Long, Array[Byte])] {
-    override def compare(a: (Long, Array[Byte]), b: (Long, Array[Byte])): Int = {
-      val d = java.lang.Long.compare(b._1, a._1) // count DESC
-      if (d != 0) d
-      else { // item ASC, unsigned byte-lexicographic == UTF8String order
-        val (x, y) = (a._2, b._2)
-        val n = math.min(x.length, y.length)
-        var i = 0
-        while (i < n) {
-          val c = java.lang.Integer.compare(x(i) & 0xFF, y(i) & 0xFF)
-          if (c != 0) return c
-          i += 1
-        }
-        java.lang.Integer.compare(x.length, y.length)
-      }
-    }
-  }
-
-  override def createAggregationBuffer(): java.util.TreeSet[(Long, Array[Byte])] =
-    new java.util.TreeSet[(Long, Array[Byte])](Ord)
-
-  private def insert(buf: java.util.TreeSet[(Long, Array[Byte])],
-                     p: (Long, Array[Byte])): Unit = {
-    if (buf.size < k) buf.add(p)
-    else if (Ord.compare(p, buf.last()) < 0) {
-      if (buf.add(p)) buf.pollLast()
-    }
-  }
-
-  override def update(buf: java.util.TreeSet[(Long, Array[Byte])],
-                      input: InternalRow): java.util.TreeSet[(Long, Array[Byte])] = {
-    val c = countExpr.eval(input)
-    val s = itemExpr.eval(input)
-    if (c != null && s != null)
-      insert(buf, (c.asInstanceOf[Long],
-        s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes.clone()))
-    buf
-  }
-
-  override def merge(buf: java.util.TreeSet[(Long, Array[Byte])],
-                     other: java.util.TreeSet[(Long, Array[Byte])]): java.util.TreeSet[(Long, Array[Byte])] = {
-    val it = other.iterator()
-    while (it.hasNext) insert(buf, it.next())
-    buf
-  }
-
-  /** Array of `struct<count: bigint, item: string>` in (count desc, item
-    * asc) order — the exact window-cut result; array position = rank − 1.
-    */
-  override def eval(buf: java.util.TreeSet[(Long, Array[Byte])]): Any = {
-    val out = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) {
-      val (c, b) = it.next()
-      out(i) = new GenericInternalRow(Array[Any](c,
-        org.apache.spark.unsafe.types.UTF8String.fromBytes(b)))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  override def serialize(buf: java.util.TreeSet[(Long, Array[Byte])]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) {
-      val (c, b) = it.next()
-      out.writeLong(c)
-      out.writeInt(b.length)
-      out.write(b)
-    }
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[(Long, Array[Byte])] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) {
-      val c = in.readLong()
-      val len = in.readInt()
-      val b = new Array[Byte](len)
-      in.readFully(b)
-      buf.add((c, b))
-      i += 1
-    }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("count", LongType, nullable = false),
-      StructField("item", StringType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
-  override def withNewMutableAggBufferOffset(o: Int): TopKStringsAgg =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKStringsAgg =
-    copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKStringsAgg =
-    copy(countExpr = l, itemExpr = r)
-  override def prettyName: String = "top_k_strings"
-}
-
 object TopK {
-  /** Column API: array of the k best `(score, id)` structs, score desc /
-    * id asc — `row_number()`-cut-exact, without the sort.
-    */
-  def topKPairs(score: Column, id: Column, k: Int): Column =
-    ColumnBridge.column(TopKPairsAgg(
-      ColumnBridge.expression(score), ColumnBridge.expression(id), k)
-      .toAggregateExpression())
+  private def agg(f: TypedImperativeAggregate[_]): Column = ColumnBridge.column(f.toAggregateExpression())
+  private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
-  /** Column API: array of the k best `(count, item)` structs, count desc /
-    * item asc (UTF-8 byte order) — the string-keyed window cut, without
-    * the window.
-    */
+  /** Column API of [[TopKPairsAgg]]: `array<struct<score, id>>`. */
+  def topKPairs(score: Column, id: Column, k: Int): Column = agg(TopKPairsAgg(expr(score), expr(id), k))
+
+  /** Column API of [[TopKStringsAgg]]: `array<struct<count, item>>`. */
   def topKStrings(count: Column, item: Column, k: Int): Column =
-    ColumnBridge.column(TopKStringsAgg(
-      ColumnBridge.expression(count), ColumnBridge.expression(item), k)
-      .toAggregateExpression())
+    agg(TopKStringsAgg(expr(count), expr(item), k))
 
-  /** Column API: all queries' k best ids from one score-array row per
-    * code — `array<struct<qidx, id>>`, per-query blocks ordered
-    * (score desc, id asc); `qids(q)` is excluded from query q's heap
-    * (self-match).
+  /** Column API of [[MinKStringsAgg]]: the k smallest distinct non-null strings, ascending. */
+  def minKStrings(c: Column, k: Int): Column = agg(MinKStringsAgg(expr(c), k))
+
+  /** Column API of [[AdcTopKAgg]]: `array<struct<qidx, id>>`; `qids(q)` is
+    * excluded from query q's set (self-match).
     */
   def adcTopK(id: Column, scores: Column, qids: Array[Long], k: Int): Column =
-    ColumnBridge.column(AdcTopKAgg(
-      ColumnBridge.expression(id), ColumnBridge.expression(scores), qids, k)
-      .toAggregateExpression())
+    agg(AdcTopKAgg(expr(id), expr(scores), qids, k))
 }

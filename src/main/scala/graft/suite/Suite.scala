@@ -197,7 +197,7 @@ object SuiteRunner {
     * so job 1 (scalars + sketches + capped sha samples) and job 2
     * (lang × length counts) share one materialization of the expensive
     * column. The sha256 invariant check and its capped deterministic sample
-    * ride job 1 via [[graft.stats.MinK.minKStrings]] (bounded O(cap) state,
+    * ride job 1 via [[graft.stats.TopK.minKStrings]] (bounded O(cap) state,
     * mergeable) — no second content scan ever happens.
     */
   def collectArtifacts(code: DataFrame, batches: Seq[Long],
@@ -228,7 +228,7 @@ object SuiteRunner {
         // Computed ONLY for mismatching rows: the ~100-byte string would
         // otherwise dominate the cached slim projection (~60% of its bytes
         // — measured ~34 GB of disk-cache spill per run at 288M rows) while
-        // the MinK sample aggregate ignores every clean row anyway
+        // the min-k sample aggregate ignores every clean row anyway
         when(sha2(col("content"), 256) =!= col("expected_sha256"),
           to_json(struct(coalesce(col("repo"), lit("")).as("repo"),
             coalesce(col("path"), lit("")).as("path"),
@@ -249,7 +249,7 @@ object SuiteRunner {
       sum(when(col("content_missing"), 1L).otherwise(0L)).as("miss_content"),
       sum(when(col("sha_mismatch"), 1L).otherwise(0L)).as("sha_mismatch"),
       // capped deterministic sha-violation sample, one pass, bounded state
-      graft.stats.MinK.minKStrings(
+      graft.stats.TopK.minKStrings(
         when(col("sha_mismatch"), col("key3")), ViolationCap).as("sha_samples"),
       // routing cardinality for the exact-vs-sketched KS decision
       approx_count_distinct(col("len")).as("len_card"),
@@ -305,11 +305,10 @@ object SuiteRunner {
 
     batches.flatMap { b =>
       scalars.get(b).map { r =>
+        def dbl(c: String): Double =
+          Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
         b -> BatchArtifacts(b, r.getAs[Long]("rows"),
-          Option(r.getAs[Any]("len_min")).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN),
-          Option(r.getAs[Any]("len_max")).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN),
-          Option(r.getAs[Any]("len_mean")).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN),
-          Option(r.getAs[Any]("len_std")).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN),
+          dbl("len_min"), dbl("len_max"), dbl("len_mean"), dbl("len_std"),
           r.getAs[Long]("miss_path"), r.getAs[Long]("miss_lang"), r.getAs[Long]("miss_content"),
           r.getAs[Long]("sha_mismatch"),
           langCounts.getOrElse(b, Map.empty),
@@ -483,7 +482,7 @@ object SuiteRunner {
       .where(col("rn") <= ViolationCap).drop("rn")
 
     // sha256 counts AND the capped deterministic sample both came out of the
-    // job-1 artifacts scan (MinK aggregate) — no second content pass; the
+    // job-1 artifacts scan (min-k aggregate) — no second content pass; the
     // sample table is assembled driver-side from ≤ ViolationCap keys/batch
     val shaViol = pending.flatMap { b =>
       arts(b).shaSamples.map(s => (b, s))
@@ -635,12 +634,12 @@ object SuiteRunner {
       .agg(count(lit(1)).as("_partial"))
       .groupBy(col("batch_id"), col("repo"))
       .agg(sum("_partial").as("file_count"))
-      // top-ViolationCap per batch via the bounded TopKStringsAgg instead
-      // of a row_number window: the window form funnels EVERY repo of a
-      // batch through one reducer's sort (10^9 rows per window partition
-      // at target scale); the aggregate shuffles ≤ mapTasks × cap entries
-      // and its (count desc, repo asc UTF-8) cut is window-identical
-      // (TopKSpec pins the equality on skewed data)
+      // top-ViolationCap per batch via TopK.topKStrings (the stats.Bounded
+      // kernel) instead of a row_number window: the window form funnels
+      // EVERY repo of a batch through one reducer's sort (10^9 rows per
+      // window partition at target scale); the aggregate shuffles
+      // ≤ mapTasks × cap entries and its (count desc, repo asc in Spark's
+      // string order) cut is window-identical (TopKSpec pins the equality)
       .groupBy(col("batch_id"))
       .agg(graft.stats.TopK.topKStrings(
         col("file_count"), col("repo"), ViolationCap).as("_top"))
