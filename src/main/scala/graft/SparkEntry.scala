@@ -1305,36 +1305,38 @@ object SparkEntry {
       val inputPath = s"/tmp/graft_oracle/stream_suite_input_$rows"
       val code = graft.gen.CodeTableGen.generate(s, rows, batches = 2).cache()
       code.write.mode("overwrite").parquet(inputPath) // the oracle reads this
-      val stageDir = java.nio.file.Files.createTempDirectory("graft_stream_stage").toString
-      (0L to 1L).foreach { b =>
-        code.where(col("batch_id") === b).drop("batch_id").coalesce(1)
-          .write.mode("append").parquet(stageDir)
-        // distinct mtimes pin micro-batch order = batch id; only the gap
-        // BETWEEN files matters, nothing consumes a trailing one
-        if (b < 1L) Thread.sleep(1100)
+      withTempRoot("graft_stream_stage") { stageDir =>
+        (0L to 1L).foreach { b =>
+          code.where(col("batch_id") === b).drop("batch_id").coalesce(1)
+            .write.mode("append").parquet(stageDir)
+          // distinct mtimes pin micro-batch order = batch id; only the gap
+          // BETWEEN files matters, nothing consumes a trailing one
+          if (b < 1L) Thread.sleep(1100)
+        }
+        code.unpersist()
+        val schema = s.read.parquet(stageDir).schema
+        withTempRoot("graft_stream_audit") { auditRoot =>
+          val io = new graft.tableio.ParquetTableIO(auditRoot)
+          val dim = graft.gen.CodeTableGen.repoLangDim(s)
+          val buf = scala.collection.mutable.ArrayBuffer.empty[graft.suite.Verdict]
+          val q = graft.streaming.StreamingValidate.validateStream(
+            s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stageDir),
+            dim, io, onVerdicts = vs => buf.synchronized { buf ++= vs })
+          // a timed-out drain must FAIL LOUDLY (and stop the query) — falling
+          // through with partial verdicts would read as a parity failure and
+          // leave the stream running jobs under later Verify queries
+          if (!q.awaitTermination(300000)) {
+            q.stop()
+            throw new IllegalStateException("streaming suite did not drain within 300s")
+          }
+          val countChecks = Set("uniqueness", "referential", "completeness", "sha256_invariant")
+          // synchronized read: awaitTermination's contract gives no
+          // happens-before edge with the foreachBatch thread's appends
+          buf.synchronized(buf.toList).filter(v => countChecks.contains(v.check)).toDF()
+            .select(col("batch_id"), col("check"), col("violation_count"), col("passed"))
+            .orderBy("batch_id", "check")
+        }
       }
-      code.unpersist()
-      val schema = s.read.parquet(stageDir).schema
-      val io = new graft.tableio.ParquetTableIO(
-        java.nio.file.Files.createTempDirectory("graft_stream_audit").toString)
-      val dim = graft.gen.CodeTableGen.repoLangDim(s)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[graft.suite.Verdict]
-      val q = graft.streaming.StreamingValidate.validateStream(
-        s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(stageDir),
-        dim, io, onVerdicts = vs => buf.synchronized { buf ++= vs })
-      // a timed-out drain must FAIL LOUDLY (and stop the query) — falling
-      // through with partial verdicts would read as a parity failure and
-      // leave the stream running jobs under later Verify queries
-      if (!q.awaitTermination(300000)) {
-        q.stop()
-        throw new IllegalStateException("streaming suite did not drain within 300s")
-      }
-      val countChecks = Set("uniqueness", "referential", "completeness", "sha256_invariant")
-      // synchronized read: awaitTermination's contract gives no
-      // happens-before edge with the foreachBatch thread's appends
-      buf.synchronized(buf.toList).filter(v => countChecks.contains(v.check)).toDF()
-        .select(col("batch_id"), col("check"), col("violation_count"), col("passed"))
-        .orderBy("batch_id", "check")
     }),
 
     // multimodal feature plumbing (stub decode — no oracle)

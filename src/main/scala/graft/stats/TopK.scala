@@ -7,13 +7,14 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.graftbridge.CollectTopKBridge
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The one policy behind every "keep the k first items of a group, exactly"
+/** The one policy behind every custom "keep the k first items of a group, exactly"
   * aggregate here: a TreeSet capped at k under the item kind's order.
   *
   * A row is inserted only when it beats the current last, so the ~all rows
@@ -331,6 +332,14 @@ object TopK {
 
   /** Column API of [[MinKStringsAgg]]: the k smallest distinct non-null strings, ascending. */
   def minKStrings(c: Column, k: Int): Column = agg(MinKStringsAgg(expr(c), k))
+
+  /** The k smallest non-null values of `c`, duplicates kept, in `orderBy`'s
+    * ascending order (struct fields left to right, nulls first, strings in
+    * UTF-8 byte order): `row_number() OVER (ORDER BY c) <= k` as one
+    * mergeable aggregate. Spark's built-in `CollectTopK`, so no [[Bounded]]
+    * kind is needed for it.
+    */
+  def firstK(c: Column, k: Int): Column = agg(CollectTopKBridge.firstK(expr(c), k))
 
   /** Column API of [[AdcTopKAgg]]: `array<struct<qidx, id>>`; `qids(q)` is
     * excluded from query q's set (self-match).

@@ -1,7 +1,6 @@
 package graft.suite
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.drift.DriftMath
 import graft.tableio.TableIO
@@ -70,23 +69,31 @@ object SuiteConfig {
   * (repo, path, commit, lang, content, expected_sha256, batch_id).
   *
   * Scale design: ALL pending batches are validated in a CONSTANT number of
-  * full-table jobs (≈6 scans/shuffles total), not O(#batches) loops:
+  * full-table jobs, not O(#batches) loops:
   *   1. one-pass scalar aggregates per batch (counts, length moments,
-  *      missing counts, sha-mismatch counts + capped sha samples, HLL and
-  *      t-digest sketch bytes) — single ObjectHashAggregate, map-side
-  *      partial. `content` is read from storage exactly once here: the slim
-  *      projection it reduces to is cached and reused by job 2, and the
-  *      sha256 check rides the same projection (SURVEY.md §7.5 risk 4);
-  *   2. groupBy(batch, lang, length) counts over the cached projection —
-  *      lang marginals → chi-square / PSI(lang); length marginals → exact
-  *      KS + PSI(length), collected ONLY while the distinct-length
-  *      cardinality stays under [[SuiteConfig.LenCardCap]]; above the cap
-  *      the KS/PSI(length) verdicts come from the job-1 t-digest bytes
+  *      missing counts, sha-mismatch counts + capped sha samples, the
+  *      capped completeness_path sample, HLL, heavy-hitters and t-digest
+  *      sketch bytes) — single ObjectHashAggregate, map-side partial.
+  *      `content` is read from storage exactly once here: the slim
+  *      projection it reduces to is cached and reused by the later jobs,
+  *      and the sha256 check rides the same projection (SURVEY.md §7.5
+  *      risk 4);
+  *   2. one grouping-sets aggregate over the cached projection — lang
+  *      marginals → chi-square / PSI(lang); length marginals → exact KS +
+  *      PSI(length), computed ONLY while the distinct-length cardinality
+  *      stays under [[SuiteConfig.LenCardCap]]; above the cap the
+  *      KS/PSI(length) verdicts come from the job-1 t-digest bytes
   *      (mergeable, scale-free) and no per-length rows reach the driver;
-  *   3. duplicate-key detection (one shuffle on a 64-bit key hash);
-  *   4. referential anti-join against the broadcast dimension.
-  * Verdict assembly is driver-side arithmetic over the tiny collected
-  * aggregates. Violations are written capped + deterministic (O5).
+  *   3. uniqueness: duplicate-key candidates on a 64-bit key hash (one
+  *      shuffle), re-verified on the real keys, then per batch the count
+  *      and the capped sample in one aggregate;
+  *   4. referential: anti-join against the broadcast dimension, then per
+  *      batch the count and the capped sample in one aggregate;
+  *   5. repo metrics (below), written straight from the cluster.
+  * Jobs 3 and 4 are collected on writer threads while the other audit
+  * writes run. Verdict assembly is driver-side arithmetic over the tiny
+  * collected aggregates, and every violation sample table (≤ ViolationCap
+  * rows per batch, deterministic: O5) is written from the driver.
   *
   * Skew: groupBy keys are (batch, lang/bin/length) or near-unique triples —
   * none is repo-keyed, so the 30% mega-repo cannot hot-spot a reducer. The
@@ -114,7 +121,10 @@ object SuiteRunner {
       tdigestLen: Array[Byte] = Array.empty, // mergeable t-digest of content length
       freqRepo: Array[Byte] = Array.empty,   // mergeable heavy-hitters sketch of repo
       shaSamples: Seq[String] = Seq.empty,   // capped JSON {repo,path,commit} triples
-      lenCardApprox: Long = 0L)              // approx distinct lengths (routing)
+      lenCardApprox: Long = 0L,              // approx distinct lengths (routing)
+      // capped (repo, commit, lang) sample of the path-missing rows; feeds
+      // violations_completeness_path only, so ArtifactRow does not carry it
+      pathSamples: Seq[(String, String, String)] = Seq.empty)
 
   /** Parquet-serializable form of [[BatchArtifacts]] — persisted to the
     * `artifacts` audit table per batch so a resumed run can reload the
@@ -188,16 +198,17 @@ object SuiteRunner {
     (stat, p, v)
   }
 
-  /** Collect all per-batch artifacts for `batches` in the constant number of
-    * jobs described above. `code` must already be filtered to those batches
-    * (partition pruning keeps unread batches off disk).
+  /** Collect all per-batch artifacts for `batches` in jobs 1 and 2 above.
+    * `code` must already be filtered to those batches (partition pruning
+    * keeps unread batches off disk).
     *
     * `content` is read from storage exactly ONCE: the slim projection
     * (length, missing flags, sha-mismatch flag, key/row hashes) is cached,
-    * so job 1 (scalars + sketches + capped sha samples) and job 2
-    * (lang × length counts) share one materialization of the expensive
-    * column. The sha256 invariant check and its capped deterministic sample
-    * ride job 1 via [[graft.stats.TopK.minKStrings]] (bounded O(cap) state,
+    * so job 1 (scalars + sketches + capped samples) and job 2 (lang and
+    * length marginals) share one materialization of the expensive column.
+    * The sha256 invariant check and its capped deterministic sample ride
+    * job 1 via [[graft.stats.TopK.minKStrings]], the completeness_path
+    * sample via [[graft.stats.TopK.firstK]] (bounded O(cap) state,
     * mergeable) — no second content scan ever happens.
     */
   def collectArtifacts(code: DataFrame, batches: Seq[Long],
@@ -233,6 +244,9 @@ object SuiteRunner {
           to_json(struct(coalesce(col("repo"), lit("")).as("repo"),
             coalesce(col("path"), lit("")).as("path"),
             coalesce(col("commit"), lit("")).as("commit")))).as("key3"),
+        // completeness_path sample key, null on clean rows like key3
+        when(col("path").isNull || col("path") === "",
+          struct(col("repo"), col("commit"), col("lang"))).as("path_key"),
         xxhash64(col("repo"), col("path"), col("commit")).as("keyhash"),
         xxhash64(col("repo"), col("path"), col("commit"), col("content")).as("rowhash"))
 
@@ -251,6 +265,8 @@ object SuiteRunner {
       // capped deterministic sha-violation sample, one pass, bounded state
       graft.stats.TopK.minKStrings(
         when(col("sha_mismatch"), col("key3")), ViolationCap).as("sha_samples"),
+      // capped completeness_path sample, first in (repo, commit, lang) order
+      graft.stats.TopK.firstK(col("path_key"), ViolationCap).as("path_samples"),
       // routing cardinality for the exact-vs-sketched KS decision
       approx_count_distinct(col("len")).as("len_card"),
       // order-independent batch fingerprint: decimal sum of row hashes
@@ -267,36 +283,31 @@ object SuiteRunner {
         .as("freq_repo")).collect()
       .map(r => r.getAs[Long]("batch_id") -> r).toMap
 
-    // job 2: (lang, distinct-length) counts per batch in ONE pass over the
-    // CACHED slim projection. Lang marginals (always tiny — |langs| bounded)
+    // job 2: the lang and length marginals per batch as ONE grouping-sets
+    // aggregate over the CACHED slim projection (one Expand, one exchange,
+    // one driver action). Lang marginals (always tiny — |langs| bounded)
     // feed chi-square/PSI(lang). Length marginals feed exact KS and
-    // PSI(length) — but ONLY below the cardinality cap: the full
-    // (batch × lang × length) cross collect is unbounded on arbitrary
-    // inputs (10^6+ distinct lengths on real code), so above the cap the
-    // driver never sees per-length counts and the drift verdicts fall back
-    // to the t-digest bytes already aggregated in job 1.
-    val cross = slim.groupBy("batch_id", "lang", "len").count()
+    // PSI(length) — but ONLY below the cardinality cap: per-length rows are
+    // unbounded on arbitrary inputs (10^6+ distinct lengths on real code),
+    // so above the cap the lang set runs alone, the driver never sees
+    // per-length counts and the drift verdicts fall back to the t-digest
+    // bytes already aggregated in job 1.
     val maxLenCard = scalars.valuesIterator
       .map(_.getAs[Long]("len_card")).maxOption.getOrElse(0L)
-    // both marginals come back in ONE union query / ONE driver action
-    // (every extra action pays its own planning + scheduling latency —
-    // a measured fixed cost that caps small-input scaling)
-    val langMarginal = cross.groupBy("batch_id", "lang").agg(sum("count").as("n"))
-      .select(lit("lang").as("kind"), col("batch_id"),
-        coalesce(col("lang"), lit("")).as("k"), lit(-1L).as("len"), col("n"))
-    val lenMarginal = cross.groupBy("batch_id", "len").agg(sum("count").as("n"))
-      .select(lit("len").as("kind"), col("batch_id"),
-        lit("").as("k"), col("len"), col("n"))
-    val marginals =
-      (if (maxLenCard > lenCardCap) langMarginal
-       else langMarginal.unionByName(lenMarginal)).collect()
-    val langCounts = marginals.filter(_.getString(0) == "lang")
-      .groupBy(_.getAs[Long]("batch_id"))
+    val langSet = Seq(col("batch_id"), col("lang"))
+    val lenSet = Seq(col("batch_id"), col("len"))
+    val marginals = slim
+      .groupingSets(if (maxLenCard > lenCardCap) Seq(langSet) else Seq(langSet, lenSet),
+        col("batch_id"), col("lang"), col("len"))
+      .agg(count(lit(1)).as("n"), grouping("len").as("lang_set"))
+      .collect()
+    val (langRows, lenRows) = marginals.partition(_.getAs[Byte]("lang_set") == 1)
+    val langCounts = langRows.groupBy(_.getAs[Long]("batch_id"))
       .map { case (b, rows) =>
-        b -> rows.map(r => r.getString(2) -> r.getAs[Long]("n")).toMap
+        b -> rows.map(r => Option(r.getAs[String]("lang")).getOrElse("") -> r.getAs[Long]("n")).toMap
       }
-    val lenCounts: Map[Long, Seq[(Long, Long)]] = marginals
-      .filter(_.getString(0) == "len")
+    // a null length (null content) reads back as 0, uncoalesced
+    val lenCounts: Map[Long, Seq[(Long, Long)]] = lenRows
       .groupBy(_.getAs[Long]("batch_id"))
       .map { case (b, rows) =>
         b -> rows.map(r => r.getAs[Long]("len") -> r.getAs[Long]("n"))
@@ -318,7 +329,9 @@ object SuiteRunner {
           r.getAs[Array[Byte]]("hll_key"), r.getAs[Array[Byte]]("hll_repo"),
           r.getAs[Array[Byte]]("tdigest_len"), r.getAs[Array[Byte]]("freq_repo"),
           r.getAs[scala.collection.Seq[String]]("sha_samples").toSeq,
-          r.getAs[Long]("len_card"))
+          r.getAs[Long]("len_card"),
+          r.getAs[scala.collection.Seq[Row]]("path_samples").toSeq
+            .map(p => (p.getString(0), p.getString(1), p.getString(2))))
       }
     }.toMap
   }
@@ -425,21 +438,16 @@ object SuiteRunner {
       } catch { case e: Throwable => slim.unpersist(blocking = false); throw e }
     val basePropLen = histProportions(base.lenCounts, base.lenMin, base.lenMax)
 
-    // shared violation jobs, batch-attributed, capped deterministically.
-    // The deterministic top-cap sample is SALTED two-phase (the Drift
-    // melted-top-K shape): phase 1 keeps the per-(batch, salt) top cap in
-    // 32 parallel partitions, phase 2 re-ranks the ≤ 32·cap survivors — an
-    // adversarially duplicate-heavy batch never sorts all its violation
-    // groups in one task. Exact: a batch-global top-cap row is a fortiori
-    // top-cap within its salt bucket. (Phase 2's per-batch ranking is ≤
-    // 32·cap rows; under streaming the foldable batch_id makes Spark log a
-    // partition-less-window warning for it — bounded rows, harmless.)
+    // Violation checks, batch-attributed, capped deterministically (O5).
+    // Each check's count AND its capped sample come from ONE aggregate per
+    // batch: `firstK` keeps the ViolationCap first groups in (key) order
+    // with bounded, mergeable state, so map-side partials hold ≤ cap rows
+    // per task and a duplicate-heavy batch never sorts all its violation
+    // groups in one task. The ≤ cap rows per batch come back to the
+    // driver, which writes the sample tables itself (like the sha256
+    // sample below).
     val pendingCode = code.where(col("batch_id").isin(pending: _*))
     val slimPending = slim.where(col("batch_id").isin(pending: _*))
-    val keyOrder = Seq(col("repo"), col("path"), col("commit"))
-    val keySalt = pmod(xxhash64(col("repo"), col("path"), col("commit")), lit(32))
-    val keyW1 = Window.partitionBy(col("batch_id"), keySalt).orderBy(keyOrder: _*)
-    val keyW = Window.partitionBy(col("batch_id")).orderBy(keyOrder: _*)
 
     // Uniqueness, two-phase hash-first: phase 1 shuffles only a 64-bit key
     // hash (not the ~100-byte string triple — 6× less shuffle I/O at 8M
@@ -447,8 +455,7 @@ object SuiteRunner {
     // keyhash was computed in the artifacts scan — no input re-scan);
     // phase 2 re-verifies candidate groups on the REAL key strings
     // over the (tiny) semi-joined candidate rows, so a hash collision can
-    // never produce a false duplicate. Result is persisted once and feeds
-    // both the verdict counts and the capped sample.
+    // never produce a false duplicate.
     val keyHash = xxhash64(col("repo"), col("path"), col("commit"))
     val candHashes = slimPending
       .groupBy(col("batch_id"), col("keyhash").as("kh")).agg(count(lit(1)).as("c"))
@@ -457,29 +464,24 @@ object SuiteRunner {
     // (normally tiny → AQE broadcasts it at runtime; adversarially
     // duplicate-heavy input → AQE falls back to a shuffle join instead of
     // blowing the broadcast limit)
-    val dupViol = pendingCode
+    val dupAgg = pendingCode
       .join(candHashes,
         pendingCode("batch_id") === candHashes("batch_id") && keyHash === col("kh"), "left_semi")
       .groupBy("batch_id", "repo", "path", "commit")
       .agg(count(lit(1)).as("dup_count")).where(col("dup_count") > 1)
-      .persist()
-    val dupSample = dupViol.withColumn("rn", row_number().over(keyW1))
-      .where(col("rn") <= ViolationCap).drop("rn")
-      .withColumn("rn", row_number().over(keyW))
-      .where(col("rn") <= ViolationCap).drop("rn")
+      .groupBy("batch_id")
+      .agg(sum(col("dup_count") - 1).as("n"), graft.stats.TopK.firstK(
+        struct("repo", "path", "commit", "dup_count"), ViolationCap).as("sample"))
 
-    // referential: the violating (repo, lang) groups are tiny — aggregate
-    // once over the CACHED slim columns (no input re-scan), persist,
-    // derive counts + sample without a second scan
-    val refViol = slimPending.select("batch_id", "repo", "lang")
+    // referential: the violating (repo, lang) groups, aggregated over the
+    // CACHED slim columns (no input re-scan)
+    val refAgg = slimPending.select("batch_id", "repo", "lang")
       .join(broadcast(repoLangDim.select("repo", "lang").distinct()), Seq("repo", "lang"), "left_anti")
       .groupBy("batch_id", "repo", "lang")
-      .agg(count(lit(1)).as("violation_count")).persist()
-
-    val refSample = refViol
-      .withColumn("rn", row_number().over(Window.partitionBy(col("batch_id"))
-        .orderBy(col("repo"), col("lang"))))
-      .where(col("rn") <= ViolationCap).drop("rn")
+      .agg(count(lit(1)).as("violation_count"))
+      .groupBy("batch_id")
+      .agg(sum("violation_count").as("n"), graft.stats.TopK.firstK(
+        struct("repo", "lang", "violation_count"), ViolationCap).as("sample"))
 
     // sha256 counts AND the capped deterministic sample both came out of the
     // job-1 artifacts scan (min-k aggregate) — no second content pass; the
@@ -493,15 +495,13 @@ object SuiteRunner {
       .select(col("batch_id"), col("k.repo").as("repo"),
         col("k.path").as("path"), col("k.commit").as("commit"))
 
-    val emptyPathViol = pendingCode
-      .where(col("path").isNull || col("path") === "")
-      .select("batch_id", "repo", "commit", "lang")
-      .withColumn("rn", row_number().over(Window.partitionBy(col("batch_id"))
-        .orderBy(col("repo"), col("commit")))).where(col("rn") <= ViolationCap).drop("rn")
+    // the completeness_path sample rode job 1 too (first in (repo, commit,
+    // lang) order)
+    val emptyPathViol = pending.flatMap { b =>
+      arts(b).pathSamples.map { case (repo, commit, lang) => (b, repo, commit, lang) }
+    }.toDF("batch_id", "repo", "commit", "lang")
 
-    val allViolations = Seq(
-      "uniqueness" -> dupSample, "referential" -> refSample,
-      "sha256_invariant" -> shaViol, "completeness_path" -> emptyPathViol)
+    val violationChecks = Seq("uniqueness", "referential", "sha256_invariant", "completeness_path")
 
     // All audit writes are gathered and submitted CONCURRENTLY at the end
     // of the run (see below): one partitioned write per table covering ALL
@@ -666,48 +666,55 @@ object SuiteRunner {
     // COMMITS below happen strictly after ALL writes have finished, in
     // order, verdicts last (the atomic commit point per batch). Lineage is
     // NOT in this block: its wall_ms must include the write time, so it is
-    // written (tiny, serial) after the block completes.
-    val independentWrites: Seq[(String, DataFrame)] =
-      allViolations.map { case (name, df) => s"violations_$name" -> df } ++ Seq(
-        "repo_metrics" -> repoMetrics,
-        "sketches" -> sketchRows.toDF("batch_id", "rows", "hll_key", "hll_repo",
-          "tdigest_len", "freq_repo"),
-        // artifacts snapshot: what a resumed run loads instead of
-        // re-scanning the baseline partition
-        "artifacts" -> pending.map(b => toRow(arts(b))).toDF())
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(8, independentWrites.size + 1))
+    // written (tiny, serial) after the block completes. Tables built on the
+    // driver are coalesced to one file per batch (no extra job).
+    val firstWrites: Seq[(String, DataFrame)] = Seq(
+      "violations_sha256_invariant" -> shaViol,
+      "violations_completeness_path" -> emptyPathViol,
+      "sketches" -> sketchRows.toDF("batch_id", "rows", "hll_key", "hll_repo",
+        "tdigest_len", "freq_repo"),
+      // artifacts snapshot: what a resumed run loads instead of
+      // re-scanning the baseline partition
+      "artifacts" -> pending.map(b => toRow(arts(b))).toDF())
+      .map { case (table, df) => table -> df.coalesce(1) } :+
+      ("repo_metrics" -> repoMetrics)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     val out: Seq[Verdict] = try {
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val fs = independentWrites.map { case (table, df) =>
-        scala.concurrent.Future(io.writeAllPartitions(df, table))(ec)
-      }
-      // OVERLAPPED with the writes above: the one remaining driver action
-      // (dup/ref violation-count maps) runs on the main thread while the
-      // writer pool drains — it only feeds the verdicts, which are the
-      // LAST table written (and committed last, unchanged ordering)
-      val violCountRows = dupViol.groupBy("batch_id")
-        .agg(sum(col("dup_count") - 1).as("n")).withColumn("kind", lit("dup"))
-        .unionByName(refViol.groupBy("batch_id")
-          .agg(sum("violation_count").as("n")).withColumn("kind", lit("ref")))
-        .collect()
-      val dupCounts = violCountRows.filter(_.getString(2) == "dup")
-        .map(r => r.getAs[Long]("batch_id") -> r.getAs[Long]("n")).toMap
-      val refCounts = violCountRows.filter(_.getString(2) == "ref")
-        .map(r => r.getAs[Long]("batch_id") -> r.getAs[Long]("n")).toMap
-      val verdicts = assembleVerdicts(dupCounts, refCounts)
-      val fVerdicts = scala.concurrent.Future(
-        io.writeAllPartitions(verdicts.toDF(), "verdicts"))(ec)
+      import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
-      (fs :+ fVerdicts).foreach(f => scala.concurrent.Await.result(f, Duration.Inf))
+      def write(table: String, df: DataFrame): Future[Unit] =
+        Future(io.writeAllPartitions(df, table))(ec)
+      val fs = firstWrites.map { case (table, df) => write(table, df) }
+      // the dup/ref aggregates run next to the writes above; their ≤ cap
+      // sample rows and counts feed the two sample tables and the verdicts
+      val fDup = Future(dupAgg.collect())(ec)
+      val fRef = Future(refAgg.collect())(ec)
+      val dupRows = Await.result(fDup, Duration.Inf)
+      val refRows = Await.result(fRef, Duration.Inf)
+      def counts(rows: Array[Row]): Map[Long, Long] =
+        rows.map(r => r.getAs[Long]("batch_id") -> r.getAs[Long]("n")).toMap
+      def samples(rows: Array[Row]): Seq[(Long, Row)] = rows.toSeq.flatMap { r =>
+        r.getAs[scala.collection.Seq[Row]]("sample").map(r.getAs[Long]("batch_id") -> _)
+      }
+      val dupSample = samples(dupRows).map { case (b, k) =>
+        (b, k.getString(0), k.getString(1), k.getString(2), k.getLong(3))
+      }.toDF("batch_id", "repo", "path", "commit", "dup_count")
+      val refSample = samples(refRows).map { case (b, k) =>
+        (b, k.getString(0), k.getString(1), k.getLong(2))
+      }.toDF("batch_id", "repo", "lang", "violation_count")
+      val verdicts = assembleVerdicts(counts(dupRows), counts(refRows))
+      val lastWrites = Seq(
+        write("violations_uniqueness", dupSample.coalesce(1)),
+        write("violations_referential", refSample.coalesce(1)),
+        write("verdicts", verdicts.toDF().coalesce(1)))
+      (fs ++ lastWrites).foreach(f => Await.result(f, Duration.Inf))
       verdicts
     } finally {
       // shutdownNow interrupts still-running writes when any write failed
-      // (a failed run must not keep writer threads alive); the unpersists
-      // sit in the finally so a write failure cannot leak cached blocks
+      // (a failed run must not keep writer threads alive); the unpersist
+      // sits in the finally so a write failure cannot leak cached blocks
       pool.shutdownNow()
-      dupViol.unpersist()
-      refViol.unpersist()
       slim.unpersist()
     }
 
@@ -718,10 +725,10 @@ object SuiteRunner {
       val a = arts(b)
       Lineage(b, a.rows, a.fingerprint, SuiteVersion, baselineBatch, wallMs)
     }
-    io.writeAllPartitions(lineageRows.toDF(), "lineage")
+    io.writeAllPartitions(lineageRows.toDF().coalesce(1), "lineage")
     pending.foreach { b =>
       val a = arts(b)
-      allViolations.foreach { case (name, _) => io.commit(s"violations_$name", b, s"""{"batch_id":$b}""") }
+      violationChecks.foreach(name => io.commit(s"violations_$name", b, s"""{"batch_id":$b}"""))
       io.commit("sketches", b, s"""{"batch_id":$b}""")
       // artifacts carry the writer's suite version: reload is version-gated
       io.commit("artifacts", b, s"""{"batch_id":$b,"suite":"$SuiteVersion"}""")

@@ -10,29 +10,33 @@ import org.apache.spark.sql.functions._
 class BenchInputSpec extends GraftSpec {
 
   test("pinned path with a different row count refuses instead of overwriting") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin").toString
-    spark.range(100).select(col("id"), lit("x").as("s"), (col("id") % 4).as("batch_id"))
-      .write.partitionBy("batch_id").mode("overwrite").parquet(dir)
-    val e = intercept[IllegalStateException] {
-      GenBenchInput.ensure(spark, rows = 999, pinned = Some(dir))
+    withTempDir("graft_pin") { dir =>
+      spark.range(100).select(col("id"), lit("x").as("s"), (col("id") % 4).as("batch_id"))
+        .write.partitionBy("batch_id").mode("overwrite").parquet(dir)
+      val e = intercept[IllegalStateException] {
+        GenBenchInput.ensure(spark, rows = 999, pinned = Some(dir))
+      }
+      assert(e.getMessage.contains("100 rows") && e.getMessage.contains("999"))
+      // the precious data is untouched
+      assert(spark.read.parquet(dir).count() == 100)
     }
-    assert(e.getMessage.contains("100 rows") && e.getMessage.contains("999"))
-    // the precious data is untouched
-    assert(spark.read.parquet(dir).count() == 100)
   }
 
   test("pinned path with the requested count is reused as-is; empty pinned path is generated into") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pin2").toString
-    gen.CodeTableGen.generate(spark, 200, batches = 2)
-      .write.partitionBy("batch_id").mode("overwrite").parquet(dir)
-    val before = java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(dir, "_SUCCESS"))
-    assert(GenBenchInput.ensure(spark, rows = 200, pinned = Some(dir)) == dir)
-    assert(java.nio.file.Files.getLastModifiedTime(
-      java.nio.file.Paths.get(dir, "_SUCCESS")) == before, "must not regenerate")
+    withTempDir("graft_pin2") { dir =>
+      gen.CodeTableGen.generate(spark, 200, batches = 2)
+        .write.partitionBy("batch_id").mode("overwrite").parquet(dir)
+      val before = java.nio.file.Files.getLastModifiedTime(
+        java.nio.file.Paths.get(dir, "_SUCCESS"))
+      assert(GenBenchInput.ensure(spark, rows = 200, pinned = Some(dir)) == dir)
+      assert(java.nio.file.Files.getLastModifiedTime(
+        java.nio.file.Paths.get(dir, "_SUCCESS")) == before, "must not regenerate")
 
-    val empty = java.nio.file.Files.createTempDirectory("graft_pin3").toString + "/fresh"
-    assert(GenBenchInput.ensure(spark, rows = 300, pinned = Some(empty)) == empty)
-    assert(spark.read.parquet(empty).count() == 300)
+      withTempDir("graft_pin3") { d =>
+        val empty = d + "/fresh"
+        assert(GenBenchInput.ensure(spark, rows = 300, pinned = Some(empty)) == empty)
+        assert(spark.read.parquet(empty).count() == 300)
+      }
+    }
   }
 }

@@ -80,13 +80,14 @@ class BloomSpec extends GraftSpec {
     val seen = keysDF(0 until 3000, "a")
     val incoming = keysDF(1500 until 4500, "a")
     val blob = Dedup.buildSeenBloom(seen, Seq("repo", "path"), fpp = 0.02)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
-    Seq(blob).toDF("blob").write.mode("overwrite").parquet(s"$dir/bloom")
-    val reloaded = spark.read.parquet(s"$dir/bloom").collect()(0).getAs[Array[Byte]](0)
-    assert(reloaded.toSeq == blob.toSeq)
-    val exact = Dedup.newOnly(incoming, seen, Seq("repo", "path")).count()
-    val fast = Dedup.newOnlyWithBloom(incoming, seen, Seq("repo", "path"), reloaded).count()
-    assert(fast == exact && exact == 1500L)
+    withTempDir("graft_bloom") { dir =>
+      Seq(blob).toDF("blob").write.mode("overwrite").parquet(s"$dir/bloom")
+      val reloaded = spark.read.parquet(s"$dir/bloom").collect()(0).getAs[Array[Byte]](0)
+      assert(reloaded.toSeq == blob.toSeq)
+      val exact = Dedup.newOnly(incoming, seen, Seq("repo", "path")).count()
+      val fast = Dedup.newOnlyWithBloom(incoming, seen, Seq("repo", "path"), reloaded).count()
+      assert(fast == exact && exact == 1500L)
+    }
   }
 
   test("null-keyed rows: hash of nulls still probes consistently") {

@@ -173,13 +173,14 @@ class ComponentsSpec extends GraftSpec {
   }
 
   test("incremental survives a parquet round-trip of the store") {
-    val dir = java.nio.file.Files.createTempDirectory("cc_store").toString
-    val store = Components.connectedComponents(
-      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2"))
-    store.write.mode("overwrite").parquet(dir)
-    val reloaded = spark.read.parquet(dir)
-    val got = Components.incrementalComponents(reloaded, Seq((3L, 10L)).toDF("id1", "id2"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L))
+    withTempDir("cc_store") { dir =>
+      val store = Components.connectedComponents(
+        Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id1", "id2"))
+      store.write.mode("overwrite").parquet(dir)
+      val reloaded = spark.read.parquet(dir)
+      val got = Components.incrementalComponents(reloaded, Seq((3L, 10L)).toDF("id1", "id2"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 1L, 11L -> 1L))
+    }
   }
 }

@@ -234,22 +234,23 @@ class DedupSpec extends GraftSpec {
       .toDF("doc_id", "text"))
     val shAll = Dedup.simhashes(all, "doc_id", "text").persist()
     try {
-      val store = java.nio.file.Files.createTempDirectory("graft_sh_store").toString
-      shAll.where(col("id").isin(1L, 4L)).write.mode("overwrite").parquet(store)
-      val fresh = shAll.where(col("id").isin(2L, 3L, 5L))
-      val inc = Dedup.incrementalSimhashPairs(fresh, spark.read.parquet(store))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val full = Dedup.simhashPairsFromHashes(shAll)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val corpusIds = Set(1L, 4L)
-      val expected = full.filterNot(p => corpusIds(p._1) && corpusIds(p._2))
-      assert(inc == expected, s"incremental $inc != full-minus-corpus $expected")
-      // the corpus-internal exact-dup pair was found by the full run and
-      // excluded by the incremental one
-      assert(full.exists(p => p._1 == 1L && p._2 == 4L))
-      assert(!inc.exists(p => p._1 == 1L && p._2 == 4L))
-      // and the new exact copy pairs with BOTH corpus originals at hamming 0
-      assert(inc.contains((1L, 5L, 0)) && inc.contains((4L, 5L, 0)))
+      withTempDir("graft_sh_store") { store =>
+        shAll.where(col("id").isin(1L, 4L)).write.mode("overwrite").parquet(store)
+        val fresh = shAll.where(col("id").isin(2L, 3L, 5L))
+        val inc = Dedup.incrementalSimhashPairs(fresh, spark.read.parquet(store))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+        val full = Dedup.simhashPairsFromHashes(shAll)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+        val corpusIds = Set(1L, 4L)
+        val expected = full.filterNot(p => corpusIds(p._1) && corpusIds(p._2))
+        assert(inc == expected, s"incremental $inc != full-minus-corpus $expected")
+        // the corpus-internal exact-dup pair was found by the full run and
+        // excluded by the incremental one
+        assert(full.exists(p => p._1 == 1L && p._2 == 4L))
+        assert(!inc.exists(p => p._1 == 1L && p._2 == 4L))
+        // and the new exact copy pairs with BOTH corpus originals at hamming 0
+        assert(inc.contains((1L, 5L, 0)) && inc.contains((4L, 5L, 0)))
+      }
     } finally shAll.unpersist()
   }
 
@@ -268,23 +269,24 @@ class DedupSpec extends GraftSpec {
     val corpus = corpusRows.toDF("id", "v")
     val fresh = newRows.toDF("id", "v")
     val (bits, tables) = (4, 8)
-    val store = java.nio.file.Files.createTempDirectory("graft_band_store").toString
-    Dedup.signLshBands(corpus, bits, tables).write.mode("overwrite").parquet(store)
-    val inc = Dedup.incrementalEmbeddingPairs(fresh, corpus,
-        spark.read.parquet(store), threshold = 0.9, bits, tables)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val all = corpus.unionByName(fresh)
-    val full = Dedup.embeddingPairsFromBands(all,
-        Dedup.signLshBands(all, bits, tables), threshold = 0.9)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val corpusIds = corpusRows.map(_._1).toSet
-    val expected = full.filterNot(p => corpusIds(p._1) && corpusIds(p._2))
-    assert(inc == expected, s"incremental $inc != full-minus-corpus $expected")
-    // corpus-internal near-dup pairs exist and were excluded
-    assert(full.exists(p => corpusIds(p._1) && corpusIds(p._2)))
-    assert(!inc.exists(p => corpusIds(p._1) && corpusIds(p._2)))
-    // and the injected cross pairs were found
-    assert(inc.exists { case (a, b) => b == a + 200000 })
+    withTempDir("graft_band_store") { store =>
+      Dedup.signLshBands(corpus, bits, tables).write.mode("overwrite").parquet(store)
+      val inc = Dedup.incrementalEmbeddingPairs(fresh, corpus,
+          spark.read.parquet(store), threshold = 0.9, bits, tables)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val all = corpus.unionByName(fresh)
+      val full = Dedup.embeddingPairsFromBands(all,
+          Dedup.signLshBands(all, bits, tables), threshold = 0.9)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val corpusIds = corpusRows.map(_._1).toSet
+      val expected = full.filterNot(p => corpusIds(p._1) && corpusIds(p._2))
+      assert(inc == expected, s"incremental $inc != full-minus-corpus $expected")
+      // corpus-internal near-dup pairs exist and were excluded
+      assert(full.exists(p => corpusIds(p._1) && corpusIds(p._2)))
+      assert(!inc.exists(p => corpusIds(p._1) && corpusIds(p._2)))
+      // and the injected cross pairs were found
+      assert(inc.exists { case (a, b) => b == a + 200000 })
+    }
   }
 
   test("minhash signature agreement estimates true jaccard") {

@@ -203,54 +203,58 @@ class IvfSpec extends GraftSpec {
 
   test("committed index: build + searchCommitted equals the in-memory index search") {
     val e = clustered(300, 16, 8)
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
-    val cents = graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 8)
-    val q = e.where(col("vec_id") < 6)
-    val a = graft.sim.IvfIndex.searchCommitted(spark, root, q, e,
-        "vec_id", "embedding", k = 5, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted
-    val b = Ivf.ivfTopKFromIndex(q, e,
-        Ivf.assignLists(e, "vec_id", "embedding", cents), cents,
-        "vec_id", "embedding", k = 5, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted
-    assert(a.nonEmpty && a.toSeq == b.toSeq)
+    withTempDir("graft_ivf_idx") { root =>
+      val cents = graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 8)
+      val q = e.where(col("vec_id") < 6)
+      val a = graft.sim.IvfIndex.searchCommitted(spark, root, q, e,
+          "vec_id", "embedding", k = 5, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted
+      val b = Ivf.ivfTopKFromIndex(q, e,
+          Ivf.assignLists(e, "vec_id", "embedding", cents), cents,
+          "vec_id", "embedding", k = 5, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted
+      assert(a.nonEmpty && a.toSeq == b.toSeq)
+    }
   }
 
   test("committed index: version gate — unknown wire version reads as absent; rebuild re-stamps") {
     val e = clustered(100, 8, 4)
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_ver").toString
-    graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 4)
-    assert(graft.sim.IvfIndex.readCentroids(spark, root).isDefined)
-    // a future writer bumps the wire version: this reader must refuse
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_commit.json"),
-      """{"version":99,"nlist":4,"dim":8}""")
-    assert(graft.sim.IvfIndex.readCentroids(spark, root).isEmpty)
-    val ex = intercept[IllegalStateException] {
-      graft.sim.IvfIndex.searchCommitted(spark, root,
-        e.where(col("vec_id") < 2), e, "vec_id", "embedding", k = 3, nprobe = 2)
+    withTempDir("graft_ivf_ver") { root =>
+      graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 4)
+      assert(graft.sim.IvfIndex.readCentroids(spark, root).isDefined)
+      // a future writer bumps the wire version: this reader must refuse
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_commit.json"),
+        """{"version":99,"nlist":4,"dim":8}""")
+      assert(graft.sim.IvfIndex.readCentroids(spark, root).isEmpty)
+      val ex = intercept[IllegalStateException] {
+        graft.sim.IvfIndex.searchCommitted(spark, root,
+          e.where(col("vec_id") < 2), e, "vec_id", "embedding", k = 3, nprobe = 2)
+      }
+      assert(ex.getMessage.contains("rebuild"))
+      // recovery path: rebuild re-stamps the current version
+      graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 4)
+      assert(graft.sim.IvfIndex.readCentroids(spark, root).isDefined)
     }
-    assert(ex.getMessage.contains("rebuild"))
-    // recovery path: rebuild re-stamps the current version
-    graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 4)
-    assert(graft.sim.IvfIndex.readCentroids(spark, root).isDefined)
   }
 
   test("committed index: incremental append equals a full rebuild") {
     val e = clustered(300, 16, 8)
     val base = e.where(col("vec_id") < 200)
     val delta = e.where(col("vec_id") >= 200)
-    val rootInc = java.nio.file.Files.createTempDirectory("graft_ivf_inc").toString
-    val rootFull = java.nio.file.Files.createTempDirectory("graft_ivf_full").toString
-    val cents = graft.sim.IvfIndex.build(spark, rootInc, base, "vec_id", "embedding", 8)
-    graft.sim.IvfIndex.appendAssignments(rootInc,
-      Ivf.assignLists(delta, "vec_id", "embedding", cents))
-    graft.sim.IvfIndex.write(spark, rootFull, cents,
-      Ivf.assignLists(e, "vec_id", "embedding", cents))
-    val q = e.where(col("vec_id") < 6)
-    def run(root: String) = graft.sim.IvfIndex.searchCommitted(spark, root, q, e,
-        "vec_id", "embedding", k = 5, nprobe = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted.toSeq
-    assert(run(rootInc) == run(rootFull))
+    withTempDir("graft_ivf_inc") { rootInc =>
+      withTempDir("graft_ivf_full") { rootFull =>
+        val cents = graft.sim.IvfIndex.build(spark, rootInc, base, "vec_id", "embedding", 8)
+        graft.sim.IvfIndex.appendAssignments(rootInc,
+          Ivf.assignLists(delta, "vec_id", "embedding", cents))
+        graft.sim.IvfIndex.write(spark, rootFull, cents,
+          Ivf.assignLists(e, "vec_id", "embedding", cents))
+        val q = e.where(col("vec_id") < 6)
+        def run(root: String) = graft.sim.IvfIndex.searchCommitted(spark, root, q, e,
+            "vec_id", "embedding", k = 5, nprobe = 2)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sorted.toSeq
+        assert(run(rootInc) == run(rootFull))
+      }
+    }
   }
 
   test("autoNlist: power-of-two near sqrt(n), clamped") {

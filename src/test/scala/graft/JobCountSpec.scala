@@ -67,8 +67,9 @@ class JobCountSpec extends GraftSpec {
     val code4 = CodeTableGen.generate(spark, 8000, batches = 4).cache()
     val dim = CodeTableGen.repoLangDim(spark)
     def run(name: String, df: org.apache.spark.sql.DataFrame): Int = countJobs(name) {
-      val tmp = java.nio.file.Files.createTempDirectory(name).toString
-      SuiteRunner.run(spark, df, dim, new ParquetTableIO(tmp))
+      withTempDir(name) { tmp =>
+        SuiteRunner.run(spark, df, dim, new ParquetTableIO(tmp))
+      }
     }
     val j2 = run("suite2", code2)
     val j4 = run("suite4", code4)
@@ -76,6 +77,25 @@ class JobCountSpec extends GraftSpec {
     // AQE can add a small data-dependent number of stages; the assertion is
     // that doubling the batch count does NOT double the job count
     assert(j4 <= j2 + 2, s"suite jobs grew with batches: $j2 (2 batches) -> $j4 (4 batches)")
+  }
+
+  test("suite: at most 31 jobs for 4 pending batches under session defaults") {
+    // Left at the session defaults (AQE on), every shuffle stage, broadcast
+    // and write is its own job. The count per call: the batch listing, the
+    // artifacts scan and the grouping-sets marginals, the uniqueness and
+    // referential aggregates (count and capped sample in one each), the
+    // repo-metrics write, one job per driver-built table write, and lineage.
+    // A violation table written from the cluster re-plans its check's chain
+    // inside the write and breaks the bound.
+    val code4 = CodeTableGen.generate(spark, 8000, batches = 4).cache()
+    val dim = CodeTableGen.repoLangDim(spark)
+    val jobs = countJobs("suite4-abs") {
+      withTempDir("suite4-abs") { tmp =>
+        SuiteRunner.run(spark, code4, dim, new ParquetTableIO(tmp))
+      }
+    }
+    code4.unpersist()
+    assert(jobs <= 31, s"suite ran $jobs jobs for 4 pending batches")
   }
 
   test("connected components: one action per round (signature materializes the lazy checkpoint)") {

@@ -72,18 +72,19 @@ class MonitoringSpec extends GraftSpec {
     // not re-scan the input: with a file-backed table the executed plan
     // carries exactly one live parquet scan (the second reference resolves
     // to a ReusedExchange / reused query stage)
-    val dir = java.nio.file.Files.createTempDirectory("graft_fresh_scan").toString
-    events.write.mode("overwrite").parquet(dir)
-    val onDisk = spark.read.parquet(dir)
-    val f = Monitoring.freshness(onDisk, "ts", Seq("event_type"), 86400L)
-    f.collect() // finalize the (adaptive) plan so reuse is visible
-    // AdaptiveSparkPlan.toString prints BOTH the final and the initial
-    // plan; only the final section (before the initial-plan marker) shows
-    // what actually executed
-    val plan = f.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    val scans = "FileScan parquet".r.findAllIn(plan).size
-    assert(scans == 1,
-      s"freshness re-scans its input: $scans parquet scans in the final plan\n$plan")
+    withTempDir("graft_fresh_scan") { dir =>
+      events.write.mode("overwrite").parquet(dir)
+      val onDisk = spark.read.parquet(dir)
+      val f = Monitoring.freshness(onDisk, "ts", Seq("event_type"), 86400L)
+      f.collect() // finalize the (adaptive) plan so reuse is visible
+      // AdaptiveSparkPlan.toString prints BOTH the final and the initial
+      // plan; only the final section (before the initial-plan marker) shows
+      // what actually executed
+      val plan = f.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==").head
+      val scans = "FileScan parquet".r.findAllIn(plan).size
+      assert(scans == 1,
+        s"freshness re-scans its input: $scans parquet scans in the final plan\n$plan")
+    }
   }
 }

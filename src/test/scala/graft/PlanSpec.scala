@@ -60,15 +60,16 @@ class PlanSpec extends GraftSpec {
   }
 
   test("disk layout partitioned by batch_id prunes unread batches from the scan") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_prune").toString
-    CodeTableGen.generate(spark, 5000, batches = 4)
-      .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
-    val df = spark.read.parquet(tmp).where(col("batch_id") === 3)
-    val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
-    // partition filter present; only 1 of 4 directory partitions selected
-    assert(scan.contains("PartitionFilters") && scan.contains("batch_id"), scan)
-    val parts = df.select(input_file_name()).distinct().collect().map(_.getString(0))
-    assert(parts.forall(_.contains("batch_id=3")), parts.mkString(","))
+    withTempDir("graft_prune") { tmp =>
+      CodeTableGen.generate(spark, 5000, batches = 4)
+        .write.partitionBy("batch_id").mode("overwrite").parquet(tmp)
+      val df = spark.read.parquet(tmp).where(col("batch_id") === 3)
+      val scan = df.queryExecution.executedPlan.collectLeaves().map(_.toString).mkString
+      // partition filter present; only 1 of 4 directory partitions selected
+      assert(scan.contains("PartitionFilters") && scan.contains("batch_id"), scan)
+      val parts = df.select(input_file_name()).distinct().collect().map(_.getString(0))
+      assert(parts.forall(_.contains("batch_id=3")), parts.mkString(","))
+    }
   }
 
   test("distributed exact KS: every Window is partitioned — no single-partition window node") {
@@ -122,41 +123,42 @@ class PlanSpec extends GraftSpec {
       val noise = new scala.util.Random(2000 + i)
       (i.toLong, c.map(x => x + 0.05f * noise.nextGaussian().toFloat))
     }.toDF("vec_id", "embedding")
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_prune").toString
-    val cents = graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 8)
-    val q = e.where(col("vec_id") === 0L)
-    val res = graft.sim.IvfIndex.searchCommitted(spark, root, q, e,
-      "vec_id", "embedding", k = 5, nprobe = 2)
-    // 1) the static partition filter is on the scan
-    val planStr = res.queryExecution.executedPlan.toString
-    assert(planStr.contains("PartitionFilters") && planStr.contains("list_id"),
-      s"no list_id partition filter on the committed-index scan: $planStr")
-    // 2) physical proof: corrupt every UNPROBED list's parquet files — if
-    // pruning is real the search never opens them and still succeeds; a
-    // full scan would die on the garbage footer
-    val probed = graft.sim.Ivf.probeTable(q, cents, "vec_id", "embedding", 2)
-      .select("list_id").distinct().collect().map(_.getInt(0)).toSet
-    assert(probed.size == 2)
-    val assignDir = java.nio.file.Paths.get(root, "assign")
-    var corrupted = 0
-    java.nio.file.Files.list(assignDir).forEach { d =>
-      val name = d.getFileName.toString
-      if (name.startsWith("list_id=") &&
-          !probed.contains(name.stripPrefix("list_id=").toInt)) {
-        java.nio.file.Files.list(d).forEach { f =>
-          if (f.getFileName.toString.endsWith(".parquet")) {
-            java.nio.file.Files.write(f, "not parquet".getBytes)
-            corrupted += 1
+    withTempDir("graft_ivf_prune") { root =>
+      val cents = graft.sim.IvfIndex.build(spark, root, e, "vec_id", "embedding", 8)
+      val q = e.where(col("vec_id") === 0L)
+      val res = graft.sim.IvfIndex.searchCommitted(spark, root, q, e,
+        "vec_id", "embedding", k = 5, nprobe = 2)
+      // 1) the static partition filter is on the scan
+      val planStr = res.queryExecution.executedPlan.toString
+      assert(planStr.contains("PartitionFilters") && planStr.contains("list_id"),
+        s"no list_id partition filter on the committed-index scan: $planStr")
+      // 2) physical proof: corrupt every UNPROBED list's parquet files — if
+      // pruning is real the search never opens them and still succeeds; a
+      // full scan would die on the garbage footer
+      val probed = graft.sim.Ivf.probeTable(q, cents, "vec_id", "embedding", 2)
+        .select("list_id").distinct().collect().map(_.getInt(0)).toSet
+      assert(probed.size == 2)
+      val assignDir = java.nio.file.Paths.get(root, "assign")
+      var corrupted = 0
+      java.nio.file.Files.list(assignDir).forEach { d =>
+        val name = d.getFileName.toString
+        if (name.startsWith("list_id=") &&
+            !probed.contains(name.stripPrefix("list_id=").toInt)) {
+          java.nio.file.Files.list(d).forEach { f =>
+            if (f.getFileName.toString.endsWith(".parquet")) {
+              java.nio.file.Files.write(f, "not parquet".getBytes)
+              corrupted += 1
+            }
           }
         }
       }
-    }
-    assert(corrupted > 0, "nothing to corrupt — every list was probed")
-    val rows = res.collect()
-    assert(rows.length == 5, "pruned search failed or lost candidates")
-    // control: the corrupted partitions really are unreadable
-    intercept[Exception] {
-      graft.sim.IvfIndex.readAssignments(spark, root).count()
+      assert(corrupted > 0, "nothing to corrupt — every list was probed")
+      val rows = res.collect()
+      assert(rows.length == 5, "pruned search failed or lost candidates")
+      // control: the corrupted partitions really are unreadable
+      intercept[Exception] {
+        graft.sim.IvfIndex.readAssignments(spark, root).count()
+      }
     }
   }
 }

@@ -70,42 +70,44 @@ class SchemaSpec extends GraftSpec {
   }
 
   test("committed baseline: first-scan pin, reload, version-gate re-pin") {
-    val io = new ParquetTableIO(
-      java.nio.file.Files.createTempDirectory("graft_schema_pin").toString)
-    assert(SchemaCheck.preflight(io, base).isEmpty) // pins
-    assert(SchemaCheck.committed(io).contains(base))
-    val drifted = StructType(base.fields.filterNot(_.name == "lang"))
-    val issues = SchemaCheck.preflight(io, drifted)
-    assert(issues.map(_.issue) == Seq("missing_column"))
-    // an old-wire-format manifest is rejected and the current schema
-    // re-pinned (the S15 recovery), not mis-parsed
-    io.commit("schema_baseline", 0L, """{"suite":"graft-0.1","schema":{"bogus":1}}""")
-    assert(SchemaCheck.committed(io).isEmpty)
-    assert(SchemaCheck.preflight(io, drifted).isEmpty) // re-pin
-    assert(SchemaCheck.committed(io).contains(drifted))
+    withTempDir("graft_schema_pin") { d =>
+      val io = new ParquetTableIO(d)
+      assert(SchemaCheck.preflight(io, base).isEmpty) // pins
+      assert(SchemaCheck.committed(io).contains(base))
+      val drifted = StructType(base.fields.filterNot(_.name == "lang"))
+      val issues = SchemaCheck.preflight(io, drifted)
+      assert(issues.map(_.issue) == Seq("missing_column"))
+      // an old-wire-format manifest is rejected and the current schema
+      // re-pinned (the S15 recovery), not mis-parsed
+      io.commit("schema_baseline", 0L, """{"suite":"graft-0.1","schema":{"bogus":1}}""")
+      assert(SchemaCheck.committed(io).isEmpty)
+      assert(SchemaCheck.preflight(io, drifted).isEmpty) // re-pin
+      assert(SchemaCheck.committed(io).contains(drifted))
+    }
   }
 
   test("suite end-to-end: drifted second run fails `schema`, content checks still run, alert fires") {
-    val io = new ParquetTableIO(
-      java.nio.file.Files.createTempDirectory("graft_schema_suite").toString)
-    val dim = CodeTableGen.repoLangDim(spark)
-    val code = CodeTableGen.generate(spark, 8000, batches = 2)
-    val first = SuiteRunner.run(spark, code, dim, io)
-    assert(first.filter(_.check == "schema").forall(_.passed)) // pinning run
-    // second run: new batches arrive with an extra column — compatibility
-    // drift the content checks don't see but the schema gate must
-    val drifted = code.withColumn("batch_id", col("batch_id") + 2)
-      .withColumn("injected", lit("surprise"))
-    val second = SuiteRunner.run(spark, drifted, dim, io)
-    val schemaRows = second.filter(_.check == "schema")
-    assert(schemaRows.nonEmpty && schemaRows.forall(v =>
-      !v.passed && v.violation_count == 1))
-    // content verdicts still computed for the drifted run
-    assert(second.exists(_.check == "uniqueness"))
-    // and the rule engine escalates it as critical
-    import spark.implicits._
-    val alerts = Alerts.evaluate(second.toDF())
-      .where(col("check") === "schema").collect()
-    assert(alerts.nonEmpty && alerts.forall(_.getAs[String]("severity") == "critical"))
+    withTempDir("graft_schema_suite") { d =>
+      val io = new ParquetTableIO(d)
+      val dim = CodeTableGen.repoLangDim(spark)
+      val code = CodeTableGen.generate(spark, 8000, batches = 2)
+      val first = SuiteRunner.run(spark, code, dim, io)
+      assert(first.filter(_.check == "schema").forall(_.passed)) // pinning run
+      // second run: new batches arrive with an extra column — compatibility
+      // drift the content checks don't see but the schema gate must
+      val drifted = code.withColumn("batch_id", col("batch_id") + 2)
+        .withColumn("injected", lit("surprise"))
+      val second = SuiteRunner.run(spark, drifted, dim, io)
+      val schemaRows = second.filter(_.check == "schema")
+      assert(schemaRows.nonEmpty && schemaRows.forall(v =>
+        !v.passed && v.violation_count == 1))
+      // content verdicts still computed for the drifted run
+      assert(second.exists(_.check == "uniqueness"))
+      // and the rule engine escalates it as critical
+      import spark.implicits._
+      val alerts = Alerts.evaluate(second.toDF())
+        .where(col("check") === "schema").collect()
+      assert(alerts.nonEmpty && alerts.forall(_.getAs[String]("severity") == "critical"))
+    }
   }
 }

@@ -20,4 +20,13 @@ object SparkTestBase {
 
 abstract class GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  /** Runs `f` on a fresh directory `<tmp>/<prefix><random>` and deletes the
+    * directory and everything under it afterwards, pass or fail.
+    */
+  def withTempDir[A](prefix: String)(f: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+  }
 }

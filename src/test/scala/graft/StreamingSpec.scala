@@ -119,24 +119,25 @@ class StreamingSpec extends GraftSpec {
   }
 
   test("T5 trigger cadence/backpressure: file source rate-limited to one file per micro-batch") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_in").toString
-    (0 until 3).foreach { i =>
-      Seq((i.toLong, s"t$i")).toDF("id", "s").coalesce(1)
-        .write.mode("append").parquet(dir)
+    withTempDir("graft_stream_in") { dir =>
+      (0 until 3).foreach { i =>
+        Seq((i.toLong, s"t$i")).toDF("id", "s").coalesce(1)
+          .write.mode("append").parquet(dir)
+      }
+      val stream = spark.readStream.schema("id BIGINT, s STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dir)
+      val qname = s"rate_${System.nanoTime()}"
+      val q = stream.writeStream.outputMode("append").format("memory").queryName(qname)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      try {
+        assert(q.awaitTermination(120000), "AvailableNow query must drain and stop")
+        assert(spark.table(qname).count() == 3)
+        // backpressure analog: the 3 input files must arrive in >= 3 rate-
+        // limited micro-batches, not one big batch
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
+          s"expected >=3 micro-batches, got ${q.recentProgress.map(_.numInputRows).mkString(",")}")
+      } finally q.stop()
     }
-    val stream = spark.readStream.schema("id BIGINT, s STRING")
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val qname = s"rate_${System.nanoTime()}"
-    val q = stream.writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try {
-      assert(q.awaitTermination(120000), "AvailableNow query must drain and stop")
-      assert(spark.table(qname).count() == 3)
-      // backpressure analog: the 3 input files must arrive in >= 3 rate-
-      // limited micro-batches, not one big batch
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 3,
-        s"expected >=3 micro-batches, got ${q.recentProgress.map(_.numInputRows).mkString(",")}")
-    } finally q.stop()
   }
 
   test("T5 wall-clock cadence: ProcessingTime trigger paces the drain to the poll interval") {
@@ -151,29 +152,30 @@ class StreamingSpec extends GraftSpec {
     // offset and batches 1..3 sit on successive epoch-aligned boundaries,
     // so the guaranteed floor is 2 FULL intervals (batch1→batch3), however
     // close the start was to its first boundary.
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_pt").toString
-    (0 until 4).foreach { i =>
-      Seq((i.toLong, s"t$i")).toDF("id", "s").coalesce(1)
-        .write.mode("append").parquet(dir)
+    withTempDir("graft_stream_pt") { dir =>
+      (0 until 4).foreach { i =>
+        Seq((i.toLong, s"t$i")).toDF("id", "s").coalesce(1)
+          .write.mode("append").parquet(dir)
+      }
+      val stream = spark.readStream.schema("id BIGINT, s STRING")
+        .option("maxFilesPerTrigger", 1).parquet(dir)
+      val qname = s"cadence_${System.nanoTime()}"
+      val t0 = System.nanoTime()
+      val q = stream.writeStream.outputMode("append").format("memory").queryName(qname)
+        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second")).start()
+      try {
+        val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+        while (spark.table(qname).count() < 4 && System.nanoTime() < deadline)
+          Thread.sleep(100)
+        val drainMs = (System.nanoTime() - t0) / 1000000
+        assert(spark.table(qname).count() == 4, "all 4 files must drain")
+        assert(q.recentProgress.count(_.numInputRows > 0) >= 4,
+          "rate limit must split the drain into >= 4 non-empty micro-batches")
+        // guaranteed floor 2000 ms; 1500 leaves 25% slack for clock skew
+        assert(drainMs >= 1500,
+          s"4 rate-limited batches drained in ${drainMs} ms — not paced by the 1 s trigger")
+      } finally q.stop()
     }
-    val stream = spark.readStream.schema("id BIGINT, s STRING")
-      .option("maxFilesPerTrigger", 1).parquet(dir)
-    val qname = s"cadence_${System.nanoTime()}"
-    val t0 = System.nanoTime()
-    val q = stream.writeStream.outputMode("append").format("memory").queryName(qname)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second")).start()
-    try {
-      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-      while (spark.table(qname).count() < 4 && System.nanoTime() < deadline)
-        Thread.sleep(100)
-      val drainMs = (System.nanoTime() - t0) / 1000000
-      assert(spark.table(qname).count() == 4, "all 4 files must drain")
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 4,
-        "rate limit must split the drain into >= 4 non-empty micro-batches")
-      // guaranteed floor 2000 ms; 1500 leaves 25% slack for clock skew
-      assert(drainMs >= 1500,
-        s"4 rate-limited batches drained in ${drainMs} ms — not paced by the 1 s trigger")
-    } finally q.stop()
   }
 
   test("tumbling 5-minute window aggregate matches manual bucketing (DESIGN.md:283-291)") {

@@ -5,25 +5,14 @@ import graft.suite.{SuiteRunner, Verdict}
 import graft.tableio.ParquetTableIO
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
-import java.util.Comparator
 
 class SuiteSpec extends GraftSpec {
-
-  private def tempDir(): String =
-    Files.createTempDirectory("graft_suite").toString
-
-  private def rmdir(p: String): Unit = {
-    val d = Path.of(p)
-    if (Files.exists(d))
-      Files.walk(d).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
-  }
 
   lazy val code = CodeTableGen.generate(spark, 20000, batches = 4).cache()
   lazy val dim = CodeTableGen.repoLangDim(spark)
 
   test("end-to-end: violations detected, drifted batch fails drift, baseline passes") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       val verdicts = SuiteRunner.run(spark, code, dim, io)
       assert(verdicts.nonEmpty)
@@ -57,12 +46,11 @@ class SuiteSpec extends GraftSpec {
       val lineage = io.readCommitted(spark, "lineage").get
       assert(lineage.count() == 4)
       assert(lineage.select("row_count").collect().map(_.getLong(0)).sum == 20000L)
-    } finally rmdir(root)
+    }
   }
 
   test("resume: killed run re-validates ONLY uncommitted batches, final audit identical") {
-    val rootA = tempDir(); val rootB = tempDir()
-    try {
+    withTempDir("graft_suite") { rootA => withTempDir("graft_suite") { rootB =>
       val ioA = new ParquetTableIO(rootA)
       SuiteRunner.run(spark, code, dim, ioA)
       val full = ioA.readCommitted(spark, "verdicts").get
@@ -83,12 +71,11 @@ class SuiteSpec extends GraftSpec {
 
       // idempotence: nothing pending → no-op
       assert(SuiteRunner.run(spark, code, dim, ioB).isEmpty)
-    } finally { rmdir(rootA); rmdir(rootB) }
+    } }
   }
 
   test("committed sketches merge to whole-table answers without re-scanning") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       SuiteRunner.run(spark, code, dim, io)
       val g = graft.audit.AuditQueries.globalDistinct(spark, io).get.collect()(0)
@@ -101,12 +88,11 @@ class SuiteSpec extends GraftSpec {
       val exactMedian = code.select(median(length(col("content")))).collect()(0).getDouble(0)
       assert(math.abs(qs(0.5) - exactMedian) / exactMedian < 0.1,
         s"t-digest p50 ${qs(0.5)} vs exact $exactMedian")
-    } finally rmdir(root)
+    }
   }
 
   test("audit-only drift: sketched KS between committed batches flags the drifted one") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       SuiteRunner.run(spark, code, dim, io)
       val undrifted = graft.audit.AuditQueries.ksBetweenBatches(spark, io, 0L, 1L).get
@@ -115,12 +101,11 @@ class SuiteSpec extends GraftSpec {
       assert(drifted.pValue < 0.05, s"drifted batch must flag: $drifted")
       assert(undrifted.pValue >= 0.05, s"undrifted batch must not: $undrifted")
       assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 0L, 99L).isEmpty)
-    } finally rmdir(root)
+    }
   }
 
   test("suite's salted repo_metrics equal plain groupBy counts and rank the mega-repo first") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       SuiteRunner.run(spark, code, dim, io)
       val rm = io.readCommitted(spark, "repo_metrics").get
@@ -143,12 +128,11 @@ class SuiteSpec extends GraftSpec {
           s"$repo: est $est lb $lb ub $ub vs true ${truth(repo)}")
       }
       assert(hot.map(_._1).toSet == truth.filter(_._2 >= 50L).keySet)
-    } finally rmdir(root)
+    }
   }
 
   test("above the length-cardinality cap: no per-length driver collect; sketched KS/PSI verdicts agree") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       // cap=4 forces the sketched path (the corpus has thousands of distinct lengths)
       val verdicts = SuiteRunner.run(spark, code, dim, io, lenCardCap = 4)
@@ -168,19 +152,16 @@ class SuiteSpec extends GraftSpec {
       assert(v(1, "drift_psi", "content_length").passed)
       assert(!v(3, "drift_chisq", "lang").passed)
       // identical verdict-table shape either way
-      val exact = {
-        val r2 = tempDir()
-        try SuiteRunner.run(spark, code, dim, new ParquetTableIO(r2))
-        finally rmdir(r2)
+      val exact = withTempDir("graft_suite") { r2 =>
+        SuiteRunner.run(spark, code, dim, new ParquetTableIO(r2))
       }
       assert(verdicts.map(x => (x.batch_id, x.check, x.column)).sorted ==
         exact.map(x => (x.batch_id, x.check, x.column)).sorted)
-    } finally rmdir(root)
+    }
   }
 
   test("resume without the baseline partition: reference loads from committed artifacts") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       // first run validates the baseline (+ batch 1) and commits artifacts
       SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, io)
@@ -191,10 +172,8 @@ class SuiteSpec extends GraftSpec {
       val resumed = SuiteRunner.run(spark, code.where(col("batch_id") >= 2), dim, io)
       assert(resumed.map(_.batch_id).distinct.sorted == Seq(2L, 3L))
       // drift verdicts identical to an all-batches-at-once run
-      val full = {
-        val r2 = tempDir()
-        try SuiteRunner.run(spark, code, dim, new ParquetTableIO(r2))
-        finally rmdir(r2)
+      val full = withTempDir("graft_suite") { r2 =>
+        SuiteRunner.run(spark, code, dim, new ParquetTableIO(r2))
       }
       def key(v: Verdict) = (v.batch_id, v.check, v.column)
       val fullMap = full.filter(_.batch_id >= 2)
@@ -202,12 +181,11 @@ class SuiteSpec extends GraftSpec {
       resumed.foreach { v =>
         assert(fullMap(key(v)) == ((v.metric, v.p_value.toString, v.passed)), s"mismatch: $v")
       }
-    } finally rmdir(root)
+    }
   }
 
   test("version-gated artifacts are re-stamped after a recompute: upgraded audit dirs reload, not crash") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, io)
       // simulate a PRE-UPGRADE audit dir: the baseline's artifacts commit
@@ -225,10 +203,8 @@ class SuiteSpec extends GraftSpec {
       val resumed = SuiteRunner.run(spark, code.where(col("batch_id") === 3), dim, io)
       assert(resumed.map(_.batch_id).distinct == Seq(3L))
       // verdicts equal the all-at-once run (the reloaded snapshot is real)
-      val full = {
-        val r2 = tempDir()
-        try SuiteRunner.run(spark, code, dim, new ParquetTableIO(r2))
-        finally rmdir(r2)
+      val full = withTempDir("graft_suite") { r2 =>
+        SuiteRunner.run(spark, code, dim, new ParquetTableIO(r2))
       }
       val fullMap = full.filter(_.batch_id == 3)
         .map(v => (v.check, v.column) -> (v.metric, v.p_value.toString, v.passed)).toMap
@@ -236,19 +212,18 @@ class SuiteSpec extends GraftSpec {
         assert(fullMap((v.check, v.column)) == ((v.metric, v.p_value.toString, v.passed)),
           s"mismatch: $v")
       }
-    } finally rmdir(root)
+    }
   }
 
   test("missing baseline batch fails fast with a clear message") {
-    val root = tempDir()
-    try {
+    withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       val noBase = code.where(col("batch_id") =!= 0)
       val e = intercept[IllegalArgumentException] {
         SuiteRunner.run(spark, noBase, dim, io)
       }
       assert(e.getMessage.contains("baseline batch 0"), e.getMessage)
-    } finally rmdir(root)
+    }
   }
 
   test("one-pass sha sample equals the two-phase ORDER BY ... LIMIT cap sample") {
@@ -282,6 +257,105 @@ class SuiteSpec extends GraftSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
     assert(parsed.contains(("repo_x", weird, "c" * 40)), parsed)
     assert(parsed.contains(("repo_y", "ok/path.scala", "d" * 40)))
+  }
+
+  test("violation counts and capped samples equal the row_number window cuts") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    val cap = graft.suite.SuiteConfig.ViolationCap
+    // key parts: NULL, empty, and "！x" (U+FF01) / "𐀀x" (U+10000), whose
+    // UTF-8 byte order (Spark's) and UTF-16 order (Java's) disagree
+    val odd = Seq[String](null, "", "！x", "𐀀x")
+    val repos = odd ++ Seq("a", "b", "z")
+    val paths = odd ++ Seq("p", "q/r")
+    val commits = odd ++ Seq("c1")
+    val triples = for (r <- repos; p <- paths; c <- commits) yield (r, p, c)
+    // batch 0: clean baseline; 1: every key triple duplicated (210 groups);
+    // 2: > cap violating (repo, lang) groups; 3: > cap empty-path rows whose
+    // (repo, commit) groups span several langs, so the cut splits a group
+    val b0 = (0 until 400).map(i => (Seq("a", "b")(i % 2), s"f$i", "c1", Seq("py", "java")(i % 2), 0L))
+    val b1 = triples.zipWithIndex.flatMap { case ((r, p, c), i) =>
+      Seq.fill(if (i % 7 == 0) 3 else 2)((r, p, c, "py", 1L))
+    }
+    val b2 = for {
+      (r, i) <- (repos ++ (0 until 60).map(i => f"r$i%03d")).zipWithIndex
+      (l, j) <- Seq[String](null, "", "py", "！x", "𐀀x").zipWithIndex
+      n <- 0 to (i + j) % 2
+    } yield (r, s"g$i-$j-$n", "c1", l, 2L)
+    val b3 = for {
+      k <- 0 until 70
+      l <- Seq[String]("py", "java", "！x", null)
+    } yield (repos(k % repos.size), if (k % 2 == 0) null else "", commits(k % commits.size), l, 3L)
+    val code = (b0 ++ b1 ++ b2 ++ b3).zipWithIndex
+      .map { case ((r, p, c, l, b), i) => (r, p, c, l, s"body ${i % 97}", b) }
+      .toDF("repo", "path", "commit", "lang", "content", "batch_id")
+      .withColumn("expected_sha256", sha2(col("content"), 256))
+    val dim = Seq(("a", "py"), ("a", "java"), ("b", "py"), ("b", "java"), ("r000", "py"))
+      .toDF("repo", "lang")
+
+    // the row_number formulations the aggregates replace
+    val keyOrder = Seq(col("repo"), col("path"), col("commit"))
+    val keySalt = pmod(xxhash64(col("repo"), col("path"), col("commit")), lit(32))
+    val dupViol = code.groupBy("batch_id", "repo", "path", "commit")
+      .agg(count(lit(1)).as("dup_count")).where(col("dup_count") > 1)
+    val dupWindow = dupViol
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("batch_id"), keySalt).orderBy(keyOrder: _*)))
+      .where(col("rn") <= cap).drop("rn")
+      .withColumn("rn", row_number().over(Window.partitionBy(col("batch_id")).orderBy(keyOrder: _*)))
+      .where(col("rn") <= cap).drop("rn")
+    val refViol = code.select("batch_id", "repo", "lang")
+      .join(broadcast(dim), Seq("repo", "lang"), "left_anti")
+      .groupBy("batch_id", "repo", "lang").agg(count(lit(1)).as("violation_count"))
+    val refWindow = refViol
+      .withColumn("rn", row_number().over(Window.partitionBy(col("batch_id"))
+        .orderBy(col("repo"), col("lang"))))
+      .where(col("rn") <= cap).drop("rn")
+    val emptyPath = code.where(col("path").isNull || col("path") === "")
+      .select("batch_id", "repo", "commit", "lang")
+    def pathCut(order: String*): DataFrame = emptyPath
+      .withColumn("rn", row_number().over(Window.partitionBy(col("batch_id"))
+        .orderBy(order.map(col): _*)))
+      .where(col("rn") <= cap).drop("rn")
+
+    def rows(df: DataFrame, cols: String*): Seq[String] =
+      df.select(col("batch_id").cast("long") +: cols.map(col): _*).collect()
+        .map(_.toSeq.map(v => if (v == null) "NULL" else s"<$v>").mkString("|")).toSeq.sorted
+    def maxPerBatch(df: DataFrame): Long =
+      df.groupBy("batch_id").count().agg(max("count")).head().getLong(0)
+    assert(maxPerBatch(dupViol) > cap && maxPerBatch(refViol) > cap && maxPerBatch(emptyPath) > cap)
+    // the cap splits a (repo, commit) group of batch 3 across langs
+    val sorted3 = emptyPath.where(col("batch_id") === 3).orderBy("repo", "commit", "lang")
+      .collect().map(r => (r.getString(1), r.getString(2)))
+    assert(sorted3(cap - 1) == sorted3(cap))
+
+    withTempDir("graft_suite") { root =>
+      val io = new ParquetTableIO(root)
+      val verdicts = SuiteRunner.run(spark, code, dim, io)
+      def table(name: String) = io.readCommitted(spark, s"violations_$name").get
+      assert(rows(table("uniqueness"), "repo", "path", "commit", "dup_count") ==
+        rows(dupWindow, "repo", "path", "commit", "dup_count"))
+      assert(rows(table("referential"), "repo", "lang", "violation_count") ==
+        rows(refWindow, "repo", "lang", "violation_count"))
+      // the first cap in (repo, commit, lang) order; the window ordered by
+      // (repo, commit) alone broke ties arbitrarily, so against it only the
+      // (repo, commit) multiset is fixed
+      val completeness = table("completeness_path")
+      assert(rows(completeness, "repo", "commit", "lang") ==
+        rows(pathCut("repo", "commit", "lang"), "repo", "commit", "lang"))
+      assert(rows(completeness, "repo", "commit") == rows(pathCut("repo", "commit"), "repo", "commit"))
+
+      def counts(df: DataFrame, n: org.apache.spark.sql.Column) =
+        df.groupBy("batch_id").agg(n).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val dupCounts = counts(dupViol, sum(col("dup_count") - 1))
+      val refCounts = counts(refViol, sum("violation_count"))
+      (0L to 3L).foreach { b =>
+        def v(check: String) = verdicts.find(x => x.batch_id == b && x.check == check).get
+        assert(v("uniqueness").violation_count == dupCounts.getOrElse(b, 0L), s"batch $b")
+        assert(v("referential").violation_count == refCounts.getOrElse(b, 0L), s"batch $b")
+      }
+    }
   }
 
   test("salted per-repo counts equal plain groupBy counts (exactness under skew)") {
