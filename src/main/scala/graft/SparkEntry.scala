@@ -199,24 +199,6 @@ object SparkEntry {
         .orderBy("custkey")
     }),
 
-    // G7 adaptive salting end-to-end: the freq sketch NAMES the hot keys
-    // (phase 1, driver-side — the hot set is dozens of rows), then the
-    // two-level aggregate splinters ONLY those across salt buckets while
-    // the long tail keeps one partial per key. The oracle is the plain
-    // GROUP BY count — the law that exactness is independent of the hot
-    // set IS the check (adversarial hot sets are covered in SaltingSpec).
-    "q_adaptive_salted_count" -> ((s, dir) => {
-      val orders = Tables.orders(s, dir).withColumn("custkey",
-        col("o_custkey").cast("string"))
-      val hot = graft.stats.FreqSketch.heavyHitters(
-          orders, "custkey", threshold = 18L, maxMapSize = 4096)
-        .select("item").collect().map(_.getString(0)).toSeq
-      graft.suite.Salting.adaptiveSaltedCount(orders, "custkey", hot,
-          saltSource = Seq("o_orderkey"))
-        .select(col("custkey").cast("long").as("custkey"), col("count"))
-        .orderBy("custkey")
-    }),
-
     // A15 t-digest quantiles — SELF-VALIDATING on RANK (the quantity a
     // t-digest actually bounds): the exact rank of each sketch quantile
     // must sit within ±0.02 of the requested rank
@@ -1923,12 +1905,6 @@ object SparkEntry {
                 CAST(count(*) AS BIGINT) AS lb,
                 CAST(count(*) AS BIGINT) AS ub
          FROM orders GROUP BY 1 HAVING count(*) >= 18 ORDER BY 1""",
-
-    // adaptive two-level salted count == plain GROUP BY count, any hot set
-    "q_adaptive_salted_count" ->
-      """SELECT CAST(o_custkey AS BIGINT) AS custkey,
-                CAST(count(*) AS BIGINT) AS count
-         FROM orders GROUP BY 1 ORDER BY 1""",
 
     "q_tdigest" ->
       "SELECT true AS p50_ok, true AS p95_ok",

@@ -47,7 +47,7 @@ object AuditQueries {
 
   /** Global heavy-hitter repos across ALL committed batches by merging the
     * audited frequent-items bytes driver-side — the cross-run mega-repo
-    * report (salting/capacity telemetry) with Misra-Gries guarantees:
+    * report (skew/capacity telemetry) with Misra-Gries guarantees:
     * every repo whose total count ≥ `threshold` is present
     * (NO_FALSE_NEGATIVES), and each row's (lb, ub) bracket its true count
     * with ub − lb ≤ totalRows / (2 · FreqMapSize). The exact per-batch

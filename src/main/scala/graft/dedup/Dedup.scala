@@ -654,7 +654,7 @@ object Dedup {
     * word n-grams of normalized text appearing in at least `minDocs`
     * DISTINCT documents, with exact document counts.
     *
-    * Two-phase sketch-then-exact (the adaptive-salting pattern, G5/G7):
+    * Two-phase sketch-then-exact (the G5 heavy-hitters sketch as a filter):
     * phase 1 NAMES candidates with one bounded [[graft.stats.FreqSketch]]
     * aggregation over each document's distinct grams — the shuffle carries
     * sketch bytes, never one row per distinct gram; phase 2 CONFIRMS

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * a given (rows, batches, seed) at any parallelism and any scale.
   *
   * Reference semantics mirrored (see FIXTURES.md §1):
-  *  - Skew: one mega-repo (`repo_0000`) holds ~30% of rows, forcing the
-  *    salted two-level aggregation path (north_star: skewed mega-repos).
+  *  - Skew: one mega-repo (`repo_0000`) holds ~30% of rows, the key the
+  *    freq_repo sketch and the repo_metrics top-k must rank first.
   *  - Unusual-data injection: in the drifted batch (the last one), ~5% of
   *    rows get content length multiplied by an int in [2,5]
   *    (reference sensor.py:111-129: p=0.05, multiplier uniform[2,5]).

@@ -117,8 +117,7 @@ object BloomKernel {
 
 /** One-pass mergeable Bloom aggregate over a LONG hash column. Partial
   * buffers are the bit words themselves; merge is word-wise OR —
-  * associative, commutative, idempotent, so map-side partials and any
-  * salted two-level plan stay exact.
+  * associative, commutative, idempotent, so map-side partials stay exact.
   */
 case class BloomAgg(
     child: Expression,

@@ -16,18 +16,17 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Mergeable frequent-items (heavy-hitters) sketch over datasketches-java's
-  * `ItemsSketch[String]` — the skew DETECTOR the north star's "explicit
-  * repartition-by-repo-hash plus salting for skewed mega-repos" needs: at
-  * 10^12 files, a handful of viral repos (a boilerplate template forked by
-  * millions) dominate any repo-keyed shuffle, and the engine should be able
-  * to NAME them from one pass, not discover them by straggler autopsy.
+  * `ItemsSketch[String]` — the skew DETECTOR for mega-repos: at 10^12
+  * files, a handful of viral repos (a boilerplate template forked by
+  * millions) dominate the corpus, and the engine should be able to NAME
+  * them from one pass, not discover them by straggler autopsy.
   *
   * Why a sketch and not `GROUP BY repo ORDER BY count DESC LIMIT k`: the
   * exact form shuffles one row per DISTINCT repo (10^8-10^9 keys at target
   * scale) to answer a question whose answer is ~dozens of rows. The
   * ItemsSketch is bounded at `maxMapSize` entries per partition, merges
-  * associatively+commutatively (property-tested — the salted two-level
-  * aggregation path stays exact-in-distribution), and ships a few KB
+  * associatively+commutatively (property-tested — per-batch bytes merge
+  * across committed batches), and ships a few KB
   * through the shuffle regardless of key cardinality. Error model
   * (Misra-Gries lineage): every estimate E satisfies
   * true ≤ E ≤ true + N/(2·maxMapSize); items with true count above that
@@ -140,8 +139,7 @@ object FreqSketch {
     * `threshold` (NO_FALSE_NEGATIVES), as (item, est, lb, ub) rows. One
     * bounded-state aggregation — the shuffle carries sketch bytes, never
     * one row per distinct key — then a driver-free explode of the single
-    * result row. This is the scan that nominates salting candidates before
-    * a repo-keyed stage runs.
+    * result row.
     */
   def heavyHitters(df: DataFrame, keyCol: String, threshold: Long,
                    maxMapSize: Int = 1024): DataFrame =
@@ -156,11 +154,11 @@ object FreqSketch {
     val sa = heapify(a); sa.merge(heapify(b)); sa.toByteArray(new ArrayOfStringsSerDe)
   }
 
-  /** The NO_FALSE_NEGATIVES key cut from sketch bytes — the hot set fed to
-    * [[graft.suite.Salting.adaptiveSaltCol]]: every key whose true count
-    * reaches `threshold` is guaranteed present (overshoot is possible in
-    * the approximate regime and harmless there — salting a cold key never
-    * breaks exactness). Deterministic order (estimate desc, key asc).
+  /** The NO_FALSE_NEGATIVES key cut from sketch bytes — the candidate set
+    * [[graft.dedup.Dedup.boilerplateNgrams]] confirms exactly: every key
+    * whose true count reaches `threshold` is guaranteed present (overshoot
+    * is possible in the approximate regime). Deterministic order
+    * (estimate desc, key asc).
     */
   def hotKeys(bytes: Array[Byte], threshold: Long): Seq[String] =
     heapify(bytes).getFrequentItems(threshold, ErrorType.NO_FALSE_NEGATIVES)

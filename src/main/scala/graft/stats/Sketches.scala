@@ -4,7 +4,7 @@ import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.tdigest.TDigestDouble
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
@@ -22,7 +22,8 @@ import org.apache.spark.sql.types._
   * datasketches-backed `hll_sketch_agg`.
   *
   * Merge is associative + commutative (property-tested), which is exactly
-  * what makes the salted two-level aggregation path exact.
+  * what makes map-side partials and cross-batch merges of committed bytes
+  * exact.
   */
 case class TDigestAgg(
     child: Expression,

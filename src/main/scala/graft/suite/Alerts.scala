@@ -1,6 +1,6 @@
 package graft.suite
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Alert rules engine (reference DESIGN.md:689-747): threshold rules

@@ -45,7 +45,6 @@ object SuiteConfig {
   val UnusualRatioThreshold = 0.10 // sensor.py:175
   val Bins = 10
   val ViolationCap = 100
-  val SaltBuckets = 16
   /** Exact-KS routing cap: per-batch distinct content-length cardinality
     * (approx, from the job-1 HLL) above which the driver-side length-count
     * collect is SKIPPED and the KS/PSI(length) verdicts are computed from
@@ -95,12 +94,11 @@ object SuiteConfig {
   * collected aggregates, and every violation sample table (≤ ViolationCap
   * rows per batch, deterministic: O5) is written from the driver.
   *
-  * Skew: groupBy keys are (batch, lang/bin/length) or near-unique triples —
-  * none is repo-keyed, so the 30% mega-repo cannot hot-spot a reducer. The
-  * only repo-keyed metric (files per repo) goes through the ADAPTIVELY
-  * salted two-level aggregate ([[Salting.adaptiveSaltCol]]): the job-1
-  * freq_repo sketch names the hot repos, only those are splintered across
-  * salt buckets, and the long tail pays no partial-row multiplier.
+  * Skew: groupBy keys are (batch, lang/bin/length) or near-unique triples.
+  * The only repo-keyed metric (files per repo) is a plain count, which
+  * Spark splits into a map-side partial and a final aggregate: each map
+  * task sends at most one row per (batch, repo), so the 30% mega-repo
+  * cannot hot-spot a reducer without any key splitting.
   */
 object SuiteRunner {
   import SuiteConfig._
@@ -302,9 +300,11 @@ object SuiteRunner {
       .agg(count(lit(1)).as("n"), grouping("len").as("lang_set"))
       .collect()
     val (langRows, lenRows) = marginals.partition(_.getAs[Byte]("lang_set") == 1)
+    // a null lang reads back as "", summed with any empty-lang count
     val langCounts = langRows.groupBy(_.getAs[Long]("batch_id"))
       .map { case (b, rows) =>
-        b -> rows.map(r => Option(r.getAs[String]("lang")).getOrElse("") -> r.getAs[Long]("n")).toMap
+        b -> rows.groupMapReduce(r => Option(r.getAs[String]("lang")).getOrElse(""))(
+          _.getAs[Long]("n"))(_ + _)
       }
     // a null length (null content) reads back as 0, uncoalesced
     val lenCounts: Map[Long, Seq[(Long, Long)]] = lenRows
@@ -422,7 +422,7 @@ object SuiteRunner {
       else (pending :+ baselineBatch).distinct
     // the slim projection stays persisted through the violation /
     // repo-metric phase below: the uniqueness candidate hashes, the
-    // referential anti-join and the salted repo counts all read their
+    // referential anti-join and the repo counts all read their
     // columns from this cache instead of re-scanning the input (3 fewer
     // full-table scans per run); unpersisted in the write-phase finally
     val slim = slimProjection(code, needed).persist()
@@ -574,66 +574,14 @@ object SuiteRunner {
       out.toSeq
     }
 
-    // per-(batch, repo) file counts through the EXPLICIT salted two-level
-    // aggregation (north rule: "repartition-by-repo-hash plus salting for
-    // skewed mega-repos" — the generated corpus has one repo holding ~30%
-    // of rows; a plain groupBy(repo) would hot-spot one reducer). Counts
-    // are mergeable, so the two-level result is exact. Top repos per batch
-    // land in the audit as capacity/skew telemetry.
-    //
-    // ADAPTIVE salting: the job-1 freq_repo sketch NAMES the hot repos
-    // before this stage runs — only those get splintered across
-    // SaltBuckets; the long tail keeps salt 0, so level-1 partial volume
-    // is one row per cold (batch, repo) per map task instead of up to
-    // SaltBuckets of them (the multiplier that dominates at 10^8+ distinct
-    // repos). Threshold = an average reducer's row share: any repo that
-    // could fill a whole reducer is guaranteed named (NO_FALSE_NEGATIVES;
-    // per-batch hot ⇒ global count ≥ threshold ⇒ named), and spuriously
-    // named borderline keys only cost ≤ SaltBuckets extra partials each —
-    // exactness never depends on the hot set (SaltingSpec law).
-    val shuffleParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val pendingRows = pending.map(b => arts(b).rows).sum
-    val hotThreshold = math.max(1L, pendingRows / math.max(1, shuffleParts))
-    val mergedFreq = pending.map(b => arts(b).freqRepo)
-      .filter(_.nonEmpty).reduceOption(graft.stats.FreqSketch.mergeBytes)
-    // NO_FALSE_NEGATIVES holds only while threshold > the sketch's ACTUAL
-    // maximum error: getFrequentItems clamps the threshold UP to
-    // getMaximumError, so with FreqMapSize=1024 and shuffle partitions in
-    // the hundreds (the target-scale config) a truly reducer-filling repo
-    // with count in [threshold, maxError) would be silently unnamed and
-    // unsalted. When the guarantee degrades, fall back to STATIC salting
-    // (salt every key — exactness is salt-invariant, only the level-1
-    // partial volume grows) and say so loudly.
-    val freqMaxError = mergedFreq
-      .map(b => graft.stats.FreqSketch.heapify(b).getMaximumError).getOrElse(0L)
-    val staticSaltFallback = freqMaxError >= hotThreshold
-    if (staticSaltFallback)
-      System.err.println(s"[graft] adaptive salting DEGRADED to static: the " +
-        s"freq sketch's max error ($freqMaxError) reaches the hot-repo " +
-        s"threshold ($hotThreshold) so NO_FALSE_NEGATIVES cannot hold; " +
-        s"salting every repo key (exactness unaffected; raise FreqMapSize " +
-        s"to ~2x shuffle partitions to restore the adaptive path)")
-    val hotRepos: Seq[String] =
-      if (staticSaltFallback) Seq.empty
-      else mergedFreq.map(graft.stats.FreqSketch.hotKeys(_, hotThreshold))
-        .getOrElse(Seq.empty)
-    if (hotRepos.nonEmpty)
-      System.err.println(s"[graft] adaptive salting: ${hotRepos.size} hot repo(s) " +
-        s"named by the freq sketch at threshold $hotThreshold: " +
-        hotRepos.take(5).mkString(", ") + (if (hotRepos.size > 5) ", …" else ""))
-    // salt source = the keyhash already cached in the slim projection (any
-    // salt assignment is exactness-neutral — the two-level aggregate is a
-    // homomorphism; SaltingSpec law), so this whole stage reads the cache,
-    // never the input table
+    // per-(batch, repo) file counts, read from the cached slim projection;
+    // the top repos per batch land in the audit as capacity/skew
+    // telemetry. The ~30% mega-repo needs no key splitting here: Spark
+    // plans the count as a partial and a final aggregate, so each map task
+    // sends its reducer at most one row per (batch, repo).
     val repoMetrics = slimPending
-      .groupBy(col("batch_id"), col("repo"),
-        (if (staticSaltFallback) pmod(col("keyhash"), lit(SaltBuckets))
-         else if (hotRepos.isEmpty) lit(0)
-         else when(col("repo").isin(hotRepos: _*),
-           pmod(col("keyhash"), lit(SaltBuckets))).otherwise(lit(0))).as("_salt"))
-      .agg(count(lit(1)).as("_partial"))
       .groupBy(col("batch_id"), col("repo"))
-      .agg(sum("_partial").as("file_count"))
+      .agg(count(lit(1)).as("file_count"))
       // top-ViolationCap per batch via TopK.topKStrings (the stats.Bounded
       // kernel) instead of a row_number window: the window form funnels
       // EVERY repo of a batch through one reducer's sort (10^9 rows per

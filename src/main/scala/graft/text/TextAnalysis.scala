@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for training-data pipelines over a `documents`
@@ -37,18 +37,14 @@ object TextAnalysis {
     "de" -> Seq("der", "die", "und", "das", "ist"),
     "fr" -> Seq("le", "la", "et", "les", "des"))
 
-  /** Count of whole-word occurrences (word-boundary regex, lowercased) —
-    * non-overlapping and identical under Java regex and DuckDB's RE2.
-    */
-  private def wordHits(text: Column, w: String): Column =
-    regexp_count(lower(text), lit(s"\\b$w\\b"))
-
-  /** Total whole-word occurrences of ANY word in `ws`, as ONE alternation
-    * regex pass. Equal to Σ [[wordHits]] over the set: `\b…\b` matches are
-    * disjoint whole words and each whole word equals at most one member,
-    * so the alternation count is exactly the per-word sum — in 1 regex
-    * scan of the text instead of |ws| (the DuckDB oracles already compute
-    * these scores with the same alternation form).
+  /** Total whole-word occurrences (word-boundary regex, lowercased) of
+    * ANY word in `ws`, as ONE alternation regex pass — non-overlapping and
+    * identical under Java regex and DuckDB's RE2. Equal to the sum over the
+    * set of each word's own `\bw\b` count: `\b…\b` matches are disjoint
+    * whole words and each whole word equals at most one member, so the
+    * alternation count is exactly the per-word sum — in 1 regex scan of
+    * the text instead of |ws| (the DuckDB oracles already compute these
+    * scores with the same alternation form).
     */
   private def wordSetHits(text: Column, ws: Seq[String]): Column =
     regexp_count(lower(text), lit(ws.mkString("\\b(", "|", ")\\b")))

@@ -71,6 +71,17 @@ class FreqSketchSpec extends GraftSpec {
       assert(reported.contains(k), s"frequent key $k missing"))
   }
 
+  test("hotKeys: NO_FALSE_NEGATIVES cut names the mega-repo, not the whole key space") {
+    // the generator's repo_0000 holds ~30% of rows
+    val code = graft.gen.CodeTableGen.generate(spark, 12000, batches = 2)
+    val bytes = code
+      .agg(FreqSketch.freqItemsAgg(col("repo"), graft.suite.SuiteConfig.FreqMapSize))
+      .collect()(0).getAs[Array[Byte]](0)
+    val hot = FreqSketch.hotKeys(bytes, threshold = 3000L)
+    assert(hot.contains("repo_0000"), s"hot set $hot must include the mega-repo")
+    assert(hot.size < code.select("repo").distinct().count())
+  }
+
   test("nulls are skipped, not counted") {
     val df = Seq(Some("a"), None, Some("a"), None, Some("b")).toDF("k")
     val got = FreqSketch.heavyHitters(df, "k", 1L, 64)

@@ -114,7 +114,7 @@ class SuiteSpec extends GraftSpec {
       val plain = code.groupBy("batch_id", "repo").count()
       val joined = rm.join(plain, Seq("batch_id", "repo"))
         .where(col("file_count") =!= col("count")).count()
-      assert(joined == 0, "salted two-level counts must be exact")
+      assert(joined == 0, "repo_metrics counts must be exact")
 
       // cross-batch heavy hitters from the committed freq_repo bytes:
       // in the exact regime (distinct repos < FreqMapSize) the merged
@@ -358,12 +358,14 @@ class SuiteSpec extends GraftSpec {
     }
   }
 
-  test("salted per-repo counts equal plain groupBy counts (exactness under skew)") {
-    val plain = code.groupBy("repo").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = graft.suite.Salting
-      .saltedCount(code, "repo", saltSource = Seq("path", "commit"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
+  test("lang marginals sum null and empty langs into one empty-string count") {
+    import spark.implicits._
+    val batch = Seq[String](null, null, "", "py").zipWithIndex
+      .map { case (l, i) => ("a", s"p$i", "c1", l, s"body $i", 0L) }
+      .toDF("repo", "path", "commit", "lang", "content", "batch_id")
+      .withColumn("expected_sha256", sha2(col("content"), 256))
+    val a = SuiteRunner.collectArtifacts(batch, Seq(0L))(0L)
+    assert(a.langCounts == Map("" -> 3L, "py" -> 1L))
+    assert(a.langCounts.values.sum == a.rows)
   }
 }
