@@ -532,16 +532,20 @@ object SparkEntry {
       val curDf = s.createDataFrame(
         java.util.Arrays.asList(src.map(r => Row(r.getLong(0),
           r.getDouble(2).toString, r.getLong(0) * 2)): _*), curSchema)
-      val outBase = if (oracleDumps) "/tmp/graft_oracle"
-        else java.nio.file.Files.createTempDirectory("graft_schema_q").toString
-      baseDf.coalesce(1).write.mode("overwrite").parquet(s"$outBase/schema_base")
-      curDf.coalesce(1).write.mode("overwrite").parquet(s"$outBase/schema_cur")
-      val io = new graft.tableio.ParquetTableIO(
-        java.nio.file.Files.createTempDirectory("graft_schema_audit").toString)
-      graft.suite.SchemaCheck.pin(io, baseSchema)
+      // the result is a local relation, so both temp roots can go at once
+      def writeInputs(outBase: String): Unit = {
+        baseDf.coalesce(1).write.mode("overwrite").parquet(s"$outBase/schema_base")
+        curDf.coalesce(1).write.mode("overwrite").parquet(s"$outBase/schema_cur")
+      }
+      if (oracleDumps) writeInputs("/tmp/graft_oracle")
+      else withTempRoot("graft_schema_q")(writeInputs)
+      val issues = withTempRoot("graft_schema_audit") { root =>
+        val io = new graft.tableio.ParquetTableIO(root)
+        graft.suite.SchemaCheck.pin(io, baseSchema)
+        graft.suite.SchemaCheck.preflight(io, curSchema)
+      }
       import s.implicits._
-      graft.suite.SchemaCheck.preflight(io, curSchema)
-        .map(i => (i.column, i.issue)).toDF("col_name", "issue")
+      issues.map(i => (i.column, i.issue)).toDF("col_name", "issue")
         .orderBy("col_name", "issue")
     }),
 

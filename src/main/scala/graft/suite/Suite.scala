@@ -1,6 +1,6 @@
 package graft.suite
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.drift.DriftMath
 import graft.tableio.TableIO
@@ -73,26 +73,29 @@ object SuiteConfig {
   *      missing counts, sha-mismatch counts + capped sha samples, the
   *      capped completeness_path sample, HLL, heavy-hitters and t-digest
   *      sketch bytes) — single ObjectHashAggregate, map-side partial.
-  *      `content` is read from storage exactly once here: the slim
-  *      projection it reduces to is cached and reused by the later jobs,
-  *      and the sha256 check rides the same projection (SURVEY.md §7.5
-  *      risk 4);
+  *      It reads every row whose batch is not committed yet (the committed
+  *      batches are pruned by metadata, not listed by a scan), so its keys
+  *      name the pending batches. `content` is read from storage exactly
+  *      once here: the slim projection it reduces to is cached and reused
+  *      by the later jobs, and the sha256 check rides the same projection
+  *      (SURVEY.md §7.5 risk 4);
   *   2. one grouping-sets aggregate over the cached projection — lang
   *      marginals → chi-square / PSI(lang); length marginals → exact KS +
   *      PSI(length), computed ONLY while the distinct-length cardinality
   *      stays under [[SuiteConfig.LenCardCap]]; above the cap the
   *      KS/PSI(length) verdicts come from the job-1 t-digest bytes
   *      (mergeable, scale-free) and no per-length rows reach the driver;
-  *   3. uniqueness: duplicate-key candidates on a 64-bit key hash (one
-  *      shuffle), re-verified on the real keys, then per batch the count
-  *      and the capped sample in one aggregate;
-  *   4. referential: anti-join against the broadcast dimension, then per
-  *      batch the count and the capped sample in one aggregate;
-  *   5. repo metrics (below), written straight from the cluster.
-  * Jobs 3 and 4 are collected on writer threads while the other audit
-  * writes run. Verdict assembly is driver-side arithmetic over the tiny
-  * collected aggregates, and every violation sample table (≤ ViolationCap
-  * rows per batch, deterministic: O5) is written from the driver.
+  *   3. one per-batch aggregate over three group streams: uniqueness
+  *      (duplicate-key candidates on a 64-bit key hash, re-verified on the
+  *      real keys), referential (anti-join against the broadcast
+  *      dimension) and the per-repo file counts. It yields each check's
+  *      count and capped sample and the repo top-k in one pass.
+  * Job 3 is collected on a writer thread while job 2 runs on the caller's
+  * thread and the audit writes that need only job 1 are in flight.
+  * Verdict assembly is driver-side arithmetic over the tiny collected
+  * aggregates, and every audit table (violation samples of ≤ ViolationCap
+  * rows per batch, deterministic: O5; repo_metrics; sketches; artifacts;
+  * verdicts; lineage) is written from the driver.
   *
   * Skew: groupBy keys are (batch, lang/bin/length) or near-unique triples.
   * The only repo-keyed metric (files per repo) is a plain count, which
@@ -211,19 +214,20 @@ object SuiteRunner {
     */
   def collectArtifacts(code: DataFrame, batches: Seq[Long],
                        lenCardCap: Long = LenCardCap): Map[Long, BatchArtifacts] = {
-    val slim = slimProjection(code, batches).persist()
-    try collectArtifactsFromSlim(slim, batches, lenCardCap)
+    val slim = slimProjection(code, col("batch_id").isin(batches: _*)).persist()
+    try withMarginals(slim, artifactScalars(slim), lenCardCap)
     finally slim.unpersist()
   }
 
-  /** The one-content-scan projection both artifact jobs (and, inside
-    * [[run]], the violation/repo-metric jobs) share — `content` reduced
-    * ONCE to its cheap derivatives; content itself never shuffles. The
-    * caller owns persist/unpersist.
+  /** The one-content-scan projection of the rows `keep` selects, which
+    * both artifact jobs (and, inside [[run]], the per-batch violation and
+    * repo-metric aggregate) share — `content` reduced ONCE to its cheap
+    * derivatives; content itself never shuffles. The caller owns
+    * persist/unpersist.
     */
-  private[suite] def slimProjection(code: DataFrame, batches: Seq[Long]): DataFrame =
+  private def slimProjection(code: DataFrame, keep: Column): DataFrame =
     code
-      .where(col("batch_id").isin(batches: _*))
+      .where(keep)
       .select(col("batch_id"),
         length(col("content")).cast("long").as("len"),
         (col("path").isNull || col("path") === "").as("path_missing"),
@@ -248,11 +252,13 @@ object SuiteRunner {
         xxhash64(col("repo"), col("path"), col("commit")).as("keyhash"),
         xxhash64(col("repo"), col("path"), col("commit"), col("content")).as("rowhash"))
 
-  /** [[collectArtifacts]] over an already-persisted slim projection. */
-  private[suite] def collectArtifactsFromSlim(slim: DataFrame, batches: Seq[Long],
-                                              lenCardCap: Long): Map[Long, BatchArtifacts] = {
-    // job 1: scalar aggregates per batch
-    val scalars = slim.groupBy("batch_id").agg(
+  /** Job 1: the scalar aggregates of every batch in `slim`, as artifacts
+    * whose lang and length marginals are still empty. Its keys are the
+    * batches present; a null `batch_id` fails here, since its group would
+    * read back as batch 0.
+    */
+  private def artifactScalars(slim: DataFrame): Map[Long, BatchArtifacts] = {
+    val rows = slim.groupBy("batch_id").agg(
       count(lit(1)).as("rows"),
       min("len").as("len_min"), max("len").as("len_max"),
       avg("len").as("len_mean"), stddev_samp(col("len")).as("len_std"),
@@ -279,19 +285,41 @@ object SuiteRunner {
       // detector, mergeable across batches from the committed bytes
       graft.stats.FreqSketch.freqItemsAgg(col("repo"), SuiteConfig.FreqMapSize)
         .as("freq_repo")).collect()
-      .map(r => r.getAs[Long]("batch_id") -> r).toMap
+    if (rows.exists(_.isNullAt(0))) throw new IllegalArgumentException(
+      "the input has rows with a null batch_id; every row must carry its batch")
+    rows.map { r =>
+      def dbl(c: String): Double =
+        Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
+      val b = r.getAs[Long]("batch_id")
+      b -> BatchArtifacts(b, r.getAs[Long]("rows"),
+        dbl("len_min"), dbl("len_max"), dbl("len_mean"), dbl("len_std"),
+        r.getAs[Long]("miss_path"), r.getAs[Long]("miss_lang"), r.getAs[Long]("miss_content"),
+        r.getAs[Long]("sha_mismatch"),
+        Map.empty, Seq.empty,
+        Option(r.getAs[java.math.BigDecimal]("fp"))
+          .map(_.toBigInteger.toString(16)).getOrElse("0"),
+        r.getAs[Array[Byte]]("hll_key"), r.getAs[Array[Byte]]("hll_repo"),
+        r.getAs[Array[Byte]]("tdigest_len"), r.getAs[Array[Byte]]("freq_repo"),
+        r.getAs[scala.collection.Seq[String]]("sha_samples").toSeq,
+        r.getAs[Long]("len_card"),
+        r.getAs[scala.collection.Seq[Row]]("path_samples").toSeq
+          .map(p => (p.getString(0), p.getString(1), p.getString(2))))
+    }.toMap
+  }
 
-    // job 2: the lang and length marginals per batch as ONE grouping-sets
-    // aggregate over the CACHED slim projection (one Expand, one exchange,
-    // one driver action). Lang marginals (always tiny — |langs| bounded)
-    // feed chi-square/PSI(lang). Length marginals feed exact KS and
-    // PSI(length) — but ONLY below the cardinality cap: per-length rows are
-    // unbounded on arbitrary inputs (10^6+ distinct lengths on real code),
-    // so above the cap the lang set runs alone, the driver never sees
-    // per-length counts and the drift verdicts fall back to the t-digest
-    // bytes already aggregated in job 1.
-    val maxLenCard = scalars.valuesIterator
-      .map(_.getAs[Long]("len_card")).maxOption.getOrElse(0L)
+  /** Job 2: `scalars` with their lang and length marginals filled in, from
+    * ONE grouping-sets aggregate over the CACHED slim projection (one
+    * Expand, one exchange, one driver action). Lang marginals (always tiny
+    * — |langs| bounded) feed chi-square/PSI(lang). Length marginals feed
+    * exact KS and PSI(length) — but ONLY below the cardinality cap:
+    * per-length rows are unbounded on arbitrary inputs (10^6+ distinct
+    * lengths on real code), so above the cap the lang set runs alone, the
+    * driver never sees per-length counts and the drift verdicts fall back
+    * to the t-digest bytes already aggregated in job 1.
+    */
+  private def withMarginals(slim: DataFrame, scalars: Map[Long, BatchArtifacts],
+                            lenCardCap: Long): Map[Long, BatchArtifacts] = {
+    val maxLenCard = scalars.valuesIterator.map(_.lenCardApprox).maxOption.getOrElse(0L)
     val langSet = Seq(col("batch_id"), col("lang"))
     val lenSet = Seq(col("batch_id"), col("len"))
     val marginals = slim
@@ -313,27 +341,10 @@ object SuiteRunner {
         b -> rows.map(r => r.getAs[Long]("len") -> r.getAs[Long]("n"))
           .toSeq.sortBy(_._1)
       }
-
-    batches.flatMap { b =>
-      scalars.get(b).map { r =>
-        def dbl(c: String): Double =
-          Option(r.getAs[Any](c)).map(_.asInstanceOf[Number].doubleValue).getOrElse(Double.NaN)
-        b -> BatchArtifacts(b, r.getAs[Long]("rows"),
-          dbl("len_min"), dbl("len_max"), dbl("len_mean"), dbl("len_std"),
-          r.getAs[Long]("miss_path"), r.getAs[Long]("miss_lang"), r.getAs[Long]("miss_content"),
-          r.getAs[Long]("sha_mismatch"),
-          langCounts.getOrElse(b, Map.empty),
-          lenCounts.getOrElse(b, Seq.empty),
-          Option(r.getAs[java.math.BigDecimal]("fp"))
-            .map(_.toBigInteger.toString(16)).getOrElse("0"),
-          r.getAs[Array[Byte]]("hll_key"), r.getAs[Array[Byte]]("hll_repo"),
-          r.getAs[Array[Byte]]("tdigest_len"), r.getAs[Array[Byte]]("freq_repo"),
-          r.getAs[scala.collection.Seq[String]]("sha_samples").toSeq,
-          r.getAs[Long]("len_card"),
-          r.getAs[scala.collection.Seq[Row]]("path_samples").toSeq
-            .map(p => (p.getString(0), p.getString(1), p.getString(2))))
-      }
-    }.toMap
+    scalars.map { case (b, a) =>
+      b -> a.copy(langCounts = langCounts.getOrElse(b, Map.empty),
+        lenCounts = lenCounts.getOrElse(b, Seq.empty))
+    }
   }
 
   /** Length histogram proportions from a t-digest sketch over the same
@@ -376,29 +387,13 @@ object SuiteRunner {
           io: TableIO, baselineBatch: Long = 0L,
           lenCardCap: Long = LenCardCap): Seq[Verdict] = {
     import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
     val t0 = System.nanoTime() // lineage wall_ms covers the WHOLE run
     // normalize batch_id: a disk layout partitioned by batch_id reads the
     // partition column back as int — the engine contract is bigint
     val code = codeRaw.withColumn("batch_id", col("batch_id").cast("bigint"))
-    val allBatches = code.select("batch_id").distinct().as[Long].collect().sorted.toSeq
-    val committed = io.listCommitted("verdicts").toSet
-    val pending = allBatches.filterNot(committed)
-    if (pending.isEmpty) return Seq.empty
-
-    // PRE-FLIGHT schema gate (reference DESIGN.md:317-326 schema registry /
-    // compatibility validation; "Schema violations" metric, DESIGN.md:600):
-    // metadata-only — the diff costs the same at 10^12 rows as at 10^2
-    // because it never scans data. First run pins the normalized input
-    // schema to the audit dir (atomic manifest, version-gated like every
-    // persisted artifact); later runs diff against the reload. The issues
-    // become a per-batch `schema` verdict row (and a critical alert rule),
-    // NOT a quality_score input: quality is the reference's CONTENT metric,
-    // schema drift is a compatibility gate with its own verdict.
-    val schemaIssues = SchemaCheck.preflight(io, code.schema)
-    if (schemaIssues.nonEmpty)
-      System.err.println(s"[graft] schema drift vs committed baseline (" +
-        s"${schemaIssues.size} issue(s)): " +
-        schemaIssues.map(i => s"${i.column}:${i.issue}").mkString(", "))
+    val committed = io.listCommitted("verdicts")
 
     // baseline artifacts: computed once — the FIRST scan establishes the
     // reference distributions (T7, DESIGN.md:536-537) and commits them to
@@ -417,106 +412,251 @@ object SuiteRunner {
         df.where(col("batch_id") === baselineBatch).as[ArtifactRow]
           .collect().headOption.map(fromRow)
       }
-    val needed =
-      if (baselineFromAudit.isDefined) pending
-      else (pending :+ baselineBatch).distinct
-    // the slim projection stays persisted through the violation /
-    // repo-metric phase below: the uniqueness candidate hashes, the
-    // referential anti-join and the repo counts all read their
-    // columns from this cache instead of re-scanning the input (3 fewer
-    // full-table scans per run); unpersisted in the write-phase finally
-    val slim = slimProjection(code, needed).persist()
-    val (arts, base) =
-      try {
-        val a = collectArtifactsFromSlim(slim, needed, lenCardCap) ++
-          baselineFromAudit.map(b => b.batchId -> b)
-        val bl = a.getOrElse(baselineBatch, throw new IllegalArgumentException(
+    // The slim projection covers every row whose batch is not committed,
+    // plus the baseline when no snapshot reloads: the committed-batch
+    // metadata prunes the scan (a partition filter on an input partitioned
+    // by batch_id), so job 1 names the pending batches and no listing job
+    // scans the input. Null batch_ids stay in for job 1 to reject. The
+    // projection stays persisted through the whole call: job 2, the
+    // uniqueness candidate hashes, the referential anti-join and the repo
+    // counts all read their columns from this cache.
+    val keep =
+      if (committed.isEmpty) lit(true)
+      else {
+        val fresh = col("batch_id").isNull || !col("batch_id").isin(committed: _*)
+        if (baselineFromAudit.isDefined) fresh else fresh || col("batch_id") === baselineBatch
+      }
+    val slim = slimProjection(code, keep).persist()
+    // submitters only: no thread starts before the first submit after job 1
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val scalars = artifactScalars(slim) // job 1
+      val pending = scalars.keys.filterNot(committed.contains).toSeq.sorted
+      if (pending.isEmpty) return Seq.empty
+      if (!scalars.contains(baselineBatch) && baselineFromAudit.isEmpty) {
+        val present = code.select("batch_id").distinct().as[Long].collect().sorted
+        throw new IllegalArgumentException(
           s"baseline batch $baselineBatch has no rows in the input (batches present: " +
-            s"${allBatches.mkString(", ")}) and no committed artifacts exist for it; " +
-            "include the baseline partition in the input or validate it first"))
-        (a, bl)
-      } catch { case e: Throwable => slim.unpersist(blocking = false); throw e }
-    val basePropLen = histProportions(base.lenCounts, base.lenMin, base.lenMax)
+            s"${present.mkString(", ")}) and no committed artifacts exist for it; " +
+            "include the baseline partition in the input or validate it first")
+      }
 
-    // Violation checks, batch-attributed, capped deterministically (O5).
-    // Each check's count AND its capped sample come from ONE aggregate per
-    // batch: `firstK` keeps the ViolationCap first groups in (key) order
-    // with bounded, mergeable state, so map-side partials hold ≤ cap rows
-    // per task and a duplicate-heavy batch never sorts all its violation
-    // groups in one task. The ≤ cap rows per batch come back to the
-    // driver, which writes the sample tables itself (like the sha256
-    // sample below).
-    val pendingCode = code.where(col("batch_id").isin(pending: _*))
-    val slimPending = slim.where(col("batch_id").isin(pending: _*))
+      // PRE-FLIGHT schema gate (reference DESIGN.md:317-326 schema registry /
+      // compatibility validation; "Schema violations" metric, DESIGN.md:600):
+      // metadata-only — the diff costs the same at 10^12 rows as at 10^2
+      // because it never scans data. First run pins the normalized input
+      // schema to the audit dir (atomic manifest, version-gated like every
+      // persisted artifact); later runs diff against the reload. The issues
+      // become a per-batch `schema` verdict row (and a critical alert rule),
+      // NOT a quality_score input: quality is the reference's CONTENT metric,
+      // schema drift is a compatibility gate with its own verdict.
+      val schemaIssues = SchemaCheck.preflight(io, code.schema)
+      if (schemaIssues.nonEmpty)
+        System.err.println(s"[graft] schema drift vs committed baseline (" +
+          s"${schemaIssues.size} issue(s)): " +
+          schemaIssues.map(i => s"${i.column}:${i.issue}").mkString(", "))
 
-    // Uniqueness, two-phase hash-first: phase 1 shuffles only a 64-bit key
-    // hash (not the ~100-byte string triple — 6× less shuffle I/O at 8M
-    // rows) and reads it straight from the CACHED slim projection (the
-    // keyhash was computed in the artifacts scan — no input re-scan);
-    // phase 2 re-verifies candidate groups on the REAL key strings
-    // over the (tiny) semi-joined candidate rows, so a hash collision can
-    // never produce a false duplicate.
-    val keyHash = xxhash64(col("repo"), col("path"), col("commit"))
-    val candHashes = slimPending
-      .groupBy(col("batch_id"), col("keyhash").as("kh")).agg(count(lit(1)).as("c"))
-      .where(col("c") > 1).select("batch_id", "kh")
-    // no broadcast HINT here: the candidate set's size is data-dependent
-    // (normally tiny → AQE broadcasts it at runtime; adversarially
-    // duplicate-heavy input → AQE falls back to a shuffle join instead of
-    // blowing the broadcast limit)
-    val dupAgg = pendingCode
-      .join(candHashes,
-        pendingCode("batch_id") === candHashes("batch_id") && keyHash === col("kh"), "left_semi")
-      .groupBy("batch_id", "repo", "path", "commit")
-      .agg(count(lit(1)).as("dup_count")).where(col("dup_count") > 1)
-      .groupBy("batch_id")
-      .agg(sum(col("dup_count") - 1).as("n"), graft.stats.TopK.firstK(
-        struct("repo", "path", "commit", "dup_count"), ViolationCap).as("sample"))
+      // Violation checks, batch-attributed, capped deterministically (O5),
+      // and the repo metrics: three group streams, one per-batch aggregate.
+      // Each stream carries one non-null `dup` struct, `ref` struct or
+      // (repo, file_count) pair per row; `firstK` keeps the ViolationCap
+      // first groups in (key) order and `topKStrings` the ViolationCap
+      // largest repos, both with bounded, mergeable state (and both skip
+      // the other streams' null rows), so map-side partials hold ≤ cap rows
+      // per task. The ≤ cap rows per batch come back to the driver, which
+      // writes the sample tables and repo_metrics itself.
+      val pendingCode = code.where(col("batch_id").isin(pending: _*))
+      val slimPending = slim.where(col("batch_id").isin(pending: _*))
 
-    // referential: the violating (repo, lang) groups, aggregated over the
-    // CACHED slim columns (no input re-scan)
-    val refAgg = slimPending.select("batch_id", "repo", "lang")
-      .join(broadcast(repoLangDim.select("repo", "lang").distinct()), Seq("repo", "lang"), "left_anti")
-      .groupBy("batch_id", "repo", "lang")
-      .agg(count(lit(1)).as("violation_count"))
-      .groupBy("batch_id")
-      .agg(sum("violation_count").as("n"), graft.stats.TopK.firstK(
-        struct("repo", "lang", "violation_count"), ViolationCap).as("sample"))
+      // Uniqueness, two-phase hash-first: phase 1 shuffles only a 64-bit key
+      // hash (not the ~100-byte string triple — 6× less shuffle I/O at 8M
+      // rows) and reads it straight from the CACHED slim projection (the
+      // keyhash was computed in the artifacts scan — no input re-scan);
+      // phase 2 re-verifies candidate groups on the REAL key strings
+      // over the (tiny) semi-joined candidate rows, so a hash collision can
+      // never produce a false duplicate.
+      val keyHash = xxhash64(col("repo"), col("path"), col("commit"))
+      val candHashes = slimPending
+        .groupBy(col("batch_id"), col("keyhash").as("kh")).agg(count(lit(1)).as("c"))
+        .where(col("c") > 1).select("batch_id", "kh")
+      // no broadcast HINT here: the candidate set's size is data-dependent
+      // (normally tiny → AQE broadcasts it at runtime; adversarially
+      // duplicate-heavy input → AQE falls back to a shuffle join instead of
+      // blowing the broadcast limit)
+      val dupGroups = pendingCode
+        .join(candHashes,
+          pendingCode("batch_id") === candHashes("batch_id") && keyHash === col("kh"), "left_semi")
+        .groupBy("batch_id", "repo", "path", "commit")
+        .agg(count(lit(1)).as("dup_count")).where(col("dup_count") > 1)
+        .select(col("batch_id"), struct("repo", "path", "commit", "dup_count").as("dup"))
+      // referential: the violating (repo, lang) groups, aggregated over the
+      // CACHED slim columns (no input re-scan); duplicate dimension rows
+      // cannot change an anti-join, so the dimension is broadcast as is
+      val refGroups = slimPending.select("batch_id", "repo", "lang")
+        .join(broadcast(repoLangDim.select("repo", "lang")), Seq("repo", "lang"), "left_anti")
+        .groupBy("batch_id", "repo", "lang")
+        .agg(count(lit(1)).as("violation_count"))
+        .select(col("batch_id"), struct("repo", "lang", "violation_count").as("ref"))
+      // per-(batch, repo) file counts: the top repos per batch land in the
+      // audit as capacity/skew telemetry. The ~30% mega-repo needs no key
+      // splitting here: Spark plans the count as a partial and a final
+      // aggregate, so each map task sends its reducer at most one row per
+      // (batch, repo). `topKStrings` (the stats.Bounded kernel) cuts the
+      // (count desc, repo asc in Spark's string order) top without a
+      // row_number window, which would funnel EVERY repo of a batch through
+      // one reducer's sort; TopKSpec pins the cut to the window's.
+      val repoCounts = slimPending
+        .groupBy(col("batch_id"), col("repo"))
+        .agg(count(lit(1)).as("file_count"))
+      val perBatch = dupGroups
+        .unionByName(refGroups, allowMissingColumns = true)
+        .unionByName(repoCounts, allowMissingColumns = true)
+        .groupBy("batch_id")
+        .agg(coalesce(sum(col("dup.dup_count") - 1), lit(0L)).as("dup_n"),
+          graft.stats.TopK.firstK(col("dup"), ViolationCap).as("dup_sample"),
+          coalesce(sum(col("ref.violation_count")), lit(0L)).as("ref_n"),
+          graft.stats.TopK.firstK(col("ref"), ViolationCap).as("ref_sample"),
+          graft.stats.TopK.topKStrings(col("file_count"), col("repo"), ViolationCap)
+            .as("repo_top"))
 
-    // sha256 counts AND the capped deterministic sample both came out of the
-    // job-1 artifacts scan (min-k aggregate) — no second content pass; the
-    // sample table is assembled driver-side from ≤ ViolationCap keys/batch
-    val shaViol = pending.flatMap { b =>
-      arts(b).shaSamples.map(s => (b, s))
-    }.toDF("batch_id", "key_json")
-      .select(col("batch_id"),
-        from_json(col("key_json"), "repo STRING, path STRING, commit STRING",
-          Map.empty[String, String]).as("k"))
-      .select(col("batch_id"), col("k.repo").as("repo"),
-        col("k.path").as("path"), col("k.commit").as("commit"))
+      // Every audit table write is independent of the others → submitted
+      // CONCURRENTLY on the pool as soon as its inputs exist (Spark's
+      // scheduler is thread-safe and interleaves jobs from several
+      // submitter threads), one partitioned write per table covering ALL
+      // pending batches: a per-batch write loop re-plans the pipeline
+      // #tables × #batches times (measured 26 s serial overhead at 8M rows),
+      // and serial writes each pay their own task-launch + file-commit
+      // latency. Every table is built on the driver from collected rows and
+      // coalesced to one file per batch (no extra job). Durability is
+      // unchanged: manifest COMMITS below happen strictly after ALL writes
+      // have finished, in order, verdicts last (the atomic commit point per
+      // batch). Lineage is NOT on the pool: its wall_ms must include the
+      // write time, so it is written (tiny, serial) after the pool drains.
+      val ec = ExecutionContext.fromExecutorService(pool)
+      def write(table: String, df: DataFrame): Future[Unit] =
+        Future(io.writeAllPartitions(df.coalesce(1), table))(ec)
+      val fPerBatch = Future(perBatch.collect())(ec)
 
-    // the completeness_path sample rode job 1 too (first in (repo, commit,
-    // lang) order)
-    val emptyPathViol = pending.flatMap { b =>
-      arts(b).pathSamples.map { case (repo, commit, lang) => (b, repo, commit, lang) }
-    }.toDF("batch_id", "repo", "commit", "lang")
+      // sha256 counts AND the capped deterministic sample both came out of
+      // job 1 (min-k aggregate) — no second content pass; the sample table
+      // is assembled driver-side from ≤ ViolationCap keys/batch. The
+      // completeness_path sample (first in (repo, commit, lang) order) and
+      // the per-batch MERGEABLE sketches (north star: HLL distinct +
+      // t-digest quantiles persisted so later/resumed runs answer
+      // whole-table questions by merging committed bytes, never
+      // re-scanning) rode job 1 too, so these three writes start before
+      // job 2.
+      val shaViol = pending.flatMap { b =>
+        scalars(b).shaSamples.map(s => (b, s))
+      }.toDF("batch_id", "key_json")
+        .select(col("batch_id"),
+          from_json(col("key_json"), "repo STRING, path STRING, commit STRING",
+            Map.empty[String, String]).as("k"))
+        .select(col("batch_id"), col("k.repo").as("repo"),
+          col("k.path").as("path"), col("k.commit").as("commit"))
+      val emptyPathViol = pending.flatMap { b =>
+        scalars(b).pathSamples.map { case (repo, commit, lang) => (b, repo, commit, lang) }
+      }.toDF("batch_id", "repo", "commit", "lang")
+      val sketchRows = pending.map { b =>
+        val a = scalars(b)
+        (b, a.rows, a.hllKey, a.hllRepo, a.tdigestLen, a.freqRepo)
+      }.toDF("batch_id", "rows", "hll_key", "hll_repo", "tdigest_len", "freq_repo")
+      val earlyWrites = Seq(
+        write("violations_sha256_invariant", shaViol),
+        write("violations_completeness_path", emptyPathViol),
+        write("sketches", sketchRows))
 
-    val violationChecks = Seq("uniqueness", "referential", "sha256_invariant", "completeness_path")
+      // job 2 runs on this thread while the pool works
+      val arts = withMarginals(slim, scalars, lenCardCap) ++
+        baselineFromAudit.map(b => b.batchId -> b)
+      val base = arts(baselineBatch)
+      // artifacts snapshot: what a resumed run loads instead of
+      // re-scanning the baseline partition
+      val artifactsWrite = write("artifacts", pending.map(b => toRow(arts(b))).toDF())
 
-    // All audit writes are gathered and submitted CONCURRENTLY at the end
-    // of the run (see below): one partitioned write per table covering ALL
-    // pending batches — a per-batch write loop re-plans the whole pipeline
-    // #tables × #batches times (measured 26 s serial overhead at 8M rows),
-    // and running the independent writes serially costs a further ~10 s
-    // fixed block at 32 cores.
+      val rows = Await.result(fPerBatch, Duration.Inf)
+      def counts(name: String): Map[Long, Long] =
+        rows.map(r => r.getAs[Long]("batch_id") -> r.getAs[Long](name)).toMap
+      // (batch, array position, element) of one per-batch array column
+      def elements(name: String): Seq[(Long, Int, Row)] = rows.toSeq.flatMap { r =>
+        r.getAs[scala.collection.Seq[Row]](name).zipWithIndex
+          .map { case (e, i) => (r.getAs[Long]("batch_id"), i, e) }
+      }
+      val dupSample = elements("dup_sample").map { case (b, _, k) =>
+        (b, k.getString(0), k.getString(1), k.getString(2), k.getLong(3))
+      }.toDF("batch_id", "repo", "path", "commit", "dup_count")
+      val refSample = elements("ref_sample").map { case (b, _, k) =>
+        (b, k.getString(0), k.getString(1), k.getLong(2))
+      }.toDF("batch_id", "repo", "lang", "violation_count")
+      // rank = array position + 1
+      val repoMetrics = elements("repo_top").map { case (b, i, t) =>
+        (b, t.getString(1), t.getLong(0), i + 1)
+      }.toDF("batch_id", "repo", "file_count", "rank")
+      val verdicts = assembleVerdicts(pending, arts, base, baselineBatch, schemaIssues,
+        counts("dup_n"), counts("ref_n"))
+      val lastWrites = Seq(
+        write("violations_uniqueness", dupSample),
+        write("violations_referential", refSample),
+        write("repo_metrics", repoMetrics),
+        write("verdicts", verdicts.toDF()))
+      (earlyWrites ++ (artifactsWrite +: lastWrites)).foreach(Await.result(_, Duration.Inf))
 
-    // per-batch verdict assembly (driver-side arithmetic on tiny
-    // aggregates) — invoked AFTER the independent audit writes are in
-    // flight, with the dup/ref counts collected concurrently with them
-    def assembleVerdicts(dupCounts: Map[Long, Long],
-                         refCounts: Map[Long, Long]): Seq[Verdict] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[Verdict]
+      // lineage wall_ms: whole run INCLUDING the audit writes above (even
+      // split across this run's batches — per-batch telemetry, not a timer)
+      val wallMs = (System.nanoTime() - t0) / 1000000 / math.max(1, pending.size)
+      val lineageRows = pending.map { b =>
+        val a = arts(b)
+        Lineage(b, a.rows, a.fingerprint, SuiteVersion, baselineBatch, wallMs)
+      }
+      io.writeAllPartitions(lineageRows.toDF().coalesce(1), "lineage")
       pending.foreach { b =>
+        val a = arts(b)
+        Seq("uniqueness", "referential", "sha256_invariant", "completeness_path")
+          .foreach(name => io.commit(s"violations_$name", b, s"""{"batch_id":$b}"""))
+        io.commit("sketches", b, s"""{"batch_id":$b}""")
+        // artifacts carry the writer's suite version: reload is version-gated
+        io.commit("artifacts", b, s"""{"batch_id":$b,"suite":"$SuiteVersion"}""")
+        io.commit("repo_metrics", b, s"""{"batch_id":$b}""")
+        io.commit("lineage", b, s"""{"batch_id":$b}""")
+        io.commit("verdicts", b,
+          s"""{"batch_id":$b,"rows":${a.rows},"fingerprint":"${a.fingerprint}","suite":"$SuiteVersion"}""")
+      }
+      // re-stamp path: when the baseline's committed artifacts were rejected
+      // by the version gate (or never existed) and the baseline was NOT a
+      // pending batch (whose normal write/commit above already stamped it),
+      // the snapshot just recomputed from the input is committed under the
+      // CURRENT version — otherwise an upgraded audit dir re-scans the
+      // baseline partition forever and a later run whose input no longer
+      // carries that partition dies instead of reloading
+      if (baselineFromAudit.isEmpty && !pending.contains(baselineBatch)) {
+        // drop batch_id: writePartition targets the batch_id=<p> directory
+        // directly, and readCommitted re-derives the column from the path
+        // (the same layout writeAllPartitions' partitionBy produces)
+        io.writePartition(Seq(toRow(base)).toDF().drop("batch_id"),
+          "artifacts", baselineBatch)
+        io.commit("artifacts", baselineBatch,
+          s"""{"batch_id":$baselineBatch,"suite":"$SuiteVersion"}""")
+      }
+      verdicts
+    } finally {
+      // shutdownNow interrupts still-running writes when any write failed
+      // (a failed run must not keep writer threads alive); the unpersist
+      // sits in the finally so a failure cannot leak cached blocks
+      pool.shutdownNow()
+      slim.unpersist()
+    }
+  }
+
+  /** Per-batch verdict rows: driver-side arithmetic over the collected
+    * artifacts and the uniqueness / referential counts.
+    */
+  private def assembleVerdicts(pending: Seq[Long], arts: Map[Long, BatchArtifacts],
+                               base: BatchArtifacts, baselineBatch: Long,
+                               schemaIssues: Seq[SchemaCheck.SchemaIssue],
+                               dupCounts: Map[Long, Long],
+                               refCounts: Map[Long, Long]): Seq[Verdict] = {
+    val basePropLen = histProportions(base.lenCounts, base.lenMin, base.lenMax)
+    pending.flatMap { b =>
       val a = arts(b)
       // exact per-length counts below the cardinality cap; t-digest sketch
       // path above it (no per-length rows ever reached the driver)
@@ -541,13 +681,13 @@ object SuiteRunner {
         else math.abs(base.lenMean - a.lenMean) / base.lenStd
       val isBase = b == baselineBatch
       val missRate = if (a.rows == 0) 0.0 else a.missingPath.toDouble / a.rows
+      val dups = dupCounts.getOrElse(b, 0L)
+      val refs = refCounts.getOrElse(b, 0L)
       val verdicts = Seq(
         Verdict(b, "schema", "*", schemaIssues.size.toDouble, Double.NaN, 0,
           schemaIssues.isEmpty, schemaIssues.size),
-        Verdict(b, "uniqueness", "repo,path,commit", dupCounts.getOrElse(b, 0L).toDouble,
-          Double.NaN, 0, dupCounts.getOrElse(b, 0L) == 0, dupCounts.getOrElse(b, 0L)),
-        Verdict(b, "referential", "repo,lang", refCounts.getOrElse(b, 0L).toDouble,
-          Double.NaN, 0, refCounts.getOrElse(b, 0L) == 0, refCounts.getOrElse(b, 0L)),
+        Verdict(b, "uniqueness", "repo,path,commit", dups.toDouble, Double.NaN, 0, dups == 0, dups),
+        Verdict(b, "referential", "repo,lang", refs.toDouble, Double.NaN, 0, refs == 0, refs),
         Verdict(b, "completeness", "path", missRate, Double.NaN, 0.0,
           a.missingPath == 0, a.missingPath),
         Verdict(b, "sha256_invariant", "content", a.shaMismatch.toDouble, Double.NaN, 0,
@@ -568,139 +708,7 @@ object SuiteRunner {
       val constraintsPass = verdicts.filter(v => Set("uniqueness", "referential",
         "completeness", "sha256_invariant").contains(v.check)).forall(_.passed)
       val score = if (!constraintsPass) 0.0 else 1.0 - errRates.max
-      val withScore = verdicts :+ Verdict(b, "quality_score", "*", score, Double.NaN, 0.0, true, 0)
-      out ++= withScore
-      }
-      out.toSeq
+      verdicts :+ Verdict(b, "quality_score", "*", score, Double.NaN, 0.0, true, 0)
     }
-
-    // per-(batch, repo) file counts, read from the cached slim projection;
-    // the top repos per batch land in the audit as capacity/skew
-    // telemetry. The ~30% mega-repo needs no key splitting here: Spark
-    // plans the count as a partial and a final aggregate, so each map task
-    // sends its reducer at most one row per (batch, repo).
-    val repoMetrics = slimPending
-      .groupBy(col("batch_id"), col("repo"))
-      .agg(count(lit(1)).as("file_count"))
-      // top-ViolationCap per batch via TopK.topKStrings (the stats.Bounded
-      // kernel) instead of a row_number window: the window form funnels
-      // EVERY repo of a batch through one reducer's sort (10^9 rows per
-      // window partition at target scale); the aggregate shuffles
-      // ≤ mapTasks × cap entries and its (count desc, repo asc in Spark's
-      // string order) cut is window-identical (TopKSpec pins the equality)
-      .groupBy(col("batch_id"))
-      .agg(graft.stats.TopK.topKStrings(
-        col("file_count"), col("repo"), ViolationCap).as("_top"))
-      .select(col("batch_id"), posexplode(col("_top")).as(Seq("_pos", "_t")))
-      .select(col("batch_id"), col("_t.item").as("repo"),
-        col("_t.count").as("file_count"), (col("_pos") + 1).cast("int").as("rank"))
-
-    // per-batch MERGEABLE sketches (north star: HLL distinct + t-digest
-    // quantiles persisted to the audit table so later/resumed runs answer
-    // whole-table questions by merging committed bytes, never re-scanning).
-    // The bytes were aggregated in the artifacts scan — zero extra jobs here
-    // beyond the tiny write.
-    val sketchRows = pending.map { b =>
-      val a = arts(b)
-      (b, a.rows, a.hllKey, a.hllRepo, a.tdigestLen, a.freqRepo)
-    }
-
-    // Every audit table write is independent of the others → submit them
-    // all CONCURRENTLY (Spark's scheduler is thread-safe and interleaves
-    // jobs from multiple submitter threads). Serially, each small write
-    // pays its own task-launch + file-commit latency — measured as a ~10 s
-    // fixed block at 32 cores on 64M rows; overlapped, the block shrinks to
-    // roughly the slowest single write. Durability is unchanged: manifest
-    // COMMITS below happen strictly after ALL writes have finished, in
-    // order, verdicts last (the atomic commit point per batch). Lineage is
-    // NOT in this block: its wall_ms must include the write time, so it is
-    // written (tiny, serial) after the block completes. Tables built on the
-    // driver are coalesced to one file per batch (no extra job).
-    val firstWrites: Seq[(String, DataFrame)] = Seq(
-      "violations_sha256_invariant" -> shaViol,
-      "violations_completeness_path" -> emptyPathViol,
-      "sketches" -> sketchRows.toDF("batch_id", "rows", "hll_key", "hll_repo",
-        "tdigest_len", "freq_repo"),
-      // artifacts snapshot: what a resumed run loads instead of
-      // re-scanning the baseline partition
-      "artifacts" -> pending.map(b => toRow(arts(b))).toDF())
-      .map { case (table, df) => table -> df.coalesce(1) } :+
-      ("repo_metrics" -> repoMetrics)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    val out: Seq[Verdict] = try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      def write(table: String, df: DataFrame): Future[Unit] =
-        Future(io.writeAllPartitions(df, table))(ec)
-      val fs = firstWrites.map { case (table, df) => write(table, df) }
-      // the dup/ref aggregates run next to the writes above; their ≤ cap
-      // sample rows and counts feed the two sample tables and the verdicts
-      val fDup = Future(dupAgg.collect())(ec)
-      val fRef = Future(refAgg.collect())(ec)
-      val dupRows = Await.result(fDup, Duration.Inf)
-      val refRows = Await.result(fRef, Duration.Inf)
-      def counts(rows: Array[Row]): Map[Long, Long] =
-        rows.map(r => r.getAs[Long]("batch_id") -> r.getAs[Long]("n")).toMap
-      def samples(rows: Array[Row]): Seq[(Long, Row)] = rows.toSeq.flatMap { r =>
-        r.getAs[scala.collection.Seq[Row]]("sample").map(r.getAs[Long]("batch_id") -> _)
-      }
-      val dupSample = samples(dupRows).map { case (b, k) =>
-        (b, k.getString(0), k.getString(1), k.getString(2), k.getLong(3))
-      }.toDF("batch_id", "repo", "path", "commit", "dup_count")
-      val refSample = samples(refRows).map { case (b, k) =>
-        (b, k.getString(0), k.getString(1), k.getLong(2))
-      }.toDF("batch_id", "repo", "lang", "violation_count")
-      val verdicts = assembleVerdicts(counts(dupRows), counts(refRows))
-      val lastWrites = Seq(
-        write("violations_uniqueness", dupSample.coalesce(1)),
-        write("violations_referential", refSample.coalesce(1)),
-        write("verdicts", verdicts.toDF().coalesce(1)))
-      (fs ++ lastWrites).foreach(f => Await.result(f, Duration.Inf))
-      verdicts
-    } finally {
-      // shutdownNow interrupts still-running writes when any write failed
-      // (a failed run must not keep writer threads alive); the unpersist
-      // sits in the finally so a write failure cannot leak cached blocks
-      pool.shutdownNow()
-      slim.unpersist()
-    }
-
-    // lineage wall_ms: whole run INCLUDING the audit writes above (even
-    // split across this run's batches — per-batch telemetry, not a timer)
-    val wallMs = (System.nanoTime() - t0) / 1000000 / math.max(1, pending.size)
-    val lineageRows = pending.map { b =>
-      val a = arts(b)
-      Lineage(b, a.rows, a.fingerprint, SuiteVersion, baselineBatch, wallMs)
-    }
-    io.writeAllPartitions(lineageRows.toDF().coalesce(1), "lineage")
-    pending.foreach { b =>
-      val a = arts(b)
-      violationChecks.foreach(name => io.commit(s"violations_$name", b, s"""{"batch_id":$b}"""))
-      io.commit("sketches", b, s"""{"batch_id":$b}""")
-      // artifacts carry the writer's suite version: reload is version-gated
-      io.commit("artifacts", b, s"""{"batch_id":$b,"suite":"$SuiteVersion"}""")
-      io.commit("repo_metrics", b, s"""{"batch_id":$b}""")
-      io.commit("lineage", b, s"""{"batch_id":$b}""")
-      io.commit("verdicts", b,
-        s"""{"batch_id":$b,"rows":${a.rows},"fingerprint":"${a.fingerprint}","suite":"$SuiteVersion"}""")
-    }
-    // re-stamp path: when the baseline's committed artifacts were rejected
-    // by the version gate (or never existed) and the baseline was NOT a
-    // pending batch (whose normal write/commit above already stamped it),
-    // the snapshot just recomputed from the input is committed under the
-    // CURRENT version — otherwise an upgraded audit dir re-scans the
-    // baseline partition forever and a later run whose input no longer
-    // carries that partition dies instead of reloading
-    if (baselineFromAudit.isEmpty && !pending.contains(baselineBatch)) {
-      // drop batch_id: writePartition targets the batch_id=<p> directory
-      // directly, and readCommitted re-derives the column from the path
-      // (the same layout writeAllPartitions' partitionBy produces)
-      io.writePartition(Seq(toRow(base)).toDF().drop("batch_id"),
-        "artifacts", baselineBatch)
-      io.commit("artifacts", baselineBatch,
-        s"""{"batch_id":$baselineBatch,"suite":"$SuiteVersion"}""")
-    }
-    out
   }
 }

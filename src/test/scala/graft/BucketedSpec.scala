@@ -4,7 +4,6 @@ import graft.dedup.Dedup
 import graft.tableio.Bucketed
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.functions._
 
 /** Laws for the bucket-co-located committed seen-set: the corpus side of
   * the exact anti-join never shuffles again after commit, `distinct()` on

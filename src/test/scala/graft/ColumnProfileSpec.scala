@@ -1,7 +1,6 @@
 package graft
 
 import graft.stats.Profile
-import org.apache.spark.sql.functions._
 
 /** Laws for the Deequ-style column profiler: golden metrics on a
   * hand-computed table, the pinned top-value tie-break, null handling,

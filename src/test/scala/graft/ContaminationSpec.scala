@@ -1,7 +1,6 @@
 package graft
 
 import graft.dedup.Contamination
-import org.apache.spark.sql.functions._
 
 /** Laws for benchmark-contamination detection: planted overlap is found,
   * disjoint vocabulary is clean, eval docs re-run as corpus are fully

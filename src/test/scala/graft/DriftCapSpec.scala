@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * bounded completion with a correct verdict at 10^6 distinct categories.
   */
 class DriftCapSpec extends GraftSpec {
-  import spark.implicits._
 
   private val D = 20000 // distinct categories, far above the test cap
 

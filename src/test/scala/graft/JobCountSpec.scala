@@ -79,15 +79,18 @@ class JobCountSpec extends GraftSpec {
     assert(j4 <= j2 + 2, s"suite jobs grew with batches: $j2 (2 batches) -> $j4 (4 batches)")
   }
 
-  test("suite: at most 30 jobs for 4 pending batches under session defaults") {
+  test("suite: at most 23 jobs for 4 pending batches under session defaults") {
     // Left at the session defaults (AQE on), every shuffle stage, broadcast
-    // and write is its own job. The count per call: the batch listing, the
-    // artifacts scan and the grouping-sets marginals, the uniqueness and
-    // referential aggregates (count and capped sample in one each), the
-    // repo-metrics write (one count aggregate, then the top-k cut), one job
-    // per driver-built table write, and lineage. A violation table written
-    // from the cluster re-plans its check's chain inside the write and
-    // breaks the bound.
+    // and write is its own job. The count per call: no batch listing (the
+    // committed-batch metadata prunes the input, and the artifacts scan
+    // names the pending batches), the artifacts scan and the grouping-sets
+    // marginals, ONE per-batch aggregate for the uniqueness and referential
+    // counts and samples and the repo top-k (its stages: the candidate-hash
+    // count, the semi-join, the dup groups, the referential broadcast and
+    // groups, the repo counts and the final aggregate), one job per audit
+    // table written from the driver (repo_metrics included), and lineage.
+    // A table written from the cluster re-plans its chain inside the write
+    // and breaks the bound.
     val code4 = CodeTableGen.generate(spark, 8000, batches = 4).cache()
     val dim = CodeTableGen.repoLangDim(spark)
     val jobs = countJobs("suite4-abs") {
@@ -96,7 +99,7 @@ class JobCountSpec extends GraftSpec {
       }
     }
     code4.unpersist()
-    assert(jobs <= 30, s"suite ran $jobs jobs for 4 pending batches")
+    assert(jobs <= 23, s"suite ran $jobs jobs for 4 pending batches")
   }
 
   test("connected components: one action per round (signature materializes the lazy checkpoint)") {

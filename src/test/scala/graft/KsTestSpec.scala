@@ -48,7 +48,6 @@ class KsTestSpec extends GraftSpec {
   }
 
   test("sketched KS approximates exact on a shifted distribution") {
-    import graft.stats.Sketches
     val d1 = new org.apache.datasketches.tdigest.TDigestDouble(100.toShort)
     val d2 = new org.apache.datasketches.tdigest.TDigestDouble(100.toShort)
     (1 to 10000).foreach(i => d1.update(i.toDouble))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.multimodal.Multimodal
-import org.apache.spark.sql.functions._
 
 class MultimodalSpec extends GraftSpec {
   import spark.implicits._

@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
   * baseline-pinned bin edges / category table).
   */
 class PsiMultiSpec extends GraftSpec {
-  import spark.implicits._
 
   // two numeric columns with DIFFERENT ranges and different drift, plus two
   // categorical columns with different distributions — crossed lanes would

@@ -2,7 +2,6 @@ package graft
 
 import graft.sample.Sampling
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Quota sampling laws: the bucketed two-phase cut equals the naive
   * single-window form exactly (including quotas landing mid-bucket, zero

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
   * restart-resume semantics for free.
   */
 class StreamingValidateSpec extends GraftSpec {
-  import spark.implicits._
 
   test("streaming validation == batch validation, with audit-carried baseline and resume") {
     // two deterministic batches (batch 1 drifted/violating by construction),

@@ -226,6 +226,24 @@ class SuiteSpec extends GraftSpec {
     }
   }
 
+  test("rows with a null batch_id fail the run before anything is committed") {
+    withTempDir("graft_suite") { root =>
+      val io = new ParquetTableIO(root)
+      val orphans = code.where(col("batch_id") === 1).limit(3)
+        .withColumn("batch_id", lit(null).cast("bigint"))
+      intercept[Exception] {
+        SuiteRunner.run(spark, code.unionByName(orphans), dim, io)
+      }
+      assert(io.listCommitted("verdicts").isEmpty)
+      // with batches committed, the null rows must still be read and rejected
+      SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, io)
+      intercept[Exception] {
+        SuiteRunner.run(spark, code.unionByName(orphans), dim, io)
+      }
+      assert(io.listCommitted("verdicts") == Seq(0L, 1L))
+    }
+  }
+
   test("one-pass sha sample equals the two-phase ORDER BY ... LIMIT cap sample") {
     val arts = SuiteRunner.collectArtifacts(
       code.withColumn("batch_id", col("batch_id").cast("bigint")), Seq(0L))
