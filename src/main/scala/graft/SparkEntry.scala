@@ -75,6 +75,17 @@ object SparkEntry {
     finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
+  /** Runs `f` on the oracle dump root when Verify asks for dumps, else on a
+    * temp root that is deleted afterwards. The result is computed before
+    * the root goes: a local relation does not read the root again.
+    */
+  private def onDumpRoot(prefix: String)(f: String => DataFrame): DataFrame =
+    if (oracleDumps) local(f("/tmp/graft_oracle")) else withTempRoot(prefix)(f andThen local)
+
+  /** `df` computed now, as a local relation that no longer reads its inputs. */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
   /** The DuckDB recomputation of the suite's integer verdict columns over a
     * written copy of the engine's exact input — ONE definition used by both
     * the batch (q_suite_counts) and streaming (q_streaming_suite_counts)
@@ -393,14 +404,14 @@ object SparkEntry {
     // same SQL as q_bloom_newonly's
     "q_bucketed_newonly" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
-      val storeDir = java.nio.file.Files
-        .createTempDirectory("graft_q_bucketed_seen").toString
-      graft.tableio.Bucketed.commit(
-        d.where(col("doc_id") < 250).select("doc_id"),
-        "graft_q_seen_bucketed", storeDir, Seq("doc_id"), buckets = 8)
-      val seen = graft.tableio.Bucketed.open(s, "graft_q_seen_bucketed", storeDir)
-      Dedup.newOnly(d.where(col("doc_id") >= 200), seen, Seq("doc_id"))
-        .select("doc_id", "lang").orderBy("doc_id")
+      withTempRoot("graft_q_bucketed_seen") { storeDir =>
+        graft.tableio.Bucketed.commit(
+          d.where(col("doc_id") < 250).select("doc_id"),
+          "graft_q_seen_bucketed", storeDir, Seq("doc_id"), buckets = 8)
+        val seen = graft.tableio.Bucketed.open(s, "graft_q_seen_bucketed", storeDir)
+        local(Dedup.newOnly(d.where(col("doc_id") >= 200), seen, Seq("doc_id"))
+          .select("doc_id", "lang").orderBy("doc_id"))
+      }
     }),
 
     // Freshness/timeliness (reference DESIGN.md:602): per-type staleness
@@ -868,21 +879,21 @@ object SparkEntry {
     "q_ann_ivf" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val base = if (oracleDumps) "/tmp/graft_oracle"
-        else java.nio.file.Files.createTempDirectory("graft_bench_ivf").toString
-      val idxRoot = s"$base/ivf_index"
-      graft.sim.IvfIndex.build(s, idxRoot, e, "vec_id", "embedding", nlist = 16)
-      // probes from the READ-BACK centroids — exactly what searchCommitted
-      // uses (doubles round-trip parquet bit-exactly)
-      val cents = graft.sim.IvfIndex.readCentroids(s, idxRoot).get
-      Ivf.probeTable(e.where(col("vec_id") < 10), cents, "vec_id", "embedding", 4)
-        .write.mode("overwrite").parquet(s"$base/ivf_probes")
-      graft.sim.IvfIndex.searchCommitted(s, idxRoot,
-          e.where(col("vec_id") < 10), e, "vec_id", "embedding",
-          k = 5, nprobe = 4,
-          probesOverride = s.read.parquet(s"$base/ivf_probes"))
-        .withColumn("cosine", r(col("cosine"), 4))
-        .orderBy("query_id", "rank")
+      onDumpRoot("graft_bench_ivf") { base =>
+        val idxRoot = s"$base/ivf_index"
+        graft.sim.IvfIndex.build(s, idxRoot, e, "vec_id", "embedding", nlist = 16)
+        // probes from the READ-BACK centroids — exactly what searchCommitted
+        // uses (doubles round-trip parquet bit-exactly)
+        val cents = graft.sim.IvfIndex.readCentroids(s, idxRoot).get
+        Ivf.probeTable(e.where(col("vec_id") < 10), cents, "vec_id", "embedding", 4)
+          .write.mode("overwrite").parquet(s"$base/ivf_probes")
+        graft.sim.IvfIndex.searchCommitted(s, idxRoot,
+            e.where(col("vec_id") < 10), e, "vec_id", "embedding",
+            k = 5, nprobe = 4,
+            probesOverride = s.read.parquet(s"$base/ivf_probes"))
+          .withColumn("cosine", r(col("cosine"), 4))
+          .orderBy("query_id", "rank")
+      }
     }),
 
     // SELF-VALIDATING IVF retrieval (the q_ann_lsh shape): perturbed
@@ -917,21 +928,21 @@ object SparkEntry {
     "q_ann_pq" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val base = if (oracleDumps) "/tmp/graft_oracle"
-        else java.nio.file.Files.createTempDirectory("graft_bench_pq").toString
-      val cb = graft.sim.Pq.trainCodebooks(e, "vec_id", "embedding", m = 8, ks = 16)
-      graft.sim.Pq.codebooksDF(s, cb)
-        .write.mode("overwrite").parquet(s"$base/pq_codebooks")
-      graft.sim.Pq.encode(e, "vec_id", "embedding", cb)
-        .write.mode("overwrite").parquet(s"$base/pq_codes")
-      val q = e.where(col("vec_id") < 10)
-      graft.sim.Pq.adcCandidates(q, s.read.parquet(s"$base/pq_codes"), cb,
-          "vec_id", "embedding", rerank = 30)
-        .write.mode("overwrite").parquet(s"$base/pq_cand")
-      graft.sim.Pq.exactRerank(s.read.parquet(s"$base/pq_cand"), q, e,
-          "vec_id", "embedding", k = 5)
-        .withColumn("cosine", r(col("cosine"), 4))
-        .orderBy("query_id", "rank")
+      onDumpRoot("graft_bench_pq") { base =>
+        val cb = graft.sim.Pq.trainCodebooks(e, "vec_id", "embedding", m = 8, ks = 16)
+        graft.sim.Pq.codebooksDF(s, cb)
+          .write.mode("overwrite").parquet(s"$base/pq_codebooks")
+        graft.sim.Pq.encode(e, "vec_id", "embedding", cb)
+          .write.mode("overwrite").parquet(s"$base/pq_codes")
+        val q = e.where(col("vec_id") < 10)
+        graft.sim.Pq.adcCandidates(q, s.read.parquet(s"$base/pq_codes"), cb,
+            "vec_id", "embedding", rerank = 30)
+          .write.mode("overwrite").parquet(s"$base/pq_cand")
+        graft.sim.Pq.exactRerank(s.read.parquet(s"$base/pq_cand"), q, e,
+            "vec_id", "embedding", k = 5)
+          .withColumn("cosine", r(col("cosine"), 4))
+          .orderBy("query_id", "rank")
+      }
     }),
 
     // The compressed-domain scores themselves, verified externally on a
@@ -944,19 +955,19 @@ object SparkEntry {
     "q_pq_adc" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      val base = if (oracleDumps) "/tmp/graft_oracle"
-        else java.nio.file.Files.createTempDirectory("graft_bench_pqadc").toString
-      val cb = graft.sim.Pq.trainCodebooks(e, "vec_id", "embedding", m = 8, ks = 16)
-      graft.sim.Pq.codebooksDF(s, cb)
-        .write.mode("overwrite").parquet(s"$base/pq_adc_codebooks")
-      graft.sim.Pq.encode(e, "vec_id", "embedding", cb).where(col("id") < 30)
-        .write.mode("overwrite").parquet(s"$base/pq_adc_codes")
-      val q = e.where(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      s.read.parquet(s"$base/pq_adc_codes").crossJoin(broadcast(q))
-        .select(col("query_id"), col("id").as("neighbor_id"),
-          r(graft.sim.Pq.approxCos(col("qv"), col("code"), cb), 4).as("approx"))
-        .orderBy("query_id", "neighbor_id")
+      onDumpRoot("graft_bench_pqadc") { base =>
+        val cb = graft.sim.Pq.trainCodebooks(e, "vec_id", "embedding", m = 8, ks = 16)
+        graft.sim.Pq.codebooksDF(s, cb)
+          .write.mode("overwrite").parquet(s"$base/pq_adc_codebooks")
+        graft.sim.Pq.encode(e, "vec_id", "embedding", cb).where(col("id") < 30)
+          .write.mode("overwrite").parquet(s"$base/pq_adc_codes")
+        val q = e.where(col("vec_id") < 10)
+          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+        s.read.parquet(s"$base/pq_adc_codes").crossJoin(broadcast(q))
+          .select(col("query_id"), col("id").as("neighbor_id"),
+            r(graft.sim.Pq.approxCos(col("qv"), col("code"), cb), 4).as("approx"))
+          .orderBy("query_id", "neighbor_id")
+      }
     }),
 
     // SELF-VALIDATING PQ retrieval (the q_ann_ivf_recall shape):

@@ -1,8 +1,8 @@
 package graft.drift
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.stats.Stats
+import graft.stats.{Stats, TopK}
 
 /** Per-column drift report row, shaped after the reference DriftDetector
   * report (DESIGN.md:575-580): {p_value, statistic, drift_detected,
@@ -53,13 +53,6 @@ object Drift {
       "categorical value collides with the reserved tail sentinel " +
         "\\u0001__other__ — rename or filter it before drift detection")))
       .otherwise(v)
-
-  /** Salt fan-out for the melted top-K ranking in [[detect]]: a column with
-    * C distinct categories is ranked in parallel partitions of ≈ C/fanout
-    * rows (phase 1), then the ≤ fanout·CatTopK survivors re-rank (phase 2) —
-    * no single task ever sorts a whole column's category table.
-    */
-  val CatSaltFanout = 32
 
   /** |Δmean| / ref_std, 0 when ref_std == 0 or undefined (DESIGN.md:569). */
   def meanDifference(refMean: Double, refStd: Double, curMean: Double): Double =
@@ -134,7 +127,7 @@ object Drift {
                  bins: Int = Stats.Bins): Double =
     psiNumericMulti(df, Seq(valueCol), isBaseline, bins)(valueCol)
 
-  /** PSI over categorical columns, ALL sharing the one melted salted
+  /** PSI over categorical columns, ALL sharing the one melted
     * capped-count job ([[meltedCatCounts]] — the [[detect]] shape). Per
     * column: proportions over the union of both sides' categories, capped
     * to the top `topK` (by baseline count) + one tail bucket, so
@@ -170,7 +163,7 @@ object Drift {
     chiSquareCategoricalMulti(df, Seq(catCol), isBaseline, topK)(catCol)
 
   /** Chi-square over several categorical columns sharing the one melted
-    * salted capped-count job ([[meltedCatCounts]]). Returns
+    * capped-count job ([[meltedCatCounts]]). Returns
     * (statistic, p-value, dof) per column — constant job count in width.
     */
   def chiSquareCategoricalMulti(df: DataFrame, catCols: Seq[String], isBaseline: Column,
@@ -184,15 +177,9 @@ object Drift {
     * groupBy, capped per column to the top `topK` categories + one
     * aggregated [[OtherBucket]] tail row, so the collect is
     * ≤ #cols × (topK+1) rows no matter the column cardinality (same hazard
-    * class as the suite's LenCardCap). The top-K extraction is SALTED
-    * two-phase so no single task ever sorts a whole column's category
-    * table: phase 1 ranks within (name, salt) partitions
-    * (≈ cardinality/[[CatSaltFanout]] rows each) and folds per-salt tails
-    * into the other-bucket; phase 2 re-ranks the ≤ fanout·K surviving
-    * names. Exact vs a single per-column ranking: a globally top-K category
-    * is a fortiori top-K within its salt bucket, so phase 1 never drops
-    * one. Shared by [[detect]], [[psiCategoricalMulti]] and
-    * [[chiSquareCategorical]] — every categorical consumer pays one job.
+    * class as the suite's LenCardCap). Shared by [[detect]],
+    * [[psiCategoricalMulti]] and [[chiSquareCategorical]] — every
+    * categorical consumer pays one job.
     *
     * Returns, per column, (value, baselineCount, currentCount) rows.
     */
@@ -213,36 +200,32 @@ object Drift {
     cappedCatCounts(grouped, catCols, topK)
   }
 
-  /** The salted two-phase top-K cap + collect over a PRE-GROUPED
-    * (name, v, c1, c2) category-count table — the tail of
-    * [[meltedCatCounts]], shared with [[detect]]'s single-melt path (which
-    * derives the grouped table from the same scan that feeds KS/moments).
+  /** The top-K cap + collect over a PRE-GROUPED (name, v, c1, c2)
+    * category-count table — the tail of [[meltedCatCounts]], shared with
+    * [[detect]]'s single-melt path (which derives the grouped table from
+    * the same scan that feeds KS/moments). One aggregate per column: the
+    * distinct count, both side totals and the `topK` first categories in
+    * (c1 desc, c2 desc, v asc) order, the order of `~c1, ~c2, v`
+    * (`bitwise_not` reverses a long's order exactly). Its map-side partials
+    * hold at most `topK` rows per task, so no task sorts a whole column's
+    * category table. The collected rows gain one [[OtherBucket]] row, the
+    * totals minus the top sums, iff the column has more than `topK`
+    * categories (even when every tail category counts (0, 0)). Rows come
+    * back in rank order, tail last.
     */
   private def cappedCatCounts(grouped: DataFrame, catCols: Seq[String], topK: Int)
       : Map[String, Array[(String, Long, Long)]] = {
-    val w = org.apache.spark.sql.expressions.Window
-    val salt = pmod(xxhash64(col("v")), lit(CatSaltFanout))
-    val perSalt = w.partitionBy(col("name"), salt)
-      .orderBy(col("c1").desc, col("c2").desc, col("v"))
-    // other-bucket rows sort AFTER every real category (boolean first key)
-    // so they never consume a phase-2 rank slot
-    val perCol = w.partitionBy("name")
-      .orderBy((col("vc") === OtherBucket).asc, col("c1").desc, col("c2").desc, col("vc"))
-    val rows = grouped
-      .withColumn("v", guardSentinel(col("v")))
-      .withColumn("vc", when(row_number().over(perSalt) <= topK, col("v"))
-        .otherwise(lit(OtherBucket)))
-      .groupBy("name", "vc").agg(sum("c1").as("c1"), sum("c2").as("c2"))
-      .withColumn("vc", when(col("vc") =!= OtherBucket &&
-          row_number().over(perCol) <= topK, col("vc"))
-        .otherwise(lit(OtherBucket)))
-      .groupBy("name", "vc").agg(sum("c1").as("c1"), sum("c2").as("c2"))
+    val rank = struct(bitwise_not(col("c1")), bitwise_not(col("c2")), guardSentinel(col("v")))
+    val byName = grouped.groupBy("name")
+      .agg(count(lit(1)), sum("c1"), sum("c2"), TopK.firstK(rank, topK))
       .collect()
-    val byName = rows.groupBy(_.getString(0))
-    catCols.map { c =>
-      c -> byName.getOrElse(c, Array.empty)
-        .map(r => (r.getString(1), r.getLong(2), r.getLong(3)))
-    }.toMap
+      .map { r =>
+        val top = r.getSeq[Row](4).map(t => (t.getString(2), ~t.getLong(0), ~t.getLong(1)))
+        val tail = if (r.getLong(1) <= topK) Nil
+          else Seq((OtherBucket, r.getLong(2) - top.map(_._2).sum, r.getLong(3) - top.map(_._3).sum))
+        r.getString(0) -> (top ++ tail).toArray
+      }.toMap
+    catCols.map(c => c -> byName.getOrElse(c, Array.empty[(String, Long, Long)])).toMap
   }
 
   /** Per-column (count, mean, sample-std, count2, mean2) used by
@@ -455,10 +438,6 @@ object Drift {
     } finally counts.unpersist()
   }
 
-  /** Chi-square goodness-of-fit from category count maps: expected =
-    * baseline proportions × current covered total; categories absent from
-    * the baseline excluded; dof = #baseline categories − 1.
-    */
   /** Current-side total over baseline-covered categories — the chi-square
     * coverage denominator. ONE shared definition: Cramér's V normalizes by
     * this same quantity (Suite.chiSqFromCounts), so the two must not drift.
@@ -469,6 +448,10 @@ object Drift {
   private[graft] def coveredCurTotal(ref: Map[String, Long], cur: Map[String, Long]): Double =
     ref.filter(_._2 > 0).keysIterator.map(cur.getOrElse(_, 0L)).sum.toDouble
 
+  /** Chi-square goodness-of-fit from category count maps: expected =
+    * baseline proportions × current covered total; categories absent from
+    * the baseline excluded; dof = #baseline categories − 1.
+    */
   private[graft] def chiSqGof(ref: Map[String, Long], cur: Map[String, Long]): (Double, Double, Long) = {
     val base = ref.filter(_._2 > 0)
     val n1 = base.values.sum.toDouble

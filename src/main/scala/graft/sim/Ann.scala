@@ -16,7 +16,7 @@ object Ann {
 
   /** The ANN family's shared final cut: exact per-query top-k on
     * (cosine desc, neighbor_id asc) via the bounded map-side aggregate
-    * ([[graft.stats.TopKPairsAgg]]). A `row_number()` window here SORTS
+    * ([[graft.stats.TopK.topKPairs]]). A `row_number()` window here SORTS
     * every scored row and funnels each query through one reducer — at a
     * brute-force 10^9-codes × |Q| scored set that single-reducer sort is
     * the whole job; the aggregate's partial phase caps each map task's

@@ -251,7 +251,7 @@ object Pq {
   }
 
   /** EXACT top-`rerank` per query via the bounded map-side aggregate
-    * ([[graft.stats.TopKPairsAgg]]): a window cut would SORT the full
+    * ([[graft.stats.TopK.topKPairs]]): a window cut would SORT the full
     * scored set (measured ~19 s of a 51M-row ADC scan) and funnel each
     * query through one reducer; the aggregate's partial phase caps every
     * map task's contribution at `rerank` pairs, so the shuffle is

@@ -4,8 +4,9 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 import java.util.{Comparator, TreeSet}
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.{bitwise_not, struct, transform, when}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, KnownNotNull}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.graftbridge.CollectTopKBridge
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
@@ -14,14 +15,20 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The one policy behind every custom "keep the k first items of a group, exactly"
-  * aggregate here: a TreeSet capped at k under the item kind's order.
+/** The one policy behind the two custom "keep the k first items of a
+  * group, exactly" aggregates here: a TreeSet capped at k under the item
+  * kind's order. Every other exact top-k cut is Spark's built-in
+  * `CollectTopK` ([[TopK.firstK]], [[TopK.topKStrings]], [[TopK.topKPairs]]),
+  * whose map-side partials hold at most k rows per task. Two users stay:
+  *  - [[MinKStringsAgg]] needs DISTINCT values, and `CollectTopK` keeps
+  *    duplicates;
+  *  - [[AdcTopKAgg]] keeps one set per query in one buffer across many
+  *    queries, which was measured faster than a per-pair group.
   *
   * A row is inserted only when it beats the current last, so the ~all rows
   * that miss the cut cost one compare, and it is copied only when it
   * enters. Merge re-inserts the other side, keeping the k first of both:
-  * associative and commutative, so map-side partial aggregation is exact
-  * and replaces both a window's full sort and any manual salting phase;
+  * associative and commutative, so map-side partial aggregation is exact;
   * the shuffle carries at most mapTasks × k items per group. Buffers
   * serialize as length-prefixed item lists; they only cross a shuffle and
   * are never persisted.
@@ -61,18 +68,6 @@ object Bounded {
       out.writeLong(p._2)
     }
     def read(in: DataInputStream): (Double, Long) = (in.readDouble(), in.readLong())
-  }
-
-  object Counts extends Kind[(Long, UTF8String)]((a, b) => {
-    val d = java.lang.Long.compare(b._1, a._1)
-    if (d != 0) d else Strings.order.compare(a._2, b._2)
-  }) {
-    override def own(p: (Long, UTF8String)): (Long, UTF8String) = (p._1, Strings.own(p._2))
-    def write(out: DataOutputStream, p: (Long, UTF8String)): Unit = {
-      out.writeLong(p._1)
-      Strings.write(out, p._2)
-    }
-    def read(in: DataInputStream): (Long, UTF8String) = (in.readLong(), Strings.read(in))
   }
 
   def insert[T](kind: Kind[T], set: TreeSet[T], k: Int, x: T, copy: Boolean): Unit =
@@ -141,82 +136,11 @@ abstract class BoundedKAgg[T >: Null <: AnyRef]
   override def nullable: Boolean = false
 }
 
-/** The k best `struct<score, id>` — the map-side top-k that ANN candidate
-  * cuts ride, exactly `row_number() OVER (ORDER BY score DESC, id ASC) <= k`.
-  * A window top-k SORTS the full scored set (measured: ~19 s of the ADC
-  * scan at 256 queries × 200k codes × 8 threads was the two-phase window
-  * sort of 51M exploded rows) and funnels each query's rows through one
-  * reducer.
-  */
-case class TopKPairsAgg(
-    scoreExpr: Expression,
-    idExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends BoundedKAgg[(Double, Long)] with BinaryLike[Expression] {
-
-  override def left: Expression = scoreExpr
-  override def right: Expression = idExpr
-
-  override protected def kind: Bounded.Kind[(Double, Long)] = Bounded.Pairs
-  override protected def item(input: InternalRow): (Double, Long) = {
-    val s = scoreExpr.eval(input)
-    val i = idExpr.eval(input)
-    if (s == null || i == null) null else (s.asInstanceOf[Double], i.asInstanceOf[Long])
-  }
-  override protected def element(p: (Double, Long)): Any = new GenericInternalRow(Array[Any](p._1, p._2))
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("score", DoubleType, nullable = false),
-      StructField("id", LongType, nullable = false))), containsNull = false)
-  override def withNewMutableAggBufferOffset(o: Int): TopKPairsAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKPairsAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKPairsAgg =
-    copy(scoreExpr = l, idExpr = r)
-  override def prettyName: String = "top_k_pairs"
-}
-
-/** The k best `struct<count, item>` for STRING-keyed rankings — the
-  * repo-metrics cut `row_number() OVER (PARTITION BY batch ORDER BY count
-  * DESC, repo ASC) <= k` without the window; array position = rank − 1. A
-  * per-batch window rank funnels every repo of a batch through ONE
-  * reducer's sort (10^9 rows per partition at target scale).
-  */
-case class TopKStringsAgg(
-    countExpr: Expression,
-    itemExpr: Expression,
-    k: Int,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends BoundedKAgg[(Long, UTF8String)] with BinaryLike[Expression] {
-
-  override def left: Expression = countExpr
-  override def right: Expression = itemExpr
-
-  override protected def kind: Bounded.Kind[(Long, UTF8String)] = Bounded.Counts
-  override protected def item(input: InternalRow): (Long, UTF8String) = {
-    val c = countExpr.eval(input)
-    val s = itemExpr.eval(input)
-    if (c == null || s == null) null else (c.asInstanceOf[Long], s.asInstanceOf[UTF8String])
-  }
-  override protected def element(p: (Long, UTF8String)): Any = new GenericInternalRow(Array[Any](p._1, p._2))
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("count", LongType, nullable = false),
-      StructField("item", StringType, nullable = false))), containsNull = false)
-  override def withNewMutableAggBufferOffset(o: Int): TopKStringsAgg = copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): TopKStringsAgg = copy(inputAggBufferOffset = o)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TopKStringsAgg =
-    copy(countExpr = l, itemExpr = r)
-  override def prettyName: String = "top_k_strings"
-}
-
 /** The k smallest DISTINCT strings, ascending — the one-pass form of capped
   * deterministic violation sampling (SURVEY O5), exactly the sample
   * `SELECT DISTINCT key ORDER BY key LIMIT k` gives. The two-phase
   * alternative (count violations in the stats pass, then a second scan with
-  * `row_number() ≤ cap` to locate samples) re-reads and re-hashes the
+  * a rank cut ≤ cap to locate samples) re-reads and re-hashes the
   * content column for every batch that has violations; this aggregate rides
   * the SAME scan as the counts with ~k × keylen bytes of state.
   */
@@ -323,21 +247,46 @@ object TopK {
   private def agg(f: TypedImperativeAggregate[_]): Column = ColumnBridge.column(f.toAggregateExpression())
   private def expr(c: Column): Expression = ColumnBridge.expression(c)
 
-  /** Column API of [[TopKPairsAgg]]: `array<struct<score, id>>`. */
-  def topKPairs(score: Column, id: Column, k: Int): Column = agg(TopKPairsAgg(expr(score), expr(id), k))
+  /** `c`, declared non-null: for values a null guard has already excluded. */
+  private def notNull(c: Column): Column = ColumnBridge.column(KnownNotNull(expr(c)))
 
-  /** Column API of [[TopKStringsAgg]]: `array<struct<count, item>>`. */
-  def topKStrings(count: Column, item: Column, k: Int): Column =
-    agg(TopKStringsAgg(expr(count), expr(item), k))
+  /** The k best `(score, id)` pairs with non-null fields, (score desc, id
+    * asc): exactly the first k rows of `ORDER BY score DESC, id ASC`, the
+    * map-side cut that the ANN and PQ candidate cuts ride. A rank window
+    * would SORT the full scored set (measured ~19 s of a 51M-row ADC scan)
+    * and funnel each query's rows through one reducer. `CollectTopK` keeps
+    * the k largest `(score, ~id)`: `bitwise_not` reverses a long's order
+    * exactly, where negation overflows at `Long.MinValue`; doubles compare
+    * as in Spark's sort (NaN largest, `-0.0` ties `0.0`). A double score
+    * and a bigint id give `array<struct<score: double, id: bigint>>`.
+    */
+  def topKPairs(score: Column, id: Column, k: Int): Column = {
+    val pair = struct(notNull(score).as("score"), notNull(bitwise_not(id)).as("nid"))
+    val top = agg(CollectTopKBridge.lastK(expr(when(score.isNotNull && id.isNotNull, pair)), k))
+    transform(top, p => struct(p("score").as("score"), bitwise_not(p("nid")).as("id")))
+  }
+
+  /** The k best `(count, item)` pairs with non-null fields, (count desc,
+    * item asc in Spark's string order): the repo-metrics cut, the first k
+    * rows of `ORDER BY count DESC, repo ASC` per batch, without a rank
+    * window, which would funnel every repo of a batch through one
+    * reducer's sort; array position = rank − 1. [[firstK]] over
+    * `(~count, item)`. A bigint count and a string item give
+    * `array<struct<count: bigint, item: string>>`.
+    */
+  def topKStrings(count: Column, item: Column, k: Int): Column = {
+    val pair = struct(notNull(bitwise_not(count)).as("n"), notNull(item).as("item"))
+    val top = firstK(when(count.isNotNull && item.isNotNull, pair), k)
+    transform(top, p => struct(bitwise_not(p("n")).as("count"), p("item").as("item")))
+  }
 
   /** Column API of [[MinKStringsAgg]]: the k smallest distinct non-null strings, ascending. */
   def minKStrings(c: Column, k: Int): Column = agg(MinKStringsAgg(expr(c), k))
 
   /** The k smallest non-null values of `c`, duplicates kept, in `orderBy`'s
     * ascending order (struct fields left to right, nulls first, strings in
-    * UTF-8 byte order): `row_number() OVER (ORDER BY c) <= k` as one
-    * mergeable aggregate. Spark's built-in `CollectTopK`, so no [[Bounded]]
-    * kind is needed for it.
+    * UTF-8 byte order): the first k rows of `ORDER BY c` as one mergeable
+    * aggregate: Spark's built-in `CollectTopK`.
     */
   def firstK(c: Column, k: Int): Column = agg(CollectTopKBridge.firstK(expr(c), k))
 

@@ -501,7 +501,7 @@ object SuiteRunner {
       // audit as capacity/skew telemetry. The ~30% mega-repo needs no key
       // splitting here: Spark plans the count as a partial and a final
       // aggregate, so each map task sends its reducer at most one row per
-      // (batch, repo). `topKStrings` (the stats.Bounded kernel) cuts the
+      // (batch, repo). `topKStrings` (Spark's CollectTopK) cuts the
       // (count desc, repo asc in Spark's string order) top without a
       // row_number window, which would funnel EVERY repo of a batch through
       // one reducer's sort; TopKSpec pins the cut to the window's.

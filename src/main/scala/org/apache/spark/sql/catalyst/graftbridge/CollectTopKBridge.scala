@@ -13,4 +13,10 @@ object CollectTopKBridge {
     */
   def firstK(e: Expression, k: Int): TypedImperativeAggregate[_] =
     new CollectTopK(e, k, true, 0, 0)
+
+  /** The `k` largest non-null values of `e` in descending sort order,
+    * duplicates kept: `CollectTopK` with `reverse = false`.
+    */
+  def lastK(e: Expression, k: Int): TypedImperativeAggregate[_] =
+    new CollectTopK(e, k, false, 0, 0)
 }

@@ -88,9 +88,10 @@ class DriftCapSpec extends GraftSpec {
 
   test("detect's salted melted top-K equals the locally computed capped formula above the cap") {
     // D=20000 categories with one shifted heavy hitter — above detect's
-    // fixed CatTopK=1000, so the SALTED two-phase ranking decides which
-    // categories survive; a salt bug (dropped survivor, double-counted
-    // tail) would change the statistic
+    // fixed CatTopK=1000, so the map-side top-K cut decides which
+    // categories survive; a cut bug (dropped survivor, double-counted
+    // tail) would change the statistic. (The name predates the cut's
+    // move from a salted two-phase window to one top-K aggregate.)
     val names = (0 until D).map(i => s"c$i")
     val counts = names.map(n => (n, 1L, if (n == "c0") 1001L else 1L))
     val ranked = counts.sortBy { case (v, c1, c2) => (-c1, -c2, v) }
@@ -106,6 +107,47 @@ class DriftCapSpec extends GraftSpec {
     assert(math.abs(chi.statistic - wantStat) / wantStat < 1e-12,
       s"got ${chi.statistic} want $wantStat")
     assert(math.abs(chi.p_value - wantP) <= 1e-9, s"got ${chi.p_value} want $wantP")
+  }
+
+  test("melted category cut equals a row_number window reference, tail row iff > topK") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val topK = 4
+    // (value, side): Some(true) baseline, Some(false) current, None a NULL
+    // condition row that counts on neither side. "！x" and "𐀀x" tie on
+    // (c1, c2) and sort one way by UTF-8 bytes, the other by UTF-16 units.
+    // Column a has exactly topK categories (no tail row); column b has
+    // topK + 1, and its tail is the NULL-only category, so it counts (0, 0).
+    val a = Seq("！x" -> Seq(true, true, false), "𐀀x" -> Seq(true, false, true),
+      "p" -> Seq(true, true, false, false, false)).flatMap { case (v, sides) =>
+      sides.map(side => (v, Option(side)))
+    } ++ Seq(("z", None), ("z", None))
+    val b = Seq("m" -> Seq(true, true, true), "n" -> Seq(true, false),
+      "o" -> Seq(false, true), "！x" -> Seq(true)).flatMap { case (v, sides) =>
+      sides.map(side => (v, Option(side)))
+    } ++ Seq(("𐀀x", None))
+    val df = (a.map { case (v, s) => (Option(v), Option.empty[String], s) } ++
+      b.map { case (v, s) => (Option.empty[String], Option(v), s) })
+      .toDF("a", "b", "base")
+    val w = Window.orderBy(col("c1").desc, col("c2").desc, col("v").asc)
+    def reference(c: String): Seq[(String, Long, Long)] = {
+      val ranked = df.where(col(c).isNotNull).groupBy(col(c).as("v"))
+        .agg(sum(when(col("base"), 1L).otherwise(0L)).as("c1"),
+          sum(when(!col("base"), 1L).otherwise(0L)).as("c2"))
+        .withColumn("rn", row_number().over(w))
+        .orderBy("rn").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .toSeq
+      val (top, tail) = ranked.splitAt(topK)
+      top ++ (if (tail.isEmpty) Nil
+        else Seq((Drift.OtherBucket, tail.map(_._2).sum, tail.map(_._3).sum)))
+    }
+    val want = Map("a" -> reference("a"), "b" -> reference("b"))
+    assert(want("a").map(_._1) == Seq("p", "！x", "𐀀x", "z"))
+    assert(want("b").last == ((Drift.OtherBucket, 0L, 0L)))
+    for (d <- Seq(df.coalesce(1), df.repartition(17))) {
+      val got = Drift.meltedCatCounts(d, Seq("a", "b"), col("base"), topK)
+      assert(got.map { case (c, rows) => c -> rows.toSeq } == want)
+    }
   }
 
   test("a real category equal to the reserved tail sentinel fails loudly, not silently merged") {

@@ -119,7 +119,7 @@ class PqSpec extends GraftSpec {
 
   test("aggregate top-rerank cut equals the single-window cut exactly (heavy code collisions)") {
     // 4 clusters → massive code collisions → the tie-break ordering is
-    // doing all the work; the map-side TopKPairsAgg cut (and the LUT
+    // doing all the work; the map-side topKPairs cut (and the LUT
     // scores feeding it) must still match a plain pairwise window
     import org.apache.spark.sql.expressions.Window
     val e = clustered(400, 16, 4)
@@ -144,9 +144,10 @@ class PqSpec extends GraftSpec {
   test("LUT scan candidates equal the pairwise element-order candidates at rerank = n") {
     // adcCandidates ranks with the lookup-table kernel; the gate's
     // score-math query uses the element-order expression — they differ
-    // only in FP summation grouping. The salted-vs-plain test below is
-    // the sharper cross-implementation check (its plain reference is the
-    // pairwise expression and its cut is mid-corpus).
+    // only in FP summation grouping. "aggregate top-rerank cut equals the
+    // single-window cut" above is the sharper cross-implementation check
+    // (its plain reference is the pairwise expression and its cut is
+    // mid-corpus).
     val e = clustered(300, 16, 6)
     val cb = Pq.trainCodebooks(e, "vec_id", "embedding", m = 4, ks = 8)
     val codes = Pq.encode(e, "vec_id", "embedding", cb)

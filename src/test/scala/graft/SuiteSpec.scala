@@ -105,6 +105,8 @@ class SuiteSpec extends GraftSpec {
   }
 
   test("suite's salted repo_metrics equal plain groupBy counts and rank the mega-repo first") {
+    // The name predates the suite's plain count and top-K aggregate
+    // (Spark's CollectTopK): no salting is left on this path.
     withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       SuiteRunner.run(spark, code, dim, io)

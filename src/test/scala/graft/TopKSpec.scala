@@ -45,6 +45,32 @@ class TopKSpec extends GraftSpec {
     assert(got == Seq(4L, 2L, 0L))
   }
 
+  test("top_k_pairs order equals Spark's sort: signed zeros tie, NaN largest, extreme ids") {
+    import org.apache.spark.sql.expressions.Window
+    // Spark's sort treats 0.0 and -0.0 as equal and breaks the tie on id;
+    // java.lang.Double.compare would put 0.0 first whatever the ids
+    val rows = Seq(
+      (0.0, 5L), (-0.0, 3L), (0.0, 1L), (-0.0, Long.MaxValue), (0.0, Long.MinValue),
+      (Double.NaN, 7L), (Double.NaN, Long.MinValue), (1.0, Long.MaxValue),
+      (1.0, Long.MinValue), (-1.0, 0L), (Double.NegativeInfinity, 2L),
+      (Double.PositiveInfinity, 9L), (-0.0, -4L))
+    val df = rows.toDF("s", "id")
+    // (id, score bits) in rank order: the bits tell 0.0 from -0.0
+    def bits(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+    val w = Window.orderBy(col("s").desc, col("id").asc)
+    for (k <- Seq(3, 6, 9, rows.size)) {
+      val ref = df.withColumn("rn", row_number().over(w)).where(col("rn") <= k)
+        .orderBy("rn").select("id", "s").collect().map(bits).toSeq
+      for (d <- Seq(df.coalesce(1), df.repartition(17))) {
+        val got = d.agg(TopK.topKPairs(col("s"), col("id"), k).as("top"))
+          .select(explode(col("top")).as("p")).select(col("p.id"), col("p.score"))
+          .collect().map(bits).toSeq
+        assert(got == ref, s"k=$k")
+      }
+    }
+  }
+
   test("adc_top_k is partitioning-invariant and equals the per-query window cut") {
     import org.apache.spark.sql.expressions.Window
     // synthetic score arrays for 4 queries: deterministic pseudo-scores
@@ -100,10 +126,9 @@ class TopKSpec extends GraftSpec {
   }
 
   test("top_k_strings orders non-ASCII ties by UTF-8 bytes like Spark, not UTF-16") {
-    // U+FF01 (ef bc 81 in UTF-8) vs U+10000 (f0 90 80 80): UTF-16 order
-    // puts U+FF01 after the surrogate pair's first unit? No — '！' >
-    // "𐀀" by code units, while UTF-8 bytes order them the other
-    // way. The aggregate must agree with Spark's sort.
+    // U+FF01 vs U+10000: UTF-16 code units put "𐀀x" first (0xD800 <
+    // 0xFF01), UTF-8 bytes put "！x" first (0xEF < 0xF0). The aggregate
+    // must agree with Spark's sort, which compares UTF-8 bytes.
     val df = Seq(("！x", 5L), ("𐀀x", 5L), ("a", 5L)).toDF("k", "n")
     val got = df.agg(TopK.topKStrings(col("n"), col("k"), 3).as("t"))
       .select(explode(col("t")).as("p")).select(col("p.item"))
