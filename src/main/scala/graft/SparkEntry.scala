@@ -239,23 +239,28 @@ object SparkEntry {
         .agg(count(lit(1)).as("n")).orderBy("bin")
     }),
 
-    // A2/A3 completeness counts + rates in one pass (missing predicates P5)
+    // A2/A3 completeness counts in one pass; the missing predicates (P5)
+    // are Stats.missingPred's for a double, a string and a bigint column
     "q_completeness" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      e.agg(
-        count(lit(1)).as("total"),
-        sum(when(col("value").isNull || isnan(col("value")), 1L).otherwise(0L)).as("missing_value"),
-        sum(when(col("props").isNull || col("props") === "", 1L).otherwise(0L)).as("missing_props"),
-        sum(when(col("user_id").isNull, 1L).otherwise(0L)).as("missing_user"))
+      import s.implicits._
+      val cols = Seq("value", "props", "user_id")
+      val rep = graft.suite.Validation.validate(Tables.events(s, dir), cols, Nil)
+      // Option: the missing counts are nullable columns, as SQL sum()s are
+      val miss = cols.map(c => Option(rep.missingCounts(c)))
+      Seq((rep.totalRecords, miss(0), miss(1), miss(2)))
+        .toDF("total", "missing_value", "missing_props", "missing_user")
     }),
 
-    // P6 conditional range expectation (GE row_condition semantics)
+    // P6 conditional range expectation (GE row_condition semantics: a NULL
+    // or NaN value under the condition is a failure)
     "q_conditional_range" -> ((s, dir) => {
-      val e = Tables.events(s, dir)
-      e.agg(
-        sum(when(col("event_type") === "purchase" &&
-          (col("value") < 0 || col("value") > 100), 1L).otherwise(0L)).as("purchase_range_failures"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("purchase_rows"))
+      import s.implicits._
+      val purchase = graft.suite.Validation.RangeExpectation(
+        "purchase_range", col("event_type") === "purchase", "value", 0, 100)
+      val (failures, rows) = graft.suite.Validation.validate(
+        Tables.events(s, dir), Nil, Seq(purchase)).expectationResults("purchase_range")
+      // Option: nullable columns, as SQL sum()s are
+      Seq((Option(failures), Option(rows))).toDF("purchase_range_failures", "purchase_rows")
     }),
 
     // ===== windows (W1-W4, A7, A8) =====
@@ -310,12 +315,11 @@ object SparkEntry {
         .orderBy("event_type", "rn")
     }),
 
-    // W2/A7: 5-minute tumbling window (count, sum) per key
+    // W2/A7: 5-minute tumbling window (count, sum) of one event type
     "q_time_window_agg" -> ((s, dir) => {
-      Tables.events(s, dir).where(col("event_type") === "click")
-        .groupBy(window(col("ts"), "5 minutes").as("w"))
-        .agg(count(lit(1)).as("n"), r(sum("value"), 4).as("value_sum"))
-        .select(unix_timestamp(col("w.start")).as("window_start"), col("n"), col("value_sum"))
+      graft.streaming.DriftStream.tumblingAgg(Tables.events(s, dir), "click")
+        .select(unix_timestamp(col("window_start")).as("window_start"),
+          col("event_count").as("n"), r(col("value_sum"), 4).as("value_sum"))
         .orderBy("window_start")
     }),
 
@@ -367,14 +371,13 @@ object SparkEntry {
         .orderBy("n_name")
     }),
 
-    // J1: referential-integrity anti-join against a broadcast dimension
+    // J1: Constraints.referential against a broadcast dimension; its capped
+    // violation sample (first 100 in lang order) holds every bad lang
     "q_referential_antijoin" -> ((s, dir) => {
       import s.implicits._
       val allowed = Seq("en", "es", "de", "fr").toDF("lang")
-      Tables.documents(s, dir)
-        .join(broadcast(allowed), Seq("lang"), "left_anti")
-        .groupBy("lang").agg(count(lit(1)).as("violations"))
-        .orderBy("lang")
+      Constraints.referential(Tables.documents(s, dir), allowed, Seq("lang")).violations
+        .withColumnRenamed("violation_count", "violations")
     }),
 
     // J4/U3: incremental anti-join vs the "seen" set
@@ -414,10 +417,6 @@ object SparkEntry {
       }
     }),
 
-    // Freshness/timeliness (reference DESIGN.md:602): per-type staleness
-    // against the dataset watermark — closed-set deterministic (reference
-    // time = global max ts, never the wall clock), whole-second floors on
-    // both sides so the oracle agrees bit-for-bit
     // gap-based sessionization (1h gap) rolled up to session rows —
     // three users keep the output bounded while exercising hundreds of
     // real session breaks per user at every SF
@@ -507,6 +506,10 @@ object SparkEntry {
         .orderBy("day")
     }),
 
+    // Freshness/timeliness (reference DESIGN.md:602): per-type staleness
+    // against the dataset watermark — closed-set deterministic (reference
+    // time = global max ts, never the wall clock), whole-second floors on
+    // both sides so the oracle agrees bit-for-bit
     "q_freshness" -> ((s, dir) => {
       graft.suite.Monitoring.freshness(
         Tables.events(s, dir), "ts", Seq("event_type"), thresholdSec = 86400L)
@@ -1195,7 +1198,7 @@ object SparkEntry {
     // the exact engine input is written to parquet first and the oracle
     // recomputes every count from that same file. The p-valued drift rows
     // are oracled the same way by q_code_suite_drift.
-    "q_suite_counts" -> ((s, dir) => {
+    "q_suite_counts" -> ((s, _) => {
       // FIXED input size at any sf: the oracle SQL reads this exact path,
       // so the query and the oracle must agree on it unconditionally
       val rows = 100000L
@@ -1215,7 +1218,7 @@ object SparkEntry {
     // sha256), else 1 − max(missing_path/rows, sha_mismatch/rows); the
     // oracle recomputes every input count from a written copy of the exact
     // engine input and re-derives the same arithmetic.
-    "q_suite_quality" -> ((s, dir) => {
+    "q_suite_quality" -> ((s, _) => {
       import s.implicits._
       val rows = 100000L
       // dump gated on oracleDumps (the uniform contract: nothing touches
@@ -1240,7 +1243,7 @@ object SparkEntry {
     // e^(−y)(1 + y + y²/2)), Cramér's-V-gated pass flags, and the
     // normalized mean shift. With q_suite_counts this makes the WHOLE
     // suite verdict table externally recomputed, not just its integer half.
-    "q_code_suite_drift" -> ((s, dir) => {
+    "q_code_suite_drift" -> ((s, _) => {
       import s.implicits._
       val rows = 100000L
       if (oracleDumps)
@@ -1275,7 +1278,7 @@ object SparkEntry {
     // mix shift), so it must FAIL drift_ks/drift_chisq/drift_psi(lang)
     // while the undrifted middle batches PASS — the p-valued rows
     // themselves stay in q_code_suite (rows-only by nature)
-    "q_suite_drift_check" -> ((s, dir) => {
+    "q_suite_drift_check" -> ((s, _) => {
       import s.implicits._
       val vs = suiteVerdicts(s, 100000L)
       def verdict(b: Long, check: String, colName: String): Option[Boolean] =
@@ -1296,7 +1299,7 @@ object SparkEntry {
     // carried baseline between them), and DuckDB recomputes the integer
     // verdict columns from the same written input — proving batch/streaming
     // verdict parity against an EXTERNAL oracle, not just self-consistency
-    "q_streaming_suite_counts" -> ((s, dir) => {
+    "q_streaming_suite_counts" -> ((s, _) => {
       import s.implicits._
       val rows = 40000L
       val inputPath = s"/tmp/graft_oracle/stream_suite_input_$rows"
@@ -1337,7 +1340,7 @@ object SparkEntry {
     }),
 
     // multimodal feature plumbing (stub decode — no oracle)
-    "q_multimodal_features" -> ((s, dir) => {
+    "q_multimodal_features" -> ((s, _) => {
       val media = graft.multimodal.Multimodal.syntheticMedia(s, 1000)
       graft.multimodal.Multimodal.extractFeatures(media, dim = 8).toDF()
         .select(col("media_id"), col("modality"),
@@ -1349,7 +1352,7 @@ object SparkEntry {
     // oracle): row conservation through the size-salted repartition +
     // mapPartitions, fixed feature width, ≥1 sampled frame, and decode
     // determinism across two independent runs
-    "q_multimodal_check" -> ((s, dir) => {
+    "q_multimodal_check" -> ((s, _) => {
       import s.implicits._
       val media = graft.multimodal.Multimodal.syntheticMedia(s, 1000)
       val f1 = graft.multimodal.Multimodal.extractFeatures(media, dim = 8).toDF()
@@ -1416,7 +1419,7 @@ object SparkEntry {
 
     "q_conditional_range" ->
       """SELECT
-         CAST(sum(CASE WHEN event_type = 'purchase' AND (value < 0 OR value > 100) THEN 1 ELSE 0 END) AS BIGINT) AS purchase_range_failures,
+         CAST(sum(CASE WHEN event_type = 'purchase' AND (value IS NULL OR isnan(value) OR value < 0 OR value > 100) THEN 1 ELSE 0 END) AS BIGINT) AS purchase_range_failures,
          CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase_rows
          FROM events""",
 

@@ -1,8 +1,7 @@
 package graft.constraints
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.stats.Stats
 
 /** Outcome of one constraint over one unit of validation (a partition):
   * pass/fail verdict + a deterministic, capped sample of violating rows
@@ -20,17 +19,6 @@ object Constraints {
 
   private def capped(df: DataFrame, orderCols: Seq[String], cap: Int): DataFrame =
     df.orderBy(orderCols.map(col): _*).limit(cap)
-
-  /** A13: duplicate keys are violations. One shuffle on the key; the
-    * verdict needs only the aggregated counts, so `content`-sized columns
-    * never travel — column pruning keeps the shuffle narrow.
-    */
-  def uniqueness(df: DataFrame, keys: Seq[String], cap: Int = ViolationSampleCap): ConstraintResult = {
-    val dups = df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("dup_count"))
-      .where(col("dup_count") > 1)
-    val n = dups.agg(coalesce(sum(col("dup_count") - 1), lit(0L))).collect()(0).getLong(0)
-    ConstraintResult("uniqueness", n == 0, n, capped(dups, keys, cap))
-  }
 
   /** J1: referential integrity — fact rows whose key combination has no
     * match in the (small, broadcast) dimension are violations.
@@ -71,53 +59,5 @@ object Constraints {
       .where(col("n_rhs_values") > 1)
     val n = bad.agg(count(lit(1))).collect()(0).getLong(0)
     ConstraintResult("functional_dependency", n == 0, n, capped(bad, lhs, cap))
-  }
-
-  /** A2/A3: completeness — missing-value rates per column in ONE pass, using
-    * the reference's missing predicates (DESIGN.md:347-349). Fails if any
-    * column's missing rate exceeds its allowed threshold.
-    */
-  def completeness(df: DataFrame, maxMissingRate: Map[String, Double]): ConstraintResult = {
-    val cols = maxMissingRate.keys.toSeq.sorted
-    val aggs = count(lit(1)).as("total") +:
-      cols.map(c => sum(when(Stats.missingPred(df, c), 1L).otherwise(0L)).as(s"${c}__missing"))
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val total = row.getAs[Long]("total")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val rates = cols.map { c =>
-      val miss = row.getAs[Long](s"${c}__missing")
-      val rate = if (total == 0) 0.0 else miss.toDouble / total
-      (c, miss, rate, maxMissingRate(c), rate <= maxMissingRate(c))
-    }
-    val failed = rates.filter(!_._5)
-    val viol = failed.toDF("column", "missing_count", "missing_rate", "allowed_rate", "passed")
-    ConstraintResult("completeness", failed.isEmpty, failed.map(_._2).sum, viol)
-  }
-
-  /** P6: conditional range expectation (Great-Expectations row_condition
-    * style, DESIGN.md:366-380): rows matching `cond` must satisfy
-    * lo <= value <= hi; counts of failures, pass iff none.
-    */
-  def conditionalRange(df: DataFrame, cond: Column, valueCol: String,
-                       lo: Double, hi: Double, keyCols: Seq[String],
-                       cap: Int = ViolationSampleCap): ConstraintResult = {
-    val v = col(valueCol).cast("double")
-    val failing = df.where(cond && (v.isNull || isnan(v) || v < lo || v > hi))
-    val n = failing.count()
-    ConstraintResult("range", n == 0, n,
-      capped(failing.select((keyCols :+ valueCol).distinct.map(col): _*), keyCols, cap))
-  }
-
-  /** F12: per-row sha256(content) equality invariant (BASELINE.json
-    * input_hint): recompute `sha2(content, 256)` and compare to the carried
-    * digest; any mismatch is a violation.
-    */
-  def sha256Invariant(df: DataFrame, contentCol: String, expectedCol: String,
-                      keyCols: Seq[String], cap: Int = ViolationSampleCap): ConstraintResult = {
-    val bad = df.where(sha2(col(contentCol), 256) =!= col(expectedCol))
-    val n = bad.count()
-    ConstraintResult("sha256_invariant", n == 0, n,
-      capped(bad.select(keyCols.map(col): _*), keyCols, cap))
   }
 }

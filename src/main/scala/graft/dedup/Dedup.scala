@@ -112,15 +112,6 @@ object Dedup {
 
   // ---------------------------------------------------------------- minhash
 
-  /** MinHash signature: k independent hash functions h_i(s) = xxhash64(s, i)
-    * (seeded re-hash of each shingle hash), each taking the min over the
-    * document's shingles. Standard estimator: Jaccard ≈ fraction of agreeing
-    * signature positions.
-    */
-  def minhashSignature(shingles: Column, k: Int = 64): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(shingles, s => xxhash64(s, i))))
-
   /** LSH banding of a minhash signature into `bands` hashed band keys.
     * Two docs sharing ≥1 band key become a candidate pair; with k=64,
     * bands=16 (rows/band=4) the match threshold is ≈ (1/16)^(1/4) ≈ 0.5.
@@ -133,21 +124,10 @@ object Dedup {
     org.apache.spark.sql.graftbridge.ColumnBridge.column(BandKeys(
       org.apache.spark.sql.graftbridge.ColumnBridge.expression(sig), bands, k))
 
-  /** Candidate near-duplicate pairs via MinHash-LSH:
-    *   shingle → minhash → band → bucket self-join → signature-agreement
-    * filter ≥ `threshold`. The join key is (band index, band hash) — a
-    * compact 64-bit bucket join; only (id, signature) rows shuffle, never
-    * text. `idCol` must be unique; pairs are emitted once (id1 < id2).
-    *
-    * The returned DataFrame is PERSISTED (memory+disk, already
-    * materialized) so the signature cache can be dropped eagerly inside
-    * this call; long-lived sessions calling this repeatedly must
-    * `.unpersist()` each result when done with it (or
-    * `spark.catalog.clearCache()`) — Bench and Verify do exactly that.
-    */
-  /** Distributed minhash signatures via explode + groupBy: one row per
-    * (doc, shingle), then k codegen'd `min(xxhash64(shingle, i))` aggregates
-    * per doc. The aggregation's Exchange also materializes the signature
+  /** MinHash signatures via explode + groupBy: one row per (doc, shingle),
+    * then k codegen'd `min(xxhash64(shingle, i))` aggregates per doc, one
+    * per hash function h_i. Jaccard ≈ the fraction of agreeing signature
+    * positions. The aggregation's Exchange also materializes the signature
     * exactly once — a nested-lambda `transform` formulation instead gets
     * re-evaluated by Catalyst's projection collapse at every downstream
     * reference (measured 20× slower at 5k docs).
@@ -161,6 +141,18 @@ object Dedup {
       .select(col("id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
   }
 
+  /** Candidate near-duplicate pairs via MinHash-LSH:
+    *   shingle → minhash → band → bucket self-join → signature-agreement
+    * filter ≥ `threshold`. The join key is (band index, band hash) — a
+    * compact 64-bit bucket join; only (id, signature) rows shuffle, never
+    * text. `idCol` must be unique; pairs are emitted once (id1 < id2).
+    *
+    * The returned DataFrame is PERSISTED (memory+disk, already
+    * materialized) so the signature cache can be dropped eagerly inside
+    * this call; long-lived sessions calling this repeatedly must
+    * `.unpersist()` each result when done with it (or
+    * `spark.catalog.clearCache()`) — Bench and Verify do exactly that.
+    */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double = 0.5, k: Int = 64, bands: Int = 16,
                       shingleN: Int = 3): DataFrame = {
@@ -273,36 +265,13 @@ object Dedup {
 
   // ---------------------------------------------------------------- simhash
 
-  /** 64-bit SimHash of normalized word tokens: per bit b, sum ±1 over token
-    * hashes' bit b; simhash bit = 1 iff the sum is positive. Pure
-    * `functions.aggregate` over the token array — one pass, no UDF.
-    */
-  def simhash64(text: Column): Column = {
-    val tokens = split(TextAnalysis.normalize(text), " ")
-    val counts = aggregate(
-      tokens,
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, b) => a + when(call_function("shiftright", h, b).bitwiseAND(1) === 1, 1).otherwise(-1))
-      })
-    aggregate(
-      zip_with(counts, sequence(lit(0), lit(63)),
-        (c, b) => when(c > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** Hamming distance between two 64-bit hashes. */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup candidate pairs with hamming ≤ maxDist, found via
-    * 4×16-bit block LSH (pigeonhole: distance ≤ 3 ⇒ at least one of 4
-    * blocks identical — exact recall for maxDist ≤ 3).
-    */
-  /** Distributed simhash via explode + groupBy (same rationale as
-    * [[minhashSignatures]]): per bit b, a codegen'd
-    * `sum(sign(bit_b(xxhash64(token))))` aggregate; bits reassembled after.
+  /** 64-bit SimHash of normalized word tokens via explode + groupBy (same
+    * rationale as [[minhashSignatures]]): per bit b, a codegen'd
+    * `sum(sign(bit_b(xxhash64(token))))` aggregate; the simhash bit is 1
+    * iff that sum is positive.
     */
   def simhashes(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val exploded = df.select(col(idCol).as("id"),
@@ -317,6 +286,10 @@ object Dedup {
     agg.select(col("id"), bits.reduce((a, c) => a.bitwiseOR(c)).as("sh"))
   }
 
+  /** SimHash near-dup candidate pairs with hamming ≤ maxDist, found via
+    * 4×16-bit block LSH (pigeonhole: distance ≤ 3 ⇒ at least one of 4
+    * blocks identical — exact recall for maxDist ≤ 3).
+    */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = 3): DataFrame =
     simhashPairsFromHashes(simhashes(df, idCol, textCol), maxDist)

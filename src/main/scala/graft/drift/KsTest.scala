@@ -64,10 +64,6 @@ object KsTest {
                                 buckets: Int = Buckets): DataFrame =
     ksMaxGapFromCounts(distinctCounts(df, valueCols, isBaseline), buckets)
 
-  /** Builds the max-gap query over a (possibly cached) distinct-counts
-    * table. Runs ONE driver action itself (the boundary percentiles); the
-    * returned DataFrame is the single final job.
-    */
   /** The boundary-percentile aggregate column of the max-gap machinery —
     * exposed so callers that already run a groupBy("cid") collect over the
     * counts (detect's moments pass, GroupDrift's) can ride the boundaries
@@ -77,8 +73,13 @@ object KsTest {
     percentile_approx(col("v"),
       typedlit((1 until buckets).map(_.toDouble / buckets)), lit(1000))
 
-  // package-private: [[GroupDrift]] feeds lane-keyed counts (lanes =
-  // groups instead of melted columns) through the same two-phase machinery
+  /** Builds the max-gap query over a (possibly cached) distinct-counts
+    * table. Runs ONE driver action itself (the boundary percentiles) unless
+    * `precomputedBounds` carries them; the returned DataFrame is the single
+    * final job. Package-private: [[GroupDrift]] feeds lane-keyed counts
+    * (lanes = groups instead of melted columns) through the same two-phase
+    * machinery.
+    */
   private[drift] def ksMaxGapFromCounts(counts: DataFrame, buckets: Int,
       precomputedBounds: Option[Seq[(Int, Seq[Double])]] = None): DataFrame = {
     val spark = counts.sparkSession

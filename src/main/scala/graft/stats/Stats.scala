@@ -105,35 +105,4 @@ object Stats {
       }
     }
   }
-
-  /** Grouped (long-format) stats: one output row per (group, column), kept
-    * distributed — this is what the per-partition suite runs, grouping by
-    * batch_id. One shuffle, partial aggregation map-side.
-    */
-  def summarizeBy(df: DataFrame, groupCol: String, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      val v = when(missingPred(df, c), null).otherwise(col(c).cast("double"))
-      Seq(
-        count(v).as(s"${c}__count"),
-        sum(when(missingPred(df, c), 1L).otherwise(0L)).as(s"${c}__missing"),
-        min(v).as(s"${c}__min"), max(v).as(s"${c}__max"),
-        avg(v).as(s"${c}__mean"), stddev_samp(v).as(s"${c}__stddev"),
-        approx_percentile(v, lit(0.5), lit(10000)).as(s"${c}__median"),
-        approx_count_distinct(v).as(s"${c}__distinct"))
-    }
-    val wide = df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
-    // melt wide → long with a stack-style union of struct projections
-    val structs = cols.map { c =>
-      struct(lit(c).as("column"),
-        col(s"${c}__count").as("count"), col(s"${c}__missing").as("missing"),
-        col(s"${c}__min").as("min"), col(s"${c}__max").as("max"),
-        col(s"${c}__mean").as("mean"), col(s"${c}__stddev").as("stddev"),
-        col(s"${c}__median").as("median"), col(s"${c}__distinct").as("distinct_approx"))
-    }
-    wide.select(col(groupCol), explode(array(structs: _*)).as("s"))
-      .select(col(groupCol), col("s.*"))
-      .withColumn("missing_rate",
-        when(col("count") + col("missing") === 0, 0.0)
-          .otherwise(col("missing") / (col("count") + col("missing"))))
-  }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.graftbridge.CollectTopKBridge
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -59,8 +59,12 @@ object Bounded {
     }
   }
 
+  /** (score desc, id asc) in Spark's sort order: `-0.0` ties `0.0` and
+    * NaN is the largest score, where `java.lang.Double.compare` would rank
+    * 0.0 ahead of -0.0 whatever the ids.
+    */
   object Pairs extends Kind[(Double, Long)]((a, b) => {
-    val d = java.lang.Double.compare(b._1, a._1)
+    val d = SQLOrderingUtil.compareDoubles(b._1, a._1)
     if (d != 0) d else java.lang.Long.compare(a._2, b._2)
   }) {
     def write(out: DataOutputStream, p: (Double, Long)): Unit = {

@@ -42,7 +42,6 @@ object SuiteConfig {
     * not just statistically detectable.
     */
   val CramersVFloor = 0.05
-  val UnusualRatioThreshold = 0.10 // sensor.py:175
   val Bins = 10
   val ViolationCap = 100
   /** Exact-KS routing cap: per-batch distinct content-length cardinality

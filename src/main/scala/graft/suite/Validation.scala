@@ -11,7 +11,8 @@ import graft.stats.Stats
   * {basic_validation, advanced_validation, overall_quality_score}; the
   * score formula (a stub in the reference, :389-391) is pinned as
   * `1 − max(error_rates)`, gated to 0 if any expectation fails
-  * (FIXTURES.md §4).
+  * (FIXTURES.md §4). The Verify queries `q_completeness` and
+  * `q_conditional_range` run it against their DuckDB oracles.
   */
 object Validation {
 

@@ -291,10 +291,9 @@ class DedupSpec extends GraftSpec {
 
   test("minhash signature agreement estimates true jaccard") {
     val sh = docs.select(col("doc_id"), Dedup.shingleHashes(col("text"), 3).as("sh"))
-    val sig = docs.select(col("doc_id"),
-      Dedup.minhashSignature(Dedup.shingleHashes(col("text"), 3), 256).as("sig"))
+    val sig = Dedup.minhashSignatures(docs, "doc_id", "text", 256, 3)
     val est = sig.as("a").crossJoin(sig.as("b"))
-      .where(col("a.doc_id") === 1 && col("b.doc_id") === 2)
+      .where(col("a.id") === 1 && col("b.id") === 2)
       .select(aggregate(zip_with(col("a.sig"), col("b.sig"),
         (x, y) => when(x === y, 1).otherwise(0)), lit(0), (acc, v) => acc + v).cast("double") / 256)
       .collect()(0).getDouble(0)
@@ -305,7 +304,7 @@ class DedupSpec extends GraftSpec {
   }
 
   test("simhash: identical docs distance 0; near-dups close; unrelated far") {
-    val sh = docs.select(col("doc_id"), Dedup.simhash64(col("text")).as("sh"))
+    val sh = Dedup.simhashes(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def dist(a: Long, b: Long) = java.lang.Long.bitCount(sh(a) ^ sh(b))
     assert(dist(1, 4) == 0)

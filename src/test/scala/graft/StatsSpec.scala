@@ -35,15 +35,6 @@ class StatsSpec extends GraftSpec {
     assert(s.bin_lo == 0.0 && s.bin_hi == 10.0)
   }
 
-  test("summarizeBy produces one row per (group, column), distributed") {
-    val df = Seq((0, 1.0, 10.0), (0, 2.0, 20.0), (1, 30.0, 5.0)).toDF("g", "a", "b")
-    val out = Stats.summarizeBy(df, "g", Seq("a", "b"))
-      .orderBy("g", "column").collect()
-    assert(out.length == 4)
-    val g0a = out.find(r => r.getAs[Int]("g") == 0 && r.getAs[String]("column") == "a").get
-    assert(g0a.getAs[Long]("count") == 2 && math.abs(g0a.getAs[Double]("mean") - 1.5) < 1e-12)
-  }
-
   test("t-digest aggregate: quantiles via Column API, mergeable bytes") {
     val df = (1 to 10000).map(_.toDouble).toDF("x")
     val bytes = df.agg(Sketches.tdigestAgg(col("x"))).collect()(0).getAs[Array[Byte]](0)

@@ -26,6 +26,18 @@ class SuiteSpec extends GraftSpec {
         assert(!v(b, "sha256_invariant", "content").passed)
         assert(v(b, "quality_score", "*").metric == 0.0) // gated: constraints failed
       }
+      // each constraint's count is exactly the generator's injected rows
+      val marked = CodeTableGen.generateWithMarkers(spark, 20000, batches = 4)
+      Seq("uniqueness" -> "m_dup", "referential" -> "m_bad_lang",
+        "sha256_invariant" -> "m_bad_sha", "completeness" -> "m_empty_path").foreach {
+        case (check, marker) =>
+          val injected = marked.where(col(marker)).groupBy("batch_id").count().collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          (0L to 3L).foreach { b =>
+            assert(verdicts.find(x => x.batch_id == b && x.check == check).get.violation_count ==
+              injected.getOrElse(b, 0L), s"$check, batch $b")
+          }
+      }
       // baseline batch trivially passes drift; undrifted batches pass; batch 3 drifts
       assert(v(0, "drift_ks", "content_length").passed)
       assert(v(1, "drift_ks", "content_length").passed, "undrifted batch must not fire KS")

@@ -100,6 +100,28 @@ class TopKSpec extends GraftSpec {
     assert(!one.exists { case (q, id) => qids(q) == id })
   }
 
+  test("adc_top_k order equals Spark's sort: signed zeros tie, NaN largest") {
+    import org.apache.spark.sql.expressions.Window
+    // ±0.0 straddle every cut from k = 3 to 7; query 1 scores the negations,
+    // which swaps the zeros' signs. No row is a query, so none is excluded.
+    val scores = Seq((5L, 0.0), (3L, -0.0), (1L, 0.0), (8L, -0.0), (7L, Double.NaN),
+      (2L, 1.0), (4L, -1.0), (6L, 0.0), (9L, -0.0))
+    val scored = scores.map { case (id, s) => (id, Seq(s, -s)) }.toDF("id", "scores")
+    val w = Window.partitionBy(col("qidx")).orderBy(col("s").desc, col("id").asc)
+    val ranked = scored.select(col("id"), posexplode(col("scores")).as(Seq("qidx", "s")))
+      .withColumn("rn", row_number().over(w))
+    for (k <- Seq(3, 4, 5, 6, 7, scores.size)) {
+      val ref = ranked.where(col("rn") <= k).orderBy("qidx", "rn")
+        .select("qidx", "id").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+      for (d <- Seq(scored.coalesce(1), scored.repartition(17))) {
+        val got = d.agg(TopK.adcTopK(col("id"), col("scores"), Array(-1L, -2L), k).as("top"))
+          .select(explode(col("top")).as("p")).select(col("p.qidx"), col("p.id"))
+          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+        assert(got == ref, s"k=$k")
+      }
+    }
+  }
+
   test("top_k_strings equals the per-group window cut on skewed string keys") {
     import org.apache.spark.sql.expressions.Window
     // zipf-ish repo counts with ties, 3 batches — the repo_metrics shape
