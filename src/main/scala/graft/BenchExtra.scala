@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *     solver's convergence (hub safety = the large-star contraction).
   *
   * Emits ONE JSON line and writes BENCH/bench_extra_r6.json. Not part of
-  * the driver contract; never touches /tmp/graft_oracle.
+  * the driver contract; writes no oracle dumps.
   */
 object BenchExtra {
   def main(args: Array[String]): Unit = {

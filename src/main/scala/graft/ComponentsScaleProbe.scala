@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * line with loadavg before/after and the single-thread CPU micro-stamp
   * (the BenchExtra self-adjudication protocol) and writes
   * BENCH/components_scale_r6_cpus<cpus>.json. Not part of the driver
-  * contract; never touches /tmp/graft_oracle.
+  * contract; writes no oracle dumps.
   */
 object ComponentsScaleProbe {
   def main(args: Array[String]): Unit = {

@@ -18,19 +18,20 @@ object QueryProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.oracleDumps = true
+    val dumpRoot = Paths.get(outDir, "_oracle_dumps").toAbsolutePath.toString
+    SparkEntry.oracleDumpRoot = Some(dumpRoot)
     try SparkEntry.queries.filter(q => names.contains(q._1)).foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       println(f"[probe] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
       spark.catalog.clearCache()
-    } finally SparkEntry.oracleDumps = false
+    } finally SparkEntry.oracleDumpRoot = None
     def q(s: String): String = "\"" + s.flatMap {
       case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
       case '\r' => "\\r"; case '\t' => "\\t"
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(o => names.contains(o._1))
+    val json = SparkEntry.oracleSql(dumpRoot).filter(o => names.contains(o._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -9,7 +9,7 @@ import graft.dedup.{Components, Contamination, Dedup, Semantic}
 import graft.drift.{Drift, GroupDrift, KsTest}
 import graft.sample.Sampling
 import graft.sim.{Ann, Ivf}
-import graft.stats.{Outliers, Profile, Sketches, Stats}
+import graft.stats.{Outliers, Profile, Stats}
 import graft.text.{Repetition, TextAnalysis}
 
 /** Driver contract — one entry per implemented operator from SURVEY.md §2,
@@ -22,16 +22,18 @@ object SparkEntry {
 
   private val BaselineDate = "1998-01-01" // lineitem baseline/current split
 
-  /** Verify sets this (and resets it in a finally) so correctness-gate
-    * queries write the parquet dumps their DuckDB oracles re-derive from.
-    * Bench leaves it false and nothing touches /tmp/graft_oracle outside
-    * Verify. The flag gates ONLY the dump writes, never the plan shape —
-    * every timed bench plan is exactly the gate-covered plan (q_simhash_
-    * pairs persists in both modes; q_ann_ivf builds + searches its
-    * committed index identically, just rooted at a throwaway temp dir in
-    * bench, where the index write is intrinsic to the timed operator).
+  /** The directory the correctness-gate queries write the parquet dumps
+    * their DuckDB oracles re-derive from ([[oracleSql]] of the same root
+    * reads them). Verify sets it under its output directory (and resets it
+    * in a finally), so runs into different output directories never share
+    * dumps; Bench leaves it None and no query writes a dump. It gates ONLY
+    * the dump writes, never the plan shape — every timed bench plan is
+    * exactly the gate-covered plan (q_simhash_pairs persists in both
+    * modes; q_ann_ivf builds + searches its committed index identically,
+    * just rooted at a throwaway temp dir in bench, where the index write
+    * is intrinsic to the timed operator).
     */
-  @volatile var oracleDumps: Boolean = false
+  @volatile var oracleDumpRoot: Option[String] = None
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -80,7 +82,14 @@ object SparkEntry {
     * the root goes: a local relation does not read the root again.
     */
   private def onDumpRoot(prefix: String)(f: String => DataFrame): DataFrame =
-    if (oracleDumps) local(f("/tmp/graft_oracle")) else withTempRoot(prefix)(f andThen local)
+    oracleDumpRoot match {
+      case Some(root) => local(f(root))
+      case None => withTempRoot(prefix)(f andThen local)
+    }
+
+  /** Writes `df` as the oracle dump `name` when Verify asks for dumps. */
+  private def dump(df: => DataFrame, name: String): Unit =
+    oracleDumpRoot.foreach(root => df.write.mode("overwrite").parquet(s"$root/$name"))
 
   /** `df` computed now, as a local relation that no longer reads its inputs. */
   private def local(df: DataFrame): DataFrame =
@@ -210,21 +219,21 @@ object SparkEntry {
         .orderBy("custkey")
     }),
 
-    // A15 t-digest quantiles — SELF-VALIDATING on RANK (the quantity a
-    // t-digest actually bounds): the exact rank of each sketch quantile
-    // must sit within ±0.02 of the requested rank
-    "q_tdigest" -> ((s, dir) => {
+    // A15 KLL quantiles — SELF-VALIDATING on RANK (the quantity a KLL
+    // sketch bounds, ε = 0.0028 at the suite's k): the exact rank of each
+    // sketch quantile must sit within ±0.02 of the requested rank
+    "q_kll_quantile" -> ((s, dir) => {
       import s.implicits._
       val li = Tables.lineitem(s, dir)
-      val r0 = li.agg(
-        Sketches.tdigestQuantile(Sketches.tdigestAgg(col("l_extendedprice"), 500), lit(0.5)).as("td50"),
-        Sketches.tdigestQuantile(Sketches.tdigestAgg(col("l_extendedprice"), 500), lit(0.95)).as("td95"))
-        .collect()(0)
-      val (td50, td95) = (r0.getDouble(0), r0.getDouble(1))
+      val sk = kll_sketch_agg_double(col("l_extendedprice").cast("double"),
+        graft.suite.SuiteConfig.KllK)
+      val r0 = li.agg(kll_sketch_get_quantile_double(sk, lit(0.5)).as("q50"),
+        kll_sketch_get_quantile_double(sk, lit(0.95)).as("q95")).collect()(0)
+      val (q50, q95) = (r0.getDouble(0), r0.getDouble(1))
       val rk = li.agg(
-        (sum(when(col("l_extendedprice") <= td50, 1L).otherwise(0L)).cast("double")
+        (sum(when(col("l_extendedprice") <= q50, 1L).otherwise(0L)).cast("double")
           / count(lit(1))).as("r50"),
-        (sum(when(col("l_extendedprice") <= td95, 1L).otherwise(0L)).cast("double")
+        (sum(when(col("l_extendedprice") <= q95, 1L).otherwise(0L)).cast("double")
           / count(lit(1))).as("r95")).collect()(0)
       Seq((math.abs(rk.getDouble(0) - 0.5) <= 0.02,
         math.abs(rk.getDouble(1) - 0.95) <= 0.02)).toDF("p50_ok", "p95_ok")
@@ -551,8 +560,10 @@ object SparkEntry {
         baseDf.coalesce(1).write.mode("overwrite").parquet(s"$outBase/schema_base")
         curDf.coalesce(1).write.mode("overwrite").parquet(s"$outBase/schema_cur")
       }
-      if (oracleDumps) writeInputs("/tmp/graft_oracle")
-      else withTempRoot("graft_schema_q")(writeInputs)
+      oracleDumpRoot match {
+        case Some(root) => writeInputs(root)
+        case None => withTempRoot("graft_schema_q")(writeInputs)
+      }
       val issues = withTempRoot("graft_schema_audit") { root =>
         val io = new graft.tableio.ParquetTableIO(root)
         graft.suite.SchemaCheck.pin(io, baseSchema)
@@ -605,8 +616,7 @@ object SparkEntry {
     "q_minhash_pairs" -> ((s, dir) => {
       val sigs = Dedup.minhashSignatures(nearDupCorpus(s, dir), "doc_id", "text", 64, 3)
         .persist()
-      if (oracleDumps)
-        sigs.write.mode("overwrite").parquet("/tmp/graft_oracle/minhash_sigs")
+      dump(sigs, "minhash_sigs")
       val out = try Dedup.minhashLshPairsFromSigs(sigs, threshold = 0.5)
         finally sigs.unpersist(blocking = false)
       out.orderBy("id1", "id2")
@@ -622,9 +632,7 @@ object SparkEntry {
         .persist()
       val pairs = try Dedup.minhashLshPairsFromSigs(sigs, threshold = 0.5)
         finally sigs.unpersist(blocking = false)
-      if (oracleDumps)
-        pairs.select("id1", "id2").write.mode("overwrite")
-          .parquet("/tmp/graft_oracle/cluster_pairs")
+      dump(pairs.select("id1", "id2"), "cluster_pairs")
       val out = try Components.connectedComponents(pairs)
         finally pairs.unpersist(blocking = false)
       out.orderBy("id")
@@ -643,9 +651,7 @@ object SparkEntry {
       val pairs = try Dedup.minhashLshPairsFromSigs(sigs, threshold = 0.5)
         .select("id1", "id2").persist()
         finally sigs.unpersist(blocking = false)
-      if (oracleDumps)
-        pairs.write.mode("overwrite")
-          .parquet("/tmp/graft_oracle/cluster_pairs_incr")
+      dump(pairs, "cluster_pairs_incr")
       val half = pmod(xxhash64(col("id1"), col("id2")), lit(2)) === 0
       val store = Components.connectedComponents(pairs.where(half))
       val out = try Components.incrementalComponents(store, pairs.where(!half))
@@ -665,8 +671,7 @@ object SparkEntry {
       // references the cache, so the unpersist is the caller's clearCache
       // after the result is written (Verify) or timed (Bench).
       val sh = Dedup.simhashes(nearDupCorpus(s, dir), "doc_id", "text").persist()
-      if (oracleDumps)
-        sh.write.mode("overwrite").parquet("/tmp/graft_oracle/simhashes")
+      dump(sh, "simhashes")
       Dedup.simhashPairsFromHashes(sh, maxDist = 3)
         .withColumn("hamming", col("hamming").cast("long"))
         .orderBy("id1", "id2")
@@ -752,10 +757,8 @@ object SparkEntry {
         .select(col("vec_id").as("id"), col("embedding").as("v")).persist()
       // same (bits, tables) the embeddingPairs default derives at bits=8
       val bands = Dedup.signLshBands(vecs, 8, Dedup.autoTables(8, 0.9)).persist()
-      if (oracleDumps) {
-        vecs.write.mode("overwrite").parquet("/tmp/graft_oracle/emb_vecs")
-        bands.write.mode("overwrite").parquet("/tmp/graft_oracle/emb_bands")
-      }
+      dump(vecs, "emb_vecs")
+      dump(bands, "emb_bands")
       val out = try Dedup.embeddingPairsFromBands(vecs, bands, 0.9)
         finally { bands.unpersist(blocking = false); vecs.unpersist(blocking = false) }
       out.withColumn("cosine", r(col("cosine"), 4)).orderBy("id1", "id2")
@@ -769,9 +772,8 @@ object SparkEntry {
     // quota and must vanish entirely
     "q_quota_sample" -> ((s, dir) => {
       val docs = Tables.documents(s, dir).select("doc_id", "lang", "text")
-      if (oracleDumps)
-        docs.select(col("doc_id"), col("lang"), xxhash64(col("doc_id")).as("h"))
-          .write.mode("overwrite").parquet("/tmp/graft_oracle/quota_keys")
+      dump(docs.select(col("doc_id"), col("lang"), xxhash64(col("doc_id")).as("h")),
+        "quota_keys")
       val quotas = Map("en" -> 100L, "zh" -> 40L, "es" -> 40L, "de" -> 25L)
       Sampling.quotaByHash(docs, "lang", quotas, Seq("doc_id"), buckets = 8)
         .select("doc_id", "lang").orderBy("doc_id")
@@ -794,8 +796,7 @@ object SparkEntry {
       val cents = Ivf.trainCentroids(vecs, "vec_id", "embedding", nlist = 8)
       val clustered = Semantic.withClusters(vecs, "vec_id", "embedding", cents)
         .persist()
-      if (oracleDumps)
-        clustered.write.mode("overwrite").parquet("/tmp/graft_oracle/sem_clustered")
+      dump(clustered, "sem_clustered")
       val out = try Semantic.semanticGroupsFromClusters(clustered, tau = 0.9)
         .localCheckpoint()
         finally clustered.unpersist(blocking = false)
@@ -878,7 +879,7 @@ object SparkEntry {
     // The probe cut itself is validated by IvfSpec's nprobe = nlist ≡
     // brute-force law and the self-validating q_ann_ivf_recall; k-means
     // by IvfSpec determinism + exactness. Bench times the identical work
-    // over a throwaway root so /tmp/graft_oracle stays Verify-only.
+    // over a throwaway root, so only Verify writes a dump.
     "q_ann_ivf" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
@@ -1202,9 +1203,7 @@ object SparkEntry {
       // FIXED input size at any sf: the oracle SQL reads this exact path,
       // so the query and the oracle must agree on it unconditionally
       val rows = 100000L
-      if (oracleDumps)
-        graft.gen.CodeTableGen.generate(s, rows, batches = 4)
-          .write.mode("overwrite").parquet(s"/tmp/graft_oracle/suite_input_$rows")
+      dump(graft.gen.CodeTableGen.generate(s, rows, batches = 4), s"suite_input_$rows")
       import s.implicits._
       val countChecks = Set("uniqueness", "referential", "completeness", "sha256_invariant")
       suiteVerdicts(s, rows).filter(v => countChecks.contains(v.check)).toDF()
@@ -1221,12 +1220,7 @@ object SparkEntry {
     "q_suite_quality" -> ((s, _) => {
       import s.implicits._
       val rows = 100000L
-      // dump gated on oracleDumps (the uniform contract: nothing touches
-      // /tmp/graft_oracle outside Verify); the oracle only reads it in
-      // Verify runs, where the flag is set
-      if (oracleDumps)
-        graft.gen.CodeTableGen.generate(s, rows, batches = 4)
-          .write.mode("overwrite").parquet("/tmp/graft_oracle/suite_quality_input")
+      dump(graft.gen.CodeTableGen.generate(s, rows, batches = 4), "suite_quality_input")
       suiteVerdicts(s, rows).filter(_.check == "quality_score")
         .map(v => (v.batch_id, math.rint(v.metric * 1e6) / 1e6))
         .toDF("batch_id", "quality").orderBy("batch_id")
@@ -1246,9 +1240,7 @@ object SparkEntry {
     "q_code_suite_drift" -> ((s, _) => {
       import s.implicits._
       val rows = 100000L
-      if (oracleDumps)
-        graft.gen.CodeTableGen.generate(s, rows, batches = 4)
-          .write.mode("overwrite").parquet("/tmp/graft_oracle/suite_drift_input")
+      dump(graft.gen.CodeTableGen.generate(s, rows, batches = 4), "suite_drift_input")
       val vs = suiteVerdicts(s, rows)
       def v(b: Long, check: String, c: String) =
         vs.find(x => x.batch_id == b && x.check == check && x.column == c).get
@@ -1273,7 +1265,7 @@ object SparkEntry {
     }),
 
     // The suite's DRIFT verdict semantics, pinned as an oracled boolean row
-    // (constant-true oracle, q_tdigest pattern): on the deterministic table
+    // (constant-true oracle, q_kll_quantile pattern): on the deterministic table
     // the LAST batch is drifted by construction (length scale shift + lang
     // mix shift), so it must FAIL drift_ks/drift_chisq/drift_psi(lang)
     // while the undrifted middle batches PASS — the p-valued rows
@@ -1302,9 +1294,8 @@ object SparkEntry {
     "q_streaming_suite_counts" -> ((s, _) => {
       import s.implicits._
       val rows = 40000L
-      val inputPath = s"/tmp/graft_oracle/stream_suite_input_$rows"
       val code = graft.gen.CodeTableGen.generate(s, rows, batches = 2).cache()
-      code.write.mode("overwrite").parquet(inputPath) // the oracle reads this
+      dump(code, s"stream_suite_input_$rows")
       withTempRoot("graft_stream_stage") { stageDir =>
         (0L to 1L).foreach { b =>
           code.where(col("batch_id") === b).drop("batch_id").coalesce(1)
@@ -1378,7 +1369,7 @@ object SparkEntry {
 
   // ------------------------------------------------------------ oracle SQL
 
-  def oracleSql: Map[String, String] = Map(
+  def oracleSql(root: String): Map[String, String] = Map(
     "q_agg_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity), 2) AS sum_qty,
@@ -1677,15 +1668,15 @@ object SparkEntry {
     // repetition_type; nullability_relaxed applies only when types match
     // (same precedence as the engine)
     "q_schema_check" ->
-      """WITH b AS (
+      s"""WITH b AS (
            SELECT DISTINCT name, type, coalesce(converted_type, '') AS ct,
                   repetition_type
-           FROM parquet_schema('/tmp/graft_oracle/schema_base/*.parquet')
+           FROM parquet_schema('$root/schema_base/*.parquet')
            WHERE num_children IS NULL),
          c AS (
            SELECT DISTINCT name, type, coalesce(converted_type, '') AS ct,
                   repetition_type
-           FROM parquet_schema('/tmp/graft_oracle/schema_cur/*.parquet')
+           FROM parquet_schema('$root/schema_cur/*.parquet')
            WHERE num_children IS NULL)
          SELECT col_name, issue FROM (
            SELECT b.name AS col_name, 'missing_column' AS issue
@@ -1924,7 +1915,7 @@ object SparkEntry {
                 CAST(count(*) AS BIGINT) AS ub
          FROM orders GROUP BY 1 HAVING count(*) >= 18 ORDER BY 1""",
 
-    "q_tdigest" ->
+    "q_kll_quantile" ->
       "SELECT true AS p50_ok, true AS p95_ok",
 
     "q_ann_lsh" ->
@@ -1965,15 +1956,15 @@ object SparkEntry {
     // validated by IvfSpec and q_ann_ivf_recall), exact cosine re-rank,
     // rank <= 5
     "q_ann_ivf" ->
-      """WITH assign AS (
+      s"""WITH assign AS (
            SELECT id, list_id
-           FROM read_parquet('/tmp/graft_oracle/ivf_index/assign/*/*.parquet',
+           FROM read_parquet('$root/ivf_index/assign/*/*.parquet',
                              hive_partitioning=1)),
          q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
                FROM embeddings WHERE vec_id < 10),
          probes AS (
            SELECT query_id, list_id
-           FROM read_parquet('/tmp/graft_oracle/ivf_probes/*.parquet')),
+           FROM read_parquet('$root/ivf_probes/*.parquet')),
          cand AS (
            SELECT p.query_id, a.id AS neighbor_id
            FROM probes p JOIN assign a ON a.list_id = p.list_id
@@ -1997,9 +1988,9 @@ object SparkEntry {
     // rank <= 5. The cut is validated by q_pq_adc + q_ann_pq_recall +
     // PqSpec's equivalence laws.
     "q_ann_pq" ->
-      """WITH cand AS (
+      s"""WITH cand AS (
            SELECT query_id, neighbor_id
-           FROM read_parquet('/tmp/graft_oracle/pq_cand/*.parquet')),
+           FROM read_parquet('$root/pq_cand/*.parquet')),
          q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
                FROM embeddings WHERE vec_id < 10),
          scored AS (
@@ -2022,12 +2013,12 @@ object SparkEntry {
     // external check that PQ's asymmetric-distance math is exactly
     // cosine-against-the-decoded-vector
     "q_pq_adc" ->
-      """WITH cb AS (
+      s"""WITH cb AS (
            SELECT m, k, centroid
-           FROM read_parquet('/tmp/graft_oracle/pq_adc_codebooks/*.parquet')),
+           FROM read_parquet('$root/pq_adc_codebooks/*.parquet')),
          codes AS (
            SELECT id, code
-           FROM read_parquet('/tmp/graft_oracle/pq_adc_codes/*.parquet')),
+           FROM read_parquet('$root/pq_adc_codes/*.parquet')),
          recon AS (
            SELECT c.id, flatten(list(b.centroid ORDER BY b.m)) AS rv
            FROM codes c JOIN cb b ON b.k = c.code[b.m + 1]
@@ -2292,14 +2283,14 @@ object SparkEntry {
     // input the engine validated (written by the query itself): violation
     // counts for the four count-based checks, per batch
     "q_suite_counts" ->
-      suiteCountsOracleSql("/tmp/graft_oracle/suite_input_100000/*.parquet"),
+      suiteCountsOracleSql(s"$root/suite_input_100000/*.parquet"),
 
     // quality_score re-derived from the same written input: 0 if any
     // constraint count is nonzero, else 1 − max(missing rate, sha-mismatch
     // rate) — closes the last not-externally-recomputed suite column
     "q_suite_quality" ->
-      """WITH code AS (
-           SELECT * FROM read_parquet('/tmp/graft_oracle/suite_quality_input/*.parquet')),
+      s"""WITH code AS (
+           SELECT * FROM read_parquet('$root/suite_quality_input/*.parquet')),
          batches AS (SELECT DISTINCT batch_id FROM code),
          cnt AS (SELECT batch_id, count(*) AS n_rows FROM code GROUP BY 1),
          dup AS (
@@ -2341,8 +2332,8 @@ object SparkEntry {
     // table): banding, candidate generation, agreement/hamming/cosine and
     // the threshold filter are all re-derived in SQL
     "q_minhash_pairs" ->
-      """WITH sigs AS (
-           SELECT id, sig FROM read_parquet('/tmp/graft_oracle/minhash_sigs/*.parquet')),
+      s"""WITH sigs AS (
+           SELECT id, sig FROM read_parquet('$root/minhash_sigs/*.parquet')),
          bands AS (
            SELECT s.id, b.band,
                   CAST(list_slice(s.sig, b.band*4 + 1, b.band*4 + 4) AS VARCHAR) AS bval
@@ -2365,8 +2356,8 @@ object SparkEntry {
     // transitive closure of the written pair graph: recursive-CTE
     // reachability, rep = min(id, min reachable id)
     "q_dedup_clusters" ->
-      """WITH RECURSIVE pairs AS (
-           SELECT id1, id2 FROM read_parquet('/tmp/graft_oracle/cluster_pairs/*.parquet')),
+      s"""WITH RECURSIVE pairs AS (
+           SELECT id1, id2 FROM read_parquet('$root/cluster_pairs/*.parquet')),
          edges AS (
            SELECT id1 AS u, id2 AS v FROM pairs
            UNION
@@ -2383,8 +2374,8 @@ object SparkEntry {
     // committed-store + incremental apply, so equality proves the
     // incremental path end-to-end on real LSH output
     "q_dedup_clusters_incremental" ->
-      """WITH RECURSIVE pairs AS (
-           SELECT id1, id2 FROM read_parquet('/tmp/graft_oracle/cluster_pairs_incr/*.parquet')),
+      s"""WITH RECURSIVE pairs AS (
+           SELECT id1, id2 FROM read_parquet('$root/cluster_pairs_incr/*.parquet')),
          edges AS (
            SELECT id1 AS u, id2 AS v FROM pairs
            UNION
@@ -2398,8 +2389,8 @@ object SparkEntry {
          FROM reach GROUP BY u ORDER BY id""",
 
     "q_simhash_pairs" ->
-      """WITH shs AS (
-           SELECT id, sh FROM read_parquet('/tmp/graft_oracle/simhashes/*.parquet')),
+      s"""WITH shs AS (
+           SELECT id, sh FROM read_parquet('$root/simhashes/*.parquet')),
          blocks AS (
            SELECT s.id, s.sh, b.block, (s.sh >> (b.block*16)) & 65535 AS bval
            FROM shs s CROSS JOIN (SELECT unnest(range(4)) AS block) b),
@@ -2411,10 +2402,10 @@ object SparkEntry {
          FROM cand WHERE bit_count(xor(sh1, sh2)) <= 3 ORDER BY id1, id2""",
 
     "q_embedding_pairs" ->
-      """WITH vecs AS (
-           SELECT id, v FROM read_parquet('/tmp/graft_oracle/emb_vecs/*.parquet')),
+      s"""WITH vecs AS (
+           SELECT id, v FROM read_parquet('$root/emb_vecs/*.parquet')),
          bands AS (
-           SELECT id, t, sig FROM read_parquet('/tmp/graft_oracle/emb_bands/*.parquet')),
+           SELECT id, t, sig FROM read_parquet('$root/emb_bands/*.parquet')),
          cand AS (
            SELECT DISTINCT l.id AS id1, r.id AS id2
            FROM bands l JOIN bands r
@@ -2430,8 +2421,8 @@ object SparkEntry {
 
     // quota sampling re-ranked from the written Spark-computed hash keys
     "q_quota_sample" ->
-      """WITH k AS (
-           SELECT doc_id, lang, h FROM read_parquet('/tmp/graft_oracle/quota_keys/*.parquet')),
+      s"""WITH k AS (
+           SELECT doc_id, lang, h FROM read_parquet('$root/quota_keys/*.parquet')),
          q(lang, quota) AS (
            VALUES ('en', 100), ('zh', 40), ('es', 40), ('de', 25)),
          r AS (
@@ -2444,8 +2435,8 @@ object SparkEntry {
     // semantic dedup recomputed from the written (id, v, list_id) table:
     // within-cluster pairs at cosine >= 0.9, transitive closure, min-id labels
     "q_semantic_dedup" ->
-      """WITH RECURSIVE a AS (
-           SELECT id, v, list_id FROM read_parquet('/tmp/graft_oracle/sem_clustered/*.parquet')),
+      s"""WITH RECURSIVE a AS (
+           SELECT id, v, list_id FROM read_parquet('$root/sem_clustered/*.parquet')),
          pairs AS (
            SELECT l.id AS id1, r.id AS id2
            FROM a l JOIN a r ON l.list_id = r.list_id AND l.id < r.id
@@ -2471,9 +2462,9 @@ object SparkEntry {
     // PSI(length), PSI(lang), chi-square(lang) with dof=6 closed-form
     // survival e^(−y)(1+y+y²/2), Cramér's-V-gated pass flags, mean shift
     "q_code_suite_drift" ->
-      """WITH code AS (
+      s"""WITH code AS (
            SELECT batch_id, lang, CAST(length(content) AS BIGINT) AS len
-           FROM read_parquet('/tmp/graft_oracle/suite_drift_input/*.parquet')),
+           FROM read_parquet('$root/suite_drift_input/*.parquet')),
          bs AS (SELECT DISTINCT batch_id FROM code),
          lens AS (SELECT batch_id, len, CAST(count(*) AS BIGINT) AS c FROM code GROUP BY 1, 2),
          tot AS (SELECT batch_id, CAST(sum(c) AS DOUBLE) AS n FROM lens GROUP BY 1),
@@ -2578,5 +2569,5 @@ object SparkEntry {
     // STREAMING validator processed (staged per-batch; micro-batch id 0/1
     // maps onto the input's own batch_id by arrival order)
     "q_streaming_suite_counts" ->
-      suiteCountsOracleSql("/tmp/graft_oracle/stream_suite_input_40000/*.parquet"))
+      suiteCountsOracleSql(s"$root/stream_suite_input_40000/*.parquet"))
 }

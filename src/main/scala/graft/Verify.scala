@@ -16,10 +16,13 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // correctness-gate queries write the parquet dumps their DuckDB
-    // oracles re-derive from; Bench leaves this false (headline timings
-    // must exclude Verify-side bookkeeping). Reset in a finally so a
-    // same-JVM caller after Verify.main can never inherit dump writes.
-    SparkEntry.oracleDumps = true
+    // oracles re-derive from under this run's own output directory, so a
+    // run into another directory cannot overwrite them; Bench leaves the
+    // root unset (headline timings must exclude Verify-side bookkeeping).
+    // Reset in a finally so a same-JVM caller after Verify.main can never
+    // inherit dump writes.
+    val dumpRoot = Paths.get(outDir, "_oracle_dumps").toAbsolutePath.toString
+    SparkEntry.oracleDumpRoot = Some(dumpRoot)
     try SparkEntry.queries.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       try {
@@ -33,7 +36,7 @@ object Verify {
       // pipelines — would otherwise accumulate cached blocks across all
       // ~50 queries; each result is already written, so drop everything
       spark.catalog.clearCache()
-    } finally SparkEntry.oracleDumps = false
+    } finally SparkEntry.oracleDumpRoot = None
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -46,7 +49,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql(dumpRoot)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

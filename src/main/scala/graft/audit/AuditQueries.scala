@@ -2,19 +2,22 @@ package graft.audit
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.stats.Sketches
+import graft.stats.FreqSketch
+import graft.suite.SuiteRunner
 import graft.tableio.TableIO
 
 /** Queries over the committed audit tables — including the cross-batch
   * sketch merges that make checkpoint/resume exact for distributional
   * state (north star: "per-column statistics … approximate distinct via
-  * HyperLogLog sketches, quantiles via t-digest" persisted per partition).
+  * HyperLogLog sketches, quantiles via t-digest" persisted per partition;
+  * the quantile sketch is KLL, which bounds its rank error).
   *
   * Each validated batch commits one row of MERGEABLE sketch bytes
-  * (`sketches` table: HLL of the uniqueness key and of repo; t-digest of
-  * content length). A resumed or later run can therefore answer
-  * whole-table questions (global distinct keys, global quantiles) by
-  * merging committed bytes — no re-scan of validated partitions.
+  * (`sketches` table: HLL of the uniqueness key and of repo; KLL of
+  * content length; frequent items of repo). A resumed or later run can
+  * therefore answer whole-table questions (global distinct keys, global
+  * quantiles, heavy hitters) by merging committed bytes — no re-scan of
+  * validated partitions.
   */
 object AuditQueries {
 
@@ -29,56 +32,53 @@ object AuditQueries {
         sum("rows").as("total_rows"))
     }
 
+  /** The committed sketches rows that carry KLL length bytes: a batch
+    * committed before graft-0.5 carries a t-digest column instead.
+    */
+  private def kllSketches(spark: SparkSession, io: TableIO): Option[DataFrame] =
+    io.readCommitted(spark, "sketches").filter(_.columns.contains("kll_len"))
+      .map(_.where(col("kll_len").isNotNull))
+
   /** Sketched two-sample KS between any two COMMITTED batches, straight
-    * from the audited t-digest bytes — no re-scan of either partition.
-    * This is how drift questions about historical batches are answered
-    * after the data may already be gone.
+    * from the audited KLL bytes — no re-scan of either partition. This is
+    * how drift questions about historical batches are answered after the
+    * data may already be gone. None when either batch has no KLL bytes.
     */
   def ksBetweenBatches(spark: SparkSession, io: TableIO,
                        b1: Long, b2: Long): Option[graft.drift.KsTest.KsResult] =
-    io.readCommitted(spark, "sketches").flatMap { df =>
+    kllSketches(spark, io).flatMap { df =>
       val rows = df.where(col("batch_id").isin(b1, b2))
-        .select(col("batch_id").cast("bigint"), col("tdigest_len")).collect()
-        .map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+        .select(col("batch_id").cast("bigint"), col("kll_len")).collect()
+        .map(r => r.getLong(0) -> SuiteRunner.kll(r.getAs[Array[Byte]](1))).toMap
       for (x <- rows.get(b1); y <- rows.get(b2))
-        yield graft.drift.KsTest.ksStatisticSketched(
-          Sketches.heapify(x), Sketches.heapify(y))
+        yield graft.drift.KsTest.ksStatisticSketched(x, y)
     }
 
   /** Global heavy-hitter repos across ALL committed batches by merging the
     * audited frequent-items bytes driver-side — the cross-run mega-repo
     * report (skew/capacity telemetry) with Misra-Gries guarantees:
     * every repo whose total count ≥ `threshold` is present
-    * (NO_FALSE_NEGATIVES), and each row's (lb, ub) bracket its true count
-    * with ub − lb ≤ totalRows / (2 · FreqMapSize). The exact per-batch
-    * repo_metrics table cannot answer this without re-scanning: per-batch
-    * top-k lists are not mergeable (a repo just below every batch's cut
-    * can lead the global ranking).
+    * (NO_FALSE_NEGATIVES), and each row's (lb, ub) bracket its true count.
+    * The exact per-batch repo_metrics table cannot answer this without
+    * re-scanning: per-batch top-k lists are not mergeable (a repo just
+    * below every batch's cut can lead the global ranking).
     */
   def hotRepos(spark: SparkSession, io: TableIO,
                threshold: Long): Option[Seq[(String, Long, Long, Long)]] =
     io.readCommitted(spark, "sketches").map { df =>
-      val bytes = df.select("freq_repo").collect().map(_.getAs[Array[Byte]](0))
-      if (bytes.isEmpty) Seq.empty
-      else {
-        val merged = graft.stats.FreqSketch.heapify(bytes.reduce(graft.stats.FreqSketch.mergeBytes))
-        merged.getFrequentItems(threshold,
-            org.apache.datasketches.frequencies.ErrorType.NO_FALSE_NEGATIVES)
-          .sortBy(r => (-r.getEstimate, r.getItem))
-          .map(r => (r.getItem, r.getEstimate, r.getLowerBound, r.getUpperBound))
-          .toSeq
-      }
+      FreqSketch.frequentItems(
+        df.select("freq_repo").collect().map(_.getAs[Array[Byte]](0)).toSeq, threshold)
     }
 
-  /** Global content-length quantiles by merging committed t-digest bytes
-    * driver-side (rows are O(#batches) — tiny).
+  /** Global content-length quantiles from the merge of the committed KLL
+    * bytes, one aggregate over the O(#batches) sketches rows.
     */
   def globalLengthQuantiles(spark: SparkSession, io: TableIO,
                             qs: Seq[Double] = Seq(0.5, 0.95, 0.99)): Option[Map[Double, Double]] =
-    io.readCommitted(spark, "sketches").map { df =>
-      val bytes = df.select("tdigest_len").collect().map(_.getAs[Array[Byte]](0))
-      val merged = bytes.reduce(Sketches.mergeBytes)
-      val dig = Sketches.heapify(merged)
-      qs.map(q => q -> dig.getQuantile(q)).toMap
+    kllSketches(spark, io).map { df =>
+      val merged = kll_merge_agg_bigint(col("kll_len"))
+      val r = df.agg(array(qs.map(q => kll_sketch_get_quantile_bigint(merged, lit(q))): _*))
+        .collect()(0)
+      qs.zip(r.getSeq[Long](0).map(_.toDouble)).toMap
     }
 }

@@ -621,6 +621,19 @@ object Dedup {
 
   // ---------------------------------------------------------- boilerplate
 
+  /** The map size [[boilerplateNgrams]] suggests after a refusal: the
+    * smallest power of two above `maxMapSize` whose projected error
+    * maxErr·maxMapSize/size is below `minDocs` (maxErr already embeds the
+    * library's 3.5·N/maxMapSize bound), capped at the largest map within
+    * Spark's limit of 1,000,000 items tracked.
+    */
+  private[graft] def retryMapSize(maxErr: Long, maxMapSize: Int, minDocs: Long): Int = {
+    val largest = Integer.highestOneBit(graft.stats.FreqSketch.MaxItemsTracked / 3 * 4)
+    var size = math.min(maxMapSize * 2, largest)
+    while (size < largest && maxErr.toDouble * maxMapSize / size >= minDocs) size *= 2
+    size
+  }
+
   /** Cross-document boilerplate n-gram detection (the C4 curation step —
     * Raffel et al. 2020 strip boilerplate lines; Lee et al. 2021 show
     * cross-document repeated spans dominate duplicated training text):
@@ -653,29 +666,21 @@ object Dedup {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val grams = docs.select(col(idCol).as("doc_id"),
       explode(shingleStrings(col(textCol), n)).as("gram"))
-    val bytes = grams.agg(
-      graft.stats.FreqSketch.freqItemsAgg(col("gram"), maxMapSize).as("sk"))
+    val bytes = grams.agg(graft.stats.FreqSketch.accumulate(col("gram"), maxMapSize))
       .collect()(0).getAs[Array[Byte]](0)
     // the sketch's OWN exact error bound for this run (0 in the exact
     // regime) — getFrequentItems clamps its threshold up to this value,
     // so a minDocs at or below it cannot honor NO_FALSE_NEGATIVES (and an
     // a-priori N-based epsilon understates the library's real bound)
     val maxErr = graft.stats.FreqSketch.heapify(bytes).getMaximumError
-    require(minDocs > maxErr, {
-      var suggest = maxMapSize.toLong * 2
-      // maxErr already embeds the library's 3.5·N/maxMapSize bound, so the
-      // projected error at `suggest` is maxErr·maxMapSize/suggest — an
-      // extra 3.5 factor here double-counted the constant and suggested a
-      // map ~4x larger than needed
-      while (suggest < Int.MaxValue / 4 &&
-             maxErr.toDouble * maxMapSize / suggest >= minDocs) suggest *= 2
+    require(minDocs > maxErr,
       s"minDocs=$minDocs is not above the sketch's actual error bound" +
         s" ($maxErr at maxMapSize=$maxMapSize) — NO_FALSE_NEGATIVES needs" +
-        s" minDocs > maxError; retry with maxMapSize=$suggest (power of 2)"
-    })
+        s" minDocs > maxError; retry with maxMapSize=" +
+        s"${retryMapSize(maxErr, maxMapSize, minDocs)} (power of 2)")
     // an empty candidate list needs no special case: isin() over zero
     // values is constant-false and the groupBy yields the empty result
-    val cand = graft.stats.FreqSketch.hotKeys(bytes, minDocs)
+    val cand = graft.stats.FreqSketch.frequentItems(Seq(bytes), minDocs).map(_._1)
     grams.where(col("gram").isin(cand: _*))
       .groupBy("gram").agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= minDocs)

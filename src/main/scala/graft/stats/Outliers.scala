@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * side is ONE scan with a codegen'd filter — no window, no second
   * shuffle, and the plan stays lazy (no driver action at build time).
   * At 10^12 rows exact percentile is the one expensive piece — swap in
-  * the t-digest sketch ([[Sketches]], A15) when fence precision beyond
+  * a KLL sketch (`kll_sketch_agg_double`, A15) when fence precision beyond
   * the sketch error is not required; the flag semantics are unchanged.
   *
   * Null values get false flags and a null z (a missing value is a

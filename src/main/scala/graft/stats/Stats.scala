@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 /** Per-column statistics row — the "reference-distribution snapshot" of the
   * reference DriftDetector (DESIGN.md:539-551: mean/std/min/max/median +
   * 10-bin histogram), extended with the north-star sketch columns
-  * (approx distinct via HLL, quantiles via t-digest bytes).
+  * (approx distinct via HLL).
   */
 case class ColStats(
     column: String,

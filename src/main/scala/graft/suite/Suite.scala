@@ -1,5 +1,8 @@
 package graft.suite
 
+import org.apache.datasketches.kll.KllLongsSketch
+import org.apache.datasketches.memory.Memory
+import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.drift.DriftMath
@@ -31,7 +34,7 @@ case class Lineage(
     wall_ms: Long)
 
 object SuiteConfig {
-  val SuiteVersion = "graft-0.4" // 0.4: artifacts/sketches carry freq_repo bytes
+  val SuiteVersion = "graft-0.5" // 0.5: artifacts/sketches carry kll_len, not tdigest_len
   val KsThreshold = 0.05      // DESIGN.md:534
   val PsiThreshold = 0.2
   val ChiSqThreshold = 0.05
@@ -46,10 +49,11 @@ object SuiteConfig {
   val ViolationCap = 100
   /** Exact-KS routing cap: per-batch distinct content-length cardinality
     * (approx, from the job-1 HLL) above which the driver-side length-count
-    * collect is SKIPPED and the KS/PSI(length) verdicts are computed from
-    * the mergeable t-digest bytes instead. Below the cap the collect is
-    * ≤ ~1.6 MB per batch (cap × 16 bytes); above it, real code corpora can
-    * reach 10^6+ distinct lengths × langs × batches — a driver OOM.
+    * collect is SKIPPED for that batch and its KS/PSI(length) verdicts
+    * are computed from the mergeable KLL bytes instead. Below the cap the
+    * collect is ≤ ~1.6 MB per batch (cap × 16 bytes); above it, real code
+    * corpora can reach 10^6+ distinct lengths × langs × batches — a
+    * driver OOM.
     */
   val LenCardCap = 100000L
   /** Per-buffer entry bound of the mergeable frequent-items (heavy-hitters)
@@ -61,6 +65,12 @@ object SuiteConfig {
     * re-scan.
     */
   val FreqMapSize = 1024
+  /** KLL sketch size of the content-length sketch aggregated in the
+    * artifacts scan: normalized rank error ε = 0.0028 per sketch, so the
+    * sketched KS statistic (two sketches, error ≤ 2ε = 0.0056) stays well
+    * under the KS critical D even for 5,000-row batches (0.027).
+    */
+  val KllK = 1000
 }
 
 /** Batch-parallel validation suite over the code table
@@ -70,7 +80,7 @@ object SuiteConfig {
   * full-table jobs, not O(#batches) loops:
   *   1. one-pass scalar aggregates per batch (counts, length moments,
   *      missing counts, sha-mismatch counts + capped sha samples, the
-  *      capped completeness_path sample, HLL, heavy-hitters and t-digest
+  *      capped completeness_path sample, HLL, heavy-hitters and KLL
   *      sketch bytes) — single ObjectHashAggregate, map-side partial.
   *      It reads every row whose batch is not committed yet (the committed
   *      batches are pruned by metadata, not listed by a scan), so its keys
@@ -81,9 +91,9 @@ object SuiteConfig {
   *   2. one grouping-sets aggregate over the cached projection — lang
   *      marginals → chi-square / PSI(lang); length marginals → exact KS +
   *      PSI(length), computed ONLY while the distinct-length cardinality
-  *      stays under [[SuiteConfig.LenCardCap]]; above the cap the
-  *      KS/PSI(length) verdicts come from the job-1 t-digest bytes
-  *      (mergeable, scale-free) and no per-length rows reach the driver;
+  *      stays under [[SuiteConfig.LenCardCap]]; a batch above the cap
+  *      takes its KS/PSI(length) verdicts from the job-1 KLL bytes
+  *      (mergeable, scale-free) and sends no per-length rows to the driver;
   *   3. one per-batch aggregate over three group streams: uniqueness
   *      (duplicate-key candidates on a 64-bit key hash, re-verified on the
   *      real keys), referential (anti-join against the broadcast
@@ -118,7 +128,7 @@ object SuiteRunner {
       fingerprint: String,
       hllKey: Array[Byte] = Array.empty,     // mergeable HLL of (repo,path,commit)
       hllRepo: Array[Byte] = Array.empty,    // mergeable HLL of repo
-      tdigestLen: Array[Byte] = Array.empty, // mergeable t-digest of content length
+      kllLen: Array[Byte] = Array.empty,     // mergeable KLL sketch of content length
       freqRepo: Array[Byte] = Array.empty,   // mergeable heavy-hitters sketch of repo
       shaSamples: Seq[String] = Seq.empty,   // capped JSON {repo,path,commit} triples
       lenCardApprox: Long = 0L,              // approx distinct lengths (routing)
@@ -140,7 +150,7 @@ object SuiteRunner {
       lang_counts: Map[String, Long],
       len_vals: Seq[Long], len_cnts: Seq[Long],
       fingerprint: String,
-      hll_key: Array[Byte], hll_repo: Array[Byte], tdigest_len: Array[Byte],
+      hll_key: Array[Byte], hll_repo: Array[Byte], kll_len: Array[Byte],
       freq_repo: Array[Byte],
       sha_samples: Seq[String], len_card: Long)
 
@@ -148,14 +158,14 @@ object SuiteRunner {
     a.batchId, a.rows, a.lenMin, a.lenMax, a.lenMean, a.lenStd,
     a.missingPath, a.missingLang, a.missingContent, a.shaMismatch,
     a.langCounts, a.lenCounts.map(_._1), a.lenCounts.map(_._2),
-    a.fingerprint, a.hllKey, a.hllRepo, a.tdigestLen, a.freqRepo,
+    a.fingerprint, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo,
     a.shaSamples, a.lenCardApprox)
 
   def fromRow(r: ArtifactRow): BatchArtifacts = BatchArtifacts(
     r.batch_id, r.rows, r.len_min, r.len_max, r.len_mean, r.len_std,
     r.missing_path, r.missing_lang, r.missing_content, r.sha_mismatch,
     r.lang_counts, r.len_vals.zip(r.len_cnts),
-    r.fingerprint, r.hll_key, r.hll_repo, r.tdigest_len, r.freq_repo,
+    r.fingerprint, r.hll_key, r.hll_repo, r.kll_len, r.freq_repo,
     r.sha_samples, r.len_card)
 
   /** Exact two-sample KS from distinct-value count maps (driver-side; the
@@ -276,14 +286,13 @@ object SuiteRunner {
       // (decimal(38,0) cannot overflow under ANSI mode at any row count)
       sum(col("rowhash").cast("decimal(38,0)")).as("fp"),
       // mergeable sketches ride the SAME scan (no extra content pass):
-      // HLL distinct + t-digest quantiles persisted per batch (north star)
+      // HLL distinct + KLL quantiles persisted per batch (north star)
       hll_sketch_agg(col("keyhash")).as("hll_key"),
       hll_sketch_agg(col("repo")).as("hll_repo"),
-      graft.stats.Sketches.tdigestAgg(col("len").cast("double")).as("tdigest_len"),
+      kll_sketch_agg_bigint(col("len"), KllK).as("kll_len"),
       // heavy-hitters sketch of repo rides the same scan: the mega-repo
       // detector, mergeable across batches from the committed bytes
-      graft.stats.FreqSketch.freqItemsAgg(col("repo"), SuiteConfig.FreqMapSize)
-        .as("freq_repo")).collect()
+      graft.stats.FreqSketch.accumulate(col("repo"), FreqMapSize).as("freq_repo")).collect()
     if (rows.exists(_.isNullAt(0))) throw new IllegalArgumentException(
       "the input has rows with a null batch_id; every row must carry its batch")
     rows.map { r =>
@@ -298,7 +307,7 @@ object SuiteRunner {
         Option(r.getAs[java.math.BigDecimal]("fp"))
           .map(_.toBigInteger.toString(16)).getOrElse("0"),
         r.getAs[Array[Byte]]("hll_key"), r.getAs[Array[Byte]]("hll_repo"),
-        r.getAs[Array[Byte]]("tdigest_len"), r.getAs[Array[Byte]]("freq_repo"),
+        r.getAs[Array[Byte]]("kll_len"), r.getAs[Array[Byte]]("freq_repo"),
         r.getAs[scala.collection.Seq[String]]("sha_samples").toSeq,
         r.getAs[Long]("len_card"),
         r.getAs[scala.collection.Seq[Row]]("path_samples").toSeq
@@ -310,19 +319,22 @@ object SuiteRunner {
     * ONE grouping-sets aggregate over the CACHED slim projection (one
     * Expand, one exchange, one driver action). Lang marginals (always tiny
     * — |langs| bounded) feed chi-square/PSI(lang). Length marginals feed
-    * exact KS and PSI(length) — but ONLY below the cardinality cap:
-    * per-length rows are unbounded on arbitrary inputs (10^6+ distinct
-    * lengths on real code), so above the cap the lang set runs alone, the
-    * driver never sees per-length counts and the drift verdicts fall back
-    * to the t-digest bytes already aggregated in job 1.
+    * exact KS and PSI(length) — but ONLY for a batch below the cardinality
+    * cap: per-length rows are unbounded on arbitrary inputs (10^6+
+    * distinct lengths on real code), so a batch above the cap groups all
+    * its rows under one null length, which is dropped here; its drift
+    * verdicts fall back to the KLL bytes already aggregated in job 1. The
+    * routing is per batch, so a batch's verdicts do not depend on which
+    * other batches share the call.
     */
   private def withMarginals(slim: DataFrame, scalars: Map[Long, BatchArtifacts],
                             lenCardCap: Long): Map[Long, BatchArtifacts] = {
-    val maxLenCard = scalars.valuesIterator.map(_.lenCardApprox).maxOption.getOrElse(0L)
-    val langSet = Seq(col("batch_id"), col("lang"))
-    val lenSet = Seq(col("batch_id"), col("len"))
-    val marginals = slim
-      .groupingSets(if (maxLenCard > lenCardCap) Seq(langSet) else Seq(langSet, lenSet),
+    val overCap = scalars.values.filter(_.lenCardApprox > lenCardCap).map(_.batchId).toSet
+    val routed =
+      if (overCap.isEmpty) slim
+      else slim.withColumn("len", when(!col("batch_id").isin(overCap.toSeq: _*), col("len")))
+    val marginals = routed
+      .groupingSets(Seq(Seq(col("batch_id"), col("lang")), Seq(col("batch_id"), col("len"))),
         col("batch_id"), col("lang"), col("len"))
       .agg(count(lit(1)).as("n"), grouping("len").as("lang_set"))
       .collect()
@@ -335,7 +347,7 @@ object SuiteRunner {
       }
     // a null length (null content) reads back as 0, uncoalesced
     val lenCounts: Map[Long, Seq[(Long, Long)]] = lenRows
-      .groupBy(_.getAs[Long]("batch_id"))
+      .groupBy(_.getAs[Long]("batch_id")).removedAll(overCap)
       .map { case (b, rows) =>
         b -> rows.map(r => r.getAs[Long]("len") -> r.getAs[Long]("n"))
           .toSeq.sortBy(_._1)
@@ -346,16 +358,21 @@ object SuiteRunner {
     }
   }
 
-  /** Length histogram proportions from a t-digest sketch over the same
+  /** Persisted KLL bytes as a sketch. */
+  def kll(bytes: Array[Byte]): KllLongsSketch = KllLongsSketch.heapify(Memory.wrap(bytes))
+
+  /** Length histogram proportions from a KLL sketch over the same
     * baseline-pinned equi-width bins as [[histProportions]]: bin mass =
     * rank(right edge) − rank(left edge), with the edge bins absorbing the
-    * out-of-range tails (matching the exact path's clamping).
+    * out-of-range tails (matching the exact path's clamping). Lengths are
+    * integers, so an edge's rank counts the lengths strictly below it: the
+    * exact path puts a length equal to an inner edge in the upper bin.
     */
-  private def histProportionsFromDigest(bytes: Array[Byte], lo: Double, hi: Double): Seq[Double] = {
-    val dig = graft.stats.Sketches.heapify(bytes)
-    if (dig.isEmpty || hi <= lo) return Seq.fill(Bins)(0.0)
+  private def histProportionsFromSketch(bytes: Array[Byte], lo: Double, hi: Double): Seq[Double] = {
+    val sk = kll(bytes)
+    if (sk.isEmpty || hi <= lo) return Seq.fill(Bins)(0.0)
     val edges = (0 to Bins).map(i => lo + (hi - lo) * i / Bins)
-    val ranks = edges.map(dig.getRank)
+    val ranks = edges.map(e => sk.getRank(math.ceil(e).toLong, QuantileSearchCriteria.EXCLUSIVE))
     (0 until Bins).map { i =>
       val left = if (i == 0) 0.0 else ranks(i)
       val right = if (i == Bins - 1) 1.0 else ranks(i + 1)
@@ -541,7 +558,7 @@ object SuiteRunner {
       // is assembled driver-side from ≤ ViolationCap keys/batch. The
       // completeness_path sample (first in (repo, commit, lang) order) and
       // the per-batch MERGEABLE sketches (north star: HLL distinct +
-      // t-digest quantiles persisted so later/resumed runs answer
+      // KLL quantiles persisted so later/resumed runs answer
       // whole-table questions by merging committed bytes, never
       // re-scanning) rode job 1 too, so these three writes start before
       // job 2.
@@ -558,8 +575,8 @@ object SuiteRunner {
       }.toDF("batch_id", "repo", "commit", "lang")
       val sketchRows = pending.map { b =>
         val a = scalars(b)
-        (b, a.rows, a.hllKey, a.hllRepo, a.tdigestLen, a.freqRepo)
-      }.toDF("batch_id", "rows", "hll_key", "hll_repo", "tdigest_len", "freq_repo")
+        (b, a.rows, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo)
+      }.toDF("batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")
       val earlyWrites = Seq(
         write("violations_sha256_invariant", shaViol),
         write("violations_completeness_path", emptyPathViol),
@@ -657,23 +674,21 @@ object SuiteRunner {
     val basePropLen = histProportions(base.lenCounts, base.lenMin, base.lenMax)
     pending.flatMap { b =>
       val a = arts(b)
-      // exact per-length counts below the cardinality cap; t-digest sketch
-      // path above it (no per-length rows ever reached the driver)
+      // exact per-length counts below the cardinality cap; KLL sketch path
+      // above it (no per-length rows of that batch reached the driver)
       val exactLen = base.lenCounts.nonEmpty && a.lenCounts.nonEmpty
       val (ksD, ksP) =
         if (exactLen) ksFromCounts(base.lenCounts, a.lenCounts)
         else {
-          val r = graft.drift.KsTest.ksStatisticSketched(
-            graft.stats.Sketches.heapify(base.tdigestLen),
-            graft.stats.Sketches.heapify(a.tdigestLen))
+          val r = graft.drift.KsTest.ksStatisticSketched(kll(base.kllLen), kll(a.kllLen))
           (r.statistic, r.pValue)
         }
       val psiLen =
         if (exactLen)
           DriftMath.psi(basePropLen, histProportions(a.lenCounts, base.lenMin, base.lenMax))
         else DriftMath.psi(
-          histProportionsFromDigest(base.tdigestLen, base.lenMin, base.lenMax),
-          histProportionsFromDigest(a.tdigestLen, base.lenMin, base.lenMax))
+          histProportionsFromSketch(base.kllLen, base.lenMin, base.lenMax),
+          histProportionsFromSketch(a.kllLen, base.lenMin, base.lenMax))
       val psiLang = psiFromCounts(base.langCounts, a.langCounts)
       val (chiStat, chiP, cramersV) = chiSqFromCounts(base.langCounts, a.langCounts)
       val meanShift = if (base.lenStd.isNaN || base.lenStd == 0) 0.0

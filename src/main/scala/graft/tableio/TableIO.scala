@@ -78,12 +78,18 @@ class ParquetTableIO(root: String) extends TableIO {
   }
 
   /** Read only COMMITTED partitions (uncommitted data dirs are invisible —
-    * the snapshot-isolation property resume depends on).
+    * the snapshot-isolation property resume depends on). The schema is the
+    * union of every partition's: partitions committed by different suite
+    * versions may carry different columns, and a column missing from a
+    * partition reads as null there (without the merge, the first file's
+    * schema would hide every newer column). The schema read is one job
+    * either way; the merge reads every partition's footer in it.
     */
   override def readCommitted(spark: SparkSession, table: String): Option[DataFrame] = {
     val parts = listCommitted(table).map(partDir(table, _))
       .filter(p => Files.isDirectory(Paths.get(p)))
     if (parts.isEmpty) None
-    else Some(spark.read.option("basePath", tableDir(table)).parquet(parts: _*))
+    else Some(spark.read.option("basePath", tableDir(table)).option("mergeSchema", "true")
+      .parquet(parts: _*))
   }
 }

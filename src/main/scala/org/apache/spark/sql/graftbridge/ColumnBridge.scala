@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into the `private[sql]` Column ⇄ Expression converters of the
   * classic Spark 4 API — needed to expose custom Catalyst expressions
-  * (e.g. the t-digest aggregate) as first-class `Column`s.
+  * (e.g. the Bloom aggregate) as first-class `Column`s.
   */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)

@@ -54,5 +54,9 @@ class BoilerplateSpec extends GraftSpec {
         maxMapSize = 8)
     }
     assert(e.getMessage.contains("error bound") && e.getMessage.contains("power of 2"))
+    // the suggestion clears minDocs, and never exceeds Spark's item limit
+    assert(Dedup.retryMapSize(maxErr = 100, maxMapSize = 1024, minDocs = 10) == 16384)
+    assert(graft.stats.FreqSketch.itemsTracked(Dedup.retryMapSize(Long.MaxValue / 4, 8, 2)) <=
+      graft.stats.FreqSketch.MaxItemsTracked)
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.stats.FreqSketch
+import org.apache.datasketches.common.ArrayOfStringsSerDe
+import org.apache.datasketches.frequencies.ItemsSketch
 import org.apache.spark.sql.functions._
 
 class FreqSketchSpec extends GraftSpec {
@@ -39,15 +41,32 @@ class FreqSketchSpec extends GraftSpec {
     val xs = skewed(10000, 3)
     val (a, b) = xs.splitAt(5000)
     def bytes(ys: Seq[String]) =
-      ys.toDF("k").agg(FreqSketch.freqItemsAgg(col("k"), 4096))
+      ys.toDF("k").agg(FreqSketch.accumulate(col("k"), 4096))
         .collect()(0).getAs[Array[Byte]](0)
-    val merged = FreqSketch.heapify(FreqSketch.mergeBytes(bytes(a), bytes(b)))
-    val whole = FreqSketch.heapify(bytes(xs))
-    val keys = exactCounts(xs).keySet
-    assert(keys.forall(k => merged.getEstimate(k) == whole.getEstimate(k)))
+    // decoded estimates, not bytes, are what the law compares
+    val whole = FreqSketch.frequentItems(Seq(bytes(xs)), 1L)
+    assert(whole.map(r => r._1 -> r._2).toMap == exactCounts(xs))
+    assert(FreqSketch.frequentItems(Seq(bytes(a), bytes(b)), 1L) == whole)
     // commutativity
-    val ba = FreqSketch.heapify(FreqSketch.mergeBytes(bytes(b), bytes(a)))
-    assert(keys.forall(k => ba.getEstimate(k) == whole.getEstimate(k)))
+    assert(FreqSketch.frequentItems(Seq(bytes(b), bytes(a)), 1L) == whole)
+  }
+
+  test("graft-0.4 freq_repo bytes merge with the built-in sketch's bytes") {
+    // graft-0.4 committed ItemsSketch[String](1024) bytes of its own
+    val xs = skewed(6000, 23)
+    val (a, b) = xs.splitAt(2500)
+    val old = new ItemsSketch[String](1024)
+    a.foreach(old.update)
+    val oldBytes = old.toByteArray(new ArrayOfStringsSerDe)
+    val newBytes = b.toDF("k")
+      .agg(FreqSketch.accumulate(col("k"), graft.suite.SuiteConfig.FreqMapSize))
+      .collect()(0).getAs[Array[Byte]](0)
+    val truth = exactCounts(xs)
+    Seq(Seq(oldBytes, newBytes), Seq(newBytes, oldBytes)).foreach { order =>
+      val got = FreqSketch.frequentItems(order, 1L)
+      assert(got.map(r => r._1 -> r._2).toMap == truth)
+      assert(got.forall(r => r._2 == r._3 && r._3 == r._4))
+    }
   }
 
   test("approximate regime: bounds bracket truth, frequent items never missed") {
@@ -72,12 +91,12 @@ class FreqSketchSpec extends GraftSpec {
   }
 
   test("hotKeys: NO_FALSE_NEGATIVES cut names the mega-repo, not the whole key space") {
-    // the generator's repo_0000 holds ~30% of rows
+    // the hot-key cut, decoded with frequentItems; the generator's repo_0000 holds ~30% of rows
     val code = graft.gen.CodeTableGen.generate(spark, 12000, batches = 2)
     val bytes = code
-      .agg(FreqSketch.freqItemsAgg(col("repo"), graft.suite.SuiteConfig.FreqMapSize))
+      .agg(FreqSketch.accumulate(col("repo"), graft.suite.SuiteConfig.FreqMapSize))
       .collect()(0).getAs[Array[Byte]](0)
-    val hot = FreqSketch.hotKeys(bytes, threshold = 3000L)
+    val hot = FreqSketch.frequentItems(Seq(bytes), threshold = 3000L).map(_._1)
     assert(hot.contains("repo_0000"), s"hot set $hot must include the mega-repo")
     assert(hot.size < code.select("repo").distinct().count())
   }
@@ -91,7 +110,9 @@ class FreqSketchSpec extends GraftSpec {
 
   test("maxMapSize must be a power of two") {
     intercept[IllegalArgumentException] {
-      stats.FreqItemsAgg(null, maxMapSize = 100)
+      FreqSketch.accumulate(col("k"), maxMapSize = 100)
     }
+    // Spark's maxItemsTracked is 3/4 of the map, which it sizes back up
+    assert(FreqSketch.itemsTracked(1024) == 768)
   }
 }

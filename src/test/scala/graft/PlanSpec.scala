@@ -2,7 +2,13 @@ package graft
 
 import graft.core.Tables
 import graft.gen.CodeTableGen
+import graft.suite.SuiteRunner
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan assertions: the optimizations the 100 TB framing depends on
   * must be visible in the executed plan, not assumed.
@@ -52,11 +58,25 @@ class PlanSpec extends GraftSpec {
     assert(plan.contains("WholeStageCodegen"), s"no codegen span: $plan")
   }
 
-  test("t-digest aggregate routes to ObjectHashAggregate (sketch-friendly path)") {
-    val df = Tables.lineitem(spark, sfDir).agg(
-      graft.stats.Sketches.tdigestAgg(col("l_extendedprice")))
-    val plan = executedPlan(df)
-    assert(plan.contains("ObjectHashAggregate"), s"wrong agg exec: $plan")
+  test("suite job 1 (KLL and frequent-items sketches) routes to ObjectHashAggregate") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try SuiteRunner.collectArtifacts(
+      CodeTableGen.generate(spark, 4000, batches = 2), Seq(0L, 1L))
+    finally spark.listenerManager.unregister(listener)
+    // job 1 is the one aggregate holding the sketches; listener events
+    // arrive asynchronously
+    eventually(timeout(Span(30, Seconds))) {
+      val job1 = plans.asScala.filter(_.contains("kll_sketch_agg"))
+      assert(job1.size == 1, s"job-1 plans: $job1")
+      assert(job1.head.contains("ObjectHashAggregate") && job1.head.contains("approx_top_k"),
+        s"wrong agg exec: ${job1.head}")
+    }
   }
 
   test("disk layout partitioned by batch_id prunes unread batches from the scan") {

@@ -1,6 +1,8 @@
 package graft
 
-import graft.stats.{Sketches, Stats}
+import graft.stats.Stats
+import org.apache.datasketches.kll.KllLongsSketch
+import org.apache.datasketches.memory.Memory
 import org.apache.spark.sql.functions._
 
 class StatsSpec extends GraftSpec {
@@ -35,36 +37,41 @@ class StatsSpec extends GraftSpec {
     assert(s.bin_lo == 0.0 && s.bin_hi == 10.0)
   }
 
-  test("t-digest aggregate: quantiles via Column API, mergeable bytes") {
-    val df = (1 to 10000).map(_.toDouble).toDF("x")
-    val bytes = df.agg(Sketches.tdigestAgg(col("x"))).collect()(0).getAs[Array[Byte]](0)
-    val dig = Sketches.heapify(bytes)
-    assert(dig.getTotalWeight == 10000)
-    assert(math.abs(dig.getQuantile(0.5) - 5000) < 500) // k=100 ⇒ ~5% mid-range error
-    // quantile extraction expression
-    val q = df.agg(Sketches.tdigestQuantile(Sketches.tdigestAgg(col("x")), lit(0.9)))
-      .collect()(0).getDouble(0)
-    assert(math.abs(q - 9000) < 450)
+  test("KLL aggregate: quantiles via Column API, mergeable bytes") {
+    val df = (1L to 10000L).toDF("x")
+    val k = graft.suite.SuiteConfig.KllK
+    val bytes = df.agg(kll_sketch_agg_bigint(col("x"), k)).collect()(0).getAs[Array[Byte]](0)
+    val sk = KllLongsSketch.heapify(Memory.wrap(bytes))
+    val eps = sk.getNormalizedRankError(false)
+    assert(sk.getN == 10000L)
+    assert(math.abs(sk.getRank(5000L) - 0.5) <= eps)
+    // quantile extraction expression over the same aggregate
+    val q = df.agg(kll_sketch_get_quantile_bigint(kll_sketch_agg_bigint(col("x"), k), lit(0.9)))
+      .collect()(0).getLong(0)
+    assert(math.abs(q - 9000L) <= 10000 * eps)
   }
 
-  test("property: t-digest split/merge preserves weight and rank (salting exactness)") {
-    val rnd = new scala.util.Random(42) // seeded — deterministic property trials
+  test("property: KLL split/merge preserves n, and ranks stay within the sketch's bound") {
+    // KLL compaction is randomized, so the law compares decoded ranks with
+    // the exact ones, never the bytes of two sketches
+    val rnd = new scala.util.Random(42) // seeded data; compaction is not
     (1 to 25).foreach { _ =>
-      val xs = List.fill(300)(rnd.nextDouble() * 1000.0)
-      val cut = 1 + rnd.nextInt(298)
-      val (a, b) = xs.splitAt(cut)
-      val whole = new org.apache.datasketches.tdigest.TDigestDouble(100.toShort)
-      xs.foreach(whole.update)
-      val da = new org.apache.datasketches.tdigest.TDigestDouble(100.toShort)
-      a.foreach(da.update)
-      val db = new org.apache.datasketches.tdigest.TDigestDouble(100.toShort)
-      b.foreach(db.update)
-      val merged = Sketches.heapify(Sketches.mergeBytes(da.toByteArray, db.toByteArray))
-      assert(merged.getTotalWeight == whole.getTotalWeight)
-      // rank agreement within digest accuracy at a few probe points
+      val xs = Array.fill(3000)(rnd.nextInt(1000000).toLong)
+      val cut = 1 + rnd.nextInt(xs.length - 2)
+      def sketch(ys: Seq[Long]): Array[Byte] = {
+        val sk = KllLongsSketch.newHeapInstance(200)
+        ys.foreach(sk.update)
+        sk.toByteArray
+      }
+      val merged = KllLongsSketch.heapify(Memory.wrap(sketch(xs.take(cut).toSeq)))
+      merged.merge(KllLongsSketch.heapify(Memory.wrap(sketch(xs.drop(cut).toSeq))))
+      assert(merged.getN == xs.length)
+      val eps = merged.getNormalizedRankError(false)
+      val sorted = xs.sorted
       Seq(0.25, 0.5, 0.75).foreach { q =>
-        val v = whole.getQuantile(q)
-        assert(math.abs(merged.getRank(v) - whole.getRank(v)) < 0.08)
+        val v = sorted((q * xs.length).toInt)
+        val exact = sorted.count(_ <= v).toDouble / xs.length
+        assert(math.abs(merged.getRank(v) - exact) <= eps, s"rank of $v")
       }
     }
   }

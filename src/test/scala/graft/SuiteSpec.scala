@@ -62,27 +62,54 @@ class SuiteSpec extends GraftSpec {
   }
 
   test("resume: killed run re-validates ONLY uncommitted batches, final audit identical") {
+    // a cap between the batches' length cardinalities: batch 3 (the
+    // drifted one, with the most distinct lengths) takes the sketched
+    // path, batches 0-2 the exact one, in any split of the calls
+    val arts = SuiteRunner.collectArtifacts(
+      code.withColumn("batch_id", col("batch_id").cast("bigint")), Seq(0L, 1L, 2L, 3L))
+    val cap = (0L to 2L).map(arts(_).lenCardApprox).max
+    assert(arts(3L).lenCardApprox > cap)
+    def committed(io: ParquetTableIO): Seq[Verdict] = {
+      import spark.implicits._
+      io.readCommitted(spark, "verdicts").get.as[Verdict].collect().toSeq
+        .sortBy(v => (v.batch_id, v.check, v.column))
+    }
     withTempDir("graft_suite") { rootA => withTempDir("graft_suite") { rootB =>
       val ioA = new ParquetTableIO(rootA)
-      SuiteRunner.run(spark, code, dim, ioA)
-      val full = ioA.readCommitted(spark, "verdicts").get
-        .orderBy("batch_id", "check", "column").collect().map(_.toString).toSeq
+      SuiteRunner.run(spark, code, dim, ioA, lenCardCap = cap)
+      val full = committed(ioA)
 
-      // simulate a kill after batches 0,1: run, then delete commits 2,3
+      // batches 0,1 validated by a call without the over-cap batch; then a
+      // run killed after validating 2,3: delete their commits
       val ioB = new ParquetTableIO(rootB)
-      SuiteRunner.run(spark, code, dim, ioB)
+      SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, ioB, lenCardCap = cap)
+      SuiteRunner.run(spark, code, dim, ioB, lenCardCap = cap)
       Seq(2L, 3L).foreach { b =>
         Files.delete(Path.of(s"$rootB/verdicts/_manifest/p$b.json"))
       }
       assert(ioB.listCommitted("verdicts") == Seq(0L, 1L))
-      val resumed = SuiteRunner.run(spark, code, dim, ioB)
+      val resumed = SuiteRunner.run(spark, code, dim, ioB, lenCardCap = cap)
       assert(resumed.map(_.batch_id).distinct.sorted == Seq(2L, 3L), "must only touch pending batches")
-      val after = ioB.readCommitted(spark, "verdicts").get
-        .orderBy("batch_id", "check", "column").collect().map(_.toString).toSeq
-      assert(after == full, "resumed audit must equal single-run audit")
+      val after = committed(ioB)
+      assert(after.map(v => (v.batch_id, v.check, v.column)) ==
+        full.map(v => (v.batch_id, v.check, v.column)))
+
+      // below the cap: the committed verdicts are identical, row for row
+      val (afterExact, afterSketched) = after.partition(_.batch_id < 3)
+      val (fullExact, fullSketched) = full.partition(_.batch_id < 3)
+      assert(afterExact.map(_.toString) == fullExact.map(_.toString),
+        "resumed audit must equal single-run audit")
+      // over the cap: the sketched length drift of two runs agrees within
+      // the KLL rank error, since compaction is randomized
+      val eps = SuiteRunner.kll(arts(3L).kllLen).getNormalizedRankError(false)
+      afterSketched.zip(fullSketched).foreach { case (x, y) =>
+        if (x.column == "content_length" && (x.check == "drift_ks" || x.check == "drift_psi"))
+          assert(math.abs(x.metric - y.metric) <= 2 * eps, s"$x vs $y")
+        else assert(x.toString == y.toString)
+      }
 
       // idempotence: nothing pending → no-op
-      assert(SuiteRunner.run(spark, code, dim, ioB).isEmpty)
+      assert(SuiteRunner.run(spark, code, dim, ioB, lenCardCap = cap).isEmpty)
     } }
   }
 
@@ -99,7 +126,7 @@ class SuiteSpec extends GraftSpec {
       val qs = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
       val exactMedian = code.select(median(length(col("content")))).collect()(0).getDouble(0)
       assert(math.abs(qs(0.5) - exactMedian) / exactMedian < 0.1,
-        s"t-digest p50 ${qs(0.5)} vs exact $exactMedian")
+        s"KLL p50 ${qs(0.5)} vs exact $exactMedian")
     }
   }
 
@@ -226,6 +253,41 @@ class SuiteSpec extends GraftSpec {
         assert(fullMap((v.check, v.column)) == ((v.metric, v.p_value.toString, v.passed)),
           s"mismatch: $v")
       }
+    }
+  }
+
+  test("version-mixed audit root: graft-0.4 batches beside the current suite's") {
+    withTempDir("graft_suite") { root =>
+      val io = new ParquetTableIO(root)
+      SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, io)
+      // batches 0,1 as graft-0.4 committed them: the length sketch under
+      // `tdigest_len` (its bytes are never decoded, so the current ones
+      // stand in) and artifacts stamped with the old version
+      Seq("sketches", "artifacts").foreach { t =>
+        (0L to 1L).foreach { b =>
+          val dir = s"$root/$t/batch_id=$b"
+          val df = spark.read.parquet(dir)
+          val old = spark.createDataFrame(df.collectAsList(), df.schema)
+            .withColumnRenamed("kll_len", "tdigest_len")
+          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+          old.write.parquet(dir)
+        }
+      }
+      (0L to 1L).foreach(b => io.commit("artifacts", b, s"""{"batch_id":$b,"suite":"graft-0.4"}"""))
+
+      val verdicts = SuiteRunner.run(spark, code.where(col("batch_id") < 3), dim, io)
+      assert(verdicts.map(_.batch_id).distinct == Seq(2L))
+      assert(io.commitMeta("artifacts", 0L).exists(_.contains(graft.suite.SuiteConfig.SuiteVersion)),
+        "baseline artifacts not re-stamped")
+      val hot = graft.audit.AuditQueries.hotRepos(spark, io, threshold = 50L).get
+      assert(hot.head._1 == "repo_0000")
+      val g = graft.audit.AuditQueries.globalDistinct(spark, io).get.collect()(0)
+      assert(g.getAs[Long]("total_rows") == 15000L)
+      // a batch without KLL bytes has no sketched KS; the new batch does
+      assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 1L, 2L).isEmpty)
+      assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 2L, 2L).exists(_.statistic == 0.0))
+      val qs = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
+      assert(qs(0.5) > 0)
     }
   }
 
