@@ -32,13 +32,6 @@ object AuditQueries {
         sum("rows").as("total_rows"))
     }
 
-  /** The committed sketches rows that carry KLL length bytes: a batch
-    * committed before graft-0.5 carries a t-digest column instead.
-    */
-  private def kllSketches(spark: SparkSession, io: TableIO): Option[DataFrame] =
-    io.readCommitted(spark, "sketches").filter(_.columns.contains("kll_len"))
-      .map(_.where(col("kll_len").isNotNull))
-
   /** Sketched two-sample KS between any two COMMITTED batches, straight
     * from the audited KLL bytes — no re-scan of either partition. This is
     * how drift questions about historical batches are answered after the
@@ -46,8 +39,8 @@ object AuditQueries {
     */
   def ksBetweenBatches(spark: SparkSession, io: TableIO,
                        b1: Long, b2: Long): Option[graft.drift.KsTest.KsResult] =
-    kllSketches(spark, io).flatMap { df =>
-      val rows = df.where(col("batch_id").isin(b1, b2))
+    io.readCommitted(spark, "sketches").filter(_.columns.contains("kll_len")).flatMap { df =>
+      val rows = df.where(col("batch_id").isin(b1, b2) && col("kll_len").isNotNull)
         .select(col("batch_id").cast("bigint"), col("kll_len")).collect()
         .map(r => r.getLong(0) -> SuiteRunner.kll(r.getAs[Array[Byte]](1))).toMap
       for (x <- rows.get(b1); y <- rows.get(b2))
@@ -71,14 +64,22 @@ object AuditQueries {
     }
 
   /** Global content-length quantiles from the merge of the committed KLL
-    * bytes, one aggregate over the O(#batches) sketches rows.
+    * bytes, and the committed batches they leave out: a batch committed
+    * before graft-0.5 carries a t-digest column instead, which nothing
+    * decodes. One aggregate over the O(#batches) sketches rows; the map is
+    * empty when no batch carries KLL bytes.
     */
   def globalLengthQuantiles(spark: SparkSession, io: TableIO,
-                            qs: Seq[Double] = Seq(0.5, 0.95, 0.99)): Option[Map[Double, Double]] =
-    kllSketches(spark, io).map { df =>
-      val merged = kll_merge_agg_bigint(col("kll_len"))
-      val r = df.agg(array(qs.map(q => kll_sketch_get_quantile_bigint(merged, lit(q))): _*))
-        .collect()(0)
-      qs.zip(r.getSeq[Long](0).map(_.toDouble)).toMap
+                            qs: Seq[Double] = Seq(0.5, 0.95, 0.99))
+      : Option[(Map[Double, Double], Seq[Long])] =
+    io.readCommitted(spark, "sketches").map { df =>
+      val kll = if (df.columns.contains("kll_len")) col("kll_len") else lit(null).cast("binary")
+      val merged = kll_merge_agg_bigint(kll)
+      val r = df.agg(
+        when(count(kll) > 0, array(qs.map(q => kll_sketch_get_quantile_bigint(merged, lit(q))): _*)),
+        sort_array(collect_list(when(kll.isNull, col("batch_id").cast("bigint"))))).collect()(0)
+      val quantiles = if (r.isNullAt(0)) Map.empty[Double, Double]
+        else qs.zip(r.getSeq[Long](0).map(_.toDouble)).toMap
+      (quantiles, r.getSeq[Long](1))
     }
 }

@@ -74,22 +74,6 @@ object Sampling {
       .drop("__h", "__b", "__below", "__quota", "__full")
   }
 
-  /** The naive single-window form — the spec's equality reference and the
-    * honest small-data path.
-    */
-  def quotaByHashNaive(df: DataFrame, groupCol: String, quotas: Map[String, Long],
-                       keyCols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val qdf = broadcast(quotas.toSeq.toDF(groupCol, "__quota"))
-    val w = Window.partitionBy(groupCol)
-      .orderBy(xxhash64(keyCols.map(col): _*) +: keyCols.map(col): _*)
-    df.join(qdf, Seq(groupCol))
-      .withColumn("__r", row_number().over(w))
-      .where(col("__r") <= col("__quota"))
-      .drop("__r", "__quota")
-  }
-
   /** Mixture quotas from target proportions and a total budget:
     * quota(g) = floor(p_g · total). Proportions need not sum to 1 (the
     * caller may undersample); groups larger than their quota are cut by

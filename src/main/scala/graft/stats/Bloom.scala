@@ -55,10 +55,6 @@ object BloomKernel {
     (m, k)
   }
 
-  /** Expected false-positive rate of an (m, k) filter holding n keys. */
-  def expectedFpp(m: Long, k: Int, n: Long): Double =
-    math.pow(1.0 - math.exp(-k.toDouble * n / m), k.toDouble)
-
   def add(words: Array[Long], k: Int, h: Long): Unit = {
     val mask = words.length.toLong * 64 - 1
     val h2 = mix64(h)

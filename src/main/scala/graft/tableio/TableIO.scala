@@ -1,7 +1,15 @@
 package graft.tableio
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import org.apache.spark.sql.graftbridge.SchemaBridge
+import org.apache.spark.sql.types.{DataType, StructType}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.security.MessageDigest
+import java.util.UUID
+import scala.jdk.CollectionConverters._
 
 /** Storage seam. The north rule targets Iceberg tables; no Iceberg runtime
   * jar exists in this sandbox (verified, SURVEY.md §7.1), so the default
@@ -34,27 +42,79 @@ trait TableIO {
 
 /** Parquet + manifest-file implementation rooted at `root`. Layout:
   *   root/<table>/batch_id=<p>/  (parquet data, overwrite-idempotent)
+  *   root/<table>/_schema/<sha256>.json  (a written data schema, written first)
   *   root/<table>/_manifest/p<p>.json        (commit marker, written last)
+  * Every write records its data schema (the columns minus `batch_id`) as
+  * JSON under `_schema/`, named by the JSON's SHA-256, before the data
+  * write starts: identical schemas share one file, and a reader learns the
+  * table's columns without touching a data file. Spark never lists the
+  * `_`-prefixed directories, and dynamic partition overwrite leaves them
+  * in place.
   */
 class ParquetTableIO(root: String) extends TableIO {
   private def tableDir(t: String) = s"$root/$t"
   private def partDir(t: String, p: Long) = s"${tableDir(t)}/batch_id=$p"
   private def manifestDir(t: String) = Paths.get(tableDir(t), "_manifest")
+  private def schemaDir(t: String) = Paths.get(tableDir(t), "_schema")
 
-  override def writePartition(df: DataFrame, table: String, partition: Long): Unit =
+  override def writePartition(df: DataFrame, table: String, partition: Long): Unit = {
+    recordSchema(df.sparkSession, table, df.schema)
     df.write.mode(SaveMode.Overwrite).parquet(partDir(table, partition))
+  }
 
-  override def writeAllPartitions(df: DataFrame, table: String): Unit =
+  override def writeAllPartitions(df: DataFrame, table: String): Unit = {
+    recordSchema(df.sparkSession, table, df.schema)
     df.write.partitionBy("batch_id")
       .option("partitionOverwriteMode", "dynamic")
       .mode(SaveMode.Overwrite).parquet(tableDir(table))
+  }
 
-  override def commit(table: String, partition: Long, meta: String): Unit = {
-    Files.createDirectories(manifestDir(table))
-    val tmp = manifestDir(table).resolve(s".p$partition.json.tmp")
-    Files.writeString(tmp, meta)
-    Files.move(tmp, manifestDir(table).resolve(s"p$partition.json"),
+  override def commit(table: String, partition: Long, meta: String): Unit =
+    publish(manifestDir(table), s"p$partition.json", meta)
+
+  /** Writes `content` to a tmp file of its own, forces it to disk, then
+    * atomically renames it to `name`: a reader sees the whole file or none,
+    * also after a crash.
+    */
+  private def publish(dir: Path, name: String, content: String): Unit = {
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".$name.${UUID.randomUUID()}.tmp")
+    val ch = FileChannel.open(tmp, StandardOpenOption.CREATE, StandardOpenOption.WRITE,
+      StandardOpenOption.TRUNCATE_EXISTING)
+    try {
+      ch.write(ByteBuffer.wrap(content.getBytes(StandardCharsets.UTF_8)))
+      ch.force(true)
+    } finally ch.close()
+    Files.move(tmp, dir.resolve(name),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Records `schema` minus `batch_id`, create-if-absent. A table written
+    * before schemas were recorded (committed partitions, no record) first
+    * gets the merged schema inferred from those partitions, one inference
+    * job per table, once, so its reads stay complete from then on.
+    */
+  private def recordSchema(spark: SparkSession, table: String, schema: StructType): Unit = {
+    def put(s: StructType): Unit = {
+      val json = StructType(s.filterNot(_.name == "batch_id")).json
+      val name = MessageDigest.getInstance("SHA-256")
+        .digest(json.getBytes(StandardCharsets.UTF_8)).map(b => f"$b%02x").mkString + ".json"
+      if (!Files.exists(schemaDir(table).resolve(name)))
+        publish(schemaDir(table), name, json)
+    }
+    if (schemaFiles(table).isEmpty) readCommitted(spark, table).foreach(df => put(df.schema))
+    put(schema)
+  }
+
+  private def schemaFiles(table: String): Seq[Path] = {
+    val dir = schemaDir(table)
+    if (!Files.isDirectory(dir)) Seq.empty
+    else {
+      val s = Files.list(dir)
+      try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json"))
+        .toSeq.sortBy(_.getFileName.toString)
+      finally s.close()
+    }
   }
 
   override def commitMeta(table: String, partition: Long): Option[String] = {
@@ -81,15 +141,24 @@ class ParquetTableIO(root: String) extends TableIO {
     * the snapshot-isolation property resume depends on). The schema is the
     * union of every partition's: partitions committed by different suite
     * versions may carry different columns, and a column missing from a
-    * partition reads as null there (without the merge, the first file's
-    * schema would hide every newer column). The schema read is one job
-    * either way; the merge reads every partition's footer in it.
+    * partition reads as null there. It comes from the recorded `_schema/`
+    * files, merged by name in file-name order, so the read starts no Spark
+    * job; `batch_id` is still inferred from the paths. A recorded schema
+    * whose write never committed only adds columns that read as null. A
+    * table with no record (written before schemas were recorded) infers
+    * the merged schema from the partitions' footers, one job per read,
+    * until its next write records it.
     */
   override def readCommitted(spark: SparkSession, table: String): Option[DataFrame] = {
     val parts = listCommitted(table).map(partDir(table, _))
       .filter(p => Files.isDirectory(Paths.get(p)))
     if (parts.isEmpty) None
-    else Some(spark.read.option("basePath", tableDir(table)).option("mergeSchema", "true")
-      .parquet(parts: _*))
+    else {
+      val recorded = schemaFiles(table)
+        .map(f => DataType.fromJson(Files.readString(f)).asInstanceOf[StructType])
+        .reduceOption(SchemaBridge.merge)
+      val reader = recorded.fold(spark.read.option("mergeSchema", "true"))(spark.read.schema)
+      Some(reader.option("basePath", tableDir(table)).parquet(parts: _*))
+    }
   }
 }

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column ⇄ Expression converters of the
   * classic Spark 4 API — needed to expose custom Catalyst expressions
@@ -23,4 +24,12 @@ object ColumnBridge {
     */
   def expressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+}
+
+/** Bridge to the `private[sql]` schema merge that Parquet's `mergeSchema`
+  * applies to file footers: fields by name, the left side's order first,
+  * nested structs merged, incompatible types rejected.
+  */
+object SchemaBridge {
+  def merge(a: StructType, b: StructType): StructType = a.merge(b)
 }

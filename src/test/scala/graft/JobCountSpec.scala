@@ -102,6 +102,27 @@ class JobCountSpec extends GraftSpec {
     assert(jobs <= 23, s"suite ran $jobs jobs for 4 pending batches")
   }
 
+  test("audit reads: readCommitted starts no job; a monitor round starts 2") {
+    // each table's schema is recorded when it is written, so the read needs
+    // no inference job; hotRepos and ksBetweenBatches are one collect each
+    val code4 = CodeTableGen.generate(spark, 8000, batches = 4).cache()
+    val dim = CodeTableGen.repoLangDim(spark)
+    withTempDir("audit-jobs") { tmp =>
+      val io = new ParquetTableIO(tmp)
+      SuiteRunner.run(spark, code4, dim, io)
+      code4.unpersist()
+      val reads = countJobs("audit-read") {
+        Seq("sketches", "verdicts", "artifacts").foreach(t => assert(io.readCommitted(spark, t).nonEmpty))
+      }
+      assert(reads == 0, s"readCommitted ran $reads jobs")
+      val monitor = countJobs("audit-monitor") {
+        assert(graft.audit.AuditQueries.hotRepos(spark, io, 800L).exists(_.nonEmpty))
+        assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 0L, 3L).nonEmpty)
+      }
+      assert(monitor == 2, s"hotRepos + ksBetweenBatches ran $monitor jobs")
+    }
+  }
+
   test("connected components: one action per round (signature materializes the lazy checkpoint)") {
     // Per round the solver runs ONE driver action — the signature collect,
     // which also materializes that round's lazy checkpoint; a dedicated

@@ -2,6 +2,8 @@ package graft
 
 import graft.sample.Sampling
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 /** Quota sampling laws: the bucketed two-phase cut equals the naive
   * single-window form exactly (including quotas landing mid-bucket, zero
@@ -18,6 +20,20 @@ class SamplingSpec extends GraftSpec {
       .toDF("doc_id", "lang", "text")
   }
 
+  /** The naive single-window form: the equality reference for the
+    * bucketed cut.
+    */
+  private def quotaByHashNaive(df: DataFrame, groupCol: String, quotas: Map[String, Long],
+                               keyCols: Seq[String]): DataFrame = {
+    val qdf = broadcast(quotas.toSeq.toDF(groupCol, "__quota"))
+    val w = Window.partitionBy(groupCol)
+      .orderBy(xxhash64(keyCols.map(col): _*) +: keyCols.map(col): _*)
+    df.join(qdf, Seq(groupCol))
+      .withColumn("__r", row_number().over(w))
+      .where(col("__r") <= col("__quota"))
+      .drop("__r", "__quota")
+  }
+
   private def ids(df: DataFrame): Set[Long] =
     df.select("doc_id").collect().map(_.getLong(0)).toSet
 
@@ -27,7 +43,7 @@ class SamplingSpec extends GraftSpec {
     for (q <- Seq(0L, 1L, 7L, 100L, 999L, 10000L)) {
       val quotas = Map("en" -> q, "zh" -> (q / 2), "es" -> 3L, "de" -> 0L)
       val fast = ids(Sampling.quotaByHash(df, "lang", quotas, Seq("doc_id"), buckets = 4))
-      val naive = ids(Sampling.quotaByHashNaive(df, "lang", quotas, Seq("doc_id")))
+      val naive = ids(quotaByHashNaive(df, "lang", quotas, Seq("doc_id")))
       assert(fast == naive, s"quota $q mismatch")
     }
   }
@@ -76,7 +92,7 @@ class SamplingSpec extends GraftSpec {
     val df = (0 until 200).map(i => (i.toLong, "en", "same"))
       .toDF("doc_id", "lang", "text")
     val fast = ids(Sampling.quotaByHash(df, "lang", Map("en" -> 60L), Seq("text", "doc_id"), buckets = 4))
-    val naive = ids(Sampling.quotaByHashNaive(df, "lang", Map("en" -> 60L), Seq("text", "doc_id")))
+    val naive = ids(quotaByHashNaive(df, "lang", Map("en" -> 60L), Seq("text", "doc_id")))
     assert(fast == naive && fast.size == 60)
   }
 }

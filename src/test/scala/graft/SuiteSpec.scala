@@ -123,7 +123,8 @@ class SuiteSpec extends GraftSpec {
       assert(math.abs(approxKeys - exactKeys) / exactKeys < 0.05,
         s"hll $approxKeys vs exact $exactKeys")
       assert(g.getAs[Long]("total_rows") == 20000L)
-      val qs = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
+      val (qs, leftOut) = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
+      assert(leftOut.isEmpty)
       val exactMedian = code.select(median(length(col("content")))).collect()(0).getDouble(0)
       assert(math.abs(qs(0.5) - exactMedian) / exactMedian < 0.1,
         s"KLL p50 ${qs(0.5)} vs exact $exactMedian")
@@ -286,8 +287,10 @@ class SuiteSpec extends GraftSpec {
       // a batch without KLL bytes has no sketched KS; the new batch does
       assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 1L, 2L).isEmpty)
       assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 2L, 2L).exists(_.statistic == 0.0))
-      val qs = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
+      // the global quantiles name the batches they leave out
+      val (qs, leftOut) = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
       assert(qs(0.5) > 0)
+      assert(leftOut == Seq(0L, 1L))
     }
   }
 
