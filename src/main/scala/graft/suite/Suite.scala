@@ -443,7 +443,8 @@ object SuiteRunner {
         if (baselineFromAudit.isDefined) fresh else fresh || col("batch_id") === baselineBatch
       }
     val slim = slimProjection(code, keep).persist()
-    // submitters only: no thread starts before the first submit after job 1
+    // job 3's collect and the driver-side audit writes; no thread starts
+    // before the first submit after job 1
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val scalars = artifactScalars(slim) // job 1
@@ -536,21 +537,25 @@ object SuiteRunner {
             .as("repo_top"))
 
       // Every audit table write is independent of the others → submitted
-      // CONCURRENTLY on the pool as soon as its inputs exist (Spark's
-      // scheduler is thread-safe and interleaves jobs from several
-      // submitter threads), one partitioned write per table covering ALL
-      // pending batches: a per-batch write loop re-plans the pipeline
-      // #tables × #batches times (measured 26 s serial overhead at 8M rows),
-      // and serial writes each pay their own task-launch + file-commit
-      // latency. Every table is built on the driver from collected rows and
-      // coalesced to one file per batch (no extra job). Durability is
-      // unchanged: manifest COMMITS below happen strictly after ALL writes
-      // have finished, in order, verdicts last (the atomic commit point per
-      // batch). Lineage is NOT on the pool: its wall_ms must include the
-      // write time, so it is written (tiny, serial) after the pool drains.
+      // CONCURRENTLY on the pool as soon as its inputs exist, one write per
+      // table covering ALL pending batches, beside job 2 on this thread
+      // and job 3's collect on the pool. Every table is built on the driver
+      // from collected rows (≤ ViolationCap per batch), and the TableIO
+      // writes it from the driver too: one file per batch, no Spark job.
+      // Every pending batch's partition of every table is replaced: a batch
+      // with no rows in a sample table gets an empty partition, so a
+      // re-validated batch keeps no sample rows of an earlier call.
+      // Durability is unchanged: manifest COMMITS below happen strictly
+      // after ALL writes have finished, in order, verdicts last (the atomic
+      // commit point per batch). Lineage is NOT on the pool: its wall_ms
+      // must include the write time, so it is written (tiny, serial) after
+      // the pool drains.
       val ec = ExecutionContext.fromExecutorService(pool)
-      def write(table: String, df: DataFrame): Future[Unit] =
-        Future(io.writeAllPartitions(df.coalesce(1), table))(ec)
+      def write(table: String, df: DataFrame, batches: Seq[Long] = pending): Future[Unit] =
+        Future {
+          io.writeAllPartitions(df, table)
+          pending.diff(batches).foreach(b => io.writePartition(df.limit(0).drop("batch_id"), table, b))
+        }(ec)
       val fPerBatch = Future(perBatch.collect())(ec)
 
       // sha256 counts AND the capped deterministic sample both came out of
@@ -578,8 +583,10 @@ object SuiteRunner {
         (b, a.rows, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo)
       }.toDF("batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")
       val earlyWrites = Seq(
-        write("violations_sha256_invariant", shaViol),
-        write("violations_completeness_path", emptyPathViol),
+        write("violations_sha256_invariant", shaViol,
+          pending.filter(scalars(_).shaSamples.nonEmpty)),
+        write("violations_completeness_path", emptyPathViol,
+          pending.filter(scalars(_).pathSamples.nonEmpty)),
         write("sketches", sketchRows))
 
       // job 2 runs on this thread while the pool works
@@ -610,10 +617,11 @@ object SuiteRunner {
       }.toDF("batch_id", "repo", "file_count", "rank")
       val verdicts = assembleVerdicts(pending, arts, base, baselineBatch, schemaIssues,
         counts("dup_n"), counts("ref_n"))
+      def present(name: String) = elements(name).map(_._1)
       val lastWrites = Seq(
-        write("violations_uniqueness", dupSample),
-        write("violations_referential", refSample),
-        write("repo_metrics", repoMetrics),
+        write("violations_uniqueness", dupSample, present("dup_sample")),
+        write("violations_referential", refSample, present("ref_sample")),
+        write("repo_metrics", repoMetrics, present("repo_top")),
         write("verdicts", verdicts.toDF()))
       (earlyWrites ++ (artifactsWrite +: lastWrites)).foreach(Await.result(_, Duration.Inf))
 
@@ -624,7 +632,7 @@ object SuiteRunner {
         val a = arts(b)
         Lineage(b, a.rows, a.fingerprint, SuiteVersion, baselineBatch, wallMs)
       }
-      io.writeAllPartitions(lineageRows.toDF().coalesce(1), "lineage")
+      io.writeAllPartitions(lineageRows.toDF(), "lineage")
       pending.foreach { b =>
         val a = arts(b)
         Seq("uniqueness", "referential", "sha256_invariant", "completeness_path")
@@ -647,7 +655,7 @@ object SuiteRunner {
       if (baselineFromAudit.isEmpty && !pending.contains(baselineBatch)) {
         // drop batch_id: writePartition targets the batch_id=<p> directory
         // directly, and readCommitted re-derives the column from the path
-        // (the same layout writeAllPartitions' partitionBy produces)
+        // (the same layout writeAllPartitions produces)
         io.writePartition(Seq(toRow(base)).toDF().drop("batch_id"),
           "artifacts", baselineBatch)
         io.commit("artifacts", baselineBatch,

@@ -1,6 +1,13 @@
 package graft.tableio
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
 import java.nio.ByteBuffer
@@ -24,8 +31,8 @@ import scala.jdk.CollectionConverters._
 trait TableIO {
   def writePartition(df: DataFrame, table: String, partition: Long): Unit
   /** Write every partition present in `df` (which carries a `batch_id`
-    * column) in ONE job, dynamically overwriting only those partitions —
-    * the constant-job-count path the suite uses for all its outputs.
+    * column), overwriting only those partitions. It starts no job: audit
+    * frames are driver-sized.
     */
   def writeAllPartitions(df: DataFrame, table: String): Unit
   def commit(table: String, partition: Long, meta: String): Unit
@@ -41,15 +48,24 @@ trait TableIO {
 }
 
 /** Parquet + manifest-file implementation rooted at `root`. Layout:
-  *   root/<table>/batch_id=<p>/  (parquet data, overwrite-idempotent)
+  *   root/<table>/batch_id=<p>/part-*.parquet  (one file per write, overwrite-idempotent)
   *   root/<table>/_schema/<sha256>.json  (a written data schema, written first)
+  *   root/<table>/_staging-<uuid>/       (one write's files until they move into place)
   *   root/<table>/_manifest/p<p>.json        (commit marker, written last)
+  * A write takes the frame's rows on the driver (the suite's audit frames
+  * are local relations, so no Spark job starts) and writes one file per
+  * partition with Spark's own Parquet writer, the code a write task runs:
+  * the same footers, compression and row-metadata key. Each file is
+  * written under the write's staging directory and forced to disk; then
+  * each staged `batch_id=<p>` directory is renamed into place, the old one
+  * moved aside first, and the staging directory is deleted. No `_SUCCESS`
+  * file is written: the manifest is the commit record.
   * Every write records its data schema (the columns minus `batch_id`) as
   * JSON under `_schema/`, named by the JSON's SHA-256, before the data
   * write starts: identical schemas share one file, and a reader learns the
   * table's columns without touching a data file. Spark never lists the
-  * `_`-prefixed directories, and dynamic partition overwrite leaves them
-  * in place.
+  * `_`-prefixed directories, and a write replaces only `batch_id=<p>`
+  * directories.
   */
 class ParquetTableIO(root: String) extends TableIO {
   private def tableDir(t: String) = s"$root/$t"
@@ -59,14 +75,63 @@ class ParquetTableIO(root: String) extends TableIO {
 
   override def writePartition(df: DataFrame, table: String, partition: Long): Unit = {
     recordSchema(df.sparkSession, table, df.schema)
-    df.write.mode(SaveMode.Overwrite).parquet(partDir(table, partition))
+    writeFiles(df.sparkSession, table, df.schema, Map(partition -> rowsOf(df)))
   }
 
   override def writeAllPartitions(df: DataFrame, table: String): Unit = {
     recordSchema(df.sparkSession, table, df.schema)
-    df.write.partitionBy("batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode(SaveMode.Overwrite).parquet(tableDir(table))
+    val fields = df.schema.fields
+    val p = df.schema.fieldIndex("batch_id")
+    val data = fields.indices.filterNot(_ == p)
+    val parts = rowsOf(df).groupBy { r =>
+      require(!r.isNullAt(p), s"$table: a row with a null batch_id")
+      r.get(p, fields(p).dataType).asInstanceOf[Number].longValue
+    }.map { case (b, rows) =>
+      b -> rows.map(r => new GenericInternalRow(data.map(i => r.get(i, fields(i).dataType)).toArray))
+    }
+    writeFiles(df.sparkSession, table, StructType(data.map(fields)), parts)
+  }
+
+  /** The frame's rows on the driver. A driver-built frame optimizes to a
+    * local relation, whose rows are taken as they are: no job, and no
+    * physical plan or generated row projection per write. Any other frame
+    * is collected by its physical plan.
+    */
+  private def rowsOf(df: DataFrame): Seq[InternalRow] = df.queryExecution.optimizedPlan match {
+    case local: LocalRelation => local.data
+    case _ => df.queryExecution.executedPlan.executeCollect().toSeq
+  }
+
+  /** Writes each partition's rows to one Parquet file with Spark's own
+    * writer under a staging directory of the table, forces every file to
+    * disk, then moves each partition directory into place, replacing the
+    * old one. A partition with no rows gets a file with no rows, as a
+    * Spark write of an empty frame does.
+    */
+  private def writeFiles(spark: SparkSession, table: String, dataSchema: StructType,
+                         parts: Map[Long, Seq[InternalRow]]): Unit = {
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val stage = Paths.get(tableDir(table), s"_staging-${UUID.randomUUID()}")
+    try {
+      parts.foreach { case (p, rows) =>
+        // made here, not by Hadoop's local file system, which forks a
+        // `chmod` per directory it creates when its native library is absent
+        val dir = Files.createDirectories(stage.resolve(s"batch_id=$p"))
+        val file = dir.resolve(s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}")
+        val w = factory.newInstance(file.toUri.toString, dataSchema, ctx)
+        try rows.foreach(w.write) finally w.close()
+        val ch = FileChannel.open(file, StandardOpenOption.WRITE)
+        try ch.force(true) finally ch.close()
+      }
+      parts.keys.foreach { p =>
+        val dst = Paths.get(partDir(table, p))
+        if (Files.exists(dst))
+          Files.move(dst, stage.resolve(s"replaced-$p"), StandardCopyOption.ATOMIC_MOVE)
+        Files.move(stage.resolve(s"batch_id=$p"), dst, StandardCopyOption.ATOMIC_MOVE)
+      }
+    } finally FileUtils.deleteDirectory(stage.toFile)
   }
 
   override def commit(table: String, partition: Long, meta: String): Unit =

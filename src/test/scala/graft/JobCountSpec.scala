@@ -102,6 +102,39 @@ class JobCountSpec extends GraftSpec {
     assert(jobs <= 23, s"suite ran $jobs jobs for 4 pending batches")
   }
 
+  test("audit writes: writeAllPartitions and writePartition start no job; a suite call runs at most 14") {
+    // the TableIO writes driver-built frames from the driver: the suite's
+    // 9 audit-table jobs are gone, and what is left is the artifacts scan,
+    // the marginals, and the per-batch aggregate's stages
+    import spark.implicits._
+    withTempDir("audit-writes") { tmp =>
+      val io = new ParquetTableIO(tmp)
+      val keys = Seq((0L, """{"repo":"r","path":"p","commit":"c"}"""), (1L, """{"repo":"s"}"""))
+        .toDF("batch_id", "key_json")
+        .select(col("batch_id"), from_json(col("key_json"), "repo STRING, path STRING, commit STRING",
+          Map.empty[String, String]).as("k"))
+        .select(col("batch_id"), col("k.repo").as("repo"), col("k.path").as("path"))
+      val writes = countJobs("audit-write") {
+        io.writeAllPartitions(keys, "t")
+        io.writePartition(keys.limit(0).drop("batch_id"), "t", 2L)
+        io.writePartition(Seq(("x", "y")).toDF("repo", "path"), "t", 0L)
+      }
+      assert(writes == 0, s"audit writes ran $writes jobs")
+      (0L to 2L).foreach(p => io.commit("t", p, "{}"))
+      assert(io.readCommitted(spark, "t").get.orderBy("batch_id").collect().map(_.mkString(",")).toSeq ==
+        Seq("x,y,0", "s,null,1"))
+    }
+    val code4 = CodeTableGen.generate(spark, 8000, batches = 4).cache()
+    val dim = CodeTableGen.repoLangDim(spark)
+    val jobs = countJobs("suite4-driver-writes") {
+      withTempDir("suite4-driver-writes") { tmp =>
+        SuiteRunner.run(spark, code4, dim, new ParquetTableIO(tmp))
+      }
+    }
+    code4.unpersist()
+    assert(jobs <= 14, s"suite ran $jobs jobs for 4 pending batches")
+  }
+
   test("audit reads: readCommitted starts no job; a monitor round starts 2") {
     // each table's schema is recorded when it is written, so the read needs
     // no inference job; hotRepos and ksBetweenBatches are one collect each

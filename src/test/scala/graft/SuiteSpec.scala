@@ -113,6 +113,28 @@ class SuiteSpec extends GraftSpec {
     } }
   }
 
+  test("re-validation replaces every table's partition, also where the new sample is empty") {
+    // a write that replaced only the batches present in its frame left a
+    // re-validated batch with an empty new sample holding its old rows
+    val input = CodeTableGen.generate(spark, 8000, batches = 4, seed = 1)
+    withTempDir("graft_suite") { root =>
+      val io = new ParquetTableIO(root)
+      SuiteRunner.run(spark, input, dim, io)
+      def shaRows(b: Long): Long = io.readCommitted(spark, "violations_sha256_invariant").get
+        .where(col("batch_id") === b).count()
+      val before = (0L to 3L).map(shaRows)
+      assert(before.forall(_ > 0), before)
+      Files.delete(Path.of(s"$root/verdicts/_manifest/p1.json"))
+      val fixed = input.withColumn("expected_sha256",
+        when(col("batch_id") === 1, sha2(col("content"), 256)).otherwise(col("expected_sha256")))
+      val verdicts = SuiteRunner.run(spark, fixed, dim, io)
+      assert(verdicts.map(_.batch_id).distinct == Seq(1L))
+      assert(verdicts.find(_.check == "sha256_invariant").get.violation_count == 0)
+      assert(shaRows(1L) == 0, "stale sample rows of the earlier call")
+      assert((0L to 3L).filter(_ != 1L).map(shaRows) == before.patch(1, Nil, 1))
+    }
+  }
+
   test("committed sketches merge to whole-table answers without re-scanning") {
     withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)

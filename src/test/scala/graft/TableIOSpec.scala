@@ -2,16 +2,22 @@ package graft
 
 import graft.gen.CodeTableGen
 import graft.suite.SuiteRunner
-import graft.tableio.ParquetTableIO
-import org.apache.spark.sql.{DataFrame, Row}
+import graft.tableio.{ParquetTableIO, TableIO}
+import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-/** The schema law of `ParquetTableIO.readCommitted`: the read given the
-  * recorded `_schema/` files has the same columns, by name and type, and
-  * the same rows as Spark's `mergeSchema` inference over the committed
-  * partitions, for every audit table the suite writes.
+/** The laws of `ParquetTableIO`, for every audit table the suite writes.
+  *  - Schema law: `readCommitted` given the recorded `_schema/` files has
+  *    the same columns, by name and type, and the same rows as Spark's
+  *    `mergeSchema` inference over the committed partitions.
+  *  - Parity law: the driver-written partitions hold the same rows as
+  *    Spark's own partitioned write of the same frames, one Parquet file
+  *    each, with Spark's row-metadata footer key.
   */
 class TableIOSpec extends GraftSpec {
 
@@ -22,14 +28,15 @@ class TableIOSpec extends GraftSpec {
     "violations_completeness_path", "violations_referential", "violations_sha256_invariant",
     "violations_uniqueness")
 
-  private def schemaFiles(root: String, table: String): Seq[Path] = {
-    val dir = Path.of(root, table, "_schema")
+  private def list(dir: Path): Seq[Path] =
     if (!Files.isDirectory(dir)) Seq.empty
     else {
       val s = Files.list(dir)
       try s.iterator().asScala.toSeq finally s.close()
     }
-  }
+
+  private def schemaFiles(root: String, table: String): Seq[Path] =
+    list(Path.of(root, table, "_schema"))
 
   /** A value as a string, byte arrays and nested rows and collections
     * rendered element by element.
@@ -120,6 +127,18 @@ class TableIOSpec extends GraftSpec {
     }
   }
 
+  test("a frame that is not a local relation is collected and written the same way") {
+    withTempDir("graft_tableio") { root =>
+      val io = new ParquetTableIO(root)
+      io.writeAllPartitions(spark.range(5).select((col("id") % 2).as("batch_id"), col("id").as("a")), "t")
+      io.writePartition(spark.range(7, 9).toDF("a"), "t", 2L)
+      (0L to 2L).foreach(p => io.commit("t", p, "{}"))
+      assert(list(Path.of(root, "t", "batch_id=0")).count(_.getFileName.toString.endsWith(".parquet")) == 1)
+      assert(rows(io.readCommitted(spark, "t").get, Seq("batch_id", "a")) ==
+        Seq("(0,0)", "(0,2)", "(0,4)", "(1,1)", "(1,3)", "(2,7)", "(2,8)"))
+    }
+  }
+
   test("legacy table: the first write records the committed partitions' schema") {
     import spark.implicits._
     withTempDir("graft_tableio") { root =>
@@ -134,5 +153,95 @@ class TableIOSpec extends GraftSpec {
       assert(df.columns.toSet == Set("a", "gone", "b", "batch_id"))
       assert(rows(df, Seq("a", "gone", "b", "batch_id")) == Seq("(1,old,NULL,0)", "(2,NULL,x,1)"))
     }
+  }
+
+  /** Spark's partitioned writer, as `ParquetTableIO` used it before it
+    * wrote from the driver: the parity law's reference.
+    */
+  private class SparkWriterIO(root: String) extends ParquetTableIO(root) {
+    override def writePartition(df: DataFrame, table: String, partition: Long): Unit =
+      df.write.mode(SaveMode.Overwrite).parquet(s"$root/$table/batch_id=$partition")
+    override def writeAllPartitions(df: DataFrame, table: String): Unit =
+      df.write.partitionBy("batch_id").option("partitionOverwriteMode", "dynamic")
+        .mode(SaveMode.Overwrite).parquet(s"$root/$table")
+  }
+
+  /** Hands every write and commit to both `io` and `ref`; reads from `io`. */
+  private class TeeIO(io: TableIO, ref: TableIO) extends TableIO {
+    override def writePartition(df: DataFrame, table: String, partition: Long): Unit = {
+      io.writePartition(df, table, partition); ref.writePartition(df, table, partition)
+    }
+    override def writeAllPartitions(df: DataFrame, table: String): Unit = {
+      io.writeAllPartitions(df, table); ref.writeAllPartitions(df, table)
+    }
+    override def commit(table: String, partition: Long, meta: String): Unit = {
+      io.commit(table, partition, meta); ref.commit(table, partition, meta)
+    }
+    override def commitMeta(table: String, partition: Long): Option[String] =
+      io.commitMeta(table, partition)
+    override def listCommitted(table: String): Seq[Long] = io.listCommitted(table)
+    override def readCommitted(spark: SparkSession, table: String): Option[DataFrame] =
+      io.readCommitted(spark, table)
+  }
+
+  private def assertParityLaw(root: String, refRoot: String): Unit = {
+    val io = new ParquetTableIO(root)
+    val ref = new ParquetTableIO(refRoot)
+    AuditTables.foreach { t =>
+      val cols = ref.readCommitted(spark, t).get.columns.toSeq
+      assert(rows(io.readCommitted(spark, t).get, cols) == rows(ref.readCommitted(spark, t).get, cols), t)
+      val staged = list(Path.of(root, t)).map(_.getFileName.toString).filter(_.startsWith("_staging"))
+      assert(staged.isEmpty, s"$t: staging left behind: $staged")
+      io.listCommitted(t).foreach { p =>
+        val dir = Path.of(root, t, s"batch_id=$p")
+        val refDir = Path.of(refRoot, t, s"batch_id=$p")
+        assert(Files.isDirectory(dir) == Files.isDirectory(refDir), s"$t/$p")
+        if (Files.isDirectory(dir)) {
+          val plain = cols.filter(_ != "batch_id")
+          assert(rows(spark.read.parquet(dir.toString), plain) ==
+            rows(spark.read.parquet(refDir.toString), plain), s"$t/$p")
+          val files = list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+          assert(files.size == 1, s"$t/$p: $files")
+          val r = ParquetFileReader.open(
+            HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(files.head.toUri), new Configuration()))
+          try assert(r.getFooter.getFileMetaData.getKeyValueMetaData
+            .containsKey("org.apache.spark.sql.parquet.row.metadata"), s"$t/$p")
+          finally r.close()
+        }
+      }
+    }
+  }
+
+  /** File names, sizes and modification times under `root/<table>/batch_id=<p>`. */
+  private def snapshot(root: String, keep: (String, Long) => Boolean): Seq[(String, Long, Long)] =
+    AuditTables.flatMap { t =>
+      list(Path.of(root, t)).filter { d =>
+        val n = d.getFileName.toString
+        n.startsWith("batch_id=") && keep(t, n.stripPrefix("batch_id=").toLong)
+      }.flatMap(list).map(f => (f.toString, Files.size(f), Files.getLastModifiedTime(f).toMillis))
+    }.sorted
+
+  test("parity law: fresh root") {
+    withTempDir("graft_tableio") { root => withTempDir("graft_tableio_ref") { refRoot =>
+      SuiteRunner.run(spark, code, dim, new TeeIO(new ParquetTableIO(root), new SparkWriterIO(refRoot)))
+      assertParityLaw(root, refRoot)
+    } }
+  }
+
+  test("parity law: baseline re-stamp through writePartition; partitions not written stay untouched") {
+    withTempDir("graft_tableio") { root => withTempDir("graft_tableio_ref") { refRoot =>
+      val io = new TeeIO(new ParquetTableIO(root), new SparkWriterIO(refRoot))
+      SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, io)
+      io.commit("artifacts", 0L, """{"batch_id":0}""")
+      // the next call writes batch 2 everywhere and re-stamps artifacts/batch_id=0
+      val stamped = (t: String, p: Long) => t == "artifacts" && p == 0L
+      val untouched = (t: String, p: Long) => p < 2 && !stamped(t, p)
+      val (before, oldStamp) = (snapshot(root, untouched), snapshot(root, stamped))
+      SuiteRunner.run(spark, code.where(col("batch_id") <= 2), dim, io)
+      assert(io.commitMeta("artifacts", 0L).exists(_.contains("\"suite\"")), "not re-stamped")
+      assert(snapshot(root, untouched) == before)
+      assert(snapshot(root, stamped) != oldStamp, "artifacts/batch_id=0 not rewritten")
+      assertParityLaw(root, refRoot)
+    } }
   }
 }
