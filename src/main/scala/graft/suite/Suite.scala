@@ -542,8 +542,9 @@ object SuiteRunner {
       // and job 3's collect on the pool. Every table is built on the driver
       // from collected rows (≤ ViolationCap per batch), and the TableIO
       // writes it from the driver too: one file per batch, no Spark job.
-      // Every pending batch's partition of every table is replaced: a batch
-      // with no rows in a sample table gets an empty partition, so a
+      // Every pending batch's partition of every table is replaced: `write`
+      // builds a table's frame from local rows (batch_id first) and gives
+      // every pending batch with no row there an empty partition, so a
       // re-validated batch keeps no sample rows of an earlier call.
       // Durability is unchanged: manifest COMMITS below happen strictly
       // after ALL writes have finished, in order, verdicts last (the atomic
@@ -551,11 +552,16 @@ object SuiteRunner {
       // must include the write time, so it is written (tiny, serial) after
       // the pool drains.
       val ec = ExecutionContext.fromExecutorService(pool)
-      def write(table: String, df: DataFrame, batches: Seq[Long] = pending): Future[Unit] =
+      def write[T <: Product](table: String, rows: Seq[T])(frame: Seq[T] => DataFrame): Future[Unit] = {
+        val df = frame(rows)
+        require(df.columns.head == "batch_id", s"$table: batch_id is not the first column")
+        val present = rows.map(_.productElement(0).asInstanceOf[Long]).toSet
         Future {
           io.writeAllPartitions(df, table)
-          pending.diff(batches).foreach(b => io.writePartition(df.limit(0).drop("batch_id"), table, b))
+          val empty = df.limit(0).drop("batch_id")
+          pending.filterNot(present).foreach(b => io.writePartition(empty, table, b))
         }(ec)
+      }
       val fPerBatch = Future(perBatch.collect())(ec)
 
       // sha256 counts AND the capped deterministic sample both came out of
@@ -567,27 +573,25 @@ object SuiteRunner {
       // whole-table questions by merging committed bytes, never
       // re-scanning) rode job 1 too, so these three writes start before
       // job 2.
-      val shaViol = pending.flatMap { b =>
-        scalars(b).shaSamples.map(s => (b, s))
-      }.toDF("batch_id", "key_json")
-        .select(col("batch_id"),
-          from_json(col("key_json"), "repo STRING, path STRING, commit STRING",
-            Map.empty[String, String]).as("k"))
-        .select(col("batch_id"), col("k.repo").as("repo"),
-          col("k.path").as("path"), col("k.commit").as("commit"))
+      val shaViol = pending.flatMap(b => scalars(b).shaSamples.map(s => (b, s)))
       val emptyPathViol = pending.flatMap { b =>
         scalars(b).pathSamples.map { case (repo, commit, lang) => (b, repo, commit, lang) }
-      }.toDF("batch_id", "repo", "commit", "lang")
+      }
       val sketchRows = pending.map { b =>
         val a = scalars(b)
         (b, a.rows, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo)
-      }.toDF("batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")
+      }
       val earlyWrites = Seq(
-        write("violations_sha256_invariant", shaViol,
-          pending.filter(scalars(_).shaSamples.nonEmpty)),
-        write("violations_completeness_path", emptyPathViol,
-          pending.filter(scalars(_).pathSamples.nonEmpty)),
-        write("sketches", sketchRows))
+        write("violations_sha256_invariant", shaViol)(_.toDF("batch_id", "key_json")
+          .select(col("batch_id"),
+            from_json(col("key_json"), "repo STRING, path STRING, commit STRING",
+              Map.empty[String, String]).as("k"))
+          .select(col("batch_id"), col("k.repo").as("repo"),
+            col("k.path").as("path"), col("k.commit").as("commit"))),
+        write("violations_completeness_path", emptyPathViol)(
+          _.toDF("batch_id", "repo", "commit", "lang")),
+        write("sketches", sketchRows)(
+          _.toDF("batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")))
 
       // job 2 runs on this thread while the pool works
       val arts = withMarginals(slim, scalars, lenCardCap) ++
@@ -595,7 +599,7 @@ object SuiteRunner {
       val base = arts(baselineBatch)
       // artifacts snapshot: what a resumed run loads instead of
       // re-scanning the baseline partition
-      val artifactsWrite = write("artifacts", pending.map(b => toRow(arts(b))).toDF())
+      val artifactsWrite = write("artifacts", pending.map(b => toRow(arts(b))))(_.toDF())
 
       val rows = Await.result(fPerBatch, Duration.Inf)
       def counts(name: String): Map[Long, Long] =
@@ -607,22 +611,23 @@ object SuiteRunner {
       }
       val dupSample = elements("dup_sample").map { case (b, _, k) =>
         (b, k.getString(0), k.getString(1), k.getString(2), k.getLong(3))
-      }.toDF("batch_id", "repo", "path", "commit", "dup_count")
+      }
       val refSample = elements("ref_sample").map { case (b, _, k) =>
         (b, k.getString(0), k.getString(1), k.getLong(2))
-      }.toDF("batch_id", "repo", "lang", "violation_count")
+      }
       // rank = array position + 1
       val repoMetrics = elements("repo_top").map { case (b, i, t) =>
         (b, t.getString(1), t.getLong(0), i + 1)
-      }.toDF("batch_id", "repo", "file_count", "rank")
+      }
       val verdicts = assembleVerdicts(pending, arts, base, baselineBatch, schemaIssues,
         counts("dup_n"), counts("ref_n"))
-      def present(name: String) = elements(name).map(_._1)
       val lastWrites = Seq(
-        write("violations_uniqueness", dupSample, present("dup_sample")),
-        write("violations_referential", refSample, present("ref_sample")),
-        write("repo_metrics", repoMetrics, present("repo_top")),
-        write("verdicts", verdicts.toDF()))
+        write("violations_uniqueness", dupSample)(
+          _.toDF("batch_id", "repo", "path", "commit", "dup_count")),
+        write("violations_referential", refSample)(
+          _.toDF("batch_id", "repo", "lang", "violation_count")),
+        write("repo_metrics", repoMetrics)(_.toDF("batch_id", "repo", "file_count", "rank")),
+        write("verdicts", verdicts)(_.toDF()))
       (earlyWrites ++ (artifactsWrite +: lastWrites)).foreach(Await.result(_, Duration.Inf))
 
       // lineage wall_ms: whole run INCLUDING the audit writes above (even

@@ -6,7 +6,6 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -52,14 +51,21 @@ trait TableIO {
   *   root/<table>/_schema/<sha256>.json  (a written data schema, written first)
   *   root/<table>/_staging-<uuid>/       (one write's files until they move into place)
   *   root/<table>/_manifest/p<p>.json        (commit marker, written last)
-  * A write takes the frame's rows on the driver (the suite's audit frames
-  * are local relations, so no Spark job starts) and writes one file per
-  * partition with Spark's own Parquet writer, the code a write task runs:
-  * the same footers, compression and row-metadata key. Each file is
-  * written under the write's staging directory and forced to disk; then
-  * each staged `batch_id=<p>` directory is renamed into place, the old one
-  * moved aside first, and the staging directory is deleted. No `_SUCCESS`
-  * file is written: the manifest is the commit record.
+  * A write collects the frame's physical plan on the driver (the suite's
+  * audit frames are local relations, so no Spark job starts) and writes one
+  * file per partition with Spark's own Parquet writer, the code a write
+  * task runs: the same footers, compression and row-metadata key. Each
+  * file is written under the write's staging directory and forced to disk;
+  * then each staged `batch_id=<p>` directory is renamed into place, the old
+  * one moved aside first (and moved back if the new one cannot be), the
+  * table directory is forced to disk, and the staging directory is
+  * deleted. A partition written with no rows keeps no directory, as a
+  * batch a partitioned Spark write never saw: its old directory is removed,
+  * and [[readCommitted]] reads it as no rows. No `_SUCCESS` file is
+  * written: the manifest is the commit record. A file's entry in its
+  * partition directory is not forced on its own: the file system is
+  * relied on to journal that entry before the later rename (ext4 and XFS
+  * do).
   * Every write records its data schema (the columns minus `batch_id`) as
   * JSON under `_schema/`, named by the JSON's SHA-256, before the data
   * write starts: identical schemas share one file, and a reader learns the
@@ -92,46 +98,64 @@ class ParquetTableIO(root: String) extends TableIO {
     writeFiles(df.sparkSession, table, StructType(data.map(fields)), parts)
   }
 
-  /** The frame's rows on the driver. A driver-built frame optimizes to a
-    * local relation, whose rows are taken as they are: no job, and no
-    * physical plan or generated row projection per write. Any other frame
-    * is collected by its physical plan.
+  /** The frame's rows, collected by its physical plan: a driver-built
+    * frame plans to a local table scan, whose collect starts no job.
     */
-  private def rowsOf(df: DataFrame): Seq[InternalRow] = df.queryExecution.optimizedPlan match {
-    case local: LocalRelation => local.data
-    case _ => df.queryExecution.executedPlan.executeCollect().toSeq
-  }
+  private def rowsOf(df: DataFrame): Seq[InternalRow] =
+    df.queryExecution.executedPlan.executeCollect().toSeq
 
   /** Writes each partition's rows to one Parquet file with Spark's own
     * writer under a staging directory of the table, forces every file to
     * disk, then moves each partition directory into place, replacing the
-    * old one. A partition with no rows gets a file with no rows, as a
-    * Spark write of an empty frame does.
+    * old one, and forces the table directory. A partition with no rows
+    * gets no file: its old directory is only removed.
     */
   private def writeFiles(spark: SparkSession, table: String, dataSchema: StructType,
                          parts: Map[Long, Seq[InternalRow]]): Unit = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
-    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
     val stage = Paths.get(tableDir(table), s"_staging-${UUID.randomUUID()}")
     try {
-      parts.foreach { case (p, rows) =>
-        // made here, not by Hadoop's local file system, which forks a
-        // `chmod` per directory it creates when its native library is absent
-        val dir = Files.createDirectories(stage.resolve(s"batch_id=$p"))
-        val file = dir.resolve(s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}")
-        val w = factory.newInstance(file.toUri.toString, dataSchema, ctx)
-        try rows.foreach(w.write) finally w.close()
-        val ch = FileChannel.open(file, StandardOpenOption.WRITE)
-        try ch.force(true) finally ch.close()
+      val nonEmpty = parts.filter(_._2.nonEmpty)
+      if (nonEmpty.nonEmpty) {
+        val job = Job.getInstance(spark.sessionState.newHadoopConf())
+        val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+        val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+        nonEmpty.foreach { case (p, rows) =>
+          // made here, not by Hadoop's local file system, which forks a
+          // `chmod` per directory it creates when its native library is absent
+          val dir = Files.createDirectories(stage.resolve(s"batch_id=$p"))
+          val file = dir.resolve(s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}")
+          val w = factory.newInstance(file.toUri.toString, dataSchema, ctx)
+          try rows.foreach(w.write) finally w.close()
+          force(file)
+        }
       }
+      var moved = false
       parts.keys.foreach { p =>
         val dst = Paths.get(partDir(table, p))
-        if (Files.exists(dst))
-          Files.move(dst, stage.resolve(s"replaced-$p"), StandardCopyOption.ATOMIC_MOVE)
-        Files.move(stage.resolve(s"batch_id=$p"), dst, StandardCopyOption.ATOMIC_MOVE)
+        val old = stage.resolve(s"replaced-$p")
+        if (Files.exists(dst)) {
+          Files.createDirectories(stage)
+          Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
+          moved = true
+        }
+        if (nonEmpty.contains(p)) {
+          try Files.move(stage.resolve(s"batch_id=$p"), dst, StandardCopyOption.ATOMIC_MOVE)
+          catch {
+            case e: Throwable =>
+              if (Files.exists(old)) Files.move(old, dst, StandardCopyOption.ATOMIC_MOVE)
+              throw e
+          }
+          moved = true
+        }
       }
+      if (moved) force(Paths.get(tableDir(table)))
     } finally FileUtils.deleteDirectory(stage.toFile)
+  }
+
+  /** Forces a file, or a directory's entries, to disk. */
+  private def force(path: Path): Unit = {
+    val ch = FileChannel.open(path, StandardOpenOption.READ)
+    try ch.force(true) finally ch.close()
   }
 
   override def commit(table: String, partition: Long, meta: String): Unit =
