@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.stats.FreqSketch
 import graft.suite.SuiteRunner
-import graft.tableio.TableIO
+import graft.tableio.{DriverFrames, TableIO}
 
 /** Queries over the committed audit tables — including the cross-batch
   * sketch merges that make checkpoint/resume exact for distributional
@@ -40,8 +40,9 @@ object AuditQueries {
   def ksBetweenBatches(spark: SparkSession, io: TableIO,
                        b1: Long, b2: Long): Option[graft.drift.KsTest.KsResult] =
     io.readCommitted(spark, "sketches").filter(_.columns.contains("kll_len")).flatMap { df =>
-      val rows = df.where(col("batch_id").isin(b1, b2) && col("kll_len").isNotNull)
-        .select(col("batch_id").cast("bigint"), col("kll_len")).collect()
+      val rows = DriverFrames.collect(df
+          .where(col("batch_id").isin(b1, b2) && col("kll_len").isNotNull)
+          .select(col("batch_id").cast("bigint"), col("kll_len")))
         .map(r => r.getLong(0) -> SuiteRunner.kll(r.getAs[Array[Byte]](1))).toMap
       for (x <- rows.get(b1); y <- rows.get(b2))
         yield graft.drift.KsTest.ksStatisticSketched(x, y)
@@ -60,7 +61,7 @@ object AuditQueries {
                threshold: Long): Option[Seq[(String, Long, Long, Long)]] =
     io.readCommitted(spark, "sketches").map { df =>
       FreqSketch.frequentItems(
-        df.select("freq_repo").collect().map(_.getAs[Array[Byte]](0)).toSeq, threshold)
+        DriverFrames.collect(df.select("freq_repo")).map(_.getAs[Array[Byte]](0)).toSeq, threshold)
     }
 
   /** Global content-length quantiles from the merge of the committed KLL
@@ -75,9 +76,9 @@ object AuditQueries {
     io.readCommitted(spark, "sketches").map { df =>
       val kll = if (df.columns.contains("kll_len")) col("kll_len") else lit(null).cast("binary")
       val merged = kll_merge_agg_bigint(kll)
-      val r = df.agg(
+      val r = DriverFrames.collect(df.agg(
         when(count(kll) > 0, array(qs.map(q => kll_sketch_get_quantile_bigint(merged, lit(q))): _*)),
-        sort_array(collect_list(when(kll.isNull, col("batch_id").cast("bigint"))))).collect()(0)
+        sort_array(collect_list(when(kll.isNull, col("batch_id").cast("bigint"))))))(0)
       val quantiles = if (r.isNullAt(0)) Map.empty[Double, Double]
         else qs.zip(r.getSeq[Long](0).map(_.toDouble)).toMap
       (quantiles, r.getSeq[Long](1))

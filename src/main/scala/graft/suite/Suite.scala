@@ -6,7 +6,7 @@ import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.drift.DriftMath
-import graft.tableio.TableIO
+import graft.tableio.{DriverFrames, TableIO}
 
 /** One verdict row per (batch, check) — the engine's analog of the
   * reference's per-report entries (validation report DESIGN.md:383-387,
@@ -100,7 +100,10 @@ object SuiteConfig {
   *      dimension) and the per-repo file counts. It yields each check's
   *      count and capped sample and the repo top-k in one pass.
   * Job 3 is collected on a writer thread while job 2 runs on the caller's
-  * thread and the audit writes that need only job 1 are in flight.
+  * thread and the audit writes that need only job 1 are in flight. Every
+  * driver collect and every audit frame goes through
+  * [[graft.tableio.DriverFrames]], so neither generates a class, and a
+  * warm call's classes fit Spark's codegen cache in most JVMs.
   * Verdict assembly is driver-side arithmetic over the tiny collected
   * aggregates, and every audit table (violation samples of ≤ ViolationCap
   * rows per batch, deterministic: O5; repo_metrics; sketches; artifacts;
@@ -161,12 +164,19 @@ object SuiteRunner {
     a.fingerprint, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo,
     a.shaSamples, a.lenCardApprox)
 
-  def fromRow(r: ArtifactRow): BatchArtifacts = BatchArtifacts(
-    r.batch_id, r.rows, r.len_min, r.len_max, r.len_mean, r.len_std,
-    r.missing_path, r.missing_lang, r.missing_content, r.sha_mismatch,
-    r.lang_counts, r.len_vals.zip(r.len_cnts),
-    r.fingerprint, r.hll_key, r.hll_repo, r.kll_len, r.freq_repo,
-    r.sha_samples, r.len_card)
+  /** A committed `artifacts` row (columns of [[ArtifactRow]], by name). */
+  def fromRow(r: Row): BatchArtifacts = BatchArtifacts(
+    r.getAs[Number]("batch_id").longValue, r.getAs[Long]("rows"),
+    r.getAs[Double]("len_min"), r.getAs[Double]("len_max"),
+    r.getAs[Double]("len_mean"), r.getAs[Double]("len_std"),
+    r.getAs[Long]("missing_path"), r.getAs[Long]("missing_lang"),
+    r.getAs[Long]("missing_content"), r.getAs[Long]("sha_mismatch"),
+    r.getMap[String, Long](r.fieldIndex("lang_counts")).toMap,
+    r.getSeq[Long](r.fieldIndex("len_vals")).zip(r.getSeq[Long](r.fieldIndex("len_cnts"))),
+    r.getAs[String]("fingerprint"), r.getAs[Array[Byte]]("hll_key"),
+    r.getAs[Array[Byte]]("hll_repo"), r.getAs[Array[Byte]]("kll_len"),
+    r.getAs[Array[Byte]]("freq_repo"), r.getSeq[String](r.fieldIndex("sha_samples")),
+    r.getAs[Long]("len_card"))
 
   /** Exact two-sample KS from distinct-value count maps (driver-side; the
     * maps are groupBy(value).count results, already tiny).
@@ -267,7 +277,7 @@ object SuiteRunner {
     * read back as batch 0.
     */
   private def artifactScalars(slim: DataFrame): Map[Long, BatchArtifacts] = {
-    val rows = slim.groupBy("batch_id").agg(
+    val scalars = slim.groupBy("batch_id").agg(
       count(lit(1)).as("rows"),
       min("len").as("len_min"), max("len").as("len_max"),
       avg("len").as("len_mean"), stddev_samp(col("len")).as("len_std"),
@@ -292,7 +302,8 @@ object SuiteRunner {
       kll_sketch_agg_bigint(col("len"), KllK).as("kll_len"),
       // heavy-hitters sketch of repo rides the same scan: the mega-repo
       // detector, mergeable across batches from the committed bytes
-      graft.stats.FreqSketch.accumulate(col("repo"), FreqMapSize).as("freq_repo")).collect()
+      graft.stats.FreqSketch.accumulate(col("repo"), FreqMapSize).as("freq_repo"))
+    val rows = DriverFrames.collect(scalars)
     if (rows.exists(_.isNullAt(0))) throw new IllegalArgumentException(
       "the input has rows with a null batch_id; every row must carry its batch")
     rows.map { r =>
@@ -333,11 +344,10 @@ object SuiteRunner {
     val routed =
       if (overCap.isEmpty) slim
       else slim.withColumn("len", when(!col("batch_id").isin(overCap.toSeq: _*), col("len")))
-    val marginals = routed
+    val marginals = DriverFrames.collect(routed
       .groupingSets(Seq(Seq(col("batch_id"), col("lang")), Seq(col("batch_id"), col("len"))),
         col("batch_id"), col("lang"), col("len"))
-      .agg(count(lit(1)).as("n"), grouping("len").as("lang_set"))
-      .collect()
+      .agg(count(lit(1)).as("n"), grouping("len").as("lang_set")))
     val (langRows, lenRows) = marginals.partition(_.getAs[Byte]("lang_set") == 1)
     // a null lang reads back as "", summed with any empty-lang count
     val langCounts = langRows.groupBy(_.getAs[Long]("batch_id"))
@@ -402,7 +412,6 @@ object SuiteRunner {
   def run(spark: SparkSession, codeRaw: DataFrame, repoLangDim: DataFrame,
           io: TableIO, baselineBatch: Long = 0L,
           lenCardCap: Long = LenCardCap): Seq[Verdict] = {
-    import spark.implicits._
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val t0 = System.nanoTime() // lineage wall_ms covers the WHOLE run
@@ -425,8 +434,7 @@ object SuiteRunner {
       if (!io.commitMeta("artifacts", baselineBatch)
             .exists(_.contains(s""""suite":"$SuiteVersion""""))) None
       else io.readCommitted(spark, "artifacts").flatMap { df =>
-        df.where(col("batch_id") === baselineBatch).as[ArtifactRow]
-          .collect().headOption.map(fromRow)
+        DriverFrames.collect(df.where(col("batch_id") === baselineBatch)).headOption.map(fromRow)
       }
     // The slim projection covers every row whose batch is not committed,
     // plus the baseline when no snapshot reloads: the committed-batch
@@ -451,7 +459,8 @@ object SuiteRunner {
       val pending = scalars.keys.filterNot(committed.contains).toSeq.sorted
       if (pending.isEmpty) return Seq.empty
       if (!scalars.contains(baselineBatch) && baselineFromAudit.isEmpty) {
-        val present = code.select("batch_id").distinct().as[Long].collect().sorted
+        val present = DriverFrames.collect(code.select("batch_id").distinct())
+          .map(_.getLong(0)).sorted
         throw new IllegalArgumentException(
           s"baseline batch $baselineBatch has no rows in the input (batches present: " +
             s"${present.mkString(", ")}) and no committed artifacts exist for it; " +
@@ -540,8 +549,9 @@ object SuiteRunner {
       // CONCURRENTLY on the pool as soon as its inputs exist, one write per
       // table covering ALL pending batches, beside job 2 on this thread
       // and job 3's collect on the pool. Every table is built on the driver
-      // from collected rows (≤ ViolationCap per batch), and the TableIO
-      // writes it from the driver too: one file per batch, no Spark job.
+      // from collected rows (≤ ViolationCap per batch) by DriverFrames.of,
+      // which generates no serializer class, and the TableIO writes it from
+      // the driver too: one file per batch, no Spark job, no generated class.
       // Every pending batch's partition of every table is replaced: `write`
       // builds a table's frame from local rows (batch_id first) and gives
       // every pending batch with no row there an empty partition, so a
@@ -562,7 +572,7 @@ object SuiteRunner {
           pending.filterNot(present).foreach(b => io.writePartition(empty, table, b))
         }(ec)
       }
-      val fPerBatch = Future(perBatch.collect())(ec)
+      val fPerBatch = Future(DriverFrames.collect(perBatch))(ec)
 
       // sha256 counts AND the capped deterministic sample both came out of
       // job 1 (min-k aggregate) — no second content pass; the sample table
@@ -582,16 +592,16 @@ object SuiteRunner {
         (b, a.rows, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo)
       }
       val earlyWrites = Seq(
-        write("violations_sha256_invariant", shaViol)(_.toDF("batch_id", "key_json")
-          .select(col("batch_id"),
+        write("violations_sha256_invariant", shaViol)(
+          DriverFrames.of(spark, _, "batch_id", "key_json").select(col("batch_id"),
             from_json(col("key_json"), "repo STRING, path STRING, commit STRING",
               Map.empty[String, String]).as("k"))
           .select(col("batch_id"), col("k.repo").as("repo"),
             col("k.path").as("path"), col("k.commit").as("commit"))),
         write("violations_completeness_path", emptyPathViol)(
-          _.toDF("batch_id", "repo", "commit", "lang")),
-        write("sketches", sketchRows)(
-          _.toDF("batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")))
+          DriverFrames.of(spark, _, "batch_id", "repo", "commit", "lang")),
+        write("sketches", sketchRows)(DriverFrames.of(spark, _,
+          "batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")))
 
       // job 2 runs on this thread while the pool works
       val arts = withMarginals(slim, scalars, lenCardCap) ++
@@ -599,7 +609,8 @@ object SuiteRunner {
       val base = arts(baselineBatch)
       // artifacts snapshot: what a resumed run loads instead of
       // re-scanning the baseline partition
-      val artifactsWrite = write("artifacts", pending.map(b => toRow(arts(b))))(_.toDF())
+      val artifactsWrite =
+        write("artifacts", pending.map(b => toRow(arts(b))))(DriverFrames.of(spark, _))
 
       val rows = Await.result(fPerBatch, Duration.Inf)
       def counts(name: String): Map[Long, Long] =
@@ -623,11 +634,12 @@ object SuiteRunner {
         counts("dup_n"), counts("ref_n"))
       val lastWrites = Seq(
         write("violations_uniqueness", dupSample)(
-          _.toDF("batch_id", "repo", "path", "commit", "dup_count")),
+          DriverFrames.of(spark, _, "batch_id", "repo", "path", "commit", "dup_count")),
         write("violations_referential", refSample)(
-          _.toDF("batch_id", "repo", "lang", "violation_count")),
-        write("repo_metrics", repoMetrics)(_.toDF("batch_id", "repo", "file_count", "rank")),
-        write("verdicts", verdicts)(_.toDF()))
+          DriverFrames.of(spark, _, "batch_id", "repo", "lang", "violation_count")),
+        write("repo_metrics", repoMetrics)(
+          DriverFrames.of(spark, _, "batch_id", "repo", "file_count", "rank")),
+        write("verdicts", verdicts)(DriverFrames.of(spark, _)))
       (earlyWrites ++ (artifactsWrite +: lastWrites)).foreach(Await.result(_, Duration.Inf))
 
       // lineage wall_ms: whole run INCLUDING the audit writes above (even
@@ -637,7 +649,7 @@ object SuiteRunner {
         val a = arts(b)
         Lineage(b, a.rows, a.fingerprint, SuiteVersion, baselineBatch, wallMs)
       }
-      io.writeAllPartitions(lineageRows.toDF(), "lineage")
+      io.writeAllPartitions(DriverFrames.of(spark, lineageRows), "lineage")
       pending.foreach { b =>
         val a = arts(b)
         Seq("uniqueness", "referential", "sha256_invariant", "completeness_path")
@@ -661,7 +673,7 @@ object SuiteRunner {
         // drop batch_id: writePartition targets the batch_id=<p> directory
         // directly, and readCommitted re-derives the column from the path
         // (the same layout writeAllPartitions produces)
-        io.writePartition(Seq(toRow(base)).toDF().drop("batch_id"),
+        io.writePartition(DriverFrames.of(spark, Seq(toRow(base))).drop("batch_id"),
           "artifacts", baselineBatch)
         io.commit("artifacts", baselineBatch,
           s"""{"batch_id":$baselineBatch,"suite":"$SuiteVersion"}""")

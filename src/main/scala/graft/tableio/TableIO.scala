@@ -6,6 +6,7 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.SchemaBridge
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -51,10 +52,11 @@ trait TableIO {
   *   root/<table>/_schema/<sha256>.json  (a written data schema, written first)
   *   root/<table>/_staging-<uuid>/       (one write's files until they move into place)
   *   root/<table>/_manifest/p<p>.json        (commit marker, written last)
-  * A write collects the frame's physical plan on the driver (the suite's
-  * audit frames are local relations, so no Spark job starts) and writes one
-  * file per partition with Spark's own Parquet writer, the code a write
-  * task runs: the same footers, compression and row-metadata key. Each
+  * A write takes the frame's rows on the driver (the suite's audit frames
+  * are local relations: their rows are taken as they are, no Spark job
+  * starts and no code is generated) and writes one file per partition
+  * with Spark's own Parquet writer, the code a write task runs: the same
+  * footers, compression and row-metadata key. Each
   * file is written under the write's staging directory and forced to disk;
   * then each staged `batch_id=<p>` directory is renamed into place, the old
   * one moved aside first (and moved back if the new one cannot be), the
@@ -98,11 +100,17 @@ class ParquetTableIO(root: String) extends TableIO {
     writeFiles(df.sparkSession, table, StructType(data.map(fields)), parts)
   }
 
-  /** The frame's rows, collected by its physical plan: a driver-built
-    * frame plans to a local table scan, whose collect starts no job.
+  /** The frame's rows. A frame whose optimized plan is a `LocalRelation`
+    * (every driver-built audit frame: [[DriverFrames.of]], and the empty
+    * or column-dropped frames derived from it) hands over its rows as they
+    * are: no physical plan, no job, no generated class. Any other frame is
+    * collected by its physical plan, which generates code and, unless it
+    * scans only local rows, runs a Spark job.
     */
-  private def rowsOf(df: DataFrame): Seq[InternalRow] =
-    df.queryExecution.executedPlan.executeCollect().toSeq
+  private def rowsOf(df: DataFrame): Seq[InternalRow] = df.queryExecution.optimizedPlan match {
+    case l: LocalRelation => l.data
+    case _ => df.queryExecution.executedPlan.executeCollect().toSeq
+  }
 
   /** Writes each partition's rows to one Parquet file with Spark's own
     * writer under a staging directory of the table, forces every file to

@@ -3,8 +3,12 @@ package graft
 import graft.gen.CodeTableGen
 import graft.suite.{SuiteRunner, Verdict}
 import graft.tableio.ParquetTableIO
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.BinaryType
 import java.nio.file.{Files, Path}
+import java.security.MessageDigest
+import scala.jdk.CollectionConverters._
 
 class SuiteSpec extends GraftSpec {
 
@@ -473,6 +477,59 @@ class SuiteSpec extends GraftSpec {
         def v(check: String) = verdicts.find(x => x.batch_id == b && x.check == check).get
         assert(v("uniqueness").violation_count == dupCounts.getOrElse(b, 0L), s"batch $b")
         assert(v("referential").violation_count == refCounts.getOrElse(b, 0L), s"batch $b")
+      }
+    }
+  }
+
+  /** Per audit table after one call over `code`: the `_schema/` record's
+    * file name (the SHA-256 of the schema JSON, so it pins every column's
+    * type and nullability), the row count, and the first 8 bytes of the
+    * SHA-256 of the sorted rows, with the sketch bytes (every binary
+    * column) and lineage `wall_ms` left out and doubles at 9 significant
+    * digits. Taken from the suite whose audit frames were built by
+    * `Seq(...).toDF()`; the same figures came out of two runs of it.
+    */
+  private val AuditPins = Map(
+    "artifacts" -> ("a9104425893421247ab7c732aa4f8c176f3430ccff70176a9991d536e07c653f.json", 4, "9c1dd3124742328f"),
+    "lineage" -> ("5ac7bc0b73861e463e78aea165936028dcc625544ed52589a0b8f50e47bbe913.json", 4, "af6133b8b9e8d2e5"),
+    "repo_metrics" -> ("f367d19321c0c6d8e51d62cfec8450da6fe7bbff5a4c2cf6f6d5ad38c8b375de.json", 400, "9d1cfeb9e790af66"),
+    "sketches" -> ("c160e53e943218da9a11ffcbd025893aeb8fe780be608676865a546b1dfc415b.json", 4, "b42a899156517a82"),
+    "verdicts" -> ("a4ce9cf4775511b3cc42a60309d2d45fbec3c4b445b5d0714d7f986516de95cf.json", 44, "0499bae9a31a8182"),
+    "violations_completeness_path" ->
+      ("b3e27757e582e59900e2dcd79033fabc0c51bd01b90236d617f77016a432c9d8.json", 48, "745dcd7e71d4f7cc"),
+    "violations_referential" ->
+      ("8eeab35e0a69a194aa4e36765d4b14e2bf4d917292a23832007d143e779ed3e0.json", 41, "359aed3e896b2bef"),
+    "violations_sha256_invariant" ->
+      ("2832ccf5fd151900673e0ed45ba51b42f1be1354b8b606b3f13eb66cbd279d21.json", 51, "0a5a395e89e503e5"),
+    "violations_uniqueness" ->
+      ("28cd6289be3a2bb40f2e053b66c771d96a0259284dd09be79c1dae76e6f9b1eb.json", 60, "4aa22b512fd24552"))
+
+  private def render(v: Any): String = v match {
+    case null => "NULL"
+    case d: Double => f"$d%.9g"
+    case r: Row => r.toSeq.map(render).mkString("(", ",", ")")
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => render(k) + "->" + render(x) }.sorted.mkString("{", ",", "}")
+    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+    case x => x.toString
+  }
+
+  test("audit parity: every table's schema record and rows equal the toDF-built frames'") {
+    withTempDir("graft_suite") { root =>
+      val io = new ParquetTableIO(root)
+      SuiteRunner.run(spark, code, dim, io)
+      AuditPins.foreach { case (t, (schemaFile, n, digest)) =>
+        val s = Files.list(Path.of(root, t, "_schema"))
+        val recorded = try s.iterator().asScala.map(_.getFileName.toString).toSeq finally s.close()
+        assert(recorded == Seq(schemaFile), t)
+        val df = io.readCommitted(spark, t).get
+        val cols = df.schema.fields.filter(f => f.dataType != BinaryType && f.name != "wall_ms")
+          .map(_.name).sorted
+        val rows = df.select(cols.map(col): _*).collect().map(render).sorted
+        assert(rows.length == n, t)
+        val got = MessageDigest.getInstance("SHA-256")
+          .digest(rows.mkString("\n").getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+        assert(got == digest, t)
       }
     }
   }
