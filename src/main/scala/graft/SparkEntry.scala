@@ -280,15 +280,12 @@ object SparkEntry {
     "q_count_window_drift" -> ((s, dir) => {
       val e = Tables.events(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("ts"), col("event_id"))
-      e.withColumn("rn", row_number().over(w))
+      val windows = e.withColumn("rn", row_number().over(w))
         .withColumn("win", floor((col("rn") - 1) / 50))
-        .groupBy("event_type", "win")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("value") > 150, 1L).otherwise(0L)).as("unusual"))
+      Drift.unusualRatio(windows, Seq("event_type", "win"), col("value") > 150)
         .where(col("n") === 50)
-        .withColumn("ratio", r(col("unusual") / 50.0, 4))
-        .withColumn("drift", (col("unusual") / 50.0) > 0.10)
-        .select("event_type", "win", "unusual", "ratio", "drift")
+        .select(col("event_type"), col("win"), col("unusual_count").as("unusual"),
+          r(col("ratio"), 4).as("ratio"), col("drift_detected").as("drift"))
         .orderBy("event_type", "win")
     }),
 

@@ -12,8 +12,8 @@ import graft.tableio.{DriverFrames, TableIO}
   * HyperLogLog sketches, quantiles via t-digest" persisted per partition;
   * the quantile sketch is KLL, which bounds its rank error).
   *
-  * Each validated batch commits one row of MERGEABLE sketch bytes
-  * (`sketches` table: HLL of the uniqueness key and of repo; KLL of
+  * Each validated batch commits one `artifacts` row, which carries its
+  * MERGEABLE sketch bytes (HLL of the uniqueness key and of repo; KLL of
   * content length; frequent items of repo). A resumed or later run can
   * therefore answer whole-table questions (global distinct keys, global
   * quantiles, heavy hitters) by merging committed bytes — no re-scan of
@@ -25,7 +25,7 @@ object AuditQueries {
     * (Spark's datasketches-backed hll_union_agg — mergeable by design).
     */
   def globalDistinct(spark: SparkSession, io: TableIO): Option[DataFrame] =
-    io.readCommitted(spark, "sketches").map { df =>
+    io.readCommitted(spark, "artifacts").map { df =>
       df.agg(
         hll_sketch_estimate(hll_union_agg(col("hll_key"))).as("distinct_keys"),
         hll_sketch_estimate(hll_union_agg(col("hll_repo"))).as("distinct_repos"),
@@ -39,7 +39,7 @@ object AuditQueries {
     */
   def ksBetweenBatches(spark: SparkSession, io: TableIO,
                        b1: Long, b2: Long): Option[graft.drift.KsTest.KsResult] =
-    io.readCommitted(spark, "sketches").filter(_.columns.contains("kll_len")).flatMap { df =>
+    io.readCommitted(spark, "artifacts").filter(_.columns.contains("kll_len")).flatMap { df =>
       val rows = DriverFrames.collect(df
           .where(col("batch_id").isin(b1, b2) && col("kll_len").isNotNull)
           .select(col("batch_id").cast("bigint"), col("kll_len")))
@@ -59,7 +59,7 @@ object AuditQueries {
     */
   def hotRepos(spark: SparkSession, io: TableIO,
                threshold: Long): Option[Seq[(String, Long, Long, Long)]] =
-    io.readCommitted(spark, "sketches").map { df =>
+    io.readCommitted(spark, "artifacts").map { df =>
       FreqSketch.frequentItems(
         DriverFrames.collect(df.select("freq_repo")).map(_.getAs[Array[Byte]](0)).toSeq, threshold)
     }
@@ -67,13 +67,15 @@ object AuditQueries {
   /** Global content-length quantiles from the merge of the committed KLL
     * bytes, and the committed batches they leave out: a batch committed
     * before graft-0.5 carries a t-digest column instead, which nothing
-    * decodes. One aggregate over the O(#batches) sketches rows; the map is
-    * empty when no batch carries KLL bytes.
+    * decodes, until the suite re-stamps it (only the baseline batch is
+    * re-stamped, on the first call of a newer version). One aggregate over
+    * the O(#batches) artifacts rows; the map is empty when no batch
+    * carries KLL bytes.
     */
   def globalLengthQuantiles(spark: SparkSession, io: TableIO,
                             qs: Seq[Double] = Seq(0.5, 0.95, 0.99))
       : Option[(Map[Double, Double], Seq[Long])] =
-    io.readCommitted(spark, "sketches").map { df =>
+    io.readCommitted(spark, "artifacts").map { df =>
       val kll = if (df.columns.contains("kll_len")) col("kll_len") else lit(null).cast("binary")
       val merged = kll_merge_agg_bigint(kll)
       val r = DriverFrames.collect(df.agg(

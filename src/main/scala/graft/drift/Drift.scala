@@ -468,9 +468,9 @@ object Drift {
   /** Sensor-pipeline batch analog (sensor.py:186-193): per group, the ratio
     * of "unusual" rows; drift iff ratio STRICTLY > threshold (0.10).
     */
-  def unusualRatio(df: DataFrame, groupCol: String, isUnusual: Column,
+  def unusualRatio(df: DataFrame, groupCols: Seq[String], isUnusual: Column,
                    threshold: Double = 0.10): DataFrame =
-    df.groupBy(col(groupCol)).agg(
+    df.groupBy(groupCols.map(col): _*).agg(
         count(lit(1)).as("n"),
         sum(when(isUnusual, 1L).otherwise(0L)).as("unusual_count"))
       .withColumn("ratio", col("unusual_count") / col("n"))

@@ -34,7 +34,7 @@ case class Lineage(
     wall_ms: Long)
 
 object SuiteConfig {
-  val SuiteVersion = "graft-0.5" // 0.5: artifacts/sketches carry kll_len, not tdigest_len
+  val SuiteVersion = "graft-0.5" // 0.5: artifacts carry kll_len, not tdigest_len
   val KsThreshold = 0.05      // DESIGN.md:534
   val PsiThreshold = 0.2
   val ChiSqThreshold = 0.05
@@ -106,8 +106,9 @@ object SuiteConfig {
   * warm call's classes fit Spark's codegen cache in most JVMs.
   * Verdict assembly is driver-side arithmetic over the tiny collected
   * aggregates, and every audit table (violation samples of ≤ ViolationCap
-  * rows per batch, deterministic: O5; repo_metrics; sketches; artifacts;
-  * verdicts; lineage) is written from the driver.
+  * rows per batch, deterministic: O5; repo_metrics; artifacts, which
+  * also holds each batch's mergeable sketch bytes; verdicts; lineage) is
+  * written from the driver.
   *
   * Skew: groupBy keys are (batch, lang/bin/length) or near-unique triples.
   * The only repo-keyed metric (files per repo) is a plain count, which
@@ -577,19 +578,11 @@ object SuiteRunner {
       // sha256 counts AND the capped deterministic sample both came out of
       // job 1 (min-k aggregate) — no second content pass; the sample table
       // is assembled driver-side from ≤ ViolationCap keys/batch. The
-      // completeness_path sample (first in (repo, commit, lang) order) and
-      // the per-batch MERGEABLE sketches (north star: HLL distinct +
-      // KLL quantiles persisted so later/resumed runs answer
-      // whole-table questions by merging committed bytes, never
-      // re-scanning) rode job 1 too, so these three writes start before
-      // job 2.
+      // completeness_path sample (first in (repo, commit, lang) order) rode
+      // job 1 too, so these two writes start before job 2.
       val shaViol = pending.flatMap(b => scalars(b).shaSamples.map(s => (b, s)))
       val emptyPathViol = pending.flatMap { b =>
         scalars(b).pathSamples.map { case (repo, commit, lang) => (b, repo, commit, lang) }
-      }
-      val sketchRows = pending.map { b =>
-        val a = scalars(b)
-        (b, a.rows, a.hllKey, a.hllRepo, a.kllLen, a.freqRepo)
       }
       val earlyWrites = Seq(
         write("violations_sha256_invariant", shaViol)(
@@ -599,16 +592,17 @@ object SuiteRunner {
           .select(col("batch_id"), col("k.repo").as("repo"),
             col("k.path").as("path"), col("k.commit").as("commit"))),
         write("violations_completeness_path", emptyPathViol)(
-          DriverFrames.of(spark, _, "batch_id", "repo", "commit", "lang")),
-        write("sketches", sketchRows)(DriverFrames.of(spark, _,
-          "batch_id", "rows", "hll_key", "hll_repo", "kll_len", "freq_repo")))
+          DriverFrames.of(spark, _, "batch_id", "repo", "commit", "lang")))
 
       // job 2 runs on this thread while the pool works
       val arts = withMarginals(slim, scalars, lenCardCap) ++
         baselineFromAudit.map(b => b.batchId -> b)
       val base = arts(baselineBatch)
       // artifacts snapshot: what a resumed run loads instead of
-      // re-scanning the baseline partition
+      // re-scanning the baseline partition, and the one copy of each batch's
+      // MERGEABLE sketch bytes (HLL distinct, KLL quantiles, frequent items)
+      // that later runs merge to answer whole-table questions without
+      // re-scanning (AuditQueries)
       val artifactsWrite =
         write("artifacts", pending.map(b => toRow(arts(b))))(DriverFrames.of(spark, _))
 
@@ -654,7 +648,6 @@ object SuiteRunner {
         val a = arts(b)
         Seq("uniqueness", "referential", "sha256_invariant", "completeness_path")
           .foreach(name => io.commit(s"violations_$name", b, s"""{"batch_id":$b}"""))
-        io.commit("sketches", b, s"""{"batch_id":$b}""")
         // artifacts carry the writer's suite version: reload is version-gated
         io.commit("artifacts", b, s"""{"batch_id":$b,"suite":"$SuiteVersion"}""")
         io.commit("repo_metrics", b, s"""{"batch_id":$b}""")

@@ -145,7 +145,7 @@ class JobCountSpec extends GraftSpec {
       SuiteRunner.run(spark, code4, dim, io)
       code4.unpersist()
       val reads = countJobs("audit-read") {
-        Seq("sketches", "verdicts", "artifacts").foreach(t => assert(io.readCommitted(spark, t).nonEmpty))
+        Seq("verdicts", "artifacts").foreach(t => assert(io.readCommitted(spark, t).nonEmpty))
       }
       assert(reads == 0, s"readCommitted ran $reads jobs")
       val monitor = countJobs("audit-monitor") {

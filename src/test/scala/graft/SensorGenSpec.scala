@@ -58,7 +58,7 @@ class SensorGenSpec extends GraftSpec {
       when(coalesce(col("unusual"), lit(false)), "UNUSUAL").otherwise("Normal"))
     assert(labeled.where(col("status") === "UNUSUAL").count() ==
       df.where(col("unusual")).count())
-    val ratios = Drift.unusualRatio(df, "type", coalesce(col("unusual"), lit(false)))
+    val ratios = Drift.unusualRatio(df, Seq("type"), coalesce(col("unusual"), lit(false)))
     // per-type unusual ratio ≈ p=0.05 ⇒ no type drifts at threshold 0.10
     assert(ratios.where(col("drift_detected")).count() == 0)
     assert(ratios.count() == 4)

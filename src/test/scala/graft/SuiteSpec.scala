@@ -287,18 +287,16 @@ class SuiteSpec extends GraftSpec {
     withTempDir("graft_suite") { root =>
       val io = new ParquetTableIO(root)
       SuiteRunner.run(spark, code.where(col("batch_id") < 2), dim, io)
-      // batches 0,1 as graft-0.4 committed them: the length sketch under
-      // `tdigest_len` (its bytes are never decoded, so the current ones
-      // stand in) and artifacts stamped with the old version
-      Seq("sketches", "artifacts").foreach { t =>
-        (0L to 1L).foreach { b =>
-          val dir = s"$root/$t/batch_id=$b"
-          val df = spark.read.parquet(dir)
-          val old = spark.createDataFrame(df.collectAsList(), df.schema)
-            .withColumnRenamed("kll_len", "tdigest_len")
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-          old.write.parquet(dir)
-        }
+      // batches 0,1 as graft-0.4 committed them: artifacts carrying the
+      // length sketch under `tdigest_len` (its bytes are never decoded, so
+      // the current ones stand in) and stamped with the old version
+      (0L to 1L).foreach { b =>
+        val dir = s"$root/artifacts/batch_id=$b"
+        val df = spark.read.parquet(dir)
+        val old = spark.createDataFrame(df.collectAsList(), df.schema)
+          .withColumnRenamed("kll_len", "tdigest_len")
+        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+        old.write.parquet(dir)
       }
       (0L to 1L).foreach(b => io.commit("artifacts", b, s"""{"batch_id":$b,"suite":"graft-0.4"}"""))
 
@@ -310,13 +308,16 @@ class SuiteSpec extends GraftSpec {
       assert(hot.head._1 == "repo_0000")
       val g = graft.audit.AuditQueries.globalDistinct(spark, io).get.collect()(0)
       assert(g.getAs[Long]("total_rows") == 15000L)
-      // a batch without KLL bytes has no sketched KS; the new batch does
+      // a batch without KLL bytes has no sketched KS; the new batch does,
+      // and so does the re-stamped baseline
       assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 1L, 2L).isEmpty)
       assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 2L, 2L).exists(_.statistic == 0.0))
-      // the global quantiles name the batches they leave out
+      assert(graft.audit.AuditQueries.ksBetweenBatches(spark, io, 0L, 2L).nonEmpty)
+      // the global quantiles name the batches they leave out: batch 1 only,
+      // since the re-stamp gave batch 0 KLL bytes again
       val (qs, leftOut) = graft.audit.AuditQueries.globalLengthQuantiles(spark, io).get
       assert(qs(0.5) > 0)
-      assert(leftOut == Seq(0L, 1L))
+      assert(leftOut == Seq(1L))
     }
   }
 
@@ -493,7 +494,6 @@ class SuiteSpec extends GraftSpec {
     "artifacts" -> ("a9104425893421247ab7c732aa4f8c176f3430ccff70176a9991d536e07c653f.json", 4, "9c1dd3124742328f"),
     "lineage" -> ("5ac7bc0b73861e463e78aea165936028dcc625544ed52589a0b8f50e47bbe913.json", 4, "af6133b8b9e8d2e5"),
     "repo_metrics" -> ("f367d19321c0c6d8e51d62cfec8450da6fe7bbff5a4c2cf6f6d5ad38c8b375de.json", 400, "9d1cfeb9e790af66"),
-    "sketches" -> ("c160e53e943218da9a11ffcbd025893aeb8fe780be608676865a546b1dfc415b.json", 4, "b42a899156517a82"),
     "verdicts" -> ("a4ce9cf4775511b3cc42a60309d2d45fbec3c4b445b5d0714d7f986516de95cf.json", 44, "0499bae9a31a8182"),
     "violations_completeness_path" ->
       ("b3e27757e582e59900e2dcd79033fabc0c51bd01b90236d617f77016a432c9d8.json", 48, "745dcd7e71d4f7cc"),

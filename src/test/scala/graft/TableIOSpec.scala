@@ -13,6 +13,9 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** The laws of `ParquetTableIO`, for every audit table the suite writes.
+  *  - Table-set law: a suite call on a fresh root leaves exactly the
+  *    audit tables below plus `schema_baseline`, so a new table (or a
+  *    second copy of a table's columns) is added on purpose.
   *  - Schema law: `readCommitted` given the recorded `_schema/` files has
   *    the same columns, by name and type, and the same rows as Spark's
   *    `mergeSchema` inference over the committed partitions.
@@ -36,7 +39,7 @@ class TableIOSpec extends GraftSpec {
   lazy val code = CodeTableGen.generate(spark, 8000, batches = 4).cache()
   lazy val dim = CodeTableGen.repoLangDim(spark)
 
-  private val AuditTables = Seq("artifacts", "lineage", "repo_metrics", "sketches", "verdicts",
+  private val AuditTables = Seq("artifacts", "lineage", "repo_metrics", "verdicts",
     "violations_completeness_path", "violations_referential", "violations_sha256_invariant",
     "violations_uniqueness")
 
@@ -77,6 +80,14 @@ class TableIOSpec extends GraftSpec {
       assert(fields(got).sortBy(_._1) == fields(inferred).sortBy(_._1), t)
       if (schemaFiles(root, t).size <= 1) assert(fields(got) == fields(inferred), s"$t column order")
       assert(rows(got, inferred.columns.toSeq) == rows(inferred, inferred.columns.toSeq), t)
+    }
+  }
+
+  test("table-set law: a fresh root holds exactly the audit tables and schema_baseline") {
+    withTempDir("graft_tableio") { root =>
+      SuiteRunner.run(spark, code, dim, new ParquetTableIO(root))
+      val dirs = list(Path.of(root)).filter(Files.isDirectory(_)).map(_.getFileName.toString)
+      assert(dirs.sorted == (AuditTables :+ "schema_baseline").sorted)
     }
   }
 
